@@ -78,11 +78,6 @@ class Bm25Weight:
         (reference: crates/tantivy/src/query/bm25.rs:187)."""
         return float(self.score(np.array([255]), np.array([2**31]))[0])
 
-    def block_max_score(self, block_fieldnorm_ids, block_tfs) -> np.ndarray:
-        """Per-block score bound from stored block-max (fieldnorm_id, tf)
-        pairs (reference: crates/tantivy/src/postings/skip.rs:162-171)."""
-        return self.score(block_fieldnorm_ids, block_tfs)
-
 
 class Bm25FWeight(Bm25Weight):
     """Per-(term, field) BM25F weight (reference:

@@ -3,9 +3,14 @@
 Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
 /root/reference/crates/core/src/searcher/local/mod.rs:116-182):
 
-1. parse + plan (driver, :mod:`.parser`): clauses, dedup, 32-term cap.
-2. term stats lookup: one partition-pruned scan of the sorted
-   `term_stats` table (the Parquet FST stand-in) -> global df per term;
+1. parse + plan (driver, `IndexReader._plan` -> :class:`QueryPlan`):
+   :mod:`.parser` clauses (dedup, 32-term cap), option validation,
+   compound/stem/expansion alternatives and the posting term list.
+   Every entry point and both executors (driver-local and Spark) take
+   this one plan; the auto-routers decide local vs distributed on it.
+2. term stats lookup, inside `_plan`: ONE partition-pruned scan of the
+   sorted `term_stats` table (the Parquet FST stand-in) -> global df
+   per term; dead-clause detection, the posting-block estimate and the
    BM25 weights built driver-side with global N / avg_fieldnorm
    (global-df contract: bm25.rs:84, SURVEY §4.1).
 3. posting scan: `index/kind=p` filtered by `term IN (...)` — Catalyst
@@ -24,7 +29,9 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
 
 from __future__ import annotations
 
+import logging
 import os
+from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -65,11 +72,13 @@ class _PrunedPostingsReader:
     """Driver-local posting reader: cached per-file parquet handles +
     footer statistics, term-range row-group pruning, parallel reads.
 
-    Posting files are term-sorted, so each row group's (min, max) term
-    stats bracket a contiguous term range and the row groups holding a
-    term are a contiguous run found by two bisects — the in-memory
-    metadata plays the role of the reference's per-segment term
-    dictionary + skip list (metadata resident, data read per query).
+    A row group is read when some query term lies inside its (min, max)
+    term stats — a containment test per row group, so the result is
+    right whatever the row order inside a file (the build writes files
+    term-sorted, which keeps each term in few row groups, but pruning
+    does not rely on it). The in-memory metadata plays the role of the
+    reference's per-segment term dictionary + skip list (metadata
+    resident, data read per query).
     Compared to the generic dataset scan this removes the per-query
     per-file open/footer-parse (~1 ms x segment count) and decodes only
     the matching row groups instead of whole files (measured 6x on a
@@ -121,18 +130,18 @@ class _PrunedPostingsReader:
             if mins is None:
                 rgs = list(range(nrg))
             else:
-                hit = set()
-                for t in ts:
-                    a = bisect.bisect_left(maxs, t)
-                    b = bisect.bisect_right(mins, t) - 1
-                    if a <= b:
-                        hit.update(range(a, b + 1))
-                rgs = sorted(hit)
+                # smallest query term >= the group's min must be <= max
+                rgs = [i for i in range(nrg)
+                       if (j := bisect.bisect_left(ts, mins[i])) < len(ts)
+                       and ts[j] <= maxs[i]]
             if rgs:
                 tasks.append((pf, rgs))
                 segs.append(seg)
         if not tasks:
-            return pa.table({})
+            # typed empty result, like the dataset scan's
+            empty = self._entries[0][0].schema_arrow.empty_table()
+            return empty.select(file_cols).append_column(
+                "segment_id", pa.array([], type=pa.int64()))
 
         def _one(task):
             pf, rgs = task
@@ -187,21 +196,6 @@ class Expansion(list):
     (df desc, term) expansion — tantivy multi-term expansion semantics
     (a FuzzyTermQuery/RegexQuery rewrites to exactly its dictionary
     matches; the query token itself is not an implicit extra member)."""
-
-
-def _build_term_postings(grp) -> TermPostings:
-    grp = grp.sort_values("block_id")
-    return TermPostings(
-        grp["first_doc"].to_numpy(),
-        grp["last_doc"].to_numpy(),
-        grp["ndocs"].to_numpy(),
-        list(grp["docs"]),
-        list(grp["tfs"]),
-        list(grp["fnids"]),
-        positions=list(grp["positions"]) if "positions" in grp else None,
-        block_max_tf=grp["block_max_tf"].to_numpy(),
-        block_min_fnid=grp["block_min_fnid"].to_numpy(),
-    )
 
 
 def _make_specs(pq: ParsedQuery, weights: dict, by_term: dict, dtype,
@@ -784,6 +778,189 @@ def _doclen_lookup(index_path: str, seg: int):
     return fn
 
 
+@dataclass
+class QueryPlan:
+    """One query, planned once by :meth:`IndexReader._plan`: the parsed
+    Must/Should queries, validated options, the expansions and shadow
+    terms, global dfs, BM25 weights and the posting term list — the
+    reference's per-query plan (crates/core/src/query/mod.rs:77-154)
+    that every executor then evaluates (searcher/local/mod.rs:116-182).
+
+    Plain data with no reader or SparkSession reference, so the SAME
+    object drives the driver-local kernel and ships inside the
+    distributed mapInArrow closure."""
+
+    pq: ParsedQuery
+    spq: ParsedQuery | None = None
+    dtype: type = np.float32
+    occur: str = "must"
+    tie_breaker: float = 0.0
+    const_score: float | None = None
+    range_specs: list = field(default_factory=list)
+    exists_specs: list = field(default_factory=list)
+    #: (turns_path, seg_sources, offsets) when range/exists filters
+    #: need per-segment row-store lookups
+    rng_ctx: tuple | None = None
+    #: index root when optic end anchors need per-segment doclens
+    index_path: str | None = None
+    boost_rules: list = field(default_factory=list)
+    discard_matchers: list = field(default_factory=list)
+    require_matchers: list | None = None
+    #: pq.clauses index -> alternative terms (compounds, stems,
+    #: Expansion members); c_terms lists every alternative
+    compounds: dict = field(default_factory=dict)
+    c_terms: list = field(default_factory=list)
+    #: field -> tf coefficient for a batch BM25F query (search_many)
+    bm25f: dict | None = None
+    terms: list = field(default_factory=list)  # posting term list
+    positions: bool = False  # read the positions column
+    dfs: dict = field(default_factory=dict)
+    weights: dict = field(default_factory=dict)
+    est_blocks: int = 0
+    dead: bool = False  # some required clause has no live term
+    match_all: bool = False  # no posting-backed membership clause
+
+    @property
+    def union(self) -> bool:
+        return self.occur in ("should", "dismax")
+
+
+def _match_all_score(plan: QueryPlan) -> float:
+    """Score of every match-all hit: const_score, else the sum of the
+    `*` clause boosts (AllQuery scores 1.0 x boost)."""
+    if plan.const_score is not None:
+        return plan.const_score
+    return sum(c.boost for c in plan.pq.positive if c.kind == "all")
+
+
+def _est_blocks(dfs) -> int:
+    """Posting blocks a term set spans: ceil(df / 128) per term plus one
+    partial block."""
+    return sum(-(-df // 128) + 1 for df in dfs)
+
+
+def _range_fns(plan: QueryPlan, seg):
+    """The kernel's range_fns for one segment (None without filters)."""
+    if plan.rng_ctx is None:
+        return None
+    troot, ssrc, offs = plan.rng_ctx
+    dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
+    return [_range_lookup(troot, dirs, plan.range_specs, offs,
+                          exists_specs=plan.exists_specs)]
+
+
+def _indep_estimate(by_term: dict, terms: list[str], nd: int) -> int:
+    """Term-independence hit estimate prod(df_i) // nd^(k-1) for one
+    segment — exact Python ints (BigRational semantics,
+    collector/approx_count.rs:104-141); dfs <= nd, so the result fits
+    a long even though the product may not."""
+    prod = 1
+    for t in terms:
+        tp = by_term.get(t)
+        prod *= int(tp.doc_count) if tp is not None else 0
+    kt = len(terms)
+    return prod // (nd ** (kt - 1)) if nd and kt > 1 else prod
+
+
+def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
+                with_count: bool = False, max_docs: int | None = None,
+                seg_docs: dict | None = None):
+    """Evaluate one planned query over one posting group ({term:
+    TermPostings} of a segment, or of the whole index as one logical
+    segment) -> (docs, scores, n, capped); n is the hit count when
+    `with_count` (else 0). The one kernel call shared by the local and
+    distributed executors and by search_many.
+
+    A segment truncated by `max_docs` (ShortCircuit) reports
+    max(matches seen, term-independence estimate) and flags itself
+    capped — ApproxCount harvest semantics
+    (collector/approx_count.rs:162-181)."""
+    dtype = plan.dtype
+    specs, negs = _make_specs(plan.pq, plan.weights, by_term, dtype,
+                              compounds=plan.compounds)
+    if plan.union:
+        term_specs = [(tp, w) for _kind, tp, w in specs]
+        docs, scores = union_topk(
+            term_specs, k, dtype=dtype, mustnot_groups=negs,
+            tie=plan.tie_breaker if plan.occur == "dismax" else None)
+        # union membership count: one or-group conjunction (WAND can't
+        # count — it skips; this is the tuple-collector full walk)
+        n = (count_matches([("or", [(tp, None) for tp, _ in term_specs],
+                             None)], negs) if with_count else 0)
+        return docs, scores, n, False
+    empty_tp = TermPostings([], [], [], [], [], [])
+    dl_fn = (_doclen_lookup(plan.index_path, seg)
+             if plan.index_path is not None else None)
+
+    def matcher(m):
+        return _matcher_spec(m, by_term, empty_tp, dl_fn)
+
+    negs = negs + [matcher(m) for m in plan.discard_matchers]
+    req = (None if plan.require_matchers is None
+           else [matcher(m) for m in plan.require_matchers])
+    res = segment_topk(
+        specs, negs, k, dtype=dtype, max_docs=max_docs,
+        should_specs=(_make_specs(plan.spq, plan.weights, by_term,
+                                  dtype)[0]
+                      if plan.spq is not None else None),
+        boost_specs=[(f, matcher(m)) for f, m in plan.boost_rules] or None,
+        require_any=req, range_fns=_range_fns(plan, seg),
+        const_score=plan.const_score, with_count=with_count)
+    if not with_count:
+        return res + (0, False)
+    docs, scores, n, capped = res
+    if capped and max_docs is not None:
+        sterms = [t for c in plan.pq.positive if c.kind == "term"
+                  for t in c.tokens]
+        n = max(n, _indep_estimate(by_term, sterms, seg_docs.get(seg, 0)))
+    return docs, scores, n, capped
+
+
+def _batch_groups(batches):
+    """(segment_id, {term: TermPostings}) groups of one mapInArrow
+    partition: ONE arrow table per partition, numpy index grouping, no
+    per-group pandas machinery (at 640 segments the applyInPandas
+    per-group overhead alone cost ~1.5 s per query)."""
+    import pyarrow as pa
+
+    bl = [b for b in batches if b.num_rows]
+    if bl:
+        yield from _group_arrow_postings(pa.Table.from_batches(bl))
+
+
+def _hit_batch(parts, tag_col: str, with_count: bool):
+    """One arrow batch of per-group hits (doc_id, score, tag_col[, n,
+    capped]) from parts [(tag, docs, scores, n, capped)], or None when
+    empty. with_count: each part leads with ONE sentinel count row
+    (doc_id -1, n >= 0) ahead of its hit rows (n = -1) — the
+    (Count, TopDocs) tuple collector riding the top-k output."""
+    import pyarrow as pa
+
+    tags, d_o, s_o, n_o, c_o = [], [], [], [], []
+    for tag, docs, scores, n, capped in parts:
+        if with_count:
+            docs = np.concatenate([[-1], docs])
+            scores = np.concatenate([[0.0], scores])
+            n_o.append(np.concatenate(
+                [[n], np.full(docs.size - 1, -1)]).astype(np.int64))
+            c_o.append(np.arange(docs.size) == 0 if capped
+                       else np.zeros(docs.size, dtype=bool))
+        if docs.size:
+            tags.extend([tag] * docs.size)
+            d_o.append(docs.astype(np.int64))
+            s_o.append(scores.astype(np.float64))
+    if not d_o:
+        return None
+    arrs = [pa.array(np.concatenate(d_o)), pa.array(np.concatenate(s_o)),
+            pa.array(tags)]
+    names = ["doc_id", "score", tag_col]
+    if with_count:
+        arrs += [pa.array(np.concatenate(n_o)),
+                 pa.array(np.concatenate(c_o))]
+        names += ["n", "capped"]
+    return pa.record_batch(arrs, names=names)
+
+
 class IndexReader:
     """Point-in-time snapshot of an index (tantivy Searcher semantics:
     a reader sees the segments committed when it was opened). Stats are
@@ -1078,15 +1255,6 @@ class IndexReader:
         cap = cap or self.max_fuzzy_expansions
         matched = sorted(zip(terms, dfs), key=lambda x: (-x[1], x[0]))
         return [t for t, _ in matched[:cap]]
-
-    def _vocab_rows(self) -> int:
-        """Dictionary row count from parquet metadata (no data read)."""
-        if getattr(self, "_nvocab_cache", None) is None:
-            import pyarrow.dataset as ds
-
-            self._nvocab_cache = ds.dataset(
-                self._term_stats_path, format="parquet").count_rows()
-        return self._nvocab_cache
 
     def _scan_expansion(self, match_fn, flt, cap: int | None,
                         prefilter=None, allow_ns: str | None = None
@@ -1526,6 +1694,211 @@ class IndexReader:
         return weights
 
     # ------------------------------------------------------------------
+    # planning: the only place a query is validated, expanded, looked up
+    # in the term dictionary and weighted
+    def _plan(self, query, **opts) -> QueryPlan:
+        """Plan a query once; every search entry point consumes the
+        result, and a QueryPlan argument passes through unchanged (the
+        way :meth:`_parse` passes a ParsedQuery through). Options are
+        :meth:`_plan_terms`'s."""
+        if isinstance(query, QueryPlan):
+            return query
+        plan = self._plan_terms(query, **opts)
+        if plan.match_all:
+            return plan
+        return self._plan_stats(plan, self.term_dfs(plan.terms))
+
+    def _plan_terms(self, query, *, dtype=np.float32, occur: str = "must",
+                    should=None, compound_terms: bool | None = None,
+                    stemmed: bool | None = None, lang: str | None = None,
+                    fuzzy_transpositions: bool = False,
+                    tie_breaker: float = 0.0,
+                    const_score: float | None = None,
+                    optic=None, bm25f: dict | None = None) -> QueryPlan:
+        """Planning step 1, no term statistics yet: parse, validate the
+        options, compile optic rules, expand alternatives and collect
+        the posting term list. search_many runs this per query, then
+        ONE term_dfs over the union, then :meth:`_plan_stats`.
+        bm25f (search_many only): field -> tf coefficient overrides for
+        a batch BM25F query."""
+        pq = self._parse(query)
+        plan = QueryPlan(pq, dtype=dtype, occur=occur,
+                         tie_breaker=tie_breaker, const_score=const_score)
+        rule_terms: list[str] = []
+        if optic:
+            from .optic import (Optic, all_matcher_terms, compile_rules,
+                                rules_need_doclen, rules_need_positions)
+
+            if occur == "should":
+                raise ValueError("optic rules require occur='must'")
+            rules = optic.rules if isinstance(optic, Optic) else optic
+            plan.boost_rules, plan.discard_matchers = compile_rules(rules)
+            if isinstance(optic, Optic) and optic.discard_non_matching:
+                if not plan.boost_rules:
+                    raise ValueError(
+                        "discard_non_matching needs at least one "
+                        "non-discard rule (the Must union would be "
+                        "empty)")
+                plan.require_matchers = [m for _, m in plan.boost_rules]
+            rule_terms = all_matcher_terms(plan.boost_rules,
+                                           plan.discard_matchers)
+            plan.positions = rules_need_positions(plan.boost_rules,
+                                                  plan.discard_matchers)
+            if rules_need_doclen(plan.boost_rules, plan.discard_matchers):
+                plan.index_path = self.path
+        if should is not None:
+            if occur == "should":
+                raise ValueError(
+                    "mixed occur uses occur='must' + should=...")
+            plan.spq = self._parse(should)
+            if plan.spq.negative:
+                raise ValueError(
+                    "negations belong in the must query, not in should")
+        plan.range_specs = [_typed_range_spec(c) for c in pq.positive
+                            if c.kind == "range"]
+        plan.exists_specs = [(c.tokens[0], c.neg) for c in pq.positive
+                             if c.kind == "exists"]
+        if occur == "dismax" and not 0.0 <= tie_breaker <= 1.0:
+            raise ValueError("dismax tie_breaker must be in [0, 1]")
+        if const_score is not None and plan.union:
+            raise ValueError("const_score requires occur='must'")
+        if plan.range_specs or plan.exists_specs:
+            if plan.union:
+                raise ValueError(
+                    "range/exists filters require occur='must'")
+            self._validate_range_cols(
+                plan.range_specs
+                + [(col,) for col, _ in plan.exists_specs])
+            plan.rng_ctx = (self._turns_path, self._seg_sources(),
+                            self._offsets)
+        if not any(c.kind in ("term", "phrase", "filter", "termset")
+                   for c in pq.positive):
+            # no posting-backed membership clause: pure match-all
+            # (`* n_chars:>100`, `* -tool:*`, ...) — row-store path
+            plan.match_all = True
+            return plan
+        if bm25f is not None:
+            plan.compounds, plan.c_terms, plan.bm25f = \
+                self._bm25f_alternatives(pq, plan.spq, bm25f)
+        else:
+            plan.compounds, plan.c_terms = self._plan_alternatives(
+                pq, compound_terms, stemmed, occur, lang=lang,
+                fuzzy_transpositions=fuzzy_transpositions)
+        qs = [pq] + ([plan.spq] if plan.spq is not None else [])
+        plan.terms = list(dict.fromkeys(
+            [t for q in qs for t in q.all_terms()] + plan.c_terms
+            + rule_terms))
+        plan.positions = plan.positions or any(
+            c.kind == "phrase" for q in qs for c in q.positive)
+        return plan
+
+    def _bm25f_alternatives(self, pq: ParsedQuery, spq, coeffs: dict):
+        """Batch BM25F plan shape: each simple term becomes an or-group
+        with one member per scored field (the primary field's member is
+        the term itself) -> (compounds, c_terms, field -> coefficient).
+        Simple positive terms + filters only — search_bm25f covers the
+        other edges."""
+        extra = list(self.stats.get("field_cols") or [])
+        if not extra:
+            raise ValueError("index has no field_cols; bm25f specs need "
+                             "a multi-field index")
+        if spq is not None or pq.negative or any(
+                c.kind in ("phrase", "range", "exists", "termset", "all")
+                or c.field for c in pq.clauses):
+            raise ValueError(
+                "batch bm25f specs take simple positive terms + filters "
+                "only (no field-scoped terms: BM25F already scores every "
+                "term across all fields)")
+        compounds = {i: [f"f:{g}:{c.tokens[0]}" for g in extra]
+                     for i, c in enumerate(pq.clauses) if c.kind == "term"}
+        cmap = {f: 1.0 for f in [self.stats.get("text_col", "text")]
+                + extra}
+        for fname, v in coeffs.items():
+            if fname not in cmap:
+                raise ValueError(
+                    f"unknown field {fname!r}; index has {list(cmap)}")
+            cmap[fname] = float(v)
+        return (compounds, [t for a in compounds.values() for t in a],
+                cmap)
+
+    def _plan_stats(self, plan: QueryPlan, dfs: dict) -> QueryPlan:
+        """Planning step 2, from global dfs covering plan.terms: prune
+        dead alternatives, detect a dead required clause, build the
+        BM25 weights and the posting-block estimate."""
+        pq, dtype = plan.pq, plan.dtype
+        plan.dfs = {t: dfs[t] for t in plan.terms}
+        plan.est_blocks = _est_blocks(plan.dfs.values())
+        if plan.bm25f is None:
+            plan.compounds = self._prune_dead_alts(plan.compounds, dfs)
+        if plan.union:
+            if any(c.kind != "term" for c in pq.positive):
+                raise ValueError(f"occur={plan.occur!r} supports plain "
+                                 "term clauses only")
+            plan.dead = all(dfs[c.tokens[0]] == 0 for c in pq.positive)
+        else:
+            plan.dead = self._dead_clause(pq, plan.compounds, dfs)
+        if plan.dead:
+            return plan
+        if plan.bm25f is not None:
+            # union-df IDF, each field's own fieldnorms, coefficient
+            # inside the saturation (search_bm25f semantics)
+            primary = self.stats.get("text_col", "text")
+            for c in pq.positive:
+                t = c.tokens[0]
+                if ":" in t:
+                    continue  # attribute filter, unscored
+                for f, key in [(primary, t)] + [
+                        (g, f"f:{g}:{t}")
+                        for g in self.stats.get("field_cols") or ()]:
+                    plan.weights[key] = Bm25FWeight(
+                        dfs["u:" + t], self.num_docs,
+                        self._avgfn_for_key(key),
+                        coeff=plan.bm25f[f], dtype=dtype)
+            return plan
+        plan.weights = self._weights(pq, dfs, dtype)
+        if plan.spq is not None:
+            plan.weights.update(self._weights(plan.spq, dfs, dtype))
+        for t in plan.c_terms:
+            plan.weights[t] = Bm25Weight(dfs[t], self.num_docs,
+                                         self._avgfn_for_key(t),
+                                         dtype=dtype)
+        return plan
+
+    def _route_local(self, plan: QueryPlan) -> bool:
+        """Auto-routing on the plan's own term-stats lookup: run
+        driver-locally at or below `local_threshold` estimated posting
+        blocks (`// local_phrase_divisor` when positions are read)."""
+        thr = self.local_threshold
+        if thr <= 0:  # auto-routing disabled
+            return False
+        if plan.positions:
+            thr //= self.local_phrase_divisor
+        return plan.est_blocks <= thr
+
+    def _postings_for(self, terms: list[str], positions: bool = False):
+        """Distributed posting scan pruned to `terms` (Catalyst pushes
+        the IN filter to Parquet row-group stats)."""
+        from pyspark.sql import functions as F
+
+        return (self.postings_df.filter(F.col("term").isin(list(terms)))
+                .select(*_POSTING_COLS,
+                        *(["positions"] if positions else [])))
+
+    def _shape(self, postings, est_blocks: int):
+        """Small queries (few posting blocks): one task evaluating all
+        segments beats a per-segment shuffle fanout — the coordinator-
+        handles-small-queries path; coalesce(1) folds the (pruned,
+        KB-scale) scan and the kernel into ONE stage with no exchange.
+        Large queries fan out hash-partitioned on segment_id (scales
+        with the cluster) via repartition, which keeps the parallel
+        scan."""
+        from pyspark.sql import functions as F
+
+        if est_blocks <= self.small_query_blocks:
+            return postings.coalesce(1)
+        return postings.repartition(F.col("segment_id"))
+
+    # ------------------------------------------------------------------
     def search(self, query: str | ParsedQuery, k: int = TOP_K_DEFAULT,
                dtype=np.float32, with_meta: bool = False,
                occur: str = "must", max_docs_per_segment: int | None = None,
@@ -1577,257 +1950,43 @@ class IndexReader:
         reference's accumulation semantics (computer/mod.rs:471-497);
         discard rules exclude matching docs like MustNot groups
         (optic.rs:62-77)."""
-        from pyspark.sql import functions as F
-
-        pq = self._parse(query)
-        boost_rules: list = []
-        discard_matchers: list = []
-        rule_terms: list[str] = []
-        require_matchers: list | None = None
-        rules_pos = rules_doclen = False
-        if optic:
-            from .optic import (Optic, all_matcher_terms, compile_rules,
-                                rules_need_doclen, rules_need_positions)
-
-            if occur == "should":
-                raise ValueError("optic rules require occur='must'")
-            rules = optic.rules if isinstance(optic, Optic) else optic
-            boost_rules, discard_matchers = compile_rules(rules)
-            if isinstance(optic, Optic) and optic.discard_non_matching:
-                if not boost_rules:
-                    raise ValueError(
-                        "discard_non_matching needs at least one "
-                        "non-discard rule (the Must union would be "
-                        "empty)")
-                require_matchers = [m for _, m in boost_rules]
-            rule_terms = all_matcher_terms(boost_rules, discard_matchers)
-            rules_pos = rules_need_positions(boost_rules,
-                                            discard_matchers)
-            rules_doclen = rules_need_doclen(boost_rules,
-                                            discard_matchers)
-        spq = None
-        if should is not None:
-            if occur == "should":
-                raise ValueError(
-                    "mixed occur uses occur='must' + should=...")
-            spq = (self._parse(should) if isinstance(should, str)
-                   else should)
-            if spq.negative:
-                raise ValueError(
-                    "negations belong in the must query, not in should")
-        s_terms = spq.all_terms() if spq is not None else []
-        range_specs = [_typed_range_spec(c) for c in pq.positive
-                       if c.kind == "range"]
-        exists_specs = [(c.tokens[0], c.neg) for c in pq.positive
-                        if c.kind == "exists"]
-        union = occur in ("should", "dismax")
-        if occur == "dismax" and not 0.0 <= tie_breaker <= 1.0:
-            raise ValueError("dismax tie_breaker must be in [0, 1]")
-        if const_score is not None and union:
-            raise ValueError("const_score requires occur='must'")
-        if range_specs or exists_specs:
-            if union:
-                raise ValueError(
-                    "range/exists filters require occur='must'")
-            self._validate_range_cols(
-                range_specs + [(col,) for col, _ in exists_specs])
-            rng_ctx = (self._turns_path, self._seg_sources(),
-                       self._offsets)
-        else:
-            rng_ctx = None
-        if not any(c.kind in ("term", "phrase", "filter", "termset")
-                   for c in pq.positive):
-            # no posting-backed membership clause: pure match-all
-            # (`* n_chars:>100`, `* -tool:*`, ...) — row-store path
-            return self._search_all(
-                pq, k=k, offset=offset, with_meta=with_meta,
-                range_specs=range_specs, exists_specs=exists_specs,
-                const_score=const_score, _count_rows=_count_rows)
-        compounds, c_terms = self._plan_alternatives(
-            pq, compound_terms, stemmed, occur, lang=lang,
-            fuzzy_transpositions=fuzzy_transpositions)
-        dfs = self.term_dfs(list(dict.fromkeys(
-            pq.all_terms() + s_terms + c_terms + rule_terms)))
-        compounds = self._prune_dead_alts(compounds, dfs)
-        if union:
-            if any(c.kind != "term" for c in pq.positive):
-                raise ValueError(
-                    f"occur={occur!r} supports plain term clauses only")
-            if all(dfs[c.tokens[0]] == 0 for c in pq.positive):
-                return None if _count_rows else self._empty_result()
-        elif self._dead_clause(pq, compounds, dfs):
+        plan = self._plan(
+            query, dtype=dtype, occur=occur, should=should,
+            compound_terms=compound_terms, stemmed=stemmed, lang=lang,
+            fuzzy_transpositions=fuzzy_transpositions,
+            tie_breaker=tie_breaker, const_score=const_score, optic=optic)
+        if plan.match_all:
+            return self._search_all(plan, k, offset, with_meta,
+                                    _count_rows=_count_rows)
+        if plan.dead:
             return None if _count_rows else self._empty_result()
-        weights = self._weights(pq, dfs, dtype)
-        if spq is not None:
-            weights.update(self._weights(spq, dfs, dtype))
-        for t in c_terms:
-            weights[t] = Bm25Weight(dfs[t], self.num_docs,
-                                    self._avgfn_for_key(t), dtype=dtype)
-        has_phrase = any(c.kind == "phrase" for c in pq.positive) or (
-            spq is not None
-            and any(c.kind == "phrase" for c in spq.positive)) or rules_pos
-        cols = _POSTING_COLS + (["positions"] if has_phrase else [])
-        terms = list(dict.fromkeys(
-            pq.all_terms() + s_terms + c_terms + rule_terms))
         seg_k = k + offset  # each segment must surface the skipped page
-        idx_path = self.path  # plain string: the kernel closure must
-        # not capture self (unpicklable SparkSession)
-
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(terms))
-                    .select(*cols))
-
-        def eval_by_term(by_term: dict, seg: int):
-            specs, negs = _make_specs(pq, weights, by_term, dtype,
-                                      compounds=compounds)
-            if union:
-                term_specs = [(tp, w) for kind, tp, w in specs]
-                res = union_topk(
-                    term_specs, seg_k, dtype=dtype, mustnot_groups=negs,
-                    tie=(tie_breaker if occur == "dismax" else None))
-                if _count_rows:
-                    # union membership count: one or-group conjunction
-                    # (WAND can't count — it skips; this is the tuple-
-                    # collector full walk, like tantivy's Count forcing
-                    # full evaluation alongside TopDocs)
-                    n = count_matches(
-                        [("or", [(tp, None) for tp, _ in term_specs],
-                          None)], negs)
-                    return res + (n, False)
-                return res
-            sspecs = (_make_specs(spq, weights, by_term, dtype)[0]
-                      if spq is not None else None)
-            empty_tp = TermPostings([], [], [], [], [], [])
-            dl_fn = (_doclen_lookup(idx_path, seg)
-                     if rules_doclen else None)
-            negs = negs + [_matcher_spec(m, by_term, empty_tp, dl_fn)
-                           for m in discard_matchers]
-            bspecs = [(f, _matcher_spec(m, by_term, empty_tp, dl_fn))
-                      for f, m in boost_rules] or None
-            req = ([_matcher_spec(m, by_term, empty_tp, dl_fn)
-                    for m in require_matchers]
-                   if require_matchers is not None else None)
-            rfns = None
-            if rng_ctx is not None:
-                troot, ssrc, offs = rng_ctx
-                dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
-                rfns = [_range_lookup(troot, dirs, range_specs, offs,
-                                      exists_specs=exists_specs)]
-            return segment_topk(
-                specs, negs, seg_k, dtype=dtype,
-                max_docs=max_docs_per_segment,
-                should_specs=sspecs, boost_specs=bspecs,
-                require_any=req, range_fns=rfns,
-                const_score=const_score, with_count=_count_rows)
+        cap = max_docs_per_segment
+        # tiny dict in the closure (the kernel closure must not capture
+        # self: unpicklable SparkSession)
+        seg_docs = (self.segment_docs
+                    if _count_rows and cap is not None else None)
 
         def run_arrow(batches):
-            # arrow-native per-partition evaluation: ONE arrow table per
-            # partition, numpy index grouping, no per-group pandas
-            # machinery (at 640 segments the applyInPandas per-group
-            # overhead alone cost ~1.5 s per query)
-            import pyarrow as pa
+            # _count_rows: each segment emits its top-k hit rows plus
+            # ONE sentinel count row — the reference's (Count|
+            # ApproxCount, TopDocs) tuple collector,
+            # crates/core/src/inverted_index/search.rs:47-95
+            parts = [(seg,) + _eval_group(plan, by_term, seg, seg_k,
+                                          _count_rows, cap, seg_docs)
+                     for seg, by_term in _batch_groups(batches)]
+            batch = _hit_batch(parts, "segment_id", _count_rows)
+            if batch is not None:
+                yield batch
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            docs_out, scores_out, segs_out = [], [], []
-            for seg, by_term in _group_arrow_postings(tbl):
-                docs, scores = eval_by_term(by_term, seg)
-                if docs.size:
-                    docs_out.append(docs.astype(np.int64))
-                    scores_out.append(scores.astype(np.float64))
-                    segs_out.append(np.full(docs.size, seg,
-                                            dtype=np.int64))
-            if not docs_out:
-                return
-            yield pa.record_batch(
-                [pa.array(np.concatenate(docs_out)),
-                 pa.array(np.concatenate(scores_out)),
-                 pa.array(np.concatenate(segs_out))],
-                names=["doc_id", "score", "segment_id"])
-
+        hits = self._shape(self._postings_for(plan.terms, plan.positions),
+                           plan.est_blocks).mapInArrow(
+            run_arrow,
+            schema="doc_id long, score double, segment_id long"
+                   + (", n long, capped boolean" if _count_rows else ""))
         if _count_rows:
-            # one-pass top-k + per-segment hit counts (the reference's
-            # (Count|ApproxCount, TopDocs) tuple collector,
-            # crates/core/src/inverted_index/search.rs:47-95): each
-            # segment emits its top-k hit rows (n = -1) plus ONE
-            # sentinel count row (n >= 0). A capped segment reports
-            # max(exact_considered, term-independence estimate) and
-            # flags itself approximate — ApproxCount harvest semantics
-            # (collector/approx_count.rs:162-181).
-            simple_terms = [t for c in pq.positive if c.kind == "term"
-                            for t in c.tokens]
-            seg_docs = self.segment_docs  # tiny dict in the closure
-            capd = max_docs_per_segment
-
-            def run_arrow_count(batches):
-                import pyarrow as pa
-
-                bl = [b for b in batches if b.num_rows]
-                if not bl:
-                    return
-                tbl = pa.Table.from_batches(bl)
-                d_o, s_o, g_o, n_o, c_o = [], [], [], [], []
-                for seg, by_term in _group_arrow_postings(tbl):
-                    docs, scores, n, was_capped = eval_by_term(by_term,
-                                                               seg)
-                    if was_capped and capd is not None:
-                        prod = 1
-                        for t in simple_terms:
-                            tp = by_term.get(t)
-                            prod *= (int(tp.doc_count)
-                                     if tp is not None else 0)
-                        nd = seg_docs.get(seg, 0)
-                        kt = len(simple_terms)
-                        est = (prod // (nd ** (kt - 1))
-                               if nd and kt > 1 else prod)
-                        n = max(n, est)
-                    d_o.append(np.concatenate(
-                        [np.array([-1], dtype=np.int64),
-                         docs.astype(np.int64)]))
-                    s_o.append(np.concatenate(
-                        [np.zeros(1), scores.astype(np.float64)]))
-                    g_o.append(np.full(docs.size + 1, seg,
-                                       dtype=np.int64))
-                    n_o.append(np.concatenate(
-                        [np.array([n], dtype=np.int64),
-                         np.full(docs.size, -1, dtype=np.int64)]))
-                    c_o.append(np.concatenate(
-                        [np.array([bool(was_capped)]),
-                         np.zeros(docs.size, dtype=bool)]))
-                if not d_o:
-                    return
-                yield pa.record_batch(
-                    [pa.array(np.concatenate(d_o)),
-                     pa.array(np.concatenate(s_o)),
-                     pa.array(np.concatenate(g_o)),
-                     pa.array(np.concatenate(n_o)),
-                     pa.array(np.concatenate(c_o))],
-                    names=["doc_id", "score", "segment_id", "n",
-                           "capped"])
-
-        out_schema = "doc_id long, score double, segment_id long"
-
-        # small queries (few posting blocks): one task evaluating all
-        # segments beats a per-segment shuffle fanout — the coordinator-
-        # handles-small-queries path; coalesce(1) folds the (pruned,
-        # KB-scale) scan and the kernel into ONE stage with no
-        # exchange — collapsing the scan is fine precisely because the
-        # row-group-pruned read is tiny here. Large queries fan out
-        # hash-partitioned on segment_id (scales with the cluster) via
-        # repartition, which keeps the parallel scan.
-        est_blocks = sum(-(-df // 128) + 1 for df in dfs.values())
-        if est_blocks <= self.small_query_blocks:
-            shaped = postings.coalesce(1)
-        else:
-            shaped = postings.repartition(F.col("segment_id"))
-        if _count_rows:
-            return shaped.mapInArrow(
-                run_arrow_count,
-                schema=out_schema + ", n long, capped boolean")
-        local = shaped.mapInArrow(run_arrow, schema=out_schema)
-        return self._topk_tail(local, k, offset, with_meta)
+            return hits
+        return self._topk_tail(hits, k, offset, with_meta)
 
     def _topk_tail(self, local, k: int, offset: int, with_meta: bool):
         """Shared finish: global (score desc, doc_id asc) top-k over a
@@ -1859,8 +2018,7 @@ class IndexReader:
                    .orderBy(F.desc("score"), F.asc("doc_id")))
         return top.drop("segment_id")
 
-    def _all_candidates(self, range_specs: list, exists_specs: list,
-                        negative, keep_cols: tuple = ()) -> "tuple":
+    def _all_candidates(self, plan: QueryPlan, keep_cols: tuple = ()):
         """(cand DataFrame (doc_id, segment_id), const) for pure
         match-all queries — the tantivy AllQuery path (all_query.rs):
         membership comes from the ROW STORE, not postings.
@@ -1874,7 +2032,7 @@ class IndexReader:
 
         turns = self._read_turns()
         cond = F.lit(True)
-        for col, lo, hi, lo_inc, hi_inc in range_specs:
+        for col, lo, hi, lo_inc, hi_inc in plan.range_specs:
             if col not in turns.columns:
                 raise ValueError(
                     f"range column {col!r} not in the row store")
@@ -1884,7 +2042,7 @@ class IndexReader:
             if hi is not None:
                 cond = cond & ((F.col(col) <= F.lit(hi)) if hi_inc
                                else (F.col(col) < F.lit(hi)))
-        for col, neg in exists_specs:
+        for col, neg in plan.exists_specs:
             if col not in turns.columns:
                 raise ValueError(
                     f"exists column {col!r} not in the row store")
@@ -1904,6 +2062,7 @@ class IndexReader:
             cand = (cand.join(F.broadcast(m), "segment_id")
                     .drop("segment_id")
                     .withColumnRenamed("__kseg", "segment_id"))
+        negative = plan.pq.negative
         neg_terms = [t for c in negative for t in c.tokens]
         if neg_terms:
             docs = self._term_docs_df(neg_terms)
@@ -1924,18 +2083,10 @@ class IndexReader:
         work is O(matching postings), never corpus-sized)."""
         from pyspark.sql import functions as F
 
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(list(terms)))
-                    .select(*_POSTING_COLS))
-
         def run(batches):
             import pyarrow as pa
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            for _seg, by_term in _group_arrow_postings(tbl):
+            for _seg, by_term in _batch_groups(batches):
                 for t, tp in by_term.items():
                     dd = tp.decode_blocks(np.arange(tp.nblocks))[0]
                     yield pa.record_batch(
@@ -1943,14 +2094,11 @@ class IndexReader:
                          pa.array(dd.astype(np.int64))],
                         names=["term", "doc_id"])
 
-        return postings.repartition(F.col("segment_id")).mapInArrow(
-            run, schema="term string, doc_id long")
+        return (self._postings_for(terms).repartition(F.col("segment_id"))
+                .mapInArrow(run, schema="term string, doc_id long"))
 
-    def _search_all(self, pq: ParsedQuery, k: int, offset: int,
-                    with_meta: bool, range_specs: list,
-                    exists_specs: list,
-                    const_score: float | None = None,
-                    _count_rows: bool = False):
+    def _search_all(self, plan: QueryPlan, k: int, offset: int,
+                    with_meta: bool, _count_rows: bool = False):
         """search() for queries with no posting-backed positive clause
         (`*`, `* n_chars:>100`, `* -tool:* -error`): every doc passing
         the row-store filters matches; score = Σ boosts of the `*`
@@ -1963,18 +2111,13 @@ class IndexReader:
         row-store scan has no ShortCircuit cap)."""
         from pyspark.sql import functions as F
 
-        score = (const_score if const_score is not None
-                 else sum(c.boost for c in pq.positive
-                          if c.kind == "all"))
-        cand = self._all_candidates(range_specs, exists_specs,
-                                    pq.negative)
+        score = _match_all_score(plan)
+        cand = self._all_candidates(plan)
         if _count_rows:
             seg_k = k + offset
             sc = float(score)
 
             def run_count(batches):
-                import pyarrow as pa
-
                 parts = [np.asarray(b.column(0).to_numpy(),
                                     dtype=np.int64)
                          for b in batches if b.num_rows]
@@ -1986,22 +2129,8 @@ class IndexReader:
                     top = np.sort(np.partition(ids, seg_k)[:seg_k])
                 else:
                     top = np.sort(ids)
-                yield pa.record_batch(
-                    [pa.array(np.concatenate(
-                        [np.array([-1], dtype=np.int64), top])),
-                     pa.array(np.concatenate(
-                         [np.zeros(1),
-                          np.full(top.size, sc)])),
-                     pa.array(np.full(top.size + 1, -1,
-                                      dtype=np.int64)),
-                     pa.array(np.concatenate(
-                         [np.array([n], dtype=np.int64),
-                          np.full(top.size, -1, dtype=np.int64)])),
-                     pa.array(np.concatenate(
-                         [np.array([False]),
-                          np.zeros(top.size, dtype=bool)]))],
-                    names=["doc_id", "score", "segment_id", "n",
-                           "capped"])
+                yield _hit_batch([(-1, top, np.full(top.size, sc), n,
+                                   False)], "segment_id", True)
 
             return cand.select("doc_id").mapInArrow(
                 run_count,
@@ -2010,10 +2139,7 @@ class IndexReader:
         local = cand.withColumn("score", F.lit(float(score)))
         return self._topk_tail(local, k, offset, with_meta)
 
-    def _search_all_local(self, pq: ParsedQuery, k: int, dtype,
-                          offset: int, range_specs: list,
-                          exists_specs: list,
-                          const_score: float | None = None,
+    def _search_all_local(self, plan: QueryPlan, k: int, offset: int,
                           _with_count: bool = False):
         """Driver-local `_search_all`: one pyarrow read of the
         hive-partitioned row store with the filters pushed down, same
@@ -2023,8 +2149,8 @@ class IndexReader:
 
         dset = ds.dataset(self._turns_path, format="parquet",
                           partitioning="hive")
-        flt = _arrow_row_filter(dset.schema.names, range_specs,
-                                exists_specs)
+        flt = _arrow_row_filter(dset.schema.names, plan.range_specs,
+                                plan.exists_specs)
         if "doc_id" in dset.schema.names:
             tbl = dset.to_table(columns=["doc_id"], filter=flt)
             ids = np.asarray(tbl["doc_id"].to_numpy(), dtype=np.int64)
@@ -2039,13 +2165,14 @@ class IndexReader:
                 offs[int(s)] = int(o)
             ids = (np.asarray(tbl["__ord"].to_numpy(), dtype=np.int64)
                    + offs[segs])
-        neg_terms = [t for c in pq.negative for t in c.tokens]
+        negative = plan.pq.negative
+        neg_terms = [t for c in negative for t in c.tokens]
         if neg_terms and ids.size:
             ptbl = self._local_postings(neg_terms, False)
             excl_parts = []
             for _seg, by_term in _group_arrow_postings(ptbl):
                 sub = None
-                for c in pq.negative:
+                for c in negative:
                     grp = None
                     for t in c.tokens:
                         tp = by_term.get(t)
@@ -2066,10 +2193,7 @@ class IndexReader:
                 ids = ids[~np.isin(ids, excl)]
         n_all = int(ids.size)
         ids = np.sort(ids)[offset:offset + k]
-        score = (const_score if const_score is not None
-                 else sum(c.boost for c in pq.positive
-                          if c.kind == "all"))
-        scores = np.full(ids.size, score, dtype=dtype)
+        scores = np.full(ids.size, _match_all_score(plan), dtype=plan.dtype)
         if _with_count:
             return ids, scores, Count(n_all, True)
         return ids, scores
@@ -2090,23 +2214,16 @@ class IndexReader:
         terms = [c.tokens[0] for c in pq.positive]
         dfs = self.term_dfs(terms)
         weights = self._weights(pq, dfs, dtype)
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(terms))
-                    .select(*_POSTING_COLS))
 
         def run_arrow(batches):
             import pyarrow as pa
 
             from .kernel import compute_signals
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
             empty_tp = TermPostings([], [], [], [], [], [])
             out = {"doc_id": [], "bm25": [], "coverage": [],
                    "idf_sum": []}
-            for _seg, by_term in _group_arrow_postings(tbl):
+            for _seg, by_term in _batch_groups(batches):
                 specs = [(by_term.get(t, empty_tp), weights[t])
                          for t in terms]
                 docs, bm25, cov, idf = compute_signals(specs,
@@ -2122,10 +2239,10 @@ class IndexReader:
                  for c in ("doc_id", "bm25", "coverage", "idf_sum")],
                 names=["doc_id", "bm25", "coverage", "idf_sum"])
 
-        return postings.repartition(F.col("segment_id")).mapInArrow(
-            run_arrow,
-            schema="doc_id long, bm25 double, coverage double, "
-                   "idf_sum double")
+        return (self._postings_for(terms).repartition(F.col("segment_id"))
+                .mapInArrow(run_arrow,
+                            schema="doc_id long, bm25 double, "
+                                   "coverage double, idf_sum double"))
 
     def search_bm25f(self, query: str | ParsedQuery,
                      k: int = TOP_K_DEFAULT, dtype=np.float32,
@@ -2219,9 +2336,6 @@ class IndexReader:
         scan_terms = list(dict.fromkeys(
             field_keys + attr_terms
             + [t for g in neg_key_groups for t in g]))
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(scan_terms))
-                    .select(*_POSTING_COLS))
         seg_k = k + offset
         clauses = list(pq.clauses)
 
@@ -2244,35 +2358,17 @@ class IndexReader:
             return segment_topk(specs, negs, seg_k, dtype=dtype)
 
         def run_arrow(batches):
-            import pyarrow as pa
+            batch = _hit_batch(
+                [(seg,) + eval_by_term(by_term) + (0, False)
+                 for seg, by_term in _batch_groups(batches)],
+                "segment_id", False)
+            if batch is not None:
+                yield batch
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            docs_out, scores_out, segs_out = [], [], []
-            for seg, by_term in _group_arrow_postings(tbl):
-                docs, scores = eval_by_term(by_term)
-                if docs.size:
-                    docs_out.append(docs.astype(np.int64))
-                    scores_out.append(scores.astype(np.float64))
-                    segs_out.append(np.full(docs.size, seg,
-                                            dtype=np.int64))
-            if not docs_out:
-                return
-            yield pa.record_batch(
-                [pa.array(np.concatenate(docs_out)),
-                 pa.array(np.concatenate(scores_out)),
-                 pa.array(np.concatenate(segs_out))],
-                names=["doc_id", "score", "segment_id"])
-
-        out_schema = "doc_id long, score double, segment_id long"
-        est_blocks = sum(-(-dfs.get(t, 0) // 128) + 1 for t in scan_terms)
-        if est_blocks <= self.small_query_blocks:
-            shaped = postings.coalesce(1)
-        else:
-            shaped = postings.repartition(F.col("segment_id"))
-        local = shaped.mapInArrow(run_arrow, schema=out_schema)
+        local = self._shape(
+            self._postings_for(scan_terms),
+            _est_blocks(dfs.get(t, 0) for t in scan_terms)).mapInArrow(
+            run_arrow, schema="doc_id long, score double, segment_id long")
         top = local.orderBy(F.desc("score"), F.asc("doc_id"))
         if offset:
             top = top.offset(offset)
@@ -2328,159 +2424,38 @@ class IndexReader:
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        def _spec(v):
-            if isinstance(v, dict):
-                return (v["q"], v.get("should"), int(v.get("offset", 0)),
-                        bool(v.get("bm25f")), v.get("field_coeffs"),
-                        v.get("lang"), v.get("optic"),
-                        bool(v.get("fuzzy_transpositions")),
-                        v.get("max_docs"))
-            return (v, None, 0, False, None, None, None, False, None)
-
-        extra_fields = list(self.stats.get("field_cols") or [])
-        primary = self.stats.get("text_col", "text")
-        ftoks = self.stats.get("field_tokens") or {}
-        favg = {primary: self.avg_fieldnorm}
-        for g in extra_fields:
-            favg[g] = (((ftoks.get(g, 0) or 0) / self.num_docs)
-                       or 1.0)  # empty field: keep norm cache finite
-
-        parsed, shoulds, offsets = {}, {}, {}
-        compounds_by, cterms_by, bm25f_by = {}, {}, {}
-        optic_by: dict = {}
-        ranges_by: dict = {}
-        exists_by: dict = {}
-        max_docs_by: dict = {}
-        union_terms: set[str] = set()
+        # planning in two steps around ONE term_dfs for the whole batch
+        plans: dict[str, QueryPlan] = {}
+        jobs: dict[str, tuple] = {}  # name -> (offset, max_docs)
         for name, v in queries.items():
-            (q, sh, off, is_f, coeffs, qlang, qoptic, qfzt,
-             qmax) = _spec(v)
-            max_docs_by[name] = (int(qmax) if qmax is not None
-                                 else None)
-            if qoptic is not None:
-                from .optic import Optic, compile_rules
-
-                rules = (qoptic.rules if isinstance(qoptic, Optic)
-                         else qoptic)
-                b_rules, d_matchers = compile_rules(rules)
-                req = None
-                if isinstance(qoptic, Optic) and qoptic.discard_non_matching:
-                    if not b_rules:
-                        raise ValueError(
-                            "discard_non_matching needs at least one "
-                            "non-discard rule")
-                    req = [m for _, m in b_rules]
-                optic_by[name] = (b_rules, d_matchers, req)
-            else:
-                optic_by[name] = None
-            pq = self._parse(q)
-            parsed[name] = pq
-            offsets[name] = off
-            ranges_by[name] = [_typed_range_spec(c) for c in pq.positive
-                               if c.kind == "range"]
-            exists_by[name] = [(c.tokens[0], c.neg) for c in pq.positive
-                               if c.kind == "exists"]
-            if ranges_by[name] or exists_by[name]:
-                self._validate_range_cols(
-                    ranges_by[name]
-                    + [(col,) for col, _ in exists_by[name]])
-            if not any(c.kind in ("term", "phrase", "filter", "termset")
-                       for c in pq.positive):
+            spec = v if isinstance(v, dict) else {"q": v}
+            plan = self._plan_terms(
+                spec["q"], dtype=dtype, should=spec.get("should"),
+                compound_terms=compound_terms, stemmed=stemmed,
+                lang=spec.get("lang"),
+                fuzzy_transpositions=bool(
+                    spec.get("fuzzy_transpositions")),
+                optic=spec.get("optic"),
+                bm25f=((spec.get("field_coeffs") or {})
+                       if spec.get("bm25f") else None))
+            if plan.match_all:
                 raise ValueError(
                     f"batch query {name!r} has no posting-backed "
                     "positive clause — run pure match-all queries "
                     "through search()")
-            spq = (self._parse(sh) if isinstance(sh, str) else sh) \
-                if sh is not None else None
-            if spq is not None and spq.negative:
-                raise ValueError(
-                    "negations belong in the must query, not in should")
-            if is_f:
-                if not extra_fields:
-                    raise ValueError("index has no field_cols; "
-                                     "bm25f specs need a multi-field "
-                                     "index")
-                if spq is not None or pq.negative or any(
-                        c.kind in ("phrase", "range", "exists",
-                                   "termset", "all") or c.field
-                        for c in pq.clauses):
-                    raise ValueError(
-                        "batch bm25f specs take simple positive terms "
-                        "+ filters only (no field-scoped terms: BM25F "
-                        "already scores every term across all fields)")
-                cdict = {}
-                fkeys = []
-                for i, c in enumerate(pq.clauses):
-                    if c.kind != "term":
-                        continue
-                    t = c.tokens[0]
-                    cdict[i] = [f"f:{g}:{t}" for g in extra_fields]
-                    fkeys.extend(cdict[i])
-                    union_terms.add("u:" + t)
-                compounds_by[name], cterms_by[name] = cdict, fkeys
-                cmap = {f: 1.0 for f in [primary] + extra_fields}
-                for fname, vv in (coeffs or {}).items():
-                    if fname not in cmap:
-                        raise ValueError(f"unknown field {fname!r}; "
-                                         f"index has {list(cmap)}")
-                    cmap[fname] = float(vv)
-                bm25f_by[name] = cmap
-            else:
-                compounds_by[name], cterms_by[name] = \
-                    self._plan_alternatives(pq, compound_terms, stemmed,
-                                            lang=qlang,
-                                            fuzzy_transpositions=qfzt)
-                bm25f_by[name] = None
-            shoulds[name] = spq
-        from .optic import (all_matcher_terms, rules_need_doclen,
-                            rules_need_positions)
-
-        rule_terms_by = {
-            name: (all_matcher_terms(o[0], o[1]) if o else [])
-            for name, o in optic_by.items()}
-        rules_pos = any(rules_need_positions(o[0], o[1])
-                        for o in optic_by.values() if o)
-        rules_doclen = any(rules_need_doclen(o[0], o[1])
-                           for o in optic_by.values() if o)
-        all_terms = sorted(
-            {t for pq in parsed.values() for t in pq.all_terms()}
-            | {t for spq in shoulds.values() if spq is not None
-               for t in spq.all_terms()}
-            | {t for ct in cterms_by.values() for t in ct}
-            | {t for ts in rule_terms_by.values() for t in ts}
-            | union_terms)
-        dfs = self.term_dfs(all_terms)
-        for name in parsed:
-            if bm25f_by[name] is None:
-                compounds_by[name] = self._prune_dead_alts(
-                    compounds_by[name], dfs)
-        weights = {}
-        for name, pq in parsed.items():
-            coeffs = bm25f_by[name]
-            if coeffs is not None:
-                w = {}
-                for c in pq.positive:
-                    t = c.tokens[0]
-                    if ":" in t:
-                        continue  # attribute filter, unscored
-                    udf = dfs["u:" + t]
-                    w[t] = Bm25FWeight(udf, self.num_docs, favg[primary],
-                                       coeff=coeffs[primary], dtype=dtype)
-                    for g in extra_fields:
-                        w[f"f:{g}:{t}"] = Bm25FWeight(
-                            udf, self.num_docs, favg[g],
-                            coeff=coeffs[g], dtype=dtype)
-            else:
-                w = self._weights(pq, dfs, dtype)
-                if shoulds[name] is not None:
-                    w.update(self._weights(shoulds[name], dfs, dtype))
-                for t in cterms_by[name]:
-                    w[t] = Bm25Weight(dfs[t], self.num_docs,
-                                      self._avgfn_for_key(t), dtype=dtype)
-            weights[name] = w
+            plans[name] = plan
+            md = spec.get("max_docs")
+            jobs[name] = (int(spec.get("offset", 0)),
+                          int(md) if md is not None else None)
+        # BM25F weights take their IDF from the union-of-fields df
+        union_keys = {"u:" + c.tokens[0] for p in plans.values()
+                      if p.bm25f is not None
+                      for c in p.pq.positive if c.kind == "term"}
+        dfs = self.term_dfs(sorted(
+            {t for p in plans.values() for t in p.terms} | union_keys))
         # queries with a dead required clause are dropped up front
-        live = {name: pq for name, pq in parsed.items()
-                if not self._dead_clause(pq, compounds_by[name], dfs)}
+        live = {name: p for name, p in plans.items()
+                if not self._plan_stats(p, dfs).dead}
         if not live:
             extra = (", CAST(NULL AS LONG) AS total, "
                      "CAST(NULL AS BOOLEAN) AS total_exact"
@@ -2489,135 +2464,31 @@ class IndexReader:
                 "SELECT CAST(NULL AS STRING) AS query, "
                 "CAST(NULL AS INT) AS rank, CAST(NULL AS LONG) AS doc_id, "
                 f"CAST(NULL AS DOUBLE) AS score{extra} WHERE 1=0")
-        has_phrase = any(
-            c.kind == "phrase"
-            for name in live
-            for pq in [parsed[name]] + (
-                [shoulds[name]] if shoulds[name] is not None else [])
-            for c in pq.positive) or rules_pos
-        cols = _POSTING_COLS + (["positions"] if has_phrase else [])
-        idx_path = self.path
-        rng_ctx = ((self._turns_path, self._seg_sources(),
-                    self._offsets)
-                   if any(ranges_by.get(n) or exists_by.get(n)
-                          for n in live) else None)
-        live_terms = sorted(
-            {t for name in live for t in parsed[name].all_terms()}
-            | {t for name in live if shoulds[name] is not None
-               for t in shoulds[name].all_terms()}
-            | {t for name in live for t in cterms_by[name]}
-            | {t for name in live for t in rule_terms_by[name]})
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(live_terms))
-                    .select(*cols))
-        seg_k = {name: k + offsets[name] for name in live}
+        seg_docs = (self.segment_docs
+                    if with_count and any(md is not None
+                                          for _, md in jobs.values())
+                    else None)
 
         def run_arrow(batches):
-            # arrow-native per-partition evaluation (see search()):
-            # one table per partition, numpy grouping, the whole query
-            # set per segment group
-            import pyarrow as pa
+            # the whole query set per segment group
+            parts = []
+            for seg, by_term in _batch_groups(batches):
+                for name, plan in live.items():
+                    off, md = jobs[name]
+                    parts.append((name,) + _eval_group(
+                        plan, by_term, seg, k + off, with_count, md,
+                        seg_docs))
+            batch = _hit_batch(parts, "query", with_count)
+            if batch is not None:
+                yield batch
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            names_out, docs_out, scores_out = [], [], []
-            ns_out, caps_out = [], []
-            empty_tp = TermPostings([], [], [], [], [], [])
-            for seg, by_term in _group_arrow_postings(tbl):
-                dl_fn = (_doclen_lookup(idx_path, seg)
-                         if rules_doclen else None)
-                for name, pq in live.items():
-                    specs, negs = _make_specs(
-                        pq, weights[name], by_term, dtype,
-                        compounds=compounds_by[name])
-                    sspecs = (_make_specs(shoulds[name], weights[name],
-                                          by_term, dtype)[0]
-                              if shoulds[name] is not None else None)
-                    bspecs = req = None
-                    o = optic_by[name]
-                    if o is not None:
-                        b_rules, d_matchers, req_matchers = o
-                        negs = negs + [
-                            _matcher_spec(m, by_term, empty_tp, dl_fn)
-                            for m in d_matchers]
-                        bspecs = [(f, _matcher_spec(m, by_term,
-                                                    empty_tp, dl_fn))
-                                  for f, m in b_rules] or None
-                        req = ([_matcher_spec(m, by_term, empty_tp,
-                                              dl_fn)
-                                for m in req_matchers]
-                               if req_matchers is not None else None)
-                    rfns = None
-                    rspecs = ranges_by.get(name)
-                    especs = exists_by.get(name)
-                    if (rspecs or especs) and rng_ctx is not None:
-                        troot, ssrc, offs = rng_ctx
-                        dirs = (ssrc.get(seg, [seg]) if ssrc
-                                else [seg])
-                        rfns = [_range_lookup(troot, dirs,
-                                              rspecs or [], offs,
-                                              exists_specs=especs)]
-                    res = segment_topk(
-                        specs, negs, seg_k[name], dtype=dtype,
-                        max_docs=max_docs_by[name],
-                        should_specs=sspecs, boost_specs=bspecs,
-                        require_any=req, range_fns=rfns,
-                        with_count=with_count)
-                    if with_count:
-                        docs, scores, n, was_capped = res
-                        if was_capped and max_docs_by[name] is not None:
-                            # capped segment: term-independence
-                            # estimate (ApproxCount,
-                            # approx_count.rs:104-141)
-                            prod = 1
-                            sterms = [t for c in parsed[name].positive
-                                      if c.kind == "term"
-                                      for t in c.tokens]
-                            for t in sterms:
-                                tp = by_term.get(t)
-                                prod *= (int(tp.doc_count)
-                                         if tp is not None else 0)
-                            nd = seg_docs.get(seg, 0)
-                            kt = len(sterms)
-                            est = (prod // (nd ** (kt - 1))
-                                   if nd and kt > 1 else prod)
-                            n = max(n, est)
-                        # one sentinel count row per (query, segment)
-                        names_out.append(name)
-                        docs_out.append(np.array([-1], dtype=np.int64))
-                        scores_out.append(np.zeros(1))
-                        ns_out.append(np.array([n], dtype=np.int64))
-                        caps_out.append(np.array([bool(was_capped)]))
-                    else:
-                        docs, scores = res
-                    if docs.size:
-                        names_out.extend([name] * docs.size)
-                        docs_out.append(docs.astype(np.int64))
-                        scores_out.append(scores.astype(np.float64))
-                        if with_count:
-                            ns_out.append(np.full(docs.size, -1,
-                                                  dtype=np.int64))
-                            caps_out.append(np.zeros(docs.size,
-                                                     dtype=bool))
-            if not docs_out:
-                return
-            arrs = [pa.array(names_out, type=pa.string()),
-                    pa.array(np.concatenate(docs_out)),
-                    pa.array(np.concatenate(scores_out))]
-            cols_out = ["query", "doc_id", "score"]
-            if with_count:
-                arrs += [pa.array(np.concatenate(ns_out)),
-                         pa.array(np.concatenate(caps_out))]
-                cols_out += ["n", "capped"]
-            yield pa.record_batch(arrs, names=cols_out)
-
-        seg_docs = self.segment_docs if with_count else None
-        batch_schema = "query string, doc_id long, score double" + (
-            ", n long, capped boolean" if with_count else "")
+        postings = self._postings_for(
+            sorted({t for p in live.values() for t in p.terms}),
+            any(p.positions for p in live.values()))
         local = postings.repartition(F.col("segment_id")).mapInArrow(
-            run_arrow, schema=batch_schema)
+            run_arrow,
+            schema="doc_id long, score double, query string"
+                   + (", n long, capped boolean" if with_count else ""))
         if with_count:
             # fold the sentinel rows into per-query totals inside the
             # SAME per-query shuffle the ranking window already pays
@@ -2636,10 +2507,10 @@ class IndexReader:
         w = (Window.partitionBy("query")
              .orderBy(F.desc("score"), F.asc("doc_id")))
         ranked = local.withColumn("rk", F.row_number().over(w))
-        if any(offsets.values()):
+        if any(off for off, _ in jobs.values()):
             off_map = F.create_map(*[
                 x for name in live
-                for x in (F.lit(name), F.lit(offsets[name]))])
+                for x in (F.lit(name), F.lit(jobs[name][0]))])
             ranked = (ranked
                       .withColumn("__off", off_map[F.col("query")])
                       .filter(F.col("rk") > F.col("__off"))
@@ -2674,9 +2545,13 @@ class IndexReader:
                     self._local_pruned = _PrunedPostingsReader(
                         self._postings_path)
                 return self._local_pruned.read(terms, cols)
-            except Exception:
+            except Exception as e:
                 # non-local fs, >fd-cap segment count, statistics quirks
                 # — permanently route this reader to the dataset scan
+                logging.getLogger("cuely_spark").warning(
+                    "pruned posting reader unavailable for %s (%r); "
+                    "this reader falls back to the dataset scan",
+                    self._postings_path, e)
                 self._local_pruned = False
         if self._local_dataset is None:
             # cache the dataset object: file discovery over the segment
@@ -2711,127 +2586,46 @@ class IndexReader:
         distributed :meth:`search` stays the default for DataFrame
         consumers and every correctness gate; rank identity between the
         two paths is pinned by tests/test_local_path.py."""
-        pq = self._parse(query)
-        spq = None
-        if should is not None:
-            spq = (self._parse(should) if isinstance(should, str)
-                   else should)
-            if spq.negative:
-                raise ValueError(
-                    "negations belong in the must query, not in should")
-        s_terms = spq.all_terms() if spq is not None else []
-        range_specs = [_typed_range_spec(c) for c in pq.positive
-                       if c.kind == "range"]
-        exists_specs = [(c.tokens[0], c.neg) for c in pq.positive
-                        if c.kind == "exists"]
-        union = occur in ("should", "dismax")
-        if occur == "dismax" and not 0.0 <= tie_breaker <= 1.0:
-            raise ValueError("dismax tie_breaker must be in [0, 1]")
-        if const_score is not None and union:
-            raise ValueError("const_score requires occur='must'")
-        if range_specs or exists_specs:
-            if union:
-                raise ValueError(
-                    "range/exists filters require occur='must'")
-            self._validate_range_cols(
-                range_specs + [(col,) for col, _ in exists_specs])
-        if not any(c.kind in ("term", "phrase", "filter", "termset")
-                   for c in pq.positive):
-            return self._search_all_local(
-                pq, k=k, dtype=dtype, offset=offset,
-                range_specs=range_specs, exists_specs=exists_specs,
-                const_score=const_score, _with_count=_with_count)
-        compounds, c_terms = self._plan_alternatives(
-            pq, compound_terms, stemmed, occur, lang=lang,
-            fuzzy_transpositions=fuzzy_transpositions)
-        dfs = self.term_dfs(list(dict.fromkeys(
-            pq.all_terms() + s_terms + c_terms)))
-        compounds = self._prune_dead_alts(compounds, dfs)
-        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=dtype))
-        if _with_count:
-            empty = empty + (Count(0, True),)
-        if union:
-            if any(c.kind != "term" for c in pq.positive):
-                raise ValueError(
-                    f"occur={occur!r} supports plain term clauses only")
-            if all(dfs[c.tokens[0]] == 0 for c in pq.positive):
-                return empty
-        elif self._dead_clause(pq, compounds, dfs):
-            return empty
-        weights = self._weights(pq, dfs, dtype)
-        if spq is not None:
-            weights.update(self._weights(spq, dfs, dtype))
-        for t in c_terms:
-            weights[t] = Bm25Weight(dfs[t], self.num_docs,
-                                    self._avgfn_for_key(t), dtype=dtype)
-        has_phrase = any(c.kind == "phrase" for c in pq.positive) or (
-            spq is not None
-            and any(c.kind == "phrase" for c in spq.positive))
-        terms = list(dict.fromkeys(
-            pq.all_terms() + s_terms + c_terms))
-        tbl = self._local_postings(terms, has_phrase)
-        seg_k = k + offset
-        n_total = 0
-        parts: list[tuple[np.ndarray, np.ndarray]] = []
-        # single-pass fast path: no per-segment state needed (ranges /
-        # exists filters build per-segment lookup fns) -> run the
-        # kernel ONCE over the whole index as one logical segment
+        plan = self._plan(
+            query, dtype=dtype, occur=occur, should=should,
+            compound_terms=compound_terms, stemmed=stemmed, lang=lang,
+            fuzzy_transpositions=fuzzy_transpositions,
+            tie_breaker=tie_breaker, const_score=const_score)
+        if plan.match_all:
+            return self._search_all_local(plan, k, offset, _with_count)
+        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=plan.dtype))
+        if plan.dead:
+            return empty + ((Count(0, True),) if _with_count else ())
+        tbl = self._local_postings(plan.terms, plan.positions)
+        # single-pass fast path: no per-segment state needed (range /
+        # exists filters and optic end anchors build per-segment lookup
+        # fns) -> run the kernel ONCE over the whole index as one
+        # logical segment
         groups = None
-        if not (range_specs or exists_specs):
+        if plan.rng_ctx is None and plan.index_path is None:
             by_term_all = _concat_arrow_postings(tbl)
             if by_term_all is not None:
-                groups = ([(None, by_term_all)] if by_term_all else [])
+                groups = [(None, by_term_all)] if by_term_all else []
         if groups is None:
             groups = _group_arrow_postings(tbl)
-        for _seg, by_term in groups:
-            specs, negs = _make_specs(pq, weights, by_term, dtype,
-                                      compounds=compounds)
-            if union:
-                term_specs = [(tp, w) for _kind, tp, w in specs]
-                docs, scores = union_topk(
-                    term_specs, seg_k, dtype=dtype, mustnot_groups=negs,
-                    tie=(tie_breaker if occur == "dismax" else None))
-                if _with_count:
-                    n_total += count_matches(
-                        [("or", [(tp, None) for tp, _ in term_specs],
-                          None)], negs)
-            else:
-                sspecs = (_make_specs(spq, weights, by_term, dtype)[0]
-                          if spq is not None else None)
-                rfns = None
-                if range_specs or exists_specs:
-                    ssrc = self._seg_sources()
-                    dirs = (ssrc.get(_seg, [_seg]) if ssrc
-                            else [_seg])
-                    rfns = [_range_lookup(self._turns_path, dirs,
-                                          range_specs, self._offsets,
-                                          exists_specs=exists_specs)]
-                res = segment_topk(specs, negs, seg_k,
-                                   dtype=dtype,
-                                   should_specs=sspecs,
-                                   range_fns=rfns,
-                                   const_score=const_score,
-                                   with_count=_with_count)
-                if _with_count:
-                    docs, scores, n, _capped = res
-                    n_total += n  # no ShortCircuit cap on this path
-                else:
-                    docs, scores = res
+        n_total = 0  # no ShortCircuit cap on this path: always Exact
+        parts = []
+        for seg, by_term in groups:
+            docs, scores, n, _capped = _eval_group(
+                plan, by_term, seg, k + offset, _with_count)
+            n_total += n
             if docs.size:
                 parts.append((docs, scores))
+        count = (Count(n_total, True),) if _with_count else ()
         if not parts:
-            if _with_count:
-                return empty[:2] + (Count(n_total, True),)
-            return empty
+            return empty + count
         docs = np.concatenate([p[0] for p in parts])
         scores = np.concatenate([p[1] for p in parts])
         # global merge: score desc, doc_id asc — identical to the
         # distributed TakeOrderedAndProject ordering
         order = np.lexsort((docs, -scores.astype(np.float64)))
         order = order[offset:offset + k]
-        if _with_count:
-            return docs[order], scores[order], Count(n_total, True)
-        return docs[order], scores[order]
+        return (docs[order], scores[order]) + count
 
     def search_collect(self, query, k: int = TOP_K_DEFAULT,
                        dtype=np.float32, local: bool | None = None):
@@ -2841,19 +2635,12 @@ class IndexReader:
         count is at or below `local_threshold` run driver-locally
         (:meth:`search_local`), larger ones through the distributed
         engine. local=True/False forces a path."""
-        if local is None and self.local_threshold > 0:
-            pq = self._parse(query)
-            compounds, c_terms = self._plan_alternatives(pq, None, None)
-            dfs = self.term_dfs(list(dict.fromkeys(
-                pq.all_terms() + c_terms)))
-            est = sum(-(-df // 128) + 1 for df in dfs.values())
-            thr = self.local_threshold
-            if any(c.kind == "phrase" for c in pq.positive):
-                thr //= self.local_phrase_divisor
-            local = est <= thr
+        plan = self._plan(query, dtype=dtype)
+        if local is None:
+            local = self._route_local(plan)
         if local:
-            return self.search_local(query, k=k, dtype=dtype)
-        rows = self.search(query, k=k, dtype=dtype).collect()
+            return self.search_local(plan, k=k)
+        rows = self.search(plan, k=k).collect()
         return (np.array([r["doc_id"] for r in rows], dtype=np.int64),
                 np.array([r["score"] for r in rows], dtype=dtype))
 
@@ -2894,35 +2681,21 @@ class IndexReader:
         local kernel below `local_threshold` posting blocks, Spark
         above); the local path never caps, so its count is always
         Exact."""
+        plan = self._plan(
+            query, dtype=dtype, occur=occur, should=should,
+            compound_terms=compound_terms, stemmed=stemmed, lang=lang,
+            fuzzy_transpositions=fuzzy_transpositions,
+            tie_breaker=tie_breaker, const_score=const_score)
         if max_docs_per_segment is not None:
             local = False  # ShortCircuit cap is distributed-only
-        if local is None and self.local_threshold > 0:
-            pq = (self._parse(query) if isinstance(query, str)
-                  else query)
-            compounds, c_terms = self._plan_alternatives(pq, None, None)
-            dfs = self.term_dfs(list(dict.fromkeys(
-                pq.all_terms() + c_terms)))
-            est = sum(-(-df // 128) + 1 for df in dfs.values())
-            thr = self.local_threshold
-            if any(c.kind == "phrase" for c in pq.positive):
-                thr //= self.local_phrase_divisor
-            local = est <= thr
+        if local is None:
+            local = self._route_local(plan)
         if local:
-            return self.search_local(
-                query, k=k, dtype=dtype, occur=occur, offset=offset,
-                should=should, compound_terms=compound_terms,
-                stemmed=stemmed, lang=lang,
-                fuzzy_transpositions=fuzzy_transpositions,
-                tie_breaker=tie_breaker, const_score=const_score,
-                _with_count=True)
-        res = self.search(
-            query, k=k, dtype=dtype, occur=occur, offset=offset,
-            should=should, compound_terms=compound_terms,
-            stemmed=stemmed, lang=lang,
-            fuzzy_transpositions=fuzzy_transpositions,
-            tie_breaker=tie_breaker, const_score=const_score,
-            max_docs_per_segment=max_docs_per_segment,
-            _count_rows=True)
+            return self.search_local(plan, k=k, offset=offset,
+                                     _with_count=True)
+        res = self.search(plan, k=k, offset=offset,
+                          max_docs_per_segment=max_docs_per_segment,
+                          _count_rows=True)
         if res is None:  # dead query: no candidate can match
             return (np.empty(0, dtype=np.int64),
                     np.empty(0, dtype=dtype), Count(0, True))
@@ -2988,8 +2761,6 @@ class IndexReader:
         (the adjustment orders, it does not rescore — ScoredDoc keeps
         doc.score()).
         """
-        from pyspark.sql import functions as F
-
         from .kernel import diversity_rerank
 
         pq = self._parse(query)
@@ -3015,24 +2786,11 @@ class IndexReader:
                     "build the index with store_simhash=True (or pass "
                     "de_rank_similar=False)") from None
             sim_col = "simhash"
-        compounds, c_terms = self._plan_alternatives(
-            pq, compound_terms, stemmed, lang=lang)
-        dfs = self.term_dfs(list(dict.fromkeys(
-            pq.all_terms() + c_terms)))
-        compounds = self._prune_dead_alts(compounds, dfs)
+        plan = self._plan(pq, dtype=dtype, compound_terms=compound_terms,
+                          stemmed=stemmed, lang=lang)
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=dtype))
-        if self._dead_clause(pq, compounds, dfs):
+        if plan.dead:
             return empty
-        weights = self._weights(pq, dfs, dtype)
-        for t in c_terms:
-            weights[t] = Bm25Weight(dfs[t], self.num_docs,
-                                    self._avgfn_for_key(t), dtype=dtype)
-        has_phrase = any(c.kind == "phrase" for c in pq.positive)
-        cols = _POSTING_COLS + (["positions"] if has_phrase else [])
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(
-                        list(dict.fromkeys(pq.all_terms() + c_terms))))
-                    .select(*cols))
         troot = self._turns_path
         ssrc = self._seg_sources()
         offs = self._offsets
@@ -3044,20 +2802,14 @@ class IndexReader:
         def run_arrow(batches):
             import pyarrow as pa
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
             d_o, s_o, g_o = [], [], []
             sim_o = []
             b_o: list[list] = [[] for _ in pen_cols]
-            for seg, by_term in _group_arrow_postings(tbl):
-                specs, negs = _make_specs(pq, weights, by_term, dtype,
-                                          compounds=compounds)
+            for seg, by_term in _batch_groups(batches):
                 # full per-segment candidate set (bounded by the
                 # considered-docs cap), scored and sorted
-                docs, scores = segment_topk(specs, negs, 1 << 62,
-                                            dtype=dtype, max_docs=cap)
+                docs, scores, _n, _c = _eval_group(plan, by_term, seg,
+                                                   1 << 62, max_docs=cap)
                 if docs.size == 0:
                     continue
                 vals = {}
@@ -3097,12 +2849,9 @@ class IndexReader:
                   "sim long"
                   + "".join(f", b{ci} long"
                             for ci in range(len(pen_cols))))
-        est_blocks = sum(-(-df // 128) + 1 for df in dfs.values())
-        if est_blocks <= self.small_query_blocks:
-            shaped = postings.coalesce(1)
-        else:
-            shaped = postings.repartition(F.col("segment_id"))
-        rows = shaped.mapInArrow(run_arrow, schema=schema).collect()
+        rows = self._shape(
+            self._postings_for(plan.terms, plan.positions),
+            plan.est_blocks).mapInArrow(run_arrow, schema=schema).collect()
         if not rows:
             return empty
         # root harvest: the SAME greedy over segments × k picks
@@ -3126,109 +2875,56 @@ class IndexReader:
         count(q) == number of rows search(q, k=num_docs) returns."""
         from pyspark.sql import functions as F
 
-        pq = self._parse(query)
-        range_specs = [_typed_range_spec(c) for c in pq.positive
-                       if c.kind == "range"]
-        exists_specs = [(c.tokens[0], c.neg) for c in pq.positive
-                        if c.kind == "exists"]
-        if range_specs or exists_specs:
-            self._validate_range_cols(
-                range_specs + [(col,) for col, _ in exists_specs])
-            rng_ctx = (self._turns_path, self._seg_sources(),
-                       self._offsets)
-        else:
-            rng_ctx = None
-        if not any(c.kind in ("term", "phrase", "filter", "termset")
-                   for c in pq.positive):
+        plan = self._plan(query, compound_terms=compound_terms,
+                          stemmed=stemmed, lang=lang)
+        pq = plan.pq
+        if plan.match_all:
             # pure match-all: count the row-store scan (same candidate
             # pipeline as _search_all)
-            return self._all_candidates(range_specs, exists_specs,
-                                        pq.negative).count()
-        compounds, c_terms = self._plan_alternatives(
-            pq, compound_terms, stemmed, lang=lang)
-        dfs = self.term_dfs(list(dict.fromkeys(
-            pq.all_terms() + c_terms)))
-        compounds = self._prune_dead_alts(compounds, dfs)
-        if self._dead_clause(pq, compounds, dfs):
+            return self._all_candidates(plan).count()
+        if plan.dead:
             return 0
         # fast path: single positive term, no negation/alternatives ->
         # df straight from stats
         if (len(pq.positive) == 1 and pq.positive[0].kind == "term"
-                and not pq.negative and not compounds):
-            return dfs[pq.positive[0].tokens[0]]
+                and not pq.negative and not plan.compounds):
+            return plan.dfs[pq.positive[0].tokens[0]]
         # small-query routing, same cost model as search_collect: run
         # the count kernel driver-locally below the posting-block
         # threshold (rank/count parity between the paths is pinned by
         # tests); big queries fan out below
-        if self.local_threshold > 0:
-            est = sum(-(-df // 128) + 1 for df in dfs.values())
-            thr = self.local_threshold
-            if any(c.kind == "phrase" for c in pq.positive):
-                thr //= self.local_phrase_divisor
-            if est <= thr:
-                res = self.search_local(
-                    pq, k=1, compound_terms=compound_terms,
-                    stemmed=stemmed, lang=lang, _with_count=True)
-                return int(res[2].value)
-        dtype = np.float32
-        weights = self._weights(pq, dfs, dtype)
-        for t in c_terms:
-            weights[t] = Bm25Weight(dfs[t], self.num_docs,
-                                    self._avgfn_for_key(t), dtype=dtype)
-        has_phrase = any(c.kind == "phrase" for c in pq.positive)
-        cols = _POSTING_COLS + (["positions"] if has_phrase else [])
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(
-                        list(dict.fromkeys(pq.all_terms() + c_terms))))
-                    .select(*cols))
+        if self._route_local(plan):
+            return int(self.search_local(plan, k=1,
+                                         _with_count=True)[2].value)
 
         def run_arrow(batches):
             import pyarrow as pa
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
             total = 0
-            for _seg, by_term in _group_arrow_postings(tbl):
-                specs, negs = _make_specs(pq, weights, by_term, dtype,
-                                          compounds=compounds)
-                rfns = None
-                if rng_ctx is not None:
-                    troot, ssrc, offs = rng_ctx
-                    dirs = (ssrc.get(_seg, [_seg]) if ssrc
-                            else [_seg])
-                    rfns = [_range_lookup(troot, dirs, range_specs,
-                                          offs,
-                                          exists_specs=exists_specs)]
-                total += count_matches(specs, negs, range_fns=rfns)
+            for seg, by_term in _batch_groups(batches):
+                specs, negs = _make_specs(pq, plan.weights, by_term,
+                                          plan.dtype,
+                                          compounds=plan.compounds)
+                total += count_matches(specs, negs,
+                                       range_fns=_range_fns(plan, seg))
             yield pa.record_batch([pa.array([total], type=pa.int64())],
                                   names=["n"])
 
-        rows = (postings.repartition(F.col("segment_id"))
+        rows = (self._postings_for(plan.terms, plan.positions)
+                .repartition(F.col("segment_id"))
                 .mapInArrow(run_arrow, schema="n long")
                 .agg(F.sum("n").alias("n")).collect())
         return int(rows[0]["n"] or 0)
 
-    def _agg_preamble(self, query, cols: list[str]):
+    def _agg_preamble(self, query, cols: list[str], compound_terms,
+                      stemmed, lang) -> QueryPlan:
         """Shared head of every aggregation surface: validate the
-        requested row-store columns, parse with this index's scored
-        fields, extract+validate range/exists filter specs, and decide
-        whether membership is posting-backed or row-store match-all.
-        One definition so the seven consumers cannot drift."""
+        requested row-store columns, then plan the query (plan.match_all
+        marks row-store rather than posting-backed membership). One
+        definition so the seven consumers cannot drift."""
         self._validate_range_cols([(c,) for c in cols])
-        pq = self._parse(query)
-        range_specs = [_typed_range_spec(c) for c in pq.positive
-                       if c.kind == "range"]
-        exists_specs = [(c.tokens[0], c.neg) for c in pq.positive
-                        if c.kind == "exists"]
-        if range_specs or exists_specs:
-            self._validate_range_cols(
-                range_specs + [(col,) for col, _ in exists_specs])
-        posting_backed = any(
-            c.kind in ("term", "phrase", "filter", "termset")
-            for c in pq.positive)
-        return pq, range_specs, exists_specs, posting_backed
+        return self._plan(query, compound_terms=compound_terms,
+                          stemmed=stemmed, lang=lang)
 
     def facet_counts(self, query: str | ParsedQuery,
                      by: str | list[str], k: int = 50,
@@ -3260,8 +2956,8 @@ class IndexReader:
         cols = [by] if isinstance(by, str) else list(by)
         if not cols:
             raise ValueError("facet_counts needs >= 1 `by` column")
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, cols)
+        plan = self._agg_preamble(query, cols, compound_terms, stemmed,
+                                  lang)
 
         def _rank(counts):
             # one exchange serves both the (col,value) aggregation and
@@ -3279,13 +2975,11 @@ class IndexReader:
                     .sortWithinPartitions("col", F.desc("count"),
                                           F.asc("value")))
 
-        if not posting_backed:
+        if plan.match_all:
             # pure match-all: facet the row-store scan directly (same
             # candidate pipeline as _search_all; the only exchange is
             # the partial-agg bucket shuffle)
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative,
-                                        keep_cols=tuple(cols))
+            cand = self._all_candidates(plan, keep_cols=tuple(cols))
             parts = [
                 (cand.filter(F.col(c).isNotNull())
                  .groupBy(F.lit(c).alias("col"),
@@ -3313,8 +3007,7 @@ class IndexReader:
             return [out_c, out_v, np.asarray(out_n, dtype=np.int64)]
 
         partials = self._matched_values_scan(
-            pq, cols, make_rows, "col string, value string, count long",
-            range_specs, exists_specs, compound_terms, stemmed, lang)
+            plan, cols, make_rows, "col string, value string, count long")
         if partials is None:  # dead clause
             return self.spark.createDataFrame(
                 [], "col string, value string, count long")
@@ -3323,10 +3016,8 @@ class IndexReader:
                   .agg(F.sum("count").alias("count")))
         return _rank(counts)
 
-    def _matched_values_scan(self, pq, cols: list[str], make_rows,
-                             out_schema: str, range_specs, exists_specs,
-                             compound_terms=None, stemmed=None,
-                             lang=None):
+    def _matched_values_scan(self, plan: QueryPlan, cols: list[str],
+                             make_rows, out_schema: str):
         """Shared aggregation scan (the tantivy aggregation
         SegmentCollector shape, crates/tantivy/src/aggregation/):
         the SAME term-pruned postings scan as search()/count(); each
@@ -3339,68 +3030,35 @@ class IndexReader:
         or None to skip). Only partials shuffle; the corpus never
         moves. Returns the mapInArrow DataFrame, or None when a
         required clause is dead."""
-        from pyspark.sql import functions as F
-
         from .kernel import matching_docs
 
-        compounds, c_terms = self._plan_alternatives(
-            pq, compound_terms, stemmed, lang=lang)
-        dfs = self.term_dfs(list(dict.fromkeys(
-            pq.all_terms() + c_terms)))
-        compounds = self._prune_dead_alts(compounds, dfs)
-        if self._dead_clause(pq, compounds, dfs):
+        if plan.dead:
             return None
-        dtype = np.float32
-        weights = self._weights(pq, dfs, dtype)
-        for t in c_terms:
-            weights[t] = Bm25Weight(dfs[t], self.num_docs,
-                                    self._avgfn_for_key(t), dtype=dtype)
-        has_phrase = any(c.kind == "phrase" for c in pq.positive)
-        pcols = _POSTING_COLS + (["positions"] if has_phrase else [])
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(
-                        list(dict.fromkeys(pq.all_terms() + c_terms))))
-                    .select(*pcols))
-        rng_ctx = (self._turns_path, self._seg_sources(),
-                   self._offsets)
+        troot, ssrc, offs = (self._turns_path, self._seg_sources(),
+                             self._offsets)
         names = [f.split()[0] for f in out_schema.split(", ")]
 
         def run_arrow(batches):
             import pyarrow as pa
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
-            for _seg, by_term in _group_arrow_postings(tbl):
-                specs, negs = _make_specs(pq, weights, by_term, dtype,
-                                          compounds=compounds)
-                troot, ssrc, offs = rng_ctx
-                dirs = ssrc.get(_seg, [_seg]) if ssrc else [_seg]
-                rfns = None
-                if range_specs or exists_specs:
-                    rfns = [_range_lookup(troot, dirs, range_specs,
-                                          offs,
-                                          exists_specs=exists_specs)]
-                ids = matching_docs(specs, negs, range_fns=rfns)
+            for seg, by_term in _batch_groups(batches):
+                specs, negs = _make_specs(plan.pq, plan.weights, by_term,
+                                          plan.dtype,
+                                          compounds=plan.compounds)
+                ids = matching_docs(specs, negs,
+                                    range_fns=_range_fns(plan, seg))
                 if ids.size == 0:
                     continue
-                vals = _cols_lookup(troot, dirs, cols, offs)(ids)
-                rows = make_rows(vals)
+                dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
+                rows = make_rows(_cols_lookup(troot, dirs, cols, offs)(ids))
                 if rows is not None:
                     yield pa.record_batch(
                         [pa.array(r) for r in rows], names=names)
 
-        # same small/large routing as search(): a gate-size query's
-        # pruned postings are KBs — coalesce(1) folds scan+kernel into
-        # one stage with no exchange; large queries keep the
-        # per-segment fan-out
-        est_blocks = sum(-(-df // 128) + 1 for df in dfs.values())
-        if est_blocks <= self.small_query_blocks:
-            shaped = postings.coalesce(1)
-        else:
-            shaped = postings.repartition(F.col("segment_id"))
-        return shaped.mapInArrow(run_arrow, schema=out_schema)
+        # same small/large routing as search()
+        return self._shape(self._postings_for(plan.terms, plan.positions),
+                           plan.est_blocks).mapInArrow(run_arrow,
+                                                       schema=out_schema)
 
     def agg_stats(self, query: str | ParsedQuery,
                   by: str | list[str],
@@ -3426,8 +3084,8 @@ class IndexReader:
         cols = [by] if isinstance(by, str) else list(by)
         if not cols:
             raise ValueError("agg_stats needs >= 1 `by` column")
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, cols)
+        plan = self._agg_preamble(query, cols, compound_terms, stemmed,
+                                  lang)
         order = F.array_position(
             F.lit([str(c) for c in cols]), F.col("col"))
 
@@ -3447,10 +3105,8 @@ class IndexReader:
                          F.sqrt(var).alias("stddev"))
                     .coalesce(1).sortWithinPartitions(order))
 
-        if not posting_backed:
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative,
-                                        keep_cols=tuple(cols))
+        if plan.match_all:
+            cand = self._all_candidates(plan, keep_cols=tuple(cols))
             parts = [
                 (cand.filter(F.col(c).isNotNull())
                  .groupBy(F.lit(c).alias("col"))
@@ -3490,8 +3146,7 @@ class IndexReader:
         schema = ("col string, count long, sum double, min double, "
                   "max double, sumsq double")
         partials = self._matched_values_scan(
-            pq, cols, make_rows, schema, range_specs, exists_specs,
-            compound_terms, stemmed, lang)
+            plan, cols, make_rows, schema)
         if partials is None:
             return self.spark.createDataFrame(
                 [], "col string, count long, sum double, avg double, "
@@ -3518,8 +3173,8 @@ class IndexReader:
                 len(edges):
             raise ValueError(
                 "range_buckets needs >= 1 strictly increasing edges")
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, [col])
+        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
+                                  lang)
         bounds = [(None, edges[0])] + list(
             zip(edges[:-1], edges[1:])) + [(edges[-1], None)]
         defs = self.spark.createDataFrame(
@@ -3533,9 +3188,8 @@ class IndexReader:
                     .select("lo", "hi", F.col("count").cast("long")
                             .alias("count")))
 
-        if not posting_backed:
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative, keep_cols=(col,))
+        if plan.match_all:
+            cand = self._all_candidates(plan, keep_cols=(col,))
             v = F.col(col).cast("double")
             idx = sum((v >= F.lit(e)).cast("int") for e in edges)
             return finish(cand.filter(F.col(col).isNotNull())
@@ -3553,8 +3207,7 @@ class IndexReader:
             return [uniq.astype(np.int32), cnt.astype(np.int64)]
 
         partials = self._matched_values_scan(
-            pq, [col], make_rows, "idx int, count long",
-            range_specs, exists_specs, compound_terms, stemmed, lang)
+            plan, [col], make_rows, "idx int, count long")
         if partials is None:
             partials = self.spark.createDataFrame(
                 [], "idx int, count long")
@@ -3579,8 +3232,8 @@ class IndexReader:
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, [by, metric])
+        plan = self._agg_preamble(query, [by, metric], compound_terms,
+                                  stemmed, lang)
 
         def finish(partials):
             merged = (partials.groupBy("value")
@@ -3595,10 +3248,8 @@ class IndexReader:
                     .filter(F.col("__r") <= k).drop("__r")
                     .orderBy(F.desc("count"), F.asc("value")))
 
-        if not posting_backed:
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative,
-                                        keep_cols=(by, metric))
+        if plan.match_all:
+            cand = self._all_candidates(plan, keep_cols=(by, metric))
             m = F.col(metric).cast("double")
             partials = (cand.filter(F.col(by).isNotNull())
                         .groupBy(F.col(by).cast("string")
@@ -3646,8 +3297,7 @@ class IndexReader:
         schema = ("value string, count long, msum double, "
                   "mmin double, mmax double, mcount long")
         partials = self._matched_values_scan(
-            pq, [by, metric], make_rows, schema, range_specs,
-            exists_specs, compound_terms, stemmed, lang)
+            plan, [by, metric], make_rows, schema)
         if partials is None:
             return self.spark.createDataFrame(
                 [], "value string, count long, sum double, "
@@ -3666,11 +3316,10 @@ class IndexReader:
         count()). NULLs ignored."""
         from pyspark.sql import functions as F
 
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, [col])
-        if not posting_backed:
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative, keep_cols=(col,))
+        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
+                                  lang)
+        if plan.match_all:
+            cand = self._all_candidates(plan, keep_cols=(col,))
             return int(cand.filter(F.col(col).isNotNull())
                        .select(F.countDistinct(col)).collect()[0][0])
 
@@ -3681,8 +3330,7 @@ class IndexReader:
             return [np.unique(np.array(v, dtype=object))]
 
         partials = self._matched_values_scan(
-            pq, [col], make_rows, "value string",
-            range_specs, exists_specs, compound_terms, stemmed, lang)
+            plan, [col], make_rows, "value string")
         if partials is None:
             return 0
         return int(partials.select(
@@ -3711,8 +3359,8 @@ class IndexReader:
         qlist = [float(x) for x in qs]
         if not qlist or any(not 0.0 <= x <= 1.0 for x in qlist):
             raise ValueError("percentile fractions must be in [0, 1]")
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, [col])
+        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
+                                  lang)
         empty = self.spark.createDataFrame(
             [], "q double, value double")
 
@@ -3730,9 +3378,8 @@ class IndexReader:
                     .groupBy("q").agg(F.min("value").alias("value"))
                     .orderBy("q"))
 
-        if not posting_backed:
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative, keep_cols=(col,))
+        if plan.match_all:
+            cand = self._all_candidates(plan, keep_cols=(col,))
             counts = (cand.filter(F.col(col).isNotNull())
                       .groupBy(F.col(col).cast("double")
                                .alias("value"))
@@ -3749,8 +3396,7 @@ class IndexReader:
             return [uniq, cnt.astype(np.int64)]
 
         partials = self._matched_values_scan(
-            pq, [col], make_rows, "value double, count long",
-            range_specs, exists_specs, compound_terms, stemmed, lang)
+            plan, [col], make_rows, "value double, count long")
         if partials is None:
             return empty
         counts = (partials.groupBy("value")
@@ -3773,13 +3419,12 @@ class IndexReader:
 
         if interval <= 0:
             raise ValueError("histogram interval must be > 0")
-        pq, range_specs, exists_specs, posting_backed = \
-            self._agg_preamble(query, [col])
+        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
+                                  lang)
         iv = float(interval)
 
-        if not posting_backed:
-            cand = self._all_candidates(range_specs, exists_specs,
-                                        pq.negative, keep_cols=(col,))
+        if plan.match_all:
+            cand = self._all_candidates(plan, keep_cols=(col,))
             return (cand.filter(F.col(col).isNotNull())
                     .groupBy((F.floor(F.col(col).cast("double")
                                       / F.lit(iv)) * F.lit(iv))
@@ -3798,8 +3443,7 @@ class IndexReader:
             return [uniq, cnt.astype(np.int64)]
 
         partials = self._matched_values_scan(
-            pq, [col], make_rows, "bucket double, count long",
-            range_specs, exists_specs, compound_terms, stemmed, lang)
+            plan, [col], make_rows, "bucket double, count long")
         if partials is None:
             return self.spark.createDataFrame(
                 [], "bucket double, count long")
@@ -4016,40 +3660,23 @@ class IndexReader:
         dtype = np.float32
         weights = self._weights(pq, dfs, dtype)
         pos_terms = [t for c in pq.positive for t in c.tokens]
-        has_phrase = any(c.kind == "phrase" for c in pq.positive)
-        cols = _POSTING_COLS + (["positions"] if has_phrase else [])
-        postings = (self.postings_df
-                    .filter(F.col("term").isin(pq.all_terms()))
-                    .select(*cols))
+        postings = self._postings_for(
+            pq.all_terms(), any(c.kind == "phrase" for c in pq.positive))
         seg_docs = self.segment_docs  # tiny dict, shipped in the closure
         cap = max_docs_per_segment
-        k_terms = len(pos_terms)
 
         def run_arrow(batches):
             import pyarrow as pa
 
-            bl = [b for b in batches if b.num_rows]
-            if not bl:
-                return
-            tbl = pa.Table.from_batches(bl)
             total, any_capped = 0, False
-            for seg, by_term in _group_arrow_postings(tbl):
+            for seg, by_term in _batch_groups(batches):
                 specs, negs = _make_specs(pq, weights, by_term, dtype)
                 n = count_matches(specs, negs, max_docs=cap)
                 if n < cap:
                     total += n
                     continue
-                # exact integer estimate prod(df_i) // nd^(k-1);
-                # dfs <= nd so the estimate fits a long even though the
-                # product won't
-                prod = 1
-                for t in pos_terms:
-                    tp = by_term.get(t)
-                    prod *= int(tp.doc_count) if tp is not None else 0
-                nd = seg_docs.get(seg, 0)
-                est = (prod // (nd ** (k_terms - 1))
-                       if nd and k_terms > 1 else prod)
-                total += max(cap, est)
+                total += max(cap, _indep_estimate(by_term, pos_terms,
+                                                  seg_docs.get(seg, 0)))
                 any_capped = True
             yield pa.record_batch(
                 [pa.array([total], type=pa.int64()),

@@ -43,7 +43,6 @@ import numpy as np
 from .. import B, K1
 from ..bm25 import Bm25Weight
 from ..fieldnorm import id_to_fieldnorm
-from .parser import ParsedQuery, parse_query
 
 __all__ = ["Explanation", "DoesNotMatch", "explain_doc"]
 
@@ -184,35 +183,20 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     value equals the score search()/search_local() would produce for
     this doc at the same dtype, exactly (pinned by tests).
     """
-    from .executor import _make_specs, _group_arrow_postings, \
-        _range_lookup, _typed_range_spec, Expansion
+    from .executor import (Expansion, _group_arrow_postings, _make_specs,
+                           _match_all_score, _range_fns)
     from .kernel import phrase_tf
 
     d = dtype
     doc = int(doc_id)
-    pq = reader._parse(query)
+    plan = reader._plan(
+        query, dtype=dtype, occur=occur, should=should,
+        compound_terms=compound_terms, stemmed=stemmed, lang=lang,
+        fuzzy_transpositions=fuzzy_transpositions,
+        tie_breaker=tie_breaker, const_score=const_score)
+    pq, spq, union = plan.pq, plan.spq, plan.union
     if not 0 <= doc < reader.num_docs:
         raise DoesNotMatch(doc)
-    spq = None
-    if should is not None:
-        spq = reader._parse(should)
-        if spq.negative:
-            raise ValueError(
-                "negations belong in the must query, not in should")
-    union = occur in ("should", "dismax")
-    if occur == "dismax" and not 0.0 <= tie_breaker <= 1.0:
-        raise ValueError("dismax tie_breaker must be in [0, 1]")
-    if const_score is not None and union:
-        raise ValueError("const_score requires occur='must'")
-    range_specs = [_typed_range_spec(c) for c in pq.positive
-                   if c.kind == "range"]
-    exists_specs = [(c.tokens[0], c.neg) for c in pq.positive
-                    if c.kind == "exists"]
-    if range_specs or exists_specs:
-        if union:
-            raise ValueError("range/exists filters require occur='must'")
-        reader._validate_range_cols(
-            range_specs + [(col,) for col, _ in exists_specs])
 
     # ---- owning segment + its pruned postings ------------------------
     def _seg_of(doc: int) -> int:
@@ -246,15 +230,11 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
         # kernel segment, so translate through segment_map either way
         sm = reader._segment_map
         seg = int(sm.get(str(seg), sm.get(seg, seg)))
-    ssrc = reader._seg_sources()
-    seg_dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
+    cand = np.array([doc], dtype=np.int64)
 
     def _range_ok() -> bool:
-        if not (range_specs or exists_specs):
-            return True
-        fn = _range_lookup(reader._turns_path, seg_dirs, range_specs,
-                           reader._offsets, exists_specs=exists_specs)
-        return bool(fn(np.array([doc], dtype=np.int64))[0])
+        fns = _range_fns(plan, seg)
+        return fns is None or bool(fns[0](cand)[0])
 
     unscored_nodes: list[Explanation] = []
     for c in pq.positive:
@@ -270,9 +250,7 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
                           f"{c.tokens[0]}:*")
             unscored_nodes.append(n)
 
-    membership = [c for c in pq.positive
-                  if c.kind in ("term", "phrase", "filter", "termset")]
-    if not membership:
+    if plan.match_all:
         # match-all path (executor._search_all_local semantics)
         if not _range_ok():
             raise DoesNotMatch(doc)
@@ -289,9 +267,7 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
             if all(g is not None and _lookup_one(g, doc)[2]
                    for g in group) and group:
                 raise DoesNotMatch(doc)
-        value = (const_score if const_score is not None
-                 else sum(c.boost for c in pq.positive
-                          if c.kind == "all"))
+        value = _match_all_score(plan)
         details = []
         for c in pq.positive:
             if c.kind == "all":
@@ -314,39 +290,15 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
             root.add_detail(det)
         return root
 
-    # ---- plan (same as search_local) ---------------------------------
-    s_terms = spq.all_terms() if spq is not None else []
-    compounds, c_terms = reader._plan_alternatives(
-        pq, compound_terms, stemmed, occur, lang=lang,
-        fuzzy_transpositions=fuzzy_transpositions)
-    dfs = reader.term_dfs(list(dict.fromkeys(
-        pq.all_terms() + s_terms + c_terms)))
-    compounds = reader._prune_dead_alts(compounds, dfs)
-    if union:
-        if any(c.kind != "term" for c in pq.positive):
-            raise ValueError(
-                f"occur={occur!r} supports plain term clauses only")
-        if all(dfs[c.tokens[0]] == 0 for c in pq.positive):
-            raise DoesNotMatch(doc)
-    elif reader._dead_clause(pq, compounds, dfs):
+    # ---- same plan and posting read as search_local -----------------
+    if plan.dead:
         raise DoesNotMatch(doc)
-    weights = reader._weights(pq, dfs, dtype)
-    if spq is not None:
-        weights.update(reader._weights(spq, dfs, dtype))
-    for t in c_terms:
-        weights[t] = Bm25Weight(dfs[t], reader.num_docs,
-                                reader._avgfn_for_key(t), dtype=dtype)
-    has_phrase = any(c.kind == "phrase" for c in pq.positive) or (
-        spq is not None
-        and any(c.kind == "phrase" for c in spq.positive))
-    terms = list(dict.fromkeys(pq.all_terms() + s_terms + c_terms))
-    tbl = reader._local_postings(terms, has_phrase)
+    weights, compounds = plan.weights, plan.compounds
+    tbl = reader._local_postings(plan.terms, plan.positions)
     by_term = {int(s): bt
                for s, bt in _group_arrow_postings(tbl)}.get(seg, {})
     specs, negs = _make_specs(pq, weights, by_term, dtype,
                               compounds=compounds)
-    avgfn = reader.avg_fieldnorm
-    cand = np.array([doc], dtype=np.int64)
 
     def _term_node(tok: str, tp, w_boosted, boost: float,
                    contrib: float) -> Explanation:

@@ -370,22 +370,6 @@ def union_topk(term_specs: list[tuple], k: int, dtype=np.float32,
     return best_docs, best_scores
 
 
-def intersect_terms(tps: list[TermPostings]):
-    """Conjunctive intersection, rarest list drives (leapfrog over block
-    ranges). Returns sorted candidate doc ids."""
-    order = np.argsort([tp.doc_count for tp in tps], kind="stable")
-    driver = tps[order[0]]
-    blocks = np.arange(driver.nblocks)
-    cand, _, _, _ = driver.decode_blocks(blocks)
-    for j in order[1:]:
-        if cand.size == 0:
-            return cand
-        tp = tps[j]
-        _, _, found = tp.lookup(cand)
-        cand = cand[found]
-    return cand
-
-
 def _group_docs(group: list[tuple]) -> np.ndarray:
     """Union of member posting docs for an or-group [(tp, w), ...]."""
     parts = [tp.decode_blocks(np.arange(tp.nblocks))[0]

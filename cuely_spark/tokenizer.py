@@ -41,7 +41,6 @@ import re
 import unicodedata
 from functools import lru_cache
 
-import numpy as np
 import pandas as pd
 
 # --- fast path: pure-ASCII text ------------------------------------------
@@ -158,28 +157,3 @@ def bigrams(tokens: list[str]) -> list[str]:
 def trigrams(tokens: list[str]) -> list[str]:
     return ngrams(tokens, 3)
 
-
-# --- Spark-side registration ----------------------------------------------
-
-def tokens_udf():
-    """Return a pandas UDF str -> array<string> running `tokenize`."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return tokenize_series(s)
-
-    return _tok
-
-
-def token_count_udf():
-    """pandas UDF str -> int: number of tokens (doclen)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.IntegerType())
-    def _cnt(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: len(tokenize(t))).astype(np.int32)
-
-    return _cnt

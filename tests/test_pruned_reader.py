@@ -141,3 +141,90 @@ def test_concat_postings_requires_disjoint_ranges():
     out = _concat_arrow_postings(
         _mk_tbl([0, 0], [10, 10], term=["a", "b"], seg=[0, 0]))
     assert sorted(out) == ["a", "b"]
+
+
+@pytest.fixture(scope="module")
+def unsorted_reader(spark, multirg_reader, tmp_path_factory):
+    """Copy of the multi-row-group index whose first segment's posting
+    file is rewritten in DESCENDING term order, several row groups —
+    row-group term ranges no longer ascend through the file."""
+    import glob
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cuely_spark.queryengine import IndexReader
+
+    out = str(tmp_path_factory.mktemp("idx_unsorted") / "idx")
+    shutil.copytree(multirg_reader.path, out)
+    f = sorted(glob.glob(os.path.join(out, "index", "kind=p",
+                                      "segment_id=*", "*.parquet")))[0]
+    tbl = pq.read_table(f)
+    tbl = tbl.take(pc.sort_indices(
+        tbl, sort_keys=[("term", "descending"),
+                        ("block_id", "ascending")]))
+    pq.write_table(tbl, f, row_group_size=max(1, tbl.num_rows // 8))
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)  # Hadoop's checksum of the old file
+    md = pq.read_metadata(f)
+    assert md.num_row_groups > 2
+    ti = md.schema.to_arrow_schema().get_field_index("term")
+    mins = [md.row_group(i).column(ti).statistics.min
+            for i in range(md.num_row_groups)]
+    assert mins == sorted(mins, reverse=True) and mins[0] > mins[-1]
+    return IndexReader(spark, out)
+
+
+@pytest.mark.parametrize("q", list(QUERY_SET))
+def test_unsorted_posting_file(unsorted_reader, oracle_small, q):
+    try:
+        dl, sl = unsorted_reader.search_local(q, k=20)
+    except ValueError:
+        pytest.skip("empty query")
+    dd, sd = unsorted_reader.search_collect(q, k=20, local=False)
+    assert dl.tolist() == dd.tolist()
+    np.testing.assert_array_equal(sl, sd)
+    od, _ = oracle_small.search(q, k=20)
+    assert dl.tolist() == od.tolist()
+    assert unsorted_reader._local_pruned not in (None, False)
+
+
+def test_empty_read_keeps_column_types(multirg_reader):
+    import pyarrow.dataset as ds
+
+    from cuely_spark.queryengine.executor import (_POSTING_COLS,
+                                                  _PrunedPostingsReader)
+
+    cols = _POSTING_COLS + ["positions"]
+    # sorts after every dictionary term: no row group can hold it
+    got = _PrunedPostingsReader(multirg_reader._postings_path).read(
+        ["\U0010ffff"], cols)
+    want = ds.dataset(multirg_reader._postings_path, format="parquet",
+                      partitioning="hive").schema
+    assert got.num_rows == 0
+    assert sorted(got.column_names) == sorted(cols)
+    for c in cols:
+        if c != "segment_id":
+            assert got.schema.field(c).type == want.field(c).type, c
+
+
+def test_pruned_reader_fallback_logs_once(spark, multirg_reader,
+                                          monkeypatch, caplog):
+    import logging
+
+    from cuely_spark.queryengine import IndexReader, executor
+
+    monkeypatch.setattr(executor, "_LOCAL_FILE_CAP", 0)
+    r = IndexReader(spark, multirg_reader.path)
+    with caplog.at_level(logging.WARNING, logger="cuely_spark"):
+        got = [r.search_local(q, k=20) for q in ("test", '"test website"')]
+    warns = [x for x in caplog.records if x.name == "cuely_spark"]
+    assert len(warns) == 1
+    assert "posting files > fd cap" in warns[0].getMessage()
+    assert r._local_pruned is False
+    for q, (d, s) in zip(("test", '"test website"'), got):
+        dd, sd = multirg_reader.search_local(q, k=20)
+        assert d.tolist() == dd.tolist()
+        np.testing.assert_array_equal(s, sd)
