@@ -14,6 +14,7 @@ import hashlib
 import os
 import sys
 import tempfile
+from collections import OrderedDict
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -82,20 +83,29 @@ def _ensure_index(spark: SparkSession, sf_dir: str) -> str:
 
 
 #: IndexReader cache: a reader only holds immutable snapshot metadata
-#: (stats.json, lazy file listings), but constructing one per gate call
-#: re-pays parquet schema inference (~50-100 ms). Keyed by index path;
-#: invalidated when the session changes. No query results are cached —
-#: every search still computes from the parquet postings.
-_READERS: dict = {}
+#: (stats.json, lazy file listings, open parquet handles), but
+#: constructing one per gate call re-pays parquet schema inference
+#: (~50-100 ms). Keyed by index path; invalidated when the session
+#: changes. No query results are cached — every search still computes
+#: from the parquet postings. At most _READERS_MAX readers stay cached
+#: (one sf_dir's gates use 8 index paths); the least recently used one
+#: is closed to release its file handles.
+_READERS: OrderedDict = OrderedDict()
+_READERS_MAX = 16
 
 
 def _cached_reader(spark: SparkSession, path: str):
     from cuely_spark.queryengine import IndexReader
 
-    r = _READERS.get(path)
-    if r is None or r.spark is not spark:
+    r = _READERS.pop(path, None)
+    if r is not None and r.spark is not spark:
+        r.close()
+        r = None
+    if r is None:
         r = IndexReader(spark, path)
-        _READERS[path] = r
+    _READERS[path] = r
+    while len(_READERS) > _READERS_MAX:
+        _READERS.popitem(last=False)[1].close()
     return r
 
 

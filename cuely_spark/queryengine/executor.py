@@ -8,11 +8,14 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    compound/stem/expansion alternatives and the posting term list.
    Every entry point and both executors (driver-local and Spark) take
    this one plan; the auto-routers decide local vs distributed on it.
-2. term stats lookup, inside `_plan`: ONE partition-pruned scan of the
-   sorted `term_stats` table (the Parquet FST stand-in) -> global df
-   per term; dead-clause detection, the posting-block estimate and the
-   BM25 weights built driver-side with global N / avg_fieldnorm
-   (global-df contract: bm25.rs:84, SURVEY §4.1).
+2. term stats lookup, inside `_plan`: ONE read of the sorted
+   `term_stats` table (the Parquet FST stand-in) through the
+   cached-footer reader (:class:`_PrunedTable`: footers and row-group
+   min/max resident, only the row groups holding a query term
+   decoded) -> global df per term; dead-clause detection, the
+   posting-block estimate and the BM25 weights built driver-side with
+   global N / avg_fieldnorm (global-df contract: bm25.rs:84, SURVEY
+   §4.1).
 3. posting scan: `index/kind=p` filtered by `term IN (...)` — Catalyst
    pushes the filter to Parquet (row-group pruning on the sorted term
    column), and only the needed columns are read (positions column is
@@ -29,9 +32,9 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
 
 from __future__ import annotations
 
-import logging
 import os
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import numpy as np
 
@@ -46,14 +49,13 @@ _POSTING_COLS = ["segment_id", "term", "block_id", "first_doc", "last_doc",
                  "ndocs", "docs", "tfs", "fnids",
                  "block_max_tf", "block_min_fnid"]
 
-#: shared pool for the driver-local pruned posting reads (one read task
-#: per segment file; I/O + parquet decode release the GIL)
+#: shared pool for the driver-local pruned reads (one read task per
+#: file; I/O + parquet decode release the GIL)
 _LOCAL_READ_THREADS = min(16, os.cpu_count() or 8)
 _local_read_pool = None
 
-#: above this many posting files the pruned reader is not built (its
-#: cached open handles would strain the fd budget) and the local path
-#: keeps the pyarrow-dataset scan
+#: open-handle budget of one _PrunedTable: files past it keep only
+#: their cached footer and are reopened per read
 _LOCAL_FILE_CAP = 4096
 
 
@@ -68,96 +70,157 @@ def _get_local_read_pool():
     return _local_read_pool
 
 
-class _PrunedPostingsReader:
-    """Driver-local posting reader: cached per-file parquet handles +
-    footer statistics, term-range row-group pruning, parallel reads.
+class _PrunedTable:
+    """Driver-local reader of one index table (postings, term stats,
+    fuzzy sidecar or row store) on any pyarrow filesystem. The file
+    list, each footer and each row group's min/max of the sort column
+    `key` are read once; a read decodes only the row groups that can
+    hold its keys, on the shared pool.
 
-    A row group is read when some query term lies inside its (min, max)
-    term stats — a containment test per row group, so the result is
-    right whatever the row order inside a file (the build writes files
-    term-sorted, which keeps each term in few row groups, but pruning
-    does not rely on it). The in-memory metadata plays the role of the
-    reference's per-segment term dictionary + skip list (metadata
-    resident, data read per query).
-    Compared to the generic dataset scan this removes the per-query
-    per-file open/footer-parse (~1 ms x segment count) and decodes only
-    the matching row groups instead of whole files (measured 6x on a
-    640-segment index; plans/r06/local_pruned_read.md)."""
+    A row group is read when some key lies inside its (min, max) — a
+    containment test, so the result is right whatever the row order
+    inside a file (the build writes files key-sorted, which keeps each
+    key in few row groups, but pruning does not rely on it). The
+    resident footers play the role of the reference's per-segment term
+    dictionary + skip list (metadata resident, data read per query,
+    crates/tantivy/src/termdict/mod.rs). Compared to a dataset scan
+    this removes the per-query discovery and footer parse (~1 ms x
+    file count) and decodes only the matching row groups (measured 6x
+    on a 640-segment index; plans/r06/local_pruned_read.md). The first
+    `_LOCAL_FILE_CAP` files keep an open handle; the others are
+    reopened per read from their cached footer."""
 
-    def __init__(self, root: str):
-        import glob as _glob
-
+    def __init__(self, path: str, key: str):
+        import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyarrow import fs as pafs
 
-        if not os.path.isdir(root):
-            raise FileNotFoundError(root)
-        files = sorted(_glob.glob(
-            os.path.join(root, "**", "*.parquet"), recursive=True))
-        if not files:
-            raise FileNotFoundError(f"no posting files under {root}")
-        if len(files) > _LOCAL_FILE_CAP:
-            raise ValueError(
-                f"{len(files)} posting files > fd cap {_LOCAL_FILE_CAP}")
-        self._entries = []
-        for f in files:
-            seg = int(f.rsplit("segment_id=", 1)[1].split(os.sep)[0])
-            pf = pq.ParquetFile(f)
+        from .. import fsio
+
+        self.key = key
+        self._fs, root = fsio.resolve(path)
+        infos = self._fs.get_file_info(
+            pafs.FileSelector(root, recursive=True))
+        # (path, segment_id partition value or None, footer, key
+        # min/max per row group — None when a group has no statistics)
+        self._files: list[tuple] = []
+        self._open: dict[int, pq.ParquetFile] = {}
+        for info in sorted(infos, key=lambda i: i.path):
+            rel = info.path[len(root.rstrip("/")) + 1:].split("/")
+            # Spark's _SUCCESS / .crc side files are not data
+            if (info.type != pafs.FileType.File
+                    or not info.base_name.endswith(".parquet")
+                    or any(c.startswith(("_", ".")) for c in rel)):
+                continue
+            pf = pq.ParquetFile(info.path, filesystem=self._fs)
             md = pf.metadata
-            ti = md.schema.to_arrow_schema().get_field_index("term")
-            mins: list | None = []
-            maxs: list = []
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(ti).statistics
-                if st is None or not st.has_min_max:
-                    mins = None  # no stats -> always read every group
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            self._entries.append(
-                (pf, seg, md.num_row_groups, mins, maxs))
+            if len(self._open) < _LOCAL_FILE_CAP:
+                self._open[len(self._files)] = pf
+            else:
+                pf.close()
+            ci = [md.schema.column(j).path
+                  for j in range(md.num_columns)].index(key)
+            stats = [md.row_group(i).column(ci).statistics
+                     for i in range(md.num_row_groups)]
+            bounds = ([(st.min, st.max) for st in stats]
+                      if all(st is not None and st.has_min_max
+                             for st in stats) else None)
+            seg = [int(c.split("=", 1)[1]) for c in rel
+                   if c.startswith("segment_id=")]
+            self._files.append(
+                (info.path, seg[0] if seg else None, md, bounds))
+        if not self._files:
+            raise FileNotFoundError(f"no parquet files under {path}")
+        self.schema = self._files[0][2].schema.to_arrow_schema()
+        if self._files[0][1] is not None:
+            self.schema = self.schema.append(
+                pa.field("segment_id", pa.int64()))
 
-    def read(self, terms: list[str], cols: list[str]):
+    def close(self) -> None:
+        """Close the open handles; later reads reopen files per read."""
+        for pf in self._open.values():
+            pf.close()
+        self._open.clear()
+
+    def _select(self, keys, lo, hi, segments) -> list[tuple]:
+        """-> [(file no, row groups)] that can hold a key in `keys` (or
+        one in [lo, hi)) within the `segments` partitions."""
         import bisect
 
+        tasks = []
+        for n, (_, seg, md, bounds) in enumerate(self._files):
+            if segments is not None and seg not in segments:
+                continue
+            rgs = range(md.num_row_groups)
+            if bounds is not None and keys is not None:
+                # smallest key >= the group's min must be <= its max
+                rgs = [i for i in rgs
+                       if (j := bisect.bisect_left(keys, bounds[i][0]))
+                       < len(keys) and keys[j] <= bounds[i][1]]
+            elif bounds is not None and lo is not None:
+                rgs = [i for i in rgs
+                       if bounds[i][1] >= lo and bounds[i][0] < hi]
+            if rgs:
+                tasks.append((n, list(rgs)))
+        return tasks
+
+    def num_rows(self, lo=None, hi=None) -> int:
+        """Footer row count of the row groups a [lo, hi) read selects
+        (every row group without a range)."""
+        return sum(self._files[n][2].row_group(i).num_rows
+                   for n, rgs in self._select(None, lo, hi, None)
+                   for i in rgs)
+
+    def read(self, cols: list[str], keys=None, lo=None, hi=None,
+             segments=None):
+        """Rows whose key is in `keys` (or in [lo, hi); every row
+        without either) from the `segments` partitions (all by
+        default), with columns `cols` — `segment_id` included; typed
+        and empty when nothing matches."""
         import pyarrow as pa
         import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-        ts = sorted(set(terms))
-        file_cols = [c for c in cols if c != "segment_id"]
-        tasks = []
-        segs = []
-        for pf, seg, nrg, mins, maxs in self._entries:
-            if mins is None:
-                rgs = list(range(nrg))
-            else:
-                # smallest query term >= the group's min must be <= max
-                rgs = [i for i in range(nrg)
-                       if (j := bisect.bisect_left(ts, mins[i])) < len(ts)
-                       and ts[j] <= maxs[i]]
-            if rgs:
-                tasks.append((pf, rgs))
-                segs.append(seg)
+        if keys is not None:
+            keys = sorted(set(keys))
+        tasks = self._select(keys, lo, hi, segments)
         if not tasks:
-            # typed empty result, like the dataset scan's
-            empty = self._entries[0][0].schema_arrow.empty_table()
-            return empty.select(file_cols).append_column(
-                "segment_id", pa.array([], type=pa.int64()))
+            return self.schema.empty_table().select(cols)
+        fcols = [c for c in cols if c != "segment_id"]
+        if (keys is not None or lo is not None) and self.key not in fcols:
+            fcols.append(self.key)
 
         def _one(task):
-            pf, rgs = task
-            return pf.read_row_groups(rgs, columns=file_cols,
-                                      use_threads=False)
+            n, rgs = task
+            pf = self._open.get(n)
+            if pf is not None:
+                return pf.read_row_groups(rgs, columns=fcols,
+                                          use_threads=False)
+            path, _, md, _ = self._files[n]
+            with pq.ParquetFile(path, filesystem=self._fs,
+                                metadata=md) as pf:
+                return pf.read_row_groups(rgs, columns=fcols,
+                                          use_threads=False)
 
-        # workers return raw tables; the segment_id column is attached
-        # ONCE, vectorized, after concat (a per-part append_column holds
-        # the GIL ~0.25 ms x files and was the measured bottleneck)
+        # workers return raw tables; segment_id is attached ONCE,
+        # vectorized, after concat (a per-part append_column holds the
+        # GIL ~0.25 ms x files and was the measured bottleneck)
         parts = list(_get_local_read_pool().map(_one, tasks))
-        lens = np.fromiter((p.num_rows for p in parts), dtype=np.int64,
-                           count=len(parts))
-        segcol = np.repeat(np.asarray(segs, dtype=np.int64), lens)
         tbl = pa.concat_tables(parts)
-        tbl = tbl.append_column("segment_id", pa.array(segcol))
-        return tbl.filter(pc.field("term").isin(ts))
+        if "segment_id" in cols:
+            lens = np.fromiter((p.num_rows for p in parts),
+                               dtype=np.int64, count=len(parts))
+            segs = np.asarray([self._files[n][1] for n, _ in tasks],
+                              dtype=np.int64)
+            tbl = tbl.append_column("segment_id",
+                                    pa.array(np.repeat(segs, lens)))
+        if keys is not None:
+            typ = tbl.schema.field(self.key).type
+            tbl = tbl.filter(pc.field(self.key).isin(pa.array(keys, typ)))
+        elif lo is not None:
+            tbl = tbl.filter((pc.field(self.key) >= lo)
+                             & (pc.field(self.key) < hi))
+        return tbl.select(cols)
 
 
 class Count:
@@ -369,22 +432,6 @@ def _group_arrow_postings(tbl):
         yield s, by_term
 
 
-def _levenshtein1(a: str, b: str) -> bool:
-    """Exact ed <= 1 check (O(len), no DP table)."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > 1:
-        return False
-    if la == lb:
-        return sum(x != y for x, y in zip(a, b)) <= 1
-    if la > lb:
-        a, b, la, lb = b, a, lb, la
-    # b is a with one insertion: split at the first mismatch
-    i = 0
-    while i < la and a[i] == b[i]:
-        i += 1
-    return a[i:] == b[i + 1:]
-
-
 #: upper sentinel for prefix range filters — no token contains the max
 #: code point, so [p, p + _MAX_CHAR) covers exactly the p-prefixed terms
 _MAX_CHAR = "\U0010ffff"
@@ -440,6 +487,21 @@ def _arrow_row_filter(schema_names, range_specs: list,
     return flt
 
 
+def _row_doc_ids(tbl, offsets: dict | None, seg=None) -> np.ndarray:
+    """Global doc ids of row-store rows: the `doc_id` column, else
+    (stage-A turns) offsets[segment] + `__ord`, the segment being `seg`
+    for a one-partition read or each row's `segment_id`."""
+    if "doc_id" in tbl.column_names:
+        return np.asarray(tbl["doc_id"].to_numpy(), dtype=np.int64)
+    ords = np.asarray(tbl["__ord"].to_numpy(), dtype=np.int64)
+    if seg is not None:
+        return ords + int(offsets[str(seg)])
+    segs, inv = np.unique(tbl["segment_id"].to_numpy(),
+                          return_inverse=True)
+    offs = np.array([int(offsets[str(s)]) for s in segs], dtype=np.int64)
+    return ords + offs[inv]
+
+
 def _range_lookup(turns_path: str, seg_dirs: list[int], specs: list,
                   offsets: dict | None,
                   exists_specs: list | None = None):
@@ -472,10 +534,7 @@ def _range_lookup(turns_path: str, seg_dirs: list[int], specs: list,
                 idcol = ("doc_id" if "doc_id" in dset.schema.names
                          else "__ord")
                 tbl = dset.to_table(columns=[idcol], filter=flt)
-                ids = np.asarray(tbl[idcol].to_numpy(), dtype=np.int64)
-                if idcol == "__ord":
-                    ids = ids + int(offsets[str(sd)])
-                parts.append(ids)
+                parts.append(_row_doc_ids(tbl, offsets, sd))
             cache["ids"] = (np.sort(np.concatenate(parts)) if parts
                             else np.empty(0, dtype=np.int64))
         ids = cache["ids"]
@@ -513,10 +572,7 @@ def _cols_lookup(turns_path: str, seg_dirs: list[int],
                 # dedupe: a requested col may BE the id column
                 tbl = dset.to_table(
                     columns=[idcol] + [c for c in cols if c != idcol])
-                ids = np.asarray(tbl[idcol].to_numpy(), dtype=np.int64)
-                if idcol == "__ord":
-                    ids = ids + int(offsets[str(sd)])
-                ids_parts.append(ids)
+                ids_parts.append(_row_doc_ids(tbl, offsets, sd))
                 for c in cols:
                     col = tbl[c]
                     if ((pat.is_integer(col.type)
@@ -606,18 +662,6 @@ def _bucket_ids(values: np.ndarray) -> np.ndarray:
     hashed = np.fromiter((h60_py(u) for u in uniq), dtype=np.int64,
                          count=uniq.size)
     return hashed[inv]
-
-
-def _lev_within(a: str, b: str, d: int,
-                transpose: bool = False) -> bool:
-    """Exact ed <= d check (full DP with an early-out row minimum —
-    strings here are tokens, so the table is tiny). transpose=True
-    uses OSA distance (adjacent transposition costs 1)."""
-    if d <= 1 and not transpose:
-        return _levenshtein1(a, b)
-    if abs(len(a) - len(b)) > d:
-        return False
-    return _osa_scalar(a, b, transpose=transpose) <= d
 
 
 def _osa_scalar(a: str, b: str, transpose: bool = True) -> int:
@@ -1013,8 +1057,37 @@ class IndexReader:
         self._offsets = self.stats.get("segment_offsets")
         self._postings_df = None
         self._segment_docs = None
-        self._local_dataset = None
-        self._local_pruned = None  # lazy; False = fall back to dataset
+
+    # driver-local readers of the index tables, opened on first use
+    @cached_property
+    def _local_pruned(self) -> _PrunedTable:
+        return _PrunedTable(self._postings_path, "term")
+
+    @cached_property
+    def _term_table(self) -> _PrunedTable:
+        return _PrunedTable(self._term_stats_path, "term")
+
+    @cached_property
+    def _sidecar_table(self) -> _PrunedTable:
+        return _PrunedTable(os.path.join(self.path, "fuzzy_deletes"),
+                            "variant")
+
+    @cached_property
+    def _turns_table(self) -> _PrunedTable:
+        return _PrunedTable(self._turns_path, "doc_id"
+                            if self._offsets is None else "__ord")
+
+    def _drop_table(self, name: str) -> None:
+        t = self.__dict__.pop(name, None)
+        if t is not None:
+            t.close()
+
+    def close(self) -> None:
+        """Close the file handles of every index table this reader
+        holds open (they are reopened on the next query)."""
+        for name in ("_local_pruned", "_term_table", "_sidecar_table",
+                     "_turns_table"):
+            self._drop_table(name)
 
     @property
     def postings_df(self):
@@ -1030,6 +1103,7 @@ class IndexReader:
     def refresh(self) -> "IndexReader":
         """Re-open the snapshot: pick up segments/stats committed after
         this reader was constructed (live-index ingest, merges)."""
+        self.close()
         self.__init__(self.spark, self.path)
         return self
 
@@ -1089,16 +1163,8 @@ class IndexReader:
 
     def _validate_range_cols(self, specs: list) -> None:
         """Driver-side schema check so a bad range column fails with a
-        clear error instead of a task-side stack. The row-store schema
-        is cached per reader: dataset discovery lists every turns file,
-        which is driver-side O(files) — pay it once, not per query."""
-        names = getattr(self, "_turns_schema_cache", None)
-        if names is None:
-            import pyarrow.dataset as ds
-
-            names = ds.dataset(self._turns_path, format="parquet",
-                               partitioning="hive").schema.names
-            self._turns_schema_cache = names
+        clear error instead of a task-side stack."""
+        names = self._turns_table.schema.names
         for col, *_ in specs:
             if col not in names:
                 raise ValueError(
@@ -1110,32 +1176,15 @@ class IndexReader:
         """Global doc-freq per term — the tantivy-FST-lookup analog.
 
         The term_stats table is written range-partitioned and sorted by
-        term, so a pyarrow dataset read with a term-IN filter prunes to
-        the one row-group per term via parquet min/max stats — a
-        driver-local lookup with no Spark job (reference: TermInfo
-        lookup, crates/tantivy/src/termdict/mod.rs). Falls back to a
-        Spark scan for non-local filesystems."""
+        term, so the cached-footer reader prunes a lookup to the one
+        row-group per term via parquet min/max stats — a driver-local
+        lookup with no Spark job and no per-call file discovery
+        (reference: TermInfo lookup, crates/tantivy/src/termdict/mod.rs)."""
         if not terms:
             return {}
-        try:
-            import pyarrow.dataset as ds
-
-            dataset = ds.dataset(self._term_stats_path, format="parquet")
-            tbl = dataset.to_table(
-                columns=["term", "df"],
-                filter=ds.field("term").isin(list(terms)))
-            found = dict(zip(tbl["term"].to_pylist(),
-                             (int(x) for x in tbl["df"].to_pylist())))
-        except (ImportError, OSError):  # pragma: no cover
-            from pyspark.sql import functions as F
-
-            rows = (
-                self.spark.read.parquet(self._term_stats_path)
-                .filter(F.col("term").isin(list(terms)))
-                .select("term", "df").collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
-        return {t: found.get(t, 0) for t in terms}
+        tbl = self._term_table.read(["term", "df"], keys=terms)
+        found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+        return {t: int(found.get(t, 0)) for t in terms}
 
     def _plan_alternatives(self, pq: ParsedQuery,
                            compound_terms: bool | None = None,
@@ -1251,38 +1300,40 @@ class IndexReader:
     #: scan (only the top-cap rows ever return to the driver)
     vocab_scan_threshold: int = 200_000
 
-    def _cap_expansion(self, terms, dfs, cap: int | None) -> list[str]:
-        cap = cap or self.max_fuzzy_expansions
-        matched = sorted(zip(terms, dfs), key=lambda x: (-x[1], x[0]))
-        return [t for t, _ in matched[:cap]]
-
-    def _scan_expansion(self, match_fn, flt, cap: int | None,
-                        prefilter=None, allow_ns: str | None = None
-                        ) -> list[str]:
+    def _scan_expansion(self, match_fn, cap: int | None,
+                        prefix: str | None = None, prefilter=None,
+                        allow_ns: str | None = None) -> list[str]:
         """Expansion matching over the term dictionary.
 
-        Driver path: a streaming pyarrow scan of the (row-group-pruned
-        when `flt` is a sorted-column range) term-stats table, keeping a
-        running (df desc, term asc) top-cap across batches — bounded
-        driver memory however many terms match.
+        Driver path: a read of the term-stats row groups that can hold
+        a term starting with `prefix` (every row group without one),
+        keeping a running (df desc, term asc) top-cap across row
+        groups.
         Distributed path (pruned rows > vocab_scan_threshold): the same
         matcher fans out over executors via mapInArrow on the term-stats
-        scan (`prefilter` narrows it, e.g. the prefix range or the
+        scan (narrowed to the prefix range, or by `prefilter`, e.g. the
         fuzzy length band) and ONLY the global top-cap rows are
         collected — the vocabulary itself never reaches the driver.
         This is the scale analog of tantivy's automaton-over-FST term
         expansion (crates/tantivy/src/query/fuzzy_query/mod.rs,
         regex_query.rs): pruned dictionary walk, capped result."""
-        import pyarrow.dataset as ds
-
         cap = cap or self.max_fuzzy_expansions
-        dset = ds.dataset(self._term_stats_path, format="parquet")
-        if dset.count_rows(filter=flt) > self.vocab_scan_threshold:
+        rng = {}
+        if prefix is not None:
+            rng = {"lo": prefix, "hi": prefix + _MAX_CHAR}
+
+            def prefilter(df):
+                from pyspark.sql import functions as F
+
+                return df.filter((F.col("term") >= prefix)
+                                 & (F.col("term") < prefix + _MAX_CHAR))
+
+        if self._term_table.num_rows(**rng) > self.vocab_scan_threshold:
             return self._distributed_expansion(match_fn, prefilter, cap,
                                                allow_ns=allow_ns)
-        scanner = dset.scanner(columns=["term", "df"], filter=flt)
         best: list[tuple[int, str]] = []
-        for batch in scanner.to_batches():
+        for batch in self._term_table.read(["term", "df"],
+                                           **rng).to_batches():
             if batch.num_rows == 0:
                 continue
             terms = batch["term"].to_pylist()
@@ -1342,29 +1393,18 @@ class IndexReader:
         capped — the wildcard-prefix expansion (`word*`).
 
         The term-stats table is range-partitioned and SORTED by term,
-        so the [prefix, prefix+MAXCHAR) dataset filter prunes to the
-        row-groups whose min/max term stats intersect the prefix range
-        — the FST-prefix-walk analog (same trick term_dfs uses for IN
-        lookups). Never a full-vocabulary read."""
-        import pyarrow.dataset as ds
-
-        flt = ((ds.field("term") >= prefix)
-               & (ds.field("term") < prefix + _MAX_CHAR))
-
-        def prefilter(df):
-            from pyspark.sql import functions as F
-
-            return df.filter((F.col("term") >= prefix)
-                             & (F.col("term") < prefix + _MAX_CHAR))
-
+        so the [prefix, prefix+MAXCHAR) range prunes to the row-groups
+        whose min/max term stats intersect it — the FST-prefix-walk
+        analog (same trick term_dfs uses for IN lookups). Never a
+        full-vocabulary read."""
         # a field-scoped prefix ("f:title:mer") expands within exactly
         # its own keyed namespace
         ns = None
         if prefix.startswith("f:") and prefix.count(":") >= 2:
             ns = prefix[: prefix.index(":", 2) + 1]
         return self._scan_expansion(
-            lambda ts: [t.startswith(prefix) for t in ts], flt, cap,
-            prefilter=prefilter, allow_ns=ns)
+            lambda ts: [t.startswith(prefix) for t in ts], cap,
+            prefix=prefix, allow_ns=ns)
 
     def regex_terms(self, pattern: str,
                     cap: int | None = None) -> list[str]:
@@ -1377,25 +1417,10 @@ class IndexReader:
         over a huge vocabulary take the distributed scan."""
         import re
 
-        import pyarrow.dataset as ds
-
         rx = re.compile(pattern)
-        lit = _regex_literal_prefix(pattern)
-        flt = None
-        prefilter = None
-        if lit:
-            flt = ((ds.field("term") >= lit)
-                   & (ds.field("term") < lit + _MAX_CHAR))
-
-            def prefilter(df):
-                from pyspark.sql import functions as F
-
-                return df.filter((F.col("term") >= lit)
-                                 & (F.col("term") < lit + _MAX_CHAR))
-
         return self._scan_expansion(
-            lambda ts: [rx.fullmatch(t) is not None for t in ts],
-            flt, cap, prefilter=prefilter)
+            lambda ts: [rx.fullmatch(t) is not None for t in ts], cap,
+            prefix=_regex_literal_prefix(pattern) or None)
 
     def build_fuzzy_sidecar(self, max_d: int = 1) -> str:
         """Write the SymSpell deletion-neighborhood sidecar (delegates
@@ -1409,6 +1434,7 @@ class IndexReader:
         disabled; call directly to upgrade max_d on an existing index."""
         from ..indexer.build import build_fuzzy_sidecar
 
+        self._drop_table("_sidecar_table")
         return build_fuzzy_sidecar(self.spark, self.path, max_d=max_d,
                                    term_stats_path=self._term_stats_path)
 
@@ -1435,11 +1461,18 @@ class IndexReader:
         1 — Lucene/tantivy transposition_cost_one; Elasticsearch's
         fuzzy_transpositions). Pytest-oracled only: DuckDB's
         damerau_levenshtein is the UNRESTRICTED distance, which
-        disagrees with OSA on corner cases like ca->abc."""
-        side = self._fuzzy_sidecar_lookup(token, d, cap,
-                                          transpose=transpose)
-        if side is not None:
-            return side
+        disagrees with OSA on corner cases like ca->abc; the deletion-
+        neighborhood guarantee holds for OSA too (each OSA op consumes
+        <= 1 deletion per side, incl. a transposition: delete one
+        swapped char from each side), so the sidecar candidates are just
+        verified with the requested metric."""
+        cand = self._sidecar_candidate_pairs(token, d)
+        if cand is not None:
+            # DP-verify: neighborhoods can intersect past ed d (ab/ba)
+            ok = _lev_mask([t for t, _ in cand], token, d,
+                           transpose=transpose)
+            hits = sorted((-f, t) for (t, f), m in zip(cand, ok) if m)
+            return [t for _, t in hits[:cap or self.max_fuzzy_expansions]]
 
         def prefilter(df):
             from pyspark.sql import functions as F
@@ -1449,7 +1482,7 @@ class IndexReader:
 
         return self._scan_expansion(
             lambda ts: _lev_mask(ts, token, d, transpose=transpose),
-            None, cap, prefilter=prefilter)
+            cap, prefilter=prefilter)
 
     def _sidecar_candidate_pairs(self, token: str,
                                  d: int) -> list | None:
@@ -1457,48 +1490,23 @@ class IndexReader:
         intersects the token's — a row-group-pruned sidecar read; None
         when the sidecar is absent or built with a smaller max_d.
         Candidates are NOT yet distance-verified."""
+        from .. import fsio
+
         path = os.path.join(self.path, "fuzzy_deletes")
-        if not os.path.isdir(path):
+        if not fsio.exists(path):
+            self._drop_table("_sidecar_table")
             return None
         side_d = 1
         meta_p = os.path.join(path, "_sidecar.json")
-        if os.path.exists(meta_p):
-            import json
-
-            with open(meta_p) as f:
-                side_d = int(json.load(f).get("max_d", 1))
+        if fsio.exists(meta_p):
+            side_d = int(fsio.read_json(meta_p).get("max_d", 1))
         if side_d < d:
             return None
-        import pyarrow.dataset as ds
-
-        qvars = _deletes_upto(token, d)
-        tbl = ds.dataset(path, format="parquet").to_table(
-            columns=["term", "df"],
-            filter=ds.field("variant").isin(qvars))
+        tbl = self._sidecar_table.read(["term", "df"],
+                                       keys=_deletes_upto(token, d))
         return sorted({(t, int(f)) for t, f in
                        zip(tbl["term"].to_pylist(),
                            tbl["df"].to_pylist())})
-
-    def _fuzzy_sidecar_lookup(self, token: str, d: int,
-                              cap: int | None,
-                              transpose: bool = False
-                              ) -> list[str] | None:
-        """ed<=d expansion via the deletion sidecar; None when the
-        sidecar is absent or built with a smaller max_d (fall back to
-        the scan). The deletion-neighborhood guarantee holds for OSA
-        too (each OSA op consumes <= 1 deletion per side, incl. a
-        transposition: delete one swapped char from each side), so the
-        same candidates are just verified with the requested metric."""
-        cand = self._sidecar_candidate_pairs(token, d)
-        if cand is None:
-            return None
-        ok_terms, ok_dfs = [], []
-        for t, f in cand:
-            # DP-verify: neighborhoods can intersect past ed d (ab/ba)
-            if _lev_within(token, t, d, transpose=transpose):
-                ok_terms.append(t)
-                ok_dfs.append(f)
-        return self._cap_expansion(ok_terms, ok_dfs, cap)
 
     def suggest_terms(self, token: str, d: int = 2,
                       k: int = 3,
@@ -1513,7 +1521,7 @@ class IndexReader:
         Returns [(term, ed, df)], the exact token itself excluded.
 
         Scale: same ladder as fuzzy_terms — sidecar row-group lookup
-        when available, streaming driver scan below
+        when available, a driver read of the dictionary below
         vocab_scan_threshold, distributed term-stats scan above it.
 
         transpositions=True ranks by OSA distance (adjacent swap costs
@@ -1522,69 +1530,54 @@ class IndexReader:
         at the same depth, so the sidecar ladder is unchanged.
         Pytest-oracled only (DuckDB's damerau_levenshtein is the
         UNRESTRICTED distance, see _lev_eds)."""
-        ranked: list[tuple[int, int, str]] = []
         side = self._sidecar_candidate_pairs(token, d)
-        if side is not None:
-            for t, f in side:
-                if t == token:
-                    continue
-                ed = (_osa_scalar(token, t, transpose=True)
-                      if transpositions else _lev_scalar(token, t))
-                if ed <= d:
-                    ranked.append((ed, -f, t))
-        else:
-            import pyarrow.dataset as ds
+        if side is None and (self._term_table.num_rows()
+                             > self.vocab_scan_threshold):
+            from pyspark.sql import functions as F
 
-            dset = ds.dataset(self._term_stats_path, format="parquet")
-            if dset.count_rows() > self.vocab_scan_threshold:
-                from pyspark.sql import functions as F
+            df = (self.spark.read.parquet(self._term_stats_path)
+                  .select("term", "df")
+                  .filter(~F.col("term").contains(":"))
+                  .filter(F.length("term").between(
+                      len(token) - d, len(token) + d)))
 
-                df = (self.spark.read.parquet(self._term_stats_path)
-                      .select("term", "df")
-                      .filter(~F.col("term").contains(":"))
-                      .filter(F.length("term").between(
-                          len(token) - d, len(token) + d)))
+            def match(batches):
+                import pyarrow as pa
 
-                def match(batches):
-                    import pyarrow as pa
-
-                    for b in batches:
-                        if b.num_rows == 0:
-                            continue
-                        terms = b["term"].to_pylist()
-                        eds = _lev_eds(terms, token, d,
-                                       transpose=transpositions)
-                        m = eds <= d
-                        if m.any():
-                            dfv = b["df"].to_numpy(
-                                zero_copy_only=False).astype(np.int64)
-                            yield pa.record_batch(
-                                [pa.array([t for t, kp in
-                                           zip(terms, m) if kp]),
-                                 pa.array(dfv[m]), pa.array(eds[m])],
-                                names=["term", "df", "ed"])
-
-                rows = (df.mapInArrow(
-                            match,
-                            schema="term string, df long, ed long")
-                        .orderBy(F.asc("ed"), F.desc("df"),
-                                 F.asc("term"))
-                        .limit(k + 1).collect())
-                ranked = [(int(r["ed"]), -int(r["df"]), r["term"])
-                          for r in rows if r["term"] != token]
-            else:
-                scanner = dset.scanner(columns=["term", "df"])
-                for batch in scanner.to_batches():
-                    if batch.num_rows == 0:
+                for b in batches:
+                    if b.num_rows == 0:
                         continue
-                    terms = batch["term"].to_pylist()
-                    dfv = batch["df"].to_numpy(zero_copy_only=False)
+                    terms = b["term"].to_pylist()
                     eds = _lev_eds(terms, token, d,
                                    transpose=transpositions)
-                    for t, f, e in zip(terms, dfv, eds):
-                        if e <= d and t != token and ":" not in t:
-                            ranked.append((int(e), -int(f), t))
-                    ranked = sorted(ranked)[:max(k, 50)]
+                    m = eds <= d
+                    if m.any():
+                        dfv = b["df"].to_numpy(
+                            zero_copy_only=False).astype(np.int64)
+                        yield pa.record_batch(
+                            [pa.array([t for t, kp in
+                                       zip(terms, m) if kp]),
+                             pa.array(dfv[m]), pa.array(eds[m])],
+                            names=["term", "df", "ed"])
+
+            rows = (df.mapInArrow(
+                        match,
+                        schema="term string, df long, ed long")
+                    .orderBy(F.asc("ed"), F.desc("df"),
+                             F.asc("term"))
+                    .limit(k + 1).collect())
+            ranked = [(int(r["ed"]), -int(r["df"]), r["term"])
+                      for r in rows if r["term"] != token]
+        else:
+            if side is None:
+                tbl = self._term_table.read(["term", "df"])
+                side = list(zip(tbl["term"].to_pylist(),
+                                tbl["df"].to_pylist()))
+            eds = _lev_eds([t for t, _ in side], token, d,
+                           transpose=transpositions)
+            ranked = [(int(e), -int(f), t)
+                      for (t, f), e in zip(side, eds)
+                      if e <= d and t != token and ":" not in t]
         ranked.sort()
         return [(t, ed, -nf) for ed, nf, t in ranked[:k]]
 
@@ -2151,20 +2144,10 @@ class IndexReader:
                           partitioning="hive")
         flt = _arrow_row_filter(dset.schema.names, plan.range_specs,
                                 plan.exists_specs)
-        if "doc_id" in dset.schema.names:
-            tbl = dset.to_table(columns=["doc_id"], filter=flt)
-            ids = np.asarray(tbl["doc_id"].to_numpy(), dtype=np.int64)
-        else:
-            tbl = dset.to_table(columns=["__ord", "segment_id"],
-                                filter=flt)
-            segs = np.asarray(tbl["segment_id"].to_numpy(),
-                              dtype=np.int64)
-            offs = np.zeros(segs.max() + 1 if segs.size else 1,
-                            dtype=np.int64)
-            for s, o in self._offsets.items():
-                offs[int(s)] = int(o)
-            ids = (np.asarray(tbl["__ord"].to_numpy(), dtype=np.int64)
-                   + offs[segs])
+        idcols = (["doc_id"] if "doc_id" in dset.schema.names
+                  else ["__ord", "segment_id"])
+        ids = _row_doc_ids(dset.to_table(columns=idcols, filter=flt),
+                           self._offsets)
         negative = plan.pq.negative
         neg_terms = [t for c in negative for t in c.tokens]
         if neg_terms and ids.size:
@@ -2532,36 +2515,12 @@ class IndexReader:
             "CAST(NULL AS DOUBLE) AS score WHERE 1=0")
 
     def _local_postings(self, terms: list[str], with_positions: bool):
-        """Driver-local pyarrow read of the pruned posting rows: the
-        term-IN filter prunes parquet row-groups via min/max stats
-        (postings are written term-sorted within each segment), so a
-        small query reads KBs, not the index."""
-        import pyarrow.dataset as ds
-
+        """Driver-local read of the pruned posting rows: row groups
+        are selected by their term min/max stats (postings are written
+        term-sorted within each segment), so a small query reads KBs,
+        not the index."""
         cols = _POSTING_COLS + (["positions"] if with_positions else [])
-        if self._local_pruned is not False:
-            try:
-                if self._local_pruned is None:
-                    self._local_pruned = _PrunedPostingsReader(
-                        self._postings_path)
-                return self._local_pruned.read(terms, cols)
-            except Exception as e:
-                # non-local fs, >fd-cap segment count, statistics quirks
-                # — permanently route this reader to the dataset scan
-                logging.getLogger("cuely_spark").warning(
-                    "pruned posting reader unavailable for %s (%r); "
-                    "this reader falls back to the dataset scan",
-                    self._postings_path, e)
-                self._local_pruned = False
-        if self._local_dataset is None:
-            # cache the dataset object: file discovery over the segment
-            # dirs costs tens of ms and freezes the snapshot exactly
-            # like postings_df does for the distributed path
-            self._local_dataset = ds.dataset(self._postings_path,
-                                             format="parquet",
-                                             partitioning="hive")
-        return self._local_dataset.to_table(
-            columns=cols, filter=ds.field("term").isin(terms))
+        return self._local_pruned.read(cols, keys=terms)
 
     def search_local(self, query: str | ParsedQuery,
                      k: int = TOP_K_DEFAULT, dtype=np.float32,
@@ -3455,46 +3414,25 @@ class IndexReader:
         """Driver-local point read of one row-store doc's text: parquet
         min/max stats (turns are doc-sorted per segment) prune the read
         to one file + row group, no Spark job — the same coordinator
-        shortcut as term_dfs. Returns None for an absent id; falls
-        back to a Spark scan on non-local filesystems."""
-        try:
-            import pyarrow.dataset as ds
-
-            if self._offsets is not None:
-                # stage-A turns: doc_id = offsets[segment] + __ord
-                import bisect
-
-                items = sorted((int(v), int(k))
-                               for k, v in self._offsets.items())
-                pos = bisect.bisect_right(
-                    [v for v, _ in items], int(doc_id)) - 1
-                if pos < 0:
-                    return None
-                off, seg = items[pos]
-                d = ds.dataset(os.path.join(
-                    self._turns_path, f"segment_id={seg}"),
-                    format="parquet")
-                tbl = d.to_table(columns=[text_col],
-                                 filter=ds.field("__ord")
-                                 == int(doc_id) - off)
-            else:
-                d = ds.dataset(self._turns_path, format="parquet",
-                               partitioning="hive")
-                tbl = d.to_table(columns=[text_col],
-                                 filter=ds.field("doc_id")
-                                 == int(doc_id))
-            if tbl.num_rows == 0:
+        shortcut as term_dfs. Returns None for an absent id."""
+        if self._offsets is None:
+            tbl = self._turns_table.read([text_col], keys=[int(doc_id)])
+        else:
+            loc = self._ord_of(int(doc_id))
+            if loc is None:
                 return None
-            return tbl[text_col][0].as_py()
-        except Exception:  # pragma: no cover - any local-read surprise
-            # (missing pyarrow, non-local fs, unexpected turns layout)
-            # falls back to the always-correct Spark scan
-            from pyspark.sql import functions as F
+            tbl = self._turns_table.read([text_col], keys=[loc[1]],
+                                         segments=[loc[0]])
+        return tbl[text_col][0].as_py() if tbl.num_rows else None
 
-            rows = (self._read_turns()
-                    .filter(F.col("doc_id") == int(doc_id))
-                    .select(text_col).collect())
-            return rows[0][0] if rows else None
+    def _ord_of(self, doc_id: int) -> tuple[int, int] | None:
+        """Stage-A turns: (segment, __ord) of a global doc id, where
+        doc_id = offsets[segment] + __ord — the segment with the largest
+        offset <= doc_id (the last one when empty segments share it);
+        None below every offset."""
+        off, seg = max(((int(v), int(k)) for k, v in self._offsets.items()
+                        if int(v) <= doc_id), default=(None, None))
+        return None if seg is None else (seg, doc_id - off)
 
     def more_like_this(self, doc_id: int, max_terms: int = 10,
                        k: int = TOP_K_DEFAULT, dtype=np.float64):

@@ -200,24 +200,15 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
 
     # ---- owning segment + its pruned postings ------------------------
     def _seg_of(doc: int) -> int:
-        if reader._offsets:
-            # offset mode: doc_id = offsets[seg] + __ord; the owner is
-            # the segment with the largest offset <= doc
-            best, best_off = 0, -1
-            for s, off in reader._offsets.items():
-                off = int(off)
-                if off <= doc and off > best_off:
-                    best, best_off = int(s), off
-            return best
+        if reader._offsets is not None:
+            loc = reader._ord_of(doc)
+            if loc is None:
+                raise DoesNotMatch(doc)
+            return loc[0]
         # doc_id-column mode: the row store is hive-partitioned by
         # segment_id and doc-sorted within, so this point read prunes
         # to one row-group via parquet doc_id min/max stats
-        import pyarrow.dataset as ds
-
-        dset = ds.dataset(reader._turns_path, format="parquet",
-                          partitioning="hive")
-        t = dset.to_table(columns=["segment_id"],
-                          filter=ds.field("doc_id") == doc)
+        t = reader._turns_table.read(["segment_id"], keys=[doc])
         if t.num_rows == 0:
             raise DoesNotMatch(doc)
         return int(t["segment_id"][0].as_py())

@@ -62,21 +62,21 @@ def test_pruned_reader_matches_dataset_scan(multirg_reader):
     import pyarrow.dataset as ds
 
     from cuely_spark.queryengine.executor import (_POSTING_COLS,
-                                                  _PrunedPostingsReader)
+                                                  _PrunedTable)
 
     root = multirg_reader._postings_path
-    pr = _PrunedPostingsReader(root)
+    pr = _PrunedTable(root, "term")
     dset = ds.dataset(root, format="parquet", partitioning="hive")
     for terms in (["test"], ["example", "website"], ["the"],
                   ["nosuchterm"], ["a", "the", "test", "website"]):
-        a = pr.read(terms, _POSTING_COLS)
+        a = pr.read(_POSTING_COLS, keys=terms)
         b = dset.to_table(columns=_POSTING_COLS,
                           filter=ds.field("term").isin(terms))
         assert a.num_rows == b.num_rows, terms
         if a.num_rows:
             assert _row_key(a) == _row_key(b), terms
     # positions column must ride along for phrase queries
-    a = pr.read(["test"], _POSTING_COLS + ["positions"])
+    a = pr.read(_POSTING_COLS + ["positions"], keys=["test"])
     assert "positions" in a.column_names
 
 
@@ -195,12 +195,12 @@ def test_empty_read_keeps_column_types(multirg_reader):
     import pyarrow.dataset as ds
 
     from cuely_spark.queryengine.executor import (_POSTING_COLS,
-                                                  _PrunedPostingsReader)
+                                                  _PrunedTable)
 
     cols = _POSTING_COLS + ["positions"]
     # sorts after every dictionary term: no row group can hold it
-    got = _PrunedPostingsReader(multirg_reader._postings_path).read(
-        ["\U0010ffff"], cols)
+    got = _PrunedTable(multirg_reader._postings_path, "term").read(
+        cols, keys=["\U0010ffff"])
     want = ds.dataset(multirg_reader._postings_path, format="parquet",
                       partitioning="hive").schema
     assert got.num_rows == 0
@@ -210,21 +210,110 @@ def test_empty_read_keeps_column_types(multirg_reader):
             assert got.schema.field(c).type == want.field(c).type, c
 
 
-def test_pruned_reader_fallback_logs_once(spark, multirg_reader,
-                                          monkeypatch, caplog):
+def test_file_cap_reopens_past_cap(spark, multirg_reader, monkeypatch,
+                                   caplog):
+    """Files past _LOCAL_FILE_CAP keep only their cached footer and are
+    reopened per read: same results, no warning, one open handle."""
     import logging
 
     from cuely_spark.queryengine import IndexReader, executor
 
-    monkeypatch.setattr(executor, "_LOCAL_FILE_CAP", 0)
+    monkeypatch.setattr(executor, "_LOCAL_FILE_CAP", 1)
     r = IndexReader(spark, multirg_reader.path)
+    qs = ("test", '"test website"', "example website -test")
     with caplog.at_level(logging.WARNING, logger="cuely_spark"):
-        got = [r.search_local(q, k=20) for q in ("test", '"test website"')]
-    warns = [x for x in caplog.records if x.name == "cuely_spark"]
-    assert len(warns) == 1
-    assert "posting files > fd cap" in warns[0].getMessage()
-    assert r._local_pruned is False
-    for q, (d, s) in zip(("test", '"test website"'), got):
+        got = [r.search_local(q, k=20) for q in qs]
+    assert not [x for x in caplog.records if x.name == "cuely_spark"]
+    assert len(r._local_pruned._files) > 1
+    assert len(r._local_pruned._open) <= 1
+    for q, (d, s) in zip(qs, got):
         dd, sd = multirg_reader.search_local(q, k=20)
         assert d.tolist() == dd.tolist()
         np.testing.assert_array_equal(s, sd)
+
+
+def _open_fds() -> int:
+    return len(os.listdir("/proc/self/fd"))
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/fd"),
+                    reason="needs /proc/self/fd")
+def test_close_and_refresh_release_handles(spark, multirg_reader):
+    from cuely_spark.queryengine import IndexReader
+
+    r = IndexReader(spark, multirg_reader.path)
+    before = _open_fds()
+    want = r.search_local("example website", k=20)
+    held = _open_fds() - before
+    assert held > 0  # posting + term-stats files stay open
+    r.close()
+    assert _open_fds() == before
+    for _ in range(20):
+        r.refresh()
+        d, s = r.search_local("example website", k=20)
+        assert _open_fds() <= before + held
+    assert d.tolist() == want[0].tolist()
+    np.testing.assert_array_equal(s, want[1])
+    r.close()
+    assert _open_fds() == before
+
+
+def test_gate_reader_cache_is_bounded(tmp_path, monkeypatch):
+    """__spark_entry__ keeps at most _READERS_MAX readers and closes
+    the least recently used one it evicts."""
+    import __spark_entry__ as entry
+    from cuely_spark import fsio
+    from cuely_spark.queryengine import IndexReader
+
+    closed = []
+    monkeypatch.setattr(IndexReader, "close",
+                        lambda self: closed.append(self.path))
+    monkeypatch.setattr(entry, "_READERS", type(entry._READERS)())
+    spark = object()  # opening a reader reads only stats.json
+    paths = []
+    for i in range(entry._READERS_MAX + 3):
+        p = str(tmp_path / f"idx{i}")
+        fsio.write_json(os.path.join(p, "stats.json"),
+                        {"num_docs": 1, "avg_fieldnorm": 1.0})
+        paths.append(p)
+    first = entry._cached_reader(spark, paths[0])
+    for p in paths[1:]:
+        entry._cached_reader(spark, p)
+        entry._cached_reader(spark, paths[0])  # keep paths[0] hot
+    assert entry._cached_reader(spark, paths[0]) is first
+    assert len(entry._READERS) == entry._READERS_MAX
+    assert closed == paths[1:4]
+    assert paths[0] not in closed
+
+
+def test_index_reads_go_through_one_reader():
+    """Every driver-side index-table read in executor.py / explain.py
+    goes through _PrunedTable; only the row-store filter scans (pushed-
+    down predicates on any column) keep pyarrow.dataset."""
+    import ast
+    import inspect
+
+    from cuely_spark.queryengine import executor, explain
+
+    allowed = {"_PrunedTable", "_search_all_local", "_range_lookup",
+               "_cols_lookup", "_doclen_lookup"}
+    banned = {("ds", "dataset"), ("pq", "ParquetFile"),
+              ("pq", "read_table")}
+    bad = []
+
+    def walk(node, scope):
+        for ch in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(ch, (ast.FunctionDef, ast.ClassDef)):
+                inner = scope + [ch.name]
+            if (isinstance(ch, ast.Call)
+                    and isinstance(ch.func, ast.Attribute)
+                    and isinstance(ch.func.value, ast.Name)
+                    and (ch.func.value.id, ch.func.attr) in banned
+                    and not allowed.intersection(scope)):
+                bad.append((mod.__name__, ch.lineno, ch.func.attr))
+            walk(ch, inner)
+
+    for mod in (executor, explain):
+        walk(ast.parse(inspect.getsource(mod)), [])
+    assert not bad, bad

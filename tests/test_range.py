@@ -132,6 +132,15 @@ def test_range_on_timestamp_column(spark, tmp_path_factory):
                    & key.text.str.split().apply(lambda t: tok in t)]
                .doc_id)
     assert {r["doc_id"] for r in got} == want
+    # match-all on this offsets-mode (no doc_id column) row store, with
+    # filters that leave no row / only the first segment's rows: the
+    # local row-store scan maps __ord to doc ids like the Spark path
+    first_ts = pdf.sort_values(["conv_id", "turn_idx"])["ts"].iloc[0]
+    for q in ("* ts:>2100-01-01", f"* ts:<={first_ts.isoformat()}"):
+        dl, sl = r.search_collect(q, k=r.num_docs, local=True)
+        dd, sd = r.search_collect(q, k=r.num_docs, local=False)
+        assert dl.tolist() == dd.tolist(), q
+        np.testing.assert_array_equal(sl, sd)
 
 
 def test_range_errors(rreader):

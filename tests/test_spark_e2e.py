@@ -168,6 +168,24 @@ def test_index_root_as_file_uri(spark, transcripts_small, tmp_path_factory):
     d1, s1 = r.search_collect("the test", k=10, dtype=np.float64)
     assert d1.size > 0
 
+    # the driver-local reads take the same cached-footer reader as a
+    # plain path: no dataset-scan or Spark detour for a URI root
+    from cuely_spark.queryengine.executor import _PrunedTable
+
+    plain = IndexReader(spark, str(base / "idx"))
+    dl, sl = r.search_local("the test", k=10, dtype=np.float64)
+    assert isinstance(r._local_pruned, _PrunedTable)
+    dd, sd = r.search_collect("the test", k=10, dtype=np.float64,
+                              local=False)
+    assert dl.tolist() == dd.tolist()
+    np.testing.assert_array_equal(sl, sd)
+    assert r.prefix_terms("te") == plain.prefix_terms("te")
+    assert r.prefix_terms("te")
+    for doc in (0, int(d1[0])):
+        text = plain._fetch_doc_text(doc, "text")
+        assert text is not None
+        assert r._fetch_doc_text(doc, "text") == text
+
     merged = "file://" + str(base / "merged")
     merge_segments(spark, root, merged, target_segments=1,
                    hot_df_threshold=50)
