@@ -11,8 +11,8 @@ Built from scratch against the behavior of the Cuely/Stract search core
   (:mod:`cuely_spark.indexer.merge`)
 - BM25 (k1=1.2, b=0.75) top-k query engine with block-max pruning
   (:mod:`cuely_spark.queryengine`)
-- training-data-pipeline operators: dedup, similarity search, text stats,
-  multimodal plumbing (:mod:`cuely_spark.ops`)
+- training-data-pipeline operators: dedup, similarity search, text stats
+  (:mod:`cuely_spark.ops`)
 """
 
 __version__ = "0.1.0"

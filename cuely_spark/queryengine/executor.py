@@ -214,12 +214,15 @@ class _PrunedTable:
                               dtype=np.int64)
             tbl = tbl.append_column("segment_id",
                                     pa.array(np.repeat(segs, lens)))
+        # exact filter as a plain compute mask: an expression filter
+        # builds an Acero plan per call (~1 ms against ~0.07 ms)
+        col = tbl[self.key]
         if keys is not None:
-            typ = tbl.schema.field(self.key).type
-            tbl = tbl.filter(pc.field(self.key).isin(pa.array(keys, typ)))
+            tbl = tbl.filter(pc.is_in(col, value_set=pa.array(keys,
+                                                              col.type)))
         elif lo is not None:
-            tbl = tbl.filter((pc.field(self.key) >= lo)
-                             & (pc.field(self.key) < hi))
+            tbl = tbl.filter(pc.and_(pc.greater_equal(col, lo),
+                                     pc.less(col, hi)))
         return tbl.select(cols)
 
 
@@ -549,119 +552,57 @@ def _range_lookup(turns_path: str, seg_dirs: list[int], specs: list,
 
 def _cols_lookup(turns_path: str, seg_dirs: list[int],
                  cols: list[str], offsets: dict | None):
-    """cand -> {col: np.ndarray} row-store column values for candidate
-    docs, via the same executor-local partition-pruned pyarrow read as
-    `_range_lookup` (the columnfield/fast-field reader analog,
-    collector/top_docs.rs:168-196 reading SiteHash/TitleHash/SimHash
-    per collected doc). String columns come back as object arrays
-    (hashed by the caller); missing docs get None/0."""
+    """cand -> pyarrow.Table of the row-store columns `cols` for the
+    candidate docs, in `cand` order, via the same executor-local
+    partition-pruned pyarrow read as `_range_lookup` (the
+    columnfield/fast-field reader analog, collector/top_docs.rs:168-196
+    reading SiteHash/TitleHash/SimHash per collected doc). Columns keep
+    their row-store Arrow types; a doc missing from the row store gets
+    NULLs."""
+    import pyarrow as pa
+
     cache: dict = {}
 
-    def fn(cand: np.ndarray) -> dict:
+    def fn(cand: np.ndarray):
         if "t" not in cache:
             import pyarrow.dataset as ds
 
-            ids_parts, col_parts = [], {c: [] for c in cols}
+            ids_parts, tbls = [], []
             for sd in seg_dirs:
                 p = os.path.join(turns_path, f"segment_id={sd}")
                 dset = ds.dataset(p, format="parquet")
-                import pyarrow.types as pat
-
                 idcol = ("doc_id" if "doc_id" in dset.schema.names
                          else "__ord")
                 # dedupe: a requested col may BE the id column
-                tbl = dset.to_table(
-                    columns=[idcol] + [c for c in cols if c != idcol])
+                tbl = dset.to_table(columns=list(dict.fromkeys(
+                    [idcol, *cols])))
                 ids_parts.append(_row_doc_ids(tbl, offsets, sd))
-                for c in cols:
-                    col = tbl[c]
-                    if ((pat.is_integer(col.type)
-                         or pat.is_boolean(col.type))
-                            and col.null_count):
-                        # to_numpy would degrade nullable int/bool to
-                        # float64 + NaN, corrupting bucket strings
-                        # ('5.0' vs '5') — keep Python ints/bools+None
-                        col_parts[c].append(
-                            np.array(col.to_pylist(), dtype=object))
-                    else:
-                        col_parts[c].append(
-                            col.to_numpy(zero_copy_only=False))
-            def _norm(arr):
-                # datetime64 scalars degrade to raw int ns when
-                # gathered into an object array — convert to datetime
-                # objects (which carry .timestamp()) up front
-                if arr.dtype.kind == "M":
-                    return (arr.astype("datetime64[us]")
-                            .astype(object))
-                return arr
-
+                tbls.append(tbl.select(cols))
             ids = np.concatenate(ids_parts)
             o = np.argsort(ids)
-            cache["t"] = (ids[o],
-                          {c: _norm(np.concatenate(col_parts[c]))[o]
-                           for c in cols})
-        ids, vals = cache["t"]
-        pos = np.clip(np.searchsorted(ids, cand), 0, ids.size - 1)
+            cache["t"] = (ids[o], pa.concat_tables(tbls).take(o))
+        ids, tbl = cache["t"]
+        pos = np.searchsorted(ids, cand).clip(0, max(ids.size - 1, 0))
         ok = ids[pos] == cand if ids.size else np.zeros(cand.size, bool)
-        out = {}
-        for c in cols:
-            v = np.empty(cand.size, dtype=object)
-            v[ok] = vals[c][pos[ok]]
-            out[c] = v
-        return out
+        return tbl.take(pa.array(pos, mask=~ok))
 
     return fn
 
 
-def _num_val(x) -> float:
-    """Row-store value -> float for numeric aggregations; timestamps
-    become epoch seconds (the date_histogram key, matching Spark's
-    timestamp->double cast and DuckDB epoch()). Parquet timestamps are
-    UTC instants and _cols_lookup hands them over as NAIVE datetimes,
-    so attach UTC explicitly — naive .timestamp() would re-interpret
-    the wall clock in the executor's local timezone and shift every
-    bucket by the UTC offset. Module-level so aggregation closures
-    stay picklable (no reader capture)."""
-    if hasattr(x, "timestamp"):  # pd.Timestamp / datetime
-        if getattr(x, "tzinfo", None) is None:
-            from datetime import timezone
+def _bucket_ids(values) -> np.ndarray:
+    """Arrow column of attribute values -> int64 bucket ids, globally
+    consistent across segments (md5-based h60 of the value cast to
+    string; NULL hashes as '')."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-            return float(x.replace(tzinfo=timezone.utc).timestamp())
-        return float(x.timestamp())
-    if isinstance(x, np.datetime64):
-        return float(x.astype("datetime64[ns]").astype(np.int64) / 1e9)
-    return float(x)
-
-
-def _missing(x) -> bool:
-    """True for NULL row-store values however they surface: None
-    (strings / to_pylist) or NaN (pyarrow decodes nullable numeric
-    columns to float64 + NaN)."""
-    return x is None or (isinstance(x, float) and x != x)
-
-
-def _str_val(x) -> str:
-    """Canonical bucket string for a row-store value — must agree with
-    Spark's CAST(col AS STRING) on the match-all aggregation path and
-    DuckDB's CAST AS VARCHAR in the oracles (booleans are lowercase
-    there; Python str() would give 'True')."""
-    if isinstance(x, (bool, np.bool_)):
-        return "true" if x else "false"
-    return str(x)
-
-
-def _bucket_ids(values: np.ndarray) -> np.ndarray:
-    """Object array of attribute values -> int64 bucket ids, globally
-    consistent across segments (md5-based h60 of the string value;
-    None hashes as '')."""
     from ..ops.hashing import h60_py
 
-    svals = np.array(["" if v is None else str(v) for v in values],
-                     dtype=object)
-    uniq, inv = np.unique(svals, return_inverse=True)
-    hashed = np.fromiter((h60_py(u) for u in uniq), dtype=np.int64,
-                         count=uniq.size)
-    return hashed[inv]
+    enc = pc.fill_null(values.cast(pa.string()), "").combine_chunks() \
+        .dictionary_encode()
+    hashed = np.fromiter((h60_py(u) for u in enc.dictionary.to_pylist()),
+                         dtype=np.int64, count=len(enc.dictionary))
+    return hashed[enc.indices.to_numpy()]
 
 
 def _osa_scalar(a: str, b: str, transpose: bool = True) -> int:
@@ -1056,6 +997,7 @@ class IndexReader:
         # offset[segment] + __ord (offsets recorded at build time)
         self._offsets = self.stats.get("segment_offsets")
         self._postings_df = None
+        self._turns_schema = None
         self._segment_docs = None
 
     # driver-local readers of the index tables, opened on first use
@@ -2760,6 +2702,7 @@ class IndexReader:
 
         def run_arrow(batches):
             import pyarrow as pa
+            import pyarrow.compute as pc
 
             d_o, s_o, g_o = [], [], []
             sim_o = []
@@ -2779,9 +2722,8 @@ class IndexReader:
                 bks = [_bucket_ids(vals[c]) for c in pen_cols]
                 sims = None
                 if sim_col:
-                    sims = np.array(
-                        [0 if v is None else int(v)
-                         for v in vals[sim_col]], dtype=np.int64)
+                    sims = np.asarray(pc.fill_null(vals[sim_col], 0)
+                                      .to_numpy(), dtype=np.int64)
                 order, _nd = diversity_rerank(
                     docs, scores, bks, pen_vals, kk,
                     simhashes=sims, hamming_k=hk)
@@ -2875,15 +2817,68 @@ class IndexReader:
                 .agg(F.sum("n").alias("n")).collect())
         return int(rows[0]["n"] or 0)
 
-    def _agg_preamble(self, query, cols: list[str], compound_terms,
-                      stemmed, lang) -> QueryPlan:
+    def _agg_rows(self, query, cols: list[str], compound_terms, stemmed,
+                  lang):
         """Shared head of every aggregation surface: validate the
-        requested row-store columns, then plan the query (plan.match_all
-        marks row-store rather than posting-backed membership). One
-        definition so the seven consumers cannot drift."""
+        requested row-store columns, plan the query and return its
+        matched rows (:meth:`_matched_rows`)."""
         self._validate_range_cols([(c,) for c in cols])
-        return self._plan(query, compound_terms=compound_terms,
+        plan = self._plan(query, compound_terms=compound_terms,
                           stemmed=stemmed, lang=lang)
+        return self._matched_rows(plan, cols)
+
+    def _matched_rows(self, plan: QueryPlan, cols: list[str]):
+        """DataFrame of the row-store columns `cols` of every doc
+        matching `plan`, typed as in the row store — the one place an
+        aggregation's membership is decided.
+
+        Match-all plans read the row store (`_all_candidates`).
+        Posting-backed plans run the SAME term-pruned postings scan as
+        search()/count(): each segment task computes its matched ids
+        with the count kernel (kernel.matching_docs) and yields the
+        row-store values of exactly those ids (`_cols_lookup`, the
+        fast-field reader analog) as Arrow batches. The aggregations
+        on top are plain Spark aggregates, so Spark plans their partial
+        aggregation in the scan's stage (the tantivy per-segment
+        SegmentCollector + final merge, crates/tantivy/src/
+        aggregation/): only bucket partials cross the shuffle, the
+        corpus never moves. A dead plan yields an empty frame."""
+        cols = list(dict.fromkeys(cols))
+        if plan.match_all:
+            return self._all_candidates(plan, keep_cols=tuple(cols)) \
+                .select(*cols)
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        from .kernel import matching_docs
+
+        if self._turns_schema is None:
+            # one row-store listing per reader (~0.3 s on a 4-segment
+            # offsets-mode index), not one per aggregation call
+            self._turns_schema = self._read_turns().schema
+        schema = StructType([self._turns_schema[c] for c in cols])
+        if plan.dead:
+            return self.spark.createDataFrame([], schema)
+        arrow_schema = to_arrow_schema(schema)
+        troot, ssrc, offs = (self._turns_path, self._seg_sources(),
+                             self._offsets)
+
+        def run_arrow(batches):
+            for seg, by_term in _batch_groups(batches):
+                specs, negs = _make_specs(plan.pq, plan.weights, by_term,
+                                          plan.dtype,
+                                          compounds=plan.compounds)
+                ids = matching_docs(specs, negs,
+                                    range_fns=_range_fns(plan, seg))
+                if ids.size:
+                    dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
+                    yield from _cols_lookup(troot, dirs, cols, offs)(
+                        ids).cast(arrow_schema).to_batches()
+
+        # same small/large routing as search()
+        return self._shape(self._postings_for(plan.terms, plan.positions),
+                           plan.est_blocks).mapInArrow(run_arrow,
+                                                       schema=schema)
 
     def facet_counts(self, query: str | ParsedQuery,
                      by: str | list[str], k: int = 50,
@@ -2898,126 +2893,37 @@ class IndexReader:
         Returns a DataFrame (col, value, count): for each `by`
         row-store column, the top-k attribute values among docs
         matching `query`, ordered count desc then value asc per
-        column. Values are returned as strings; NULL attribute values
-        are dropped (the terms aggregation ignores missing values).
+        column. Values are returned as strings (Spark's CAST AS
+        STRING); NULL attribute values are dropped (the terms
+        aggregation ignores missing values).
 
-        Scale shape: the SAME single term-pruned postings scan as
-        search()/count(); each segment task computes its matched ids
-        with the count kernel (kernel.matching_docs), fetches the
-        `by` columns for exactly those ids via the partition-pruned
-        executor-local row-store read (_cols_lookup — the fast-field
-        reader analog), and emits PARTIAL (col, value, count) rows.
-        Only bucket partials cross the wire; the corpus never
-        shuffles, and nothing corpus-sized reaches the driver."""
+        One Spark aggregate over :meth:`_matched_rows`: the `by`
+        columns are stacked into (col, value) rows in the scan stage,
+        so one scan feeds every column and only (col, value, count)
+        partials shuffle."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
         cols = [by] if isinstance(by, str) else list(by)
         if not cols:
             raise ValueError("facet_counts needs >= 1 `by` column")
-        plan = self._agg_preamble(query, cols, compound_terms, stemmed,
-                                  lang)
-
-        def _rank(counts):
-            # one exchange serves both the (col,value) aggregation and
-            # the per-col window: hash(col) clusters every (col,value)
-            # group AND every window partition (guide: window keyed
-            # like the preceding aggregation needs no second shuffle);
-            # the final total order runs on the <= k*len(cols) result
-            # rows in one task — no range-partitioning exchange or its
-            # sampling job
-            w = Window.partitionBy("col").orderBy(
-                F.desc("count"), F.asc("value"))
-            return (counts.withColumn("__r", F.row_number().over(w))
-                    .filter(F.col("__r") <= k).drop("__r")
-                    .coalesce(1)
-                    .sortWithinPartitions("col", F.desc("count"),
-                                          F.asc("value")))
-
-        if plan.match_all:
-            # pure match-all: facet the row-store scan directly (same
-            # candidate pipeline as _search_all; the only exchange is
-            # the partial-agg bucket shuffle)
-            cand = self._all_candidates(plan, keep_cols=tuple(cols))
-            parts = [
-                (cand.filter(F.col(c).isNotNull())
-                 .groupBy(F.lit(c).alias("col"),
-                          F.col(c).cast("string").alias("value"))
-                 .agg(F.count("*").alias("count")))
-                for c in cols]
-            counts = parts[0]
-            for p in parts[1:]:
-                counts = counts.unionByName(p)
-            return _rank(counts)
-
-        def make_rows(vals: dict):
-            out_c, out_v, out_n = [], [], []
-            for c in cols:
-                sv = [_str_val(x) for x in vals[c] if not _missing(x)]
-                if not sv:
-                    continue
-                uniq, cnt = np.unique(np.array(sv, dtype=object),
-                                      return_counts=True)
-                out_c.extend([c] * uniq.size)
-                out_v.extend(uniq.tolist())
-                out_n.extend(cnt.tolist())
-            if not out_c:
-                return None
-            return [out_c, out_v, np.asarray(out_n, dtype=np.int64)]
-
-        partials = self._matched_values_scan(
-            plan, cols, make_rows, "col string, value string, count long")
-        if partials is None:  # dead clause
-            return self.spark.createDataFrame(
-                [], "col string, value string, count long")
-        counts = (partials.repartition(F.col("col"))
-                  .groupBy("col", "value")
-                  .agg(F.sum("count").alias("count")))
-        return _rank(counts)
-
-    def _matched_values_scan(self, plan: QueryPlan, cols: list[str],
-                             make_rows, out_schema: str):
-        """Shared aggregation scan (the tantivy aggregation
-        SegmentCollector shape, crates/tantivy/src/aggregation/):
-        the SAME term-pruned postings scan as search()/count(); each
-        segment task computes its matched ids with the count kernel
-        (kernel.matching_docs), reads the requested row-store columns
-        for exactly those ids via the partition-pruned executor-local
-        read (_cols_lookup, the fast-field reader analog), and emits
-        whatever per-segment PARTIAL rows `make_rows(col->values)`
-        returns (a list of arrow-able columns matching `out_schema`,
-        or None to skip). Only partials shuffle; the corpus never
-        moves. Returns the mapInArrow DataFrame, or None when a
-        required clause is dead."""
-        from .kernel import matching_docs
-
-        if plan.dead:
-            return None
-        troot, ssrc, offs = (self._turns_path, self._seg_sources(),
-                             self._offsets)
-        names = [f.split()[0] for f in out_schema.split(", ")]
-
-        def run_arrow(batches):
-            import pyarrow as pa
-
-            for seg, by_term in _batch_groups(batches):
-                specs, negs = _make_specs(plan.pq, plan.weights, by_term,
-                                          plan.dtype,
-                                          compounds=plan.compounds)
-                ids = matching_docs(specs, negs,
-                                    range_fns=_range_fns(plan, seg))
-                if ids.size == 0:
-                    continue
-                dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
-                rows = make_rows(_cols_lookup(troot, dirs, cols, offs)(ids))
-                if rows is not None:
-                    yield pa.record_batch(
-                        [pa.array(r) for r in rows], names=names)
-
-        # same small/large routing as search()
-        return self._shape(self._postings_for(plan.terms, plan.positions),
-                           plan.est_blocks).mapInArrow(run_arrow,
-                                                       schema=out_schema)
+        rows = self._agg_rows(query, cols, compound_terms, stemmed, lang)
+        counts = (rows.select(F.inline(F.array(*[
+            F.struct(F.lit(c).alias("col"),
+                     F.col(c).cast("string").alias("value"))
+            for c in cols])))
+            .filter(F.col("value").isNotNull())
+            .groupBy("col", "value").agg(F.count("*").alias("count")))
+        # the final total order runs on the <= k*len(cols) result rows
+        # in one task — no range-partitioning exchange or its sampling
+        # job
+        w = Window.partitionBy("col").orderBy(F.desc("count"),
+                                              F.asc("value"))
+        return (counts.withColumn("__r", F.row_number().over(w))
+                .filter(F.col("__r") <= k).drop("__r")
+                .coalesce(1)
+                .sortWithinPartitions("col", F.desc("count"),
+                                      F.asc("value")))
 
     def agg_stats(self, query: str | ParsedQuery,
                   by: str | list[str],
@@ -3033,85 +2939,35 @@ class IndexReader:
         aggregations; population variance = sumsq/n - (sum/n)^2, the
         extended_stats definition). Returns a DataFrame (col, count,
         sum, avg, min, max, variance, stddev), one row per `by`
-        column, in `by` order.
-
-        Same scale shape as facet_counts: per-segment partials
-        (count, sum, min, max) from the shared aggregation scan; avg
-        derived after the one tiny partial merge."""
+        column with a non-NULL value, in `by` order. Timestamps
+        aggregate as epoch seconds (Spark's CAST AS DOUBLE)."""
         from pyspark.sql import functions as F
 
         cols = [by] if isinstance(by, str) else list(by)
         if not cols:
             raise ValueError("agg_stats needs >= 1 `by` column")
-        plan = self._agg_preamble(query, cols, compound_terms, stemmed,
-                                  lang)
+        rows = self._agg_rows(query, cols, compound_terms, stemmed, lang)
+        vals = (rows.select(F.inline(F.array(*[
+            F.struct(F.lit(c).alias("col"),
+                     F.col(c).cast("double").alias("v"))
+            for c in cols])))
+            .filter(F.col("v").isNotNull()))
+        v = F.col("v")
+        mean = F.sum(v) / F.count(v)
+        var = F.sum(v * v) / F.count(v) - mean * mean
         order = F.array_position(
             F.lit([str(c) for c in cols]), F.col("col"))
-
-        def finish(partials):
-            mean = F.sum("sum") / F.sum("count")
-            var = (F.sum("sumsq") / F.sum("count")) - mean * mean
-            # result is one row per `by` column: total-order it in one
-            # task instead of paying orderBy's range-partitioning
-            # exchange + sampling job
-            return (partials.groupBy("col")
-                    .agg(F.sum("count").alias("count"),
-                         F.sum("sum").alias("sum"),
-                         mean.alias("avg"),
-                         F.min("min").alias("min"),
-                         F.max("max").alias("max"),
-                         var.alias("variance"),
-                         F.sqrt(var).alias("stddev"))
-                    .coalesce(1).sortWithinPartitions(order))
-
-        if plan.match_all:
-            cand = self._all_candidates(plan, keep_cols=tuple(cols))
-            parts = [
-                (cand.filter(F.col(c).isNotNull())
-                 .groupBy(F.lit(c).alias("col"))
-                 .agg(F.count("*").alias("count"),
-                      F.sum(F.col(c).cast("double")).alias("sum"),
-                      F.min(F.col(c).cast("double")).alias("min"),
-                      F.max(F.col(c).cast("double")).alias("max"),
-                      F.sum(F.col(c).cast("double")
-                            * F.col(c).cast("double")).alias("sumsq")))
-                for c in cols]
-            partials = parts[0]
-            for pp in parts[1:]:
-                partials = partials.unionByName(pp)
-            return finish(partials)
-
-        def make_rows(vals: dict):
-            out = {"col": [], "count": [], "sum": [], "min": [],
-                   "max": [], "sumsq": []}
-            for c in cols:
-                v = np.array([_num_val(x) for x in vals[c]
-                              if not _missing(x)], dtype=np.float64)
-                if v.size == 0:
-                    continue
-                out["col"].append(c)
-                out["count"].append(int(v.size))
-                out["sum"].append(float(v.sum()))
-                out["min"].append(float(v.min()))
-                out["max"].append(float(v.max()))
-                out["sumsq"].append(float((v * v).sum()))
-            if not out["col"]:
-                return None
-            return [out["col"],
-                    np.asarray(out["count"], dtype=np.int64),
-                    np.asarray(out["sum"]), np.asarray(out["min"]),
-                    np.asarray(out["max"]), np.asarray(out["sumsq"])]
-
-        schema = ("col string, count long, sum double, min double, "
-                  "max double, sumsq double")
-        partials = self._matched_values_scan(
-            plan, cols, make_rows, schema)
-        if partials is None:
-            return self.spark.createDataFrame(
-                [], "col string, count long, sum double, avg double, "
-                    "min double, max double, variance double, "
-                    "stddev double")
-        return finish(partials)
+        # one row per `by` column: total-order it in one task instead
+        # of paying orderBy's range-partitioning exchange + sampling job
+        return (vals.groupBy("col")
+                .agg(F.count(v).alias("count"),
+                     F.sum(v).alias("sum"),
+                     mean.alias("avg"),
+                     F.min(v).alias("min"),
+                     F.max(v).alias("max"),
+                     var.alias("variance"),
+                     F.sqrt(var).alias("stddev"))
+                .coalesce(1).sortWithinPartitions(order))
 
     def range_buckets(self, query: str | ParsedQuery, col: str,
                       edges: list[float],
@@ -3132,46 +2988,23 @@ class IndexReader:
                 len(edges):
             raise ValueError(
                 "range_buckets needs >= 1 strictly increasing edges")
-        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
-                                  lang)
+        rows = self._agg_rows(query, [col], compound_terms, stemmed,
+                              lang)
         bounds = [(None, edges[0])] + list(
             zip(edges[:-1], edges[1:])) + [(edges[-1], None)]
         defs = self.spark.createDataFrame(
             [(i, lo, hi) for i, (lo, hi) in enumerate(bounds)],
             "idx int, lo double, hi double")
-
-        def finish(idx_counts):
-            return (defs.join(idx_counts, "idx", "left")
-                    .fillna(0, subset=["count"])
-                    .orderBy("idx")
-                    .select("lo", "hi", F.col("count").cast("long")
-                            .alias("count")))
-
-        if plan.match_all:
-            cand = self._all_candidates(plan, keep_cols=(col,))
-            v = F.col(col).cast("double")
-            idx = sum((v >= F.lit(e)).cast("int") for e in edges)
-            return finish(cand.filter(F.col(col).isNotNull())
-                          .groupBy(idx.alias("idx"))
-                          .agg(F.count("*").alias("count")))
-
-        def make_rows(vals: dict):
-            v = np.array([_num_val(x)
-                          for x in vals[col] if not _missing(x)],
-                         dtype=np.float64)
-            if v.size == 0:
-                return None
-            idx = np.searchsorted(edges, v, side="right")
-            uniq, cnt = np.unique(idx, return_counts=True)
-            return [uniq.astype(np.int32), cnt.astype(np.int64)]
-
-        partials = self._matched_values_scan(
-            plan, [col], make_rows, "idx int, count long")
-        if partials is None:
-            partials = self.spark.createDataFrame(
-                [], "idx int, count long")
-        return finish(partials.groupBy("idx")
-                      .agg(F.sum("count").alias("count")))
+        v = F.col(col).cast("double")
+        idx = sum((v >= F.lit(e)).cast("int") for e in edges)
+        counts = (rows.filter(F.col(col).isNotNull())
+                  .groupBy(idx.alias("idx"))
+                  .agg(F.count("*").alias("count")))
+        return (defs.join(counts, "idx", "left")
+                .fillna(0, subset=["count"])
+                .orderBy("idx")
+                .select("lo", "hi", F.col("count").cast("long")
+                        .alias("count")))
 
     def facet_stats(self, query: str | ParsedQuery, by: str,
                     metric: str, k: int = 50,
@@ -3185,83 +3018,24 @@ class IndexReader:
         terms->stats idiom). Returns (value, count, sum, avg, min,
         max) for the top-k `by` buckets among matching docs, ranked
         (count desc, value asc); `metric` NULLs are dropped from the
-        stats but not from the bucket count. Same partial-merge scale
-        shape: per-segment (value, count, msum, mmin, mmax, mcount)
-        partials only."""
+        stats but not from the bucket count."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        plan = self._agg_preamble(query, [by, metric], compound_terms,
-                                  stemmed, lang)
-
-        def finish(partials):
-            merged = (partials.groupBy("value")
-                      .agg(F.sum("count").alias("count"),
-                           F.sum("msum").alias("sum"),
-                           (F.sum("msum") / F.sum("mcount"))
-                           .alias("avg"),
-                           F.min("mmin").alias("min"),
-                           F.max("mmax").alias("max")))
-            w = Window.orderBy(F.desc("count"), F.asc("value"))
-            return (merged.withColumn("__r", F.row_number().over(w))
-                    .filter(F.col("__r") <= k).drop("__r")
-                    .orderBy(F.desc("count"), F.asc("value")))
-
-        if plan.match_all:
-            cand = self._all_candidates(plan, keep_cols=(by, metric))
-            m = F.col(metric).cast("double")
-            partials = (cand.filter(F.col(by).isNotNull())
-                        .groupBy(F.col(by).cast("string")
-                                 .alias("value"))
-                        .agg(F.count("*").alias("count"),
-                             F.sum(m).alias("msum"),
-                             F.min(m).alias("mmin"),
-                             F.max(m).alias("mmax"),
-                             F.count(m).alias("mcount")))
-            return finish(partials)
-
-        def make_rows(vals: dict):
-            bv, mv = vals[by], vals[metric]
-            keep = np.array([not _missing(x) for x in bv], dtype=bool)
-            if not keep.any():
-                return None
-            bs = np.array([_str_val(x) for x in bv[keep]],
-                          dtype=object)
-            ms = np.array([(np.nan if _missing(x) else _num_val(x))
-                           for x in mv[keep]], dtype=np.float64)
-            uniq, inv = np.unique(bs, return_inverse=True)
-            n = uniq.size
-            cnt = np.bincount(inv, minlength=n)
-            ok = ~np.isnan(ms)
-            mcnt = np.bincount(inv[ok], minlength=n)
-            msum = np.bincount(inv[ok], weights=ms[ok], minlength=n)
-            mmin = np.full(n, np.inf)
-            mmax = np.full(n, -np.inf)
-            np.minimum.at(mmin, inv[ok], ms[ok])
-            np.maximum.at(mmax, inv[ok], ms[ok])
-            # a bucket whose metric is all-NULL in this segment emits
-            # NULL partials (Spark min/max/sum IGNORE nulls; a NaN
-            # would poison the merged max, since Spark orders NaN
-            # above every double)
-            empty = mcnt == 0
-            return [uniq, cnt.astype(np.int64),
-                    [None if e else float(s)
-                     for e, s in zip(empty, msum)],
-                    [None if e else float(s)
-                     for e, s in zip(empty, mmin)],
-                    [None if e else float(s)
-                     for e, s in zip(empty, mmax)],
-                    mcnt.astype(np.int64)]
-
-        schema = ("value string, count long, msum double, "
-                  "mmin double, mmax double, mcount long")
-        partials = self._matched_values_scan(
-            plan, [by, metric], make_rows, schema)
-        if partials is None:
-            return self.spark.createDataFrame(
-                [], "value string, count long, sum double, "
-                    "avg double, min double, max double")
-        return finish(partials)
+        rows = self._agg_rows(query, [by, metric], compound_terms,
+                              stemmed, lang)
+        m = F.col(metric).cast("double")
+        merged = (rows.filter(F.col(by).isNotNull())
+                  .groupBy(F.col(by).cast("string").alias("value"))
+                  .agg(F.count("*").alias("count"),
+                       F.sum(m).alias("sum"),
+                       (F.sum(m) / F.count(m)).alias("avg"),
+                       F.min(m).alias("min"),
+                       F.max(m).alias("max")))
+        w = Window.orderBy(F.desc("count"), F.asc("value"))
+        return (merged.withColumn("__r", F.row_number().over(w))
+                .filter(F.col("__r") <= k).drop("__r")
+                .orderBy(F.desc("count"), F.asc("value")))
 
     def cardinality(self, query: str | ParsedQuery, col: str,
                     compound_terms: bool | None = None,
@@ -3269,31 +3043,15 @@ class IndexReader:
                     lang: str | None = None) -> int:
         """Cardinality aggregation: EXACT distinct `col` values among
         docs matching `query` (the ES cardinality metric; exact here
-        because per-segment DISTINCT partials are bounded by the
-        column's value count, not the match count — right for
-        attribute-like columns; for corpus-unique columns prefer
-        count()). NULLs ignored."""
+        because the partial DISTINCT sets are bounded by the column's
+        value count, not the match count — right for attribute-like
+        columns; for corpus-unique columns prefer count()). NULLs
+        ignored."""
         from pyspark.sql import functions as F
 
-        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
-                                  lang)
-        if plan.match_all:
-            cand = self._all_candidates(plan, keep_cols=(col,))
-            return int(cand.filter(F.col(col).isNotNull())
-                       .select(F.countDistinct(col)).collect()[0][0])
-
-        def make_rows(vals: dict):
-            v = [_str_val(x) for x in vals[col] if not _missing(x)]
-            if not v:
-                return None
-            return [np.unique(np.array(v, dtype=object))]
-
-        partials = self._matched_values_scan(
-            plan, [col], make_rows, "value string")
-        if partials is None:
-            return 0
-        return int(partials.select(
-            F.countDistinct("value")).collect()[0][0])
+        rows = self._agg_rows(query, [col], compound_terms, stemmed,
+                              lang)
+        return int(rows.select(F.countDistinct(col)).collect()[0][0])
 
     def percentiles(self, query: str | ParsedQuery, col: str,
                     qs: list[float] = (0.25, 0.5, 0.75, 0.95),
@@ -3302,65 +3060,39 @@ class IndexReader:
                     lang: str | None = None):
         """Percentiles aggregation over the matching docs — the
         tantivy/ES percentiles metric, but EXACT instead of sketched:
-        per-segment (value, count) partials merge into a global CDF
-        and each percentile is the discrete quantile (the k-th
-        smallest value, k = max(ceil(q*n), 1) — DuckDB quantile_disc
-        semantics, so the oracle is exact). Scale shape: partials and
-        the CDF are bounded by the column's DISTINCT-value count, not
-        the match count — right for quantized/attribute-like numeric
-        columns (the fast-field case); a corpus-unique column would
-        make the CDF corpus-sized, prefer a sketch there. Timestamps
-        key by epoch seconds. Returns (q, value), q order; NULLs
-        ignored; empty match -> empty frame."""
+        (value, count) partials merge into a global CDF and each
+        percentile is the discrete quantile (the k-th smallest value,
+        k = max(ceil(q*n), 1) — DuckDB quantile_disc semantics, so the
+        oracle is exact). Scale shape: partials and the CDF are
+        bounded by the column's DISTINCT-value count, not the match
+        count — right for quantized/attribute-like numeric columns
+        (the fast-field case); a corpus-unique column would make the
+        CDF corpus-sized, prefer a sketch there. Timestamps key by
+        epoch seconds. Returns (q, value), q order; NULLs ignored;
+        empty match -> empty frame."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
         qlist = [float(x) for x in qs]
         if not qlist or any(not 0.0 <= x <= 1.0 for x in qlist):
             raise ValueError("percentile fractions must be in [0, 1]")
-        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
-                                  lang)
-        empty = self.spark.createDataFrame(
-            [], "q double, value double")
-
-        def finish(counts):
-            w = (Window.orderBy("value")
-                 .rowsBetween(Window.unboundedPreceding, 0))
-            cdf = (counts.withColumn("cum", F.sum("count").over(w))
-                   .withColumn("n", F.sum("count").over(
-                       Window.rowsBetween(Window.unboundedPreceding,
-                                          Window.unboundedFollowing))))
-            qdf = self.spark.createDataFrame(
-                [(x,) for x in qlist], "q double")
-            k = F.greatest(F.ceil(F.col("q") * F.col("n")), F.lit(1))
-            return (cdf.join(qdf).filter(F.col("cum") >= k)
-                    .groupBy("q").agg(F.min("value").alias("value"))
-                    .orderBy("q"))
-
-        if plan.match_all:
-            cand = self._all_candidates(plan, keep_cols=(col,))
-            counts = (cand.filter(F.col(col).isNotNull())
-                      .groupBy(F.col(col).cast("double")
-                               .alias("value"))
-                      .agg(F.count("*").alias("count")))
-            return finish(counts)
-
-        def make_rows(vals: dict):
-            v = np.array([_num_val(x)
-                          for x in vals[col] if not _missing(x)],
-                         dtype=np.float64)
-            if v.size == 0:
-                return None
-            uniq, cnt = np.unique(v, return_counts=True)
-            return [uniq, cnt.astype(np.int64)]
-
-        partials = self._matched_values_scan(
-            plan, [col], make_rows, "value double, count long")
-        if partials is None:
-            return empty
-        counts = (partials.groupBy("value")
-                  .agg(F.sum("count").alias("count")))
-        return finish(counts)
+        rows = self._agg_rows(query, [col], compound_terms, stemmed,
+                              lang)
+        counts = (rows.filter(F.col(col).isNotNull())
+                  .groupBy(F.col(col).cast("double").alias("value"))
+                  .agg(F.count("*").alias("count")))
+        w = (Window.orderBy("value")
+             .rowsBetween(Window.unboundedPreceding, 0))
+        cdf = (counts.withColumn("cum", F.sum("count").over(w))
+               .withColumn("n", F.sum("count").over(
+                   Window.rowsBetween(Window.unboundedPreceding,
+                                      Window.unboundedFollowing))))
+        qdf = self.spark.createDataFrame(
+            [(x,) for x in qlist], "q double")
+        k = F.greatest(F.ceil(F.col("q") * F.col("n")), F.lit(1))
+        return (cdf.join(qdf).filter(F.col("cum") >= k)
+                .groupBy("q").agg(F.min("value").alias("value"))
+                .orderBy("q"))
 
     def histogram(self, query: str | ParsedQuery, col: str,
                   interval: float,
@@ -3373,41 +3105,18 @@ class IndexReader:
         keyed by floor(value / interval) * interval over a numeric
         row-store column (NULLs ignored; empty buckets are NOT
         filled). Returns a DataFrame (bucket double, count long),
-        bucket asc. Same partial-merge scale shape as facet_counts."""
+        bucket asc."""
         from pyspark.sql import functions as F
 
         if interval <= 0:
             raise ValueError("histogram interval must be > 0")
-        plan = self._agg_preamble(query, [col], compound_terms, stemmed,
-                                  lang)
-        iv = float(interval)
-
-        if plan.match_all:
-            cand = self._all_candidates(plan, keep_cols=(col,))
-            return (cand.filter(F.col(col).isNotNull())
-                    .groupBy((F.floor(F.col(col).cast("double")
-                                      / F.lit(iv)) * F.lit(iv))
-                             .alias("bucket"))
-                    .agg(F.count("*").alias("count"))
-                    .orderBy("bucket"))
-
-        def make_rows(vals: dict):
-            v = np.array([_num_val(x)
-                          for x in vals[col] if not _missing(x)],
-                         dtype=np.float64)
-            if v.size == 0:
-                return None
-            b = np.floor(v / iv) * iv
-            uniq, cnt = np.unique(b, return_counts=True)
-            return [uniq, cnt.astype(np.int64)]
-
-        partials = self._matched_values_scan(
-            plan, [col], make_rows, "bucket double, count long")
-        if partials is None:
-            return self.spark.createDataFrame(
-                [], "bucket double, count long")
-        return (partials.groupBy("bucket")
-                .agg(F.sum("count").alias("count"))
+        rows = self._agg_rows(query, [col], compound_terms, stemmed,
+                              lang)
+        iv = F.lit(float(interval))
+        return (rows.filter(F.col(col).isNotNull())
+                .groupBy((F.floor(F.col(col).cast("double") / iv) * iv)
+                         .alias("bucket"))
+                .agg(F.count("*").alias("count"))
                 .orderBy("bucket"))
 
     def _fetch_doc_text(self, doc_id: int, text_col: str):

@@ -1,12 +1,16 @@
-"""Facet / terms aggregation over matching docs.
+"""Facet / terms aggregation and the other aggregation surfaces over
+matching docs.
 
 Reference: the tantivy aggregation module's bucket terms aggregation
 (crates/tantivy/src/aggregation/bucket/term_agg.rs) — per-segment
 value counts over a fast-field column for the docs the scorer visits,
 merged across segments, top-k buckets by (count desc, value asc).
-Here: kernel.matching_docs gives the segment's matched ids, the
-partition-pruned executor-local row-store read (the fast-field reader
-analog) gives the attribute values, and only (col, value, count)
+Here every aggregation is written once, as a Spark aggregate over
+IndexReader._matched_rows: the matched docs' row-store columns, read
+from the row store for match-all queries and, for posting-backed ones,
+from kernel.matching_docs per segment plus the partition-pruned
+executor-local row-store read (the fast-field reader analog). Spark
+runs the partial aggregation in the scan stage, so only bucket
 partials shuffle.
 """
 import duckdb
@@ -203,7 +207,7 @@ def test_range_buckets_match_duckdb_oracle(facet_reader, facet_con):
 
 def test_date_histogram_and_ts_ranges(facet_reader, facet_con):
     """Timestamp columns aggregate by epoch seconds (date_histogram;
-    _cols_lookup normalizes datetime64 so values keep .timestamp())."""
+    Spark's timestamp -> double cast on both membership sources)."""
     from cuely_spark.oracle_sql import histogram_sql, range_agg_sql
 
     got = facet_reader.histogram("merge table", "ts",
@@ -260,32 +264,6 @@ def test_cardinality(facet_reader, facet_pdf):
 
 
 # -------------------------------------------- review-fix regressions
-def test_num_val_timestamps_are_utc():
-    """Naive datetimes from the row store are UTC instants; the epoch
-    key must not shift with the host timezone (date_histogram would
-    re-bucket on non-UTC machines)."""
-    import os
-    import time as _time
-
-    from cuely_spark.queryengine.executor import _num_val
-
-    x = np.datetime64("2025-01-01T00:00:00").astype(
-        "datetime64[us]").astype(object)  # naive datetime
-    want = 1735689600.0
-    old = os.environ.get("TZ")
-    try:
-        os.environ["TZ"] = "America/New_York"
-        _time.tzset()
-        assert _num_val(x) == want
-        assert _num_val(np.datetime64("2025-01-01T00:00:00")) == want
-    finally:
-        if old is None:
-            os.environ.pop("TZ", None)
-        else:
-            os.environ["TZ"] = old
-        _time.tzset()
-
-
 @pytest.fixture(scope="module")
 def null_reader(spark, tmp_path_factory):
     """Corpus with NULLs in a numeric metric, a boolean attribute, and
@@ -366,9 +344,10 @@ def test_bool_and_id_columns_aggregate_consistently(null_reader):
 
 def test_aggregation_fuzz_vs_pandas_model(spark, tmp_path_factory):
     """Randomized corpora (NULLs, booleans, nullable ints, multiple
-    segments) x random conjunctive queries: every aggregation surface
-    must equal a brute pandas model computed over the brute-force
-    membership — an oracle independent of the DuckDB SQL generators."""
+    segments) x conjunctive and match-all queries: every aggregation
+    surface must equal a brute pandas model computed over the
+    brute-force membership — an oracle independent of the DuckDB SQL
+    generators, covering both membership sources of _matched_rows."""
     from cuely_spark.indexer import build_index
     from cuely_spark.oracle import OracleIndex
     from cuely_spark.queryengine import IndexReader
@@ -395,9 +374,16 @@ def test_aggregation_fuzz_vs_pandas_model(spark, tmp_path_factory):
                          pdf["text"].tolist())
 
     queries = ["merge", "merge table", "scan -window", "key sort",
-               '"merge table"', "table -key"]
+               '"merge table"', "table -key",
+               # match-all: row-store membership minus the negations
+               "* -window", "* -merge -table"]
     for q in queries:
-        docs, _ = oracle.search(q, k=10**9)
+        if q.startswith("* "):
+            negated = [t[1:] for t in q.split()[1:]]
+            docs = set(pdf.doc_id) - {
+                d for t in negated for d in oracle.search(t, k=10**9)[0]}
+        else:
+            docs, _ = oracle.search(q, k=10**9)
         m = pdf[pdf.doc_id.isin(docs)]
         # terms facets (string + bool + nullable int)
         for col, fmt in [("lang", str), ("flag",
@@ -457,3 +443,30 @@ def test_percentiles_match_duckdb_oracle(facet_reader, facet_con):
         facet_reader.percentiles("merge", "n_chars", [1.5])
     assert facet_reader.percentiles("zzzqx", "n_chars",
                                     [0.5]).count() == 0
+
+
+AGG_SURFACES = {
+    "facet_counts": lambda r, q: r.facet_counts(q, ["lang", "source"], k=5),
+    "agg_stats": lambda r, q: r.agg_stats(q, ["n_chars", "ts"]),
+    "range_buckets": lambda r, q: r.range_buckets(q, "n_chars",
+                                                  [100.0, 200.0]),
+    "facet_stats": lambda r, q: r.facet_stats(q, "lang", "n_chars", k=5),
+    "cardinality": lambda r, q: r.cardinality(q, "source"),
+    "percentiles": lambda r, q: r.percentiles(q, "ts", [0.5]),
+    "histogram": lambda r, q: r.histogram(q, "ts", 86400.0),
+}
+
+
+@pytest.mark.parametrize("surface", sorted(AGG_SURFACES))
+def test_result_schema_same_for_every_membership_source(facet_reader,
+                                                         surface):
+    """A posting-backed, a match-all and a dead query give the same
+    result schema (names and Spark types; cardinality: a Python int)."""
+    def shape(out):
+        if isinstance(out, int):
+            return int
+        return [(f.name, f.dataType) for f in out.schema.fields]
+
+    want = shape(AGG_SURFACES[surface](facet_reader, "merge table"))
+    for q in ("* -merge", "zzzqx"):
+        assert shape(AGG_SURFACES[surface](facet_reader, q)) == want, q

@@ -81,7 +81,8 @@ K = 15
 def _fuzz_queries(texts, n, seed=20261017):
     """[(query, kwargs)] drawn from the query grammar: terms (with
     boosts), `-` negations, phrases with `~slop`, phrase-prefix
-    `"a b"*`, `word*`, `word~1`, attribute filters, `should=` and
+    `"a b"*`, `word*`, `word~1`, termsets `a|b`, attribute filters,
+    `ts:` ranges, `tool:*` / `-tool:*` exists filters, `should=` and
     occur="should"/"dismax". Words and phrases come from the corpus,
     so most queries have hits."""
     import random
@@ -95,6 +96,7 @@ def _fuzz_queries(texts, n, seed=20261017):
         t for d in docs for t in d).most_common()]
     words = [t for t in ranked[:400] if t.isalpha() and len(t) >= 3]
     filters = ["role:user", "role:assistant", "tool:bash", "tool:search"]
+    days = [f"2024-01-{d:02d}" for d in range(1, 12)]  # the corpus's ts
 
     def word():
         return rng.choice(words[:rng.choice((10, 60, len(words)))])
@@ -113,12 +115,18 @@ def _fuzz_queries(texts, n, seed=20261017):
             q += " -" + word()
         if rng.random() < 0.2:
             q += " " + rng.choice(filters)
+        if rng.random() < 0.15:
+            q += " " + rng.choice(["tool:*", "-tool:*"])
+        if rng.random() < 0.15:
+            a, b = sorted(rng.sample(days, 2))
+            q += " " + rng.choice([f"ts:>={a}", f"ts:<{b}",
+                                   f"ts:{a}..{b}"])
         return q
 
     out = []
     while len(out) < n:
         shape = rng.choice(["terms", "phrase", "pphrase", "prefix",
-                            "fuzzy", "should", "union"])
+                            "fuzzy", "termset", "should", "union"])
         if shape == "terms":
             ws = [word() for _ in range(rng.randint(1, 3))]
             if rng.random() < 0.3:
@@ -139,6 +147,9 @@ def _fuzz_queries(texts, n, seed=20261017):
             out.append((extras(w[:rng.randint(3, len(w))] + "*"), {}))
         elif shape == "fuzzy":
             out.append((extras(word() + "~1"), {}))
+        elif shape == "termset":
+            ws = "|".join(word() for _ in range(rng.randint(2, 3)))
+            out.append((extras(ws), {}))
         elif shape == "should":
             sq = (" ".join(word() for _ in range(rng.randint(1, 2)))
                   if rng.random() < 0.6
@@ -166,7 +177,7 @@ def _assert_same(got, want, what):
 
 
 def test_path_parity_fuzz(reader, transcripts_small):
-    queries = _fuzz_queries(transcripts_small["text"].tolist(), 40)
+    queries = _fuzz_queries(transcripts_small["text"].tolist(), 48)
     batch = {f"q{i}": {"q": q, **({"should": kw["should"]}
                                   if "should" in kw else {})}
              for i, (q, kw) in enumerate(queries) if "occur" not in kw}
