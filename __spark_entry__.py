@@ -611,7 +611,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         r = _cached_reader(spark, _ensure_sorted_index(spark, sf_dir))
         res = r.search("merge table", k=r.num_docs, dtype=np.float64)
-        mapping = r._read_turns().select("doc_id", "orig_id")
+        mapping = r.turns_df.select("doc_id", "orig_id")
         return (res.join(F.broadcast(mapping), "doc_id")
                 .select(F.col("orig_id").alias("doc_id"),
                         F.round(F.col("score"), 4).alias("score")))

@@ -22,3 +22,9 @@ B = 0.75  # reference: crates/core/src/ranking/bm25.rs:9
 BLOCK_SIZE = 128  # reference: crates/tantivy/src/postings/compression/mod.rs:4
 TOP_K_DEFAULT = 20  # reference: crates/core/src/searcher/mod.rs:44
 MAX_TERMS_PER_QUERY = 32  # reference: crates/core/src/query/parser/mod.rs:17
+
+# every engine UDF imports this package, so the first task in each Spark
+# Python worker installs the worker set-up (a no-op on the driver)
+from ._worker import skip_unchanged_zip_rereads  # noqa: E402
+
+skip_unchanged_zip_rereads()

@@ -949,10 +949,11 @@ def _hit_batch(parts, tag_col: str, with_count: bool):
 class IndexReader:
     """Point-in-time snapshot of an index (tantivy Searcher semantics:
     a reader sees the segments committed when it was opened). Stats are
-    read at __init__ and the postings DataFrame's file listing freezes
-    on first query — segments added later by a LiveIndexWriter are NOT
-    visible. After live batches, call :meth:`refresh` or construct a
-    new reader (the reference reloads its reader on commit,
+    read at __init__ and the file listings of the postings and
+    row-store DataFrames freeze on first use — segments added later by
+    a LiveIndexWriter are NOT visible. After live batches, call
+    :meth:`refresh` or construct a new reader (the reference reloads
+    its reader on commit,
     crates/core/src/inverted_index/indexing.rs:65-75)."""
 
     #: queries whose estimated posting-block count is at or below this
@@ -997,7 +998,7 @@ class IndexReader:
         # offset[segment] + __ord (offsets recorded at build time)
         self._offsets = self.stats.get("segment_offsets")
         self._postings_df = None
-        self._turns_schema = None
+        self._turns_df = None
         self._segment_docs = None
 
     # driver-local readers of the index tables, opened on first use
@@ -1049,19 +1050,26 @@ class IndexReader:
         self.__init__(self.spark, self.path)
         return self
 
-    def _read_turns(self):
-        """Row store with a doc_id column, whatever the id mode."""
-        from pyspark.sql import functions as F
+    @property
+    def turns_df(self):
+        """Lazy, cached row store with a doc_id column, whatever the id
+        mode: the listing, schema inference and (offsets mode) the
+        offsets join cost ~0.3 s per spark.read, so pay them once per
+        snapshot, as :attr:`postings_df` does. Reset by :meth:`refresh`."""
+        if self._turns_df is None:
+            from pyspark.sql import functions as F
 
-        turns = self.spark.read.parquet(self._turns_path)
-        if self._offsets is not None and "doc_id" not in turns.columns:
-            off = self.spark.createDataFrame(
-                [(int(k), int(v)) for k, v in self._offsets.items()],
-                "segment_id int, __off long")
-            turns = (turns.join(F.broadcast(off), "segment_id")
-                     .withColumn("doc_id", F.col("__off") + F.col("__ord"))
-                     .drop("__off", "__ord"))
-        return turns
+            turns = self.spark.read.parquet(self._turns_path)
+            if self._offsets is not None and "doc_id" not in turns.columns:
+                off = self.spark.createDataFrame(
+                    [(int(k), int(v)) for k, v in self._offsets.items()],
+                    "segment_id int, __off long")
+                turns = (turns.join(F.broadcast(off), "segment_id")
+                         .withColumn("doc_id",
+                                     F.col("__off") + F.col("__ord"))
+                         .drop("__off", "__ord"))
+            self._turns_df = turns
+        return self._turns_df
 
     def _parse(self, query):
         """Parse a query string with this index's scored extra fields
@@ -1942,7 +1950,7 @@ class IndexReader:
                         if new in set(segs)]
             ids = [r["doc_id"] for r in top.select("doc_id").collect()]
             turns = (
-                self._read_turns()
+                self.turns_df
                 .filter(F.col("segment_id").isin(segs)
                         & F.col("doc_id").isin(ids))
             )
@@ -1965,7 +1973,7 @@ class IndexReader:
         no driver-side materialization anywhere."""
         from pyspark.sql import functions as F
 
-        turns = self._read_turns()
+        turns = self.turns_df
         cond = F.lit(True)
         for col, lo, hi, lo_inc, hi_inc in plan.range_specs:
             if col not in turns.columns:
@@ -2852,11 +2860,7 @@ class IndexReader:
 
         from .kernel import matching_docs
 
-        if self._turns_schema is None:
-            # one row-store listing per reader (~0.3 s on a 4-segment
-            # offsets-mode index), not one per aggregation call
-            self._turns_schema = self._read_turns().schema
-        schema = StructType([self._turns_schema[c] for c in cols])
+        schema = StructType([self.turns_df.schema[c] for c in cols])
         if plan.dead:
             return self.spark.createDataFrame([], schema)
         arrow_schema = to_arrow_schema(schema)
@@ -3212,7 +3216,7 @@ class IndexReader:
         this a 1-row-group read."""
         from pyspark.sql import functions as F
 
-        return (self._read_turns()
+        return (self.turns_df
                 .filter((F.col("conv_id") == conv_id)
                         & (F.col("turn_idx") == turn_idx)))
 
@@ -3220,7 +3224,7 @@ class IndexReader:
         """All turns of a conversation, in order (GetSiteUrls analog)."""
         from pyspark.sql import functions as F
 
-        return (self._read_turns()
+        return (self.turns_df
                 .filter(F.col("conv_id") == conv_id)
                 .orderBy("turn_idx"))
 

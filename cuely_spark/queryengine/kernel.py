@@ -213,15 +213,18 @@ def single_term_topk(tp: TermPostings, weight: Bm25Weight, k: int):
     while i < order.size:
         blocks = order[i:i + chunk]
         i += chunk
-        if best_docs.size >= k and float(ub[blocks[0]]) < threshold:
+        filled = best_docs.size >= k
+        if filled and float(ub[blocks[0]]) < threshold:
             break  # no remaining block can beat the k-th score
-        keep = (ub[blocks] >= threshold) | (best_docs.size < k)
-        # adaptive schedule: while pruning is biting (some blocks
-        # dropped), stay fine so the threshold tightens between small
-        # decodes; when a whole chunk survives (flat bounds, pruning
+        keep = (ub[blocks] >= threshold) | (not filled)
+        # adaptive schedule: while the top-k is still filling or
+        # pruning is biting (some blocks dropped), stay fine so the
+        # threshold tightens between small decodes; when a whole chunk
+        # survives an active threshold (flat bounds, pruning
         # impossible) double the chunk so a 10^4-block concatenated
         # stream pays O(log) iterations of fixed numpy overhead
-        chunk = min(chunk * 2, 8192) if bool(keep.all()) else 32
+        chunk = min(chunk * 2, 8192) if filled and bool(keep.all()) \
+            else 32
         blocks = blocks[keep]
         if blocks.size == 0:
             continue

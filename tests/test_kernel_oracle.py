@@ -95,7 +95,7 @@ def random_postings(draw):
     return docs, tfs, fnids, n_docs
 
 
-def _make_tp(docs, tfs, fnids):
+def _make_tp(docs, tfs, fnids, cls=TermPostings):
     from cuely_spark.codec import encode_docs, encode_tfs
 
     blocks = []
@@ -105,8 +105,8 @@ def _make_tp(docs, tfs, fnids):
             d[0], d[-1], d.size, encode_docs(d), encode_tfs(t),
             f.astype(np.uint8).tobytes(), int(t.max()), int(f.min())))
     b = list(zip(*blocks))
-    return TermPostings(b[0], b[1], b[2], b[3], b[4], b[5],
-                        block_max_tf=b[6], block_min_fnid=b[7])
+    return cls(b[0], b[1], b[2], b[3], b[4], b[5],
+               block_max_tf=b[6], block_min_fnid=b[7])
 
 
 @given(random_postings(), st.integers(min_value=1, max_value=40))
@@ -122,6 +122,65 @@ def test_wand_equals_bruteforce(postings, k):
     exp_d, exp_s = docs[order], scores[order]
     assert got_d.tolist() == exp_d.tolist()
     np.testing.assert_array_equal(got_s, exp_s)
+
+
+
+class _CountingPostings(TermPostings):
+    """TermPostings that counts the blocks it decodes."""
+
+    def __init__(self, *args, **kw):
+        super().__init__(*args, **kw)
+        self.decoded = 0
+
+    def decode_blocks(self, blocks):
+        self.decoded += len(blocks)
+        return super().decode_blocks(blocks)
+
+
+def _fixed32_topk(tp, weight, k):
+    """single_term_topk with a fixed 32-block chunk: the reference
+    schedule the adaptive one must never out-decode."""
+    ub = weight.score(tp.block_min_fnid, tp.block_max_tf)
+    order = np.argsort(-ub, kind="stable")
+    best_docs = np.empty(0, dtype=np.int64)
+    best_scores = np.empty(0, dtype=weight.dtype)
+    threshold = -np.inf
+    for i in range(0, order.size, 32):
+        blocks = order[i:i + 32]
+        if best_docs.size >= k and float(ub[blocks[0]]) < threshold:
+            break
+        blocks = blocks[(ub[blocks] >= threshold) | (best_docs.size < k)]
+        if blocks.size == 0:
+            continue
+        docs, tfs, fnids, _ = tp.decode_blocks(np.sort(blocks))
+        scores = weight.score(fnids, tfs)
+        order_k = np.lexsort((np.concatenate([best_docs, docs]),
+                              -np.concatenate([best_scores, scores])))[:k]
+        best_docs = np.concatenate([best_docs, docs])[order_k]
+        best_scores = np.concatenate([best_scores, scores])[order_k]
+        if best_docs.size >= k:
+            threshold = float(best_scores[-1])
+    return best_docs, best_scores
+
+
+def test_topk_filling_mid_chunk_decodes_no_more_than_fixed_chunks():
+    """k fills inside the second 32-block chunk of a list whose block
+    bounds fall strictly: the chunk must not double while the top-k is
+    still filling, or the blocks the threshold would prune get decoded
+    (32 + 64 blocks instead of 32 + 32)."""
+    nblocks, k = 120, 32 * 128 + 64
+    docs = np.arange(nblocks * 128, dtype=np.int64)
+    tfs = np.repeat(np.arange(nblocks + 1, 1, -1), 128).astype(np.int64)
+    fnids = np.full(docs.size, 10, dtype=np.int64)
+    w = Bm25Weight(docs.size, docs.size, 17.3)
+    tp = _make_tp(docs, tfs, fnids, cls=_CountingPostings)
+    ref = _make_tp(docs, tfs, fnids, cls=_CountingPostings)
+    got_d, got_s = single_term_topk(tp, w, k)
+    exp_d, exp_s = _fixed32_topk(ref, w, k)
+    assert got_d.tolist() == exp_d.tolist()
+    np.testing.assert_array_equal(got_s, exp_s)
+    assert ref.decoded == 64
+    assert tp.decoded <= ref.decoded
 
 
 @st.composite

@@ -78,7 +78,7 @@ def test_with_snippets_spark(spark, transcripts_small, tmp_path_factory):
     r = IndexReader(spark, out)
     q = "example website"
     top = r.search(q, k=5)
-    texts = r._read_turns().select("doc_id", "text")
+    texts = r.turns_df.select("doc_id", "text")
     joined = top.join(texts, "doc_id")
     rows = with_snippets(joined, r, q).collect()
     assert len(rows) == 5

@@ -32,7 +32,7 @@ def index_multi(spark, spark_df, tmp_path_factory):
 def test_doc_ids_are_dense_rank(spark, index_multi, transcripts_small):
     from cuely_spark.queryengine import IndexReader
 
-    turns = IndexReader(spark, index_multi)._read_turns()
+    turns = IndexReader(spark, index_multi).turns_df
     got = (turns.select("doc_id", "conv_id", "turn_idx")
            .orderBy("conv_id", "turn_idx").toPandas())
     assert got["doc_id"].tolist() == list(range(len(transcripts_small)))

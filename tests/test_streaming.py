@@ -45,6 +45,43 @@ def test_live_ingest_and_search(spark, chunks, tmp_path):
                                    rtol=1e-6)
 
 
+
+def test_row_store_read_once_per_snapshot(spark, chunks, tmp_path,
+                                          monkeypatch):
+    """A reader lists and reads the row store once per snapshot: a
+    second match-all count makes no new spark.read.parquet, a live
+    batch stays invisible until refresh(), which picks it up."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from cuely_spark.queryengine import IndexReader
+    from cuely_spark.streaming import LiveIndexWriter
+
+    root = str(tmp_path / "live")
+    w = LiveIndexWriter(spark, root)
+    w.process_batch(spark.createDataFrame(chunks[0]), 0)
+    r = IndexReader(spark, root)
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        reads.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    assert r.count("*") == 300
+    assert r._turns_path in reads
+    n_reads = len(reads)
+    assert r.count("*") == 300
+    assert len(reads) == n_reads
+
+    w.process_batch(spark.createDataFrame(chunks[1]), 1)
+    assert r.count("*") == 300
+    r.refresh()
+    assert r.count("*") == 600
+    new = chunks[1].iloc[0]
+    assert r.get_turn(new["conv_id"], int(new["turn_idx"])).count() == 1
+
+
 def test_replay_idempotent(spark, chunks, tmp_path):
     from cuely_spark.queryengine import IndexReader
     from cuely_spark.streaming import LiveIndexWriter
