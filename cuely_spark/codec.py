@@ -50,8 +50,9 @@ def varbyte_encode(values: np.ndarray, nb: np.ndarray | None = None) -> bytes:
     return groups[keep].tobytes()
 
 
-def varbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Decode varbyte bytes into a uint64 array. Vectorized."""
+def varbyte_decode(buf, count: int | None = None) -> np.ndarray:
+    """Decode varbyte bytes (or a uint8 array) into a uint64 array.
+    Vectorized."""
     arr = np.frombuffer(buf, dtype=np.uint8)
     if arr.size == 0:
         return np.empty(0, dtype=np.uint64)

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import fsio
-from .build import IndexPaths, posting_rg_bytes
+from .build import TERM_STATS_RG_BYTES, IndexPaths, posting_rg_bytes
 from .segment import INDEX_ROW_SCHEMA
 
 DEFAULT_HOT_DF = 500_000
@@ -224,7 +224,9 @@ def merge_segments(
                           F.sum("ttf").alias("ttf"))
      .repartitionByRange(max(1, min(32, target_segments)), "term")
      .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(dst.term_stats))
+     .write.mode("overwrite")
+     .option("parquet.block.size", TERM_STATS_RG_BYTES)
+     .parquet(dst.term_stats))
 
     new_stats = dict(stats)
     new_stats["num_segments"] = len(set(seg_map.values()))

@@ -21,11 +21,13 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    column), and only the needed columns are read (positions column is
    skipped unless the query has a phrase).
 4. per-segment kernel: repartition(segment_id) + mapInArrow running
-   the numpy kernel (:mod:`.kernel`) over arrow tables with numpy
-   index grouping — segment-local top-k, block-max pruning, leapfrog
-   AND, phrase verification; no per-group pandas machinery (its
-   constant overhead multiplies with segment count). The shuffle moves
-   only the query's posting rows (KBs), never the corpus.
+   the numpy kernel (:mod:`.kernel`) — segment-local top-k, block-max
+   pruning, leapfrog AND, phrase verification. Every path turns
+   posting rows into TermPostings with ONE builder,
+   :func:`_arrow_postings` (zero-copy views of the Arrow buffers, no
+   Python object per row); the kernel decodes selected blocks in a
+   constant number of numpy calls. The shuffle moves only the query's
+   posting rows (KBs), never the corpus.
 5. global merge: orderBy(score desc, doc_id asc).limit(k) over the tiny
    union of per-segment top-ks (reference: collector/top_docs.rs merge).
 """
@@ -335,104 +337,98 @@ def _make_specs(pq: ParsedQuery, weights: dict, by_term: dict, dtype,
     return specs, negs
 
 
-def _concat_arrow_postings(tbl):
-    """{term: TermPostings} with each term's blocks from ALL segments
-    concatenated in ascending doc order — the whole index treated as
-    ONE logical segment.
+#: per-block byte streams of a posting row (positions only when read)
+_BLOCK_STREAMS = ("docs", "tfs", "fnids", "positions")
 
-    Sound because stage A assigns every segment a disjoint docID range
-    (doc_id = offset[segment] + ordinal), so the concatenation is
-    doc-ordered and non-overlapping exactly like blocks within one
-    segment; that invariant is verified per term below and None is
-    returned (caller falls back to the per-segment loop) if any block
-    ranges interleave. One kernel invocation then prunes across the
-    whole index: the block-max threshold converges once instead of
-    once per segment, removing the per-segment Python loop AND most
-    block decodes (the reference's searcher enjoys the same effect as
-    its segment count shrinks after merges)."""
+
+def _binary_stream(col):
+    """(values uint8, offsets int64) of a binary or large_binary column,
+    zero-copy from its Arrow buffers; None when all null (an index
+    built without positions)."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks()
+    if arr.null_count == len(arr):
+        return None
+    _validity, offs, vals = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(offs, dtype=odt)[arr.offset:arr.offset + len(arr) + 1]
+    return np.frombuffer(vals or b"", dtype=np.uint8), off.astype(np.int64)
+
+
+def _arrow_postings(tbl, per_segment: bool = True):
+    """The posting builder: {segment_id: {term: TermPostings}} from an
+    arrow table of posting rows, no pandas and no Python object per row.
+
+    The rows are sorted once — by (segment_id, term, block_id) per
+    segment, or with ``per_segment=False`` by (term, first_doc) across
+    the whole index under the single key None — and the binary block
+    columns are taken once in that order. Every (segment, term) group
+    is then a contiguous row range, and its TermPostings holds the
+    columns' values buffers plus a slice of their offsets (zero-copy
+    views; :meth:`TermPostings.from_streams`).
+
+    Whole-index mode treats the index as ONE logical segment. It is
+    sound because stage A gives every segment a disjoint docID range
+    (doc_id = offset[segment] + ordinal), so a term's blocks from all
+    segments are doc-ordered and non-overlapping exactly like blocks
+    within one segment; that is checked per term, and None is returned
+    (the caller falls back to per-segment groups) if ranges
+    interleave."""
     n = tbl.num_rows
     if n == 0:
         return {}
-    term = tbl["term"].to_pylist()
-    first = tbl["first_doc"].to_numpy().astype(np.int64)
-    last = tbl["last_doc"].to_numpy().astype(np.int64)
-    codes = np.empty(n, dtype=np.int64)
-    tmap: dict[str, int] = {}
-    for i, t in enumerate(term):
-        codes[i] = tmap.setdefault(t, len(tmap))
-    order = np.lexsort((first, codes))
-    oc = codes[order]
-    of = first[order]
-    ol = last[order]
-    starts = np.flatnonzero(np.r_[True, oc[1:] != oc[:-1]])
-    # disjointness: within a term group, each block starts after the
-    # previous block ends
-    inner = np.ones(n, dtype=bool)
-    inner[starts] = False
-    if np.any(inner & ~(of > np.r_[np.int64(-1), ol[:-1]])):
-        return None
+    enc = tbl["term"].combine_chunks().dictionary_encode()
+    names = enc.dictionary.to_pylist()
+    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+
+    def ints(c):
+        return tbl[c].to_numpy().astype(np.int64, copy=False)
+
+    first, last = ints("first_doc"), ints("last_doc")
+    if per_segment:
+        seg = ints("segment_id")
+        order = np.lexsort((ints("block_id"), codes, seg))
+        seg, oc = seg[order], codes[order]
+        brk = np.r_[True, (oc[1:] != oc[:-1]) | (seg[1:] != seg[:-1])]
+    else:
+        order = np.lexsort((first, codes))
+        oc = codes[order]
+        brk = np.r_[True, oc[1:] != oc[:-1]]
+        # disjointness: within a term group, each block starts after
+        # the previous block ends
+        of, ol = first[order], last[order]
+        if np.any(~brk & ~(of > np.r_[np.int64(-1), ol[:-1]])):
+            return None
+    starts = np.flatnonzero(brk)
     ends = np.r_[starts[1:], n]
-    nd = tbl["ndocs"].to_numpy().astype(np.int64)
-    bmt = tbl["block_max_tf"].to_numpy().astype(np.int64)
-    bmf = tbl["block_min_fnid"].to_numpy().astype(np.int64)
-    docs = tbl["docs"].to_pylist()
-    tfs = tbl["tfs"].to_pylist()
-    fnids = tbl["fnids"].to_pylist()
-    poss = (tbl["positions"].to_pylist()
-            if "positions" in tbl.column_names else None)
-    inv = {v: k for k, v in tmap.items()}
-    out = {}
-    for s, e in zip(starts, ends):
-        ia = order[s:e]
-        out[inv[int(oc[s])]] = TermPostings(
-            first[ia], last[ia], nd[ia],
-            [docs[i] for i in ia], [tfs[i] for i in ia],
-            [fnids[i] for i in ia],
-            positions=([poss[i] for i in ia] if poss is not None
-                       else None),
-            block_max_tf=bmt[ia], block_min_fnid=bmf[ia])
+    blocks = tbl.select([c for c in _BLOCK_STREAMS
+                         if c in tbl.column_names]).take(order)
+    streams = [_binary_stream(blocks[c]) if c in blocks.column_names
+               else None for c in _BLOCK_STREAMS]
+    first, last = first[order], last[order]
+    nd, bmt, bmf = (ints(c)[order] for c in
+                    ("ndocs", "block_max_tf", "block_min_fnid"))
+    out: dict = {}
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        part = [None if st is None else (st[0], st[1][s:e + 1])
+                for st in streams]
+        key = int(seg[s]) if per_segment else None
+        out.setdefault(key, {})[names[oc[s]]] = \
+            TermPostings.from_streams(
+                first[s:e], last[s:e], nd[s:e], *part,
+                block_max_tf=bmt[s:e], block_min_fnid=bmf[s:e])
     return out
 
 
-def _group_arrow_postings(tbl):
-    """Yield (segment_id, {term: TermPostings}) straight from an arrow
-    table — no pandas. The per-group pandas machinery costs ~1 ms per
-    (segment, term) group, which dominates driver-local small-query
-    latency at 64 segments; plain index grouping over the handful of
-    pruned posting rows is ~free."""
-    n = tbl.num_rows
-    if n == 0:
-        return
-    seg = tbl["segment_id"].to_numpy().astype(np.int64)
-    term = tbl["term"].to_pylist()
-    block = tbl["block_id"].to_numpy().astype(np.int64)
-    first = tbl["first_doc"].to_numpy().astype(np.int64)
-    last = tbl["last_doc"].to_numpy().astype(np.int64)
-    nd = tbl["ndocs"].to_numpy().astype(np.int64)
-    bmt = tbl["block_max_tf"].to_numpy().astype(np.int64)
-    bmf = tbl["block_min_fnid"].to_numpy().astype(np.int64)
-    docs = tbl["docs"].to_pylist()
-    tfs = tbl["tfs"].to_pylist()
-    fnids = tbl["fnids"].to_pylist()
-    poss = (tbl["positions"].to_pylist()
-            if "positions" in tbl.column_names else None)
-    groups: dict[int, dict[str, list[int]]] = {}
-    for i in range(n):
-        groups.setdefault(int(seg[i]), {}).setdefault(term[i],
-                                                      []).append(i)
-    for s, terms in groups.items():
-        by_term = {}
-        for t, idx in terms.items():
-            idx = sorted(idx, key=lambda i: block[i])
-            ia = np.asarray(idx, dtype=np.int64)
-            by_term[t] = TermPostings(
-                first[ia], last[ia], nd[ia],
-                [docs[i] for i in idx], [tfs[i] for i in idx],
-                [fnids[i] for i in idx],
-                positions=([poss[i] for i in idx]
-                           if poss is not None else None),
-                block_max_tf=bmt[ia], block_min_fnid=bmf[ia])
-        yield s, by_term
+def _concat_arrow_postings(tbl):
+    """{term: TermPostings} over the whole index as ONE logical segment
+    (None when block ranges interleave). One kernel invocation then
+    prunes across the whole index: the block-max threshold converges
+    once instead of once per segment, removing the per-segment loop AND
+    most block decodes."""
+    groups = _arrow_postings(tbl, per_segment=False)
+    return None if groups is None else groups.get(None, {})
 
 
 #: upper sentinel for prefix range filters — no token contains the max
@@ -903,14 +899,14 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
 
 def _batch_groups(batches):
     """(segment_id, {term: TermPostings}) groups of one mapInArrow
-    partition: ONE arrow table per partition, numpy index grouping, no
-    per-group pandas machinery (at 640 segments the applyInPandas
-    per-group overhead alone cost ~1.5 s per query)."""
+    partition: ONE arrow table per partition, no per-group pandas
+    machinery (at 640 segments the applyInPandas per-group overhead
+    alone cost ~1.5 s per query)."""
     import pyarrow as pa
 
     bl = [b for b in batches if b.num_rows]
     if bl:
-        yield from _group_arrow_postings(pa.Table.from_batches(bl))
+        yield from _arrow_postings(pa.Table.from_batches(bl)).items()
 
 
 def _hit_batch(parts, tag_col: str, with_count: bool):
@@ -2103,7 +2099,7 @@ class IndexReader:
         if neg_terms and ids.size:
             ptbl = self._local_postings(neg_terms, False)
             excl_parts = []
-            for _seg, by_term in _group_arrow_postings(ptbl):
+            for by_term in _arrow_postings(ptbl).values():
                 sub = None
                 for c in negative:
                     grp = None
@@ -2516,7 +2512,7 @@ class IndexReader:
             if by_term_all is not None:
                 groups = [(None, by_term_all)] if by_term_all else []
         if groups is None:
-            groups = _group_arrow_postings(tbl)
+            groups = _arrow_postings(tbl).items()
         n_total = 0  # no ShortCircuit cap on this path: always Exact
         parts = []
         for seg, by_term in groups:

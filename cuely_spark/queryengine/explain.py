@@ -183,7 +183,7 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     value equals the score search()/search_local() would produce for
     this doc at the same dtype, exactly (pinned by tests).
     """
-    from .executor import (Expansion, _group_arrow_postings, _make_specs,
+    from .executor import (Expansion, _arrow_postings, _make_specs,
                            _match_all_score, _range_fns)
     from .kernel import phrase_tf
 
@@ -249,9 +249,7 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
         by_term = {}
         if neg_terms:
             tbl = reader._local_postings(neg_terms, False)
-            by_term = {int(s): bt
-                       for s, bt in _group_arrow_postings(tbl)
-                       }.get(seg, {})
+            by_term = _arrow_postings(tbl).get(seg, {})
         negs = [[by_term.get(t) for t in c.tokens]
                 for c in pq.negative]
         for group in negs:
@@ -286,8 +284,7 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
         raise DoesNotMatch(doc)
     weights, compounds = plan.weights, plan.compounds
     tbl = reader._local_postings(plan.terms, plan.positions)
-    by_term = {int(s): bt
-               for s, bt in _group_arrow_postings(tbl)}.get(seg, {})
+    by_term = _arrow_postings(tbl).get(seg, {})
     specs, negs = _make_specs(pq, weights, by_term, dtype,
                               compounds=compounds)
 

@@ -22,7 +22,11 @@ This is the analog of tantivy's per-segment scorer stack:
 Posting blocks are self-contained (docs delta-varbyte base -1, tfs
 minus-one varbyte, fnids raw u8, positions delta-restart varbyte), so any
 subset of blocks can be decoded independently — that is what makes
-skipping cheap.
+skipping cheap. A :class:`TermPostings` keeps each stream as one values
+buffer plus block offsets (the Arrow column's own buffers when built by
+the executor), so selecting blocks is a gather over byte ranges, and
+both the doc/tf decode and the phrase path's position decode run a
+constant number of numpy calls however many blocks are selected.
 """
 
 from __future__ import annotations
@@ -33,21 +37,72 @@ from ..bm25 import Bm25Weight
 from ..codec import decode_docs, decode_positions, decode_tfs, varbyte_decode
 
 
+def _pack(chunks) -> tuple:
+    """(values, offsets) stream of per-block byte strings: one joined
+    uint8 buffer and nblocks+1 int64 offsets into it."""
+    chunks = list(chunks)
+    off = np.zeros(len(chunks) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, chunks), np.int64, len(chunks)),
+              out=off[1:])
+    return np.frombuffer(b"".join(chunks), dtype=np.uint8), off
+
+
+def _ranges(lo: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Indices of the ranges [lo[i], lo[i] + lens[i]) concatenated —
+    a ragged gather with no per-range Python loop."""
+    return (np.repeat(lo - (np.cumsum(lens) - lens), lens)
+            + np.arange(int(lens.sum()), dtype=np.int64))
+
+
+def _gather(stream: tuple, blocks: np.ndarray) -> np.ndarray:
+    """The byte ranges of `blocks` (in the given order) joined: a view
+    when they are already adjacent in the buffer (all blocks, or any
+    run of consecutive ones), else one ragged gather."""
+    buf, off = stream
+    lo, hi = off[blocks], off[blocks + 1]
+    if (hi[:-1] == lo[1:]).all():
+        return buf[lo[0]:hi[-1]]
+    return buf[_ranges(lo, hi - lo)]
+
+
 class TermPostings:
-    """All posting blocks of one term within one segment."""
+    """All posting blocks of one term within one segment.
+
+    Each block stream (docs, tfs, fnids, positions) is held as one
+    uint8 values buffer plus nblocks+1 offsets — block b is
+    ``values[offsets[b]:offsets[b + 1]]``. The executor's posting
+    builder passes the Arrow column's own values buffer and a slice of
+    its offsets (:meth:`from_streams`, zero-copy); the constructor takes
+    per-block ``bytes`` lists and packs them the same way."""
 
     __slots__ = ("first_doc", "last_doc", "ndocs", "docs", "tfs", "fnids",
                  "positions", "block_max_tf", "block_min_fnid", "_cache")
 
     def __init__(self, first_doc, last_doc, ndocs, docs, tfs, fnids,
                  positions=None, block_max_tf=None, block_min_fnid=None):
+        self._set(first_doc, last_doc, ndocs, _pack(docs), _pack(tfs),
+                  _pack(fnids),
+                  _pack(positions) if positions is not None else None,
+                  block_max_tf, block_min_fnid)
+
+    @classmethod
+    def from_streams(cls, first_doc, last_doc, ndocs, docs, tfs, fnids,
+                     positions=None, block_max_tf=None,
+                     block_min_fnid=None) -> "TermPostings":
+        """Build over (values uint8 array, int64 offsets) streams
+        without copying them."""
+        tp = cls.__new__(cls)
+        tp._set(first_doc, last_doc, ndocs, docs, tfs, fnids, positions,
+                block_max_tf, block_min_fnid)
+        return tp
+
+    def _set(self, first_doc, last_doc, ndocs, docs, tfs, fnids,
+             positions, block_max_tf, block_min_fnid):
         self.first_doc = np.asarray(first_doc, dtype=np.int64)
         self.last_doc = np.asarray(last_doc, dtype=np.int64)
         self.ndocs = np.asarray(ndocs, dtype=np.int64)
-        self.docs = list(docs)
-        self.tfs = list(tfs)
-        self.fnids = list(fnids)
-        self.positions = list(positions) if positions is not None else None
+        self.docs, self.tfs, self.fnids = docs, tfs, fnids
+        self.positions = positions
         self.block_max_tf = (np.asarray(block_max_tf, dtype=np.int64)
                              if block_max_tf is not None else None)
         self.block_min_fnid = (np.asarray(block_min_fnid, dtype=np.int64)
@@ -56,7 +111,7 @@ class TermPostings:
 
     @property
     def nblocks(self) -> int:
-        return len(self.docs)
+        return self.first_doc.size
 
     @property
     def doc_count(self) -> int:
@@ -66,22 +121,24 @@ class TermPostings:
         """-> (docs, tfs, fnids) arrays for block b (cached)."""
         hit = self._cache.get(b)
         if hit is None:
-            docs = decode_docs(self.docs[b])
-            tfs = decode_tfs(self.tfs[b])
-            fnids = np.frombuffer(self.fnids[b], dtype=np.uint8)
-            hit = (docs, tfs, fnids)
+            bl = np.array([b], dtype=np.int64)
+            docs = decode_docs(_gather(self.docs, bl))
+            tfs = decode_tfs(_gather(self.tfs, bl))
+            hit = (docs, tfs, _gather(self.fnids, bl))
             self._cache[b] = hit
         return hit
 
     def decode_blocks(self, blocks: np.ndarray):
         """Concatenated (docs, tfs, fnids, block_of_each_doc).
 
-        Batch path: the selected blocks' byte streams are joined and
-        decoded in ONE varbyte pass each (docs, tfs), with per-block
-        doc values recovered by a segmented cumsum (each block's first
-        gap is absolute, base -1) — constant numpy-call count instead
-        of ~40 tiny-array calls per block, which dominated wide-term
-        queries (thousands of blocks per segment)."""
+        Batch path: the selected blocks' byte ranges are gathered from
+        each stream's values buffer (a plain view when they are
+        adjacent) and decoded in ONE varbyte pass each (docs, tfs),
+        with per-block doc values recovered by a segmented cumsum (each
+        block's first gap is absolute, base -1) — a constant numpy-call
+        count instead of ~40 tiny-array calls per block, which
+        dominated wide-term queries (thousands of blocks per
+        segment)."""
         bl = np.asarray(blocks, dtype=np.int64)
         if bl.size == 0:
             z = np.empty(0, dtype=np.int64)
@@ -90,21 +147,17 @@ class TermPostings:
             b = int(bl[0])
             docs, tfs, fnids = self.decode_block(b)
             return docs, tfs, fnids, np.full(docs.size, b, dtype=np.int64)
-        idx = bl.tolist()
         counts = self.ndocs[bl]
         starts = np.zeros(counts.size, dtype=np.int64)
         np.cumsum(counts[:-1], out=starts[1:])
-        gaps = varbyte_decode(
-            b"".join([self.docs[b] for b in idx])).astype(np.int64)
+        gaps = varbyte_decode(_gather(self.docs, bl)).astype(np.int64)
         cs = np.cumsum(gaps)
         # within-block cumsum = global cumsum minus the sum before the
         # block; first gap encodes doc+1 (base -1), hence the -1
         docs = cs - np.repeat(cs[starts] - gaps[starts], counts) - 1
-        tfs = (varbyte_decode(
-            b"".join([self.tfs[b] for b in idx])) + np.uint64(1)
-        ).astype(np.int64)
-        fnids = np.frombuffer(b"".join([self.fnids[b] for b in idx]),
-                              dtype=np.uint8)
+        tfs = (varbyte_decode(_gather(self.tfs, bl)) + np.uint64(1)
+               ).astype(np.int64)
+        fnids = _gather(self.fnids, bl)
         owner = np.repeat(bl, counts)
         return docs, tfs, fnids, owner
 
@@ -141,46 +194,38 @@ class TermPostings:
     def positions_flat(self, cand_docs: np.ndarray):
         """(flat positions, per-candidate counts) for candidate docs.
 
-        cand_docs must be sorted and present in this posting list. The
-        flat array is each candidate's ascending position list
-        concatenated in candidate order — one ragged gather, no
-        per-candidate Python loop."""
+        cand_docs must be sorted. A candidate missing from this posting
+        list — phrase-prefix expansions and optic pattern matchers probe
+        candidates built from other terms — gets count 0 and adds no
+        positions. The flat array is each present candidate's ascending
+        position list concatenated in candidate order.
+
+        One pass, no Python loop over blocks or candidates: the
+        overlapping blocks' docs and tfs come from ONE
+        :meth:`decode_blocks` call, their positions bytes are joined
+        and decoded by ONE ``decode_positions`` call (each doc's list
+        restarts the delta chain, so block boundaries need no care),
+        and one ragged gather keeps the candidates' lists."""
         assert self.positions is not None, "index built without positions"
-        blocks = self.blocks_overlapping(cand_docs)
-        flat_parts: list[np.ndarray] = []
-        doc_parts: list[np.ndarray] = []
-        cnt_parts: list[np.ndarray] = []
-        for b in blocks:
-            docs, tfs, _ = self.decode_block(int(b))
-            poss = decode_positions(self.positions[int(b)], tfs)
-            ends = np.cumsum(tfs)
-            starts = ends - tfs
-            # membership via searchsorted (cand_docs sorted): np.isin
-            # would re-sort the candidate array once per block
-            ins = np.searchsorted(cand_docs, docs)
-            ok = ins < cand_docs.size
-            ok[ok] = cand_docs[ins[ok]] == docs[ok]
-            sel = np.flatnonzero(ok)
-            if sel.size == 0:
-                continue
-            stf = tfs[sel]
-            # ragged gather: out[i] spans starts[sel[i]] .. +stf[i]
-            total = int(stf.sum())
-            base = np.repeat(starts[sel], stf)
-            local = (np.arange(total, dtype=np.int64)
-                     - np.repeat(np.cumsum(stf) - stf, stf))
-            flat_parts.append(poss[base + local])
-            doc_parts.append(docs[sel])
-            cnt_parts.append(stf)
         counts = np.zeros(cand_docs.size, dtype=np.int64)
-        if not flat_parts:
+        blocks = self.blocks_overlapping(cand_docs)
+        if blocks.size == 0:
             return np.empty(0, dtype=np.int64), counts
-        sel_docs = np.concatenate(doc_parts)
-        idx = np.searchsorted(cand_docs, sel_docs)
-        counts[idx] = np.concatenate(cnt_parts)
-        # blocks are doc-ordered and non-overlapping, so concatenation
-        # is already in candidate order
-        return np.concatenate(flat_parts), counts
+        docs, tfs, _, _ = self.decode_blocks(blocks)
+        poss = decode_positions(_gather(self.positions, blocks), tfs)
+        # membership via searchsorted (cand_docs sorted)
+        ins = np.searchsorted(cand_docs, docs)
+        ok = ins < cand_docs.size
+        ok[ok] = cand_docs[ins[ok]] == docs[ok]
+        sel = np.flatnonzero(ok)
+        if sel.size == 0:
+            return np.empty(0, dtype=np.int64), counts
+        stf = tfs[sel]
+        counts[ins[sel]] = stf
+        if sel.size == docs.size:
+            return poss, counts
+        starts = np.cumsum(tfs) - tfs
+        return poss[_ranges(starts[sel], stf)], counts
 
 
 def _merge_topk(docs, scores, k):

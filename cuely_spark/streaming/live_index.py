@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
-from ..indexer.build import (IndexPaths, posting_rg_bytes, segment_kernel,
+from ..indexer.build import (TERM_STATS_RG_BYTES, IndexPaths,
+                             posting_rg_bytes, segment_kernel,
                              segment_offsets)
 from ..indexer.segment import INDEX_ROW_SCHEMA
 
@@ -53,7 +54,9 @@ def refresh_stats(spark: SparkSession, root: str,
     (tseg.groupBy("term")
      .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
      .repartitionByRange(nparts, "term").sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(paths.term_stats))
+     .write.mode("overwrite")
+     .option("parquet.block.size", TERM_STATS_RG_BYTES)
+     .parquet(paths.term_stats))
     g = spark.read.option("basePath", paths.index).parquet(
         os.path.join(paths.index, "kind=g"))
     agg = g.agg(F.sum("num_docs").alias("nd"),
@@ -231,7 +234,9 @@ class LiveIndexWriter:
         (new_t.groupBy("term")
          .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
          .repartitionByRange(nparts, "term").sortWithinPartitions("term")
-         .write.mode("overwrite").parquet(paths.term_stats))
+         .write.mode("overwrite")
+         .option("parquet.block.size", TERM_STATS_RG_BYTES)
+         .parquet(paths.term_stats))
         g = spark.read.option("basePath", paths.index).parquet(
             *[os.path.join(paths.index, "kind=g", f"segment_id={s}")
               for s in batch_segs])

@@ -51,6 +51,38 @@ def test_posting_files_have_multiple_row_groups(multirg_reader):
     assert max(pq.read_metadata(f).num_row_groups for f in files) > 1
 
 
+def test_term_stats_small_row_groups_and_term_dfs(multirg_reader):
+    """term_stats is written in small row groups, so a term_dfs lookup
+    decodes a few hundred terms instead of a whole file; the pruned
+    lookup equals a lookup in the full table for present, absent and
+    non-ASCII terms, including each file's first and last term."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(
+        multirg_reader._term_stats_path, "**", "*.parquet"),
+        recursive=True))
+    assert files
+    assert min(pq.read_metadata(f).num_row_groups for f in files) > 1
+    full = {}
+    edges = []
+    for f in files:
+        t = pq.read_table(f, columns=["term", "df"])
+        terms = t["term"].to_pylist()
+        full.update(zip(terms, t["df"].to_pylist()))
+        edges += [terms[0], terms[-1]]
+    non_ascii = [t for t in sorted(full) if not t.isascii()]
+    assert non_ascii
+    present = (sorted(full)[::97] + edges + non_ascii[:20]
+               + ["test", "the"])
+    absent = ["xylophonequarks", "cafè", "中文", "ダダ", "", "a" * 60]
+    assert not any(t in full for t in absent)
+    got = multirg_reader.term_dfs(present + absent)
+    assert got == {t: full.get(t, 0) for t in present + absent}
+    assert all(got[t] > 0 for t in present)
+
+
 def _row_key(t):
     return sorted(zip(t["segment_id"].to_pylist(),
                       t["term"].to_pylist(),

@@ -4,7 +4,9 @@ Each optimization that changed an operator's internals this round gets
 a direct equivalence test here (beyond the e2e suites that also cover
 them): batch block decode vs per-block decode, the varbyte fast path vs
 the generic encoder, and the Arrow tokenize/factorize vs the object
-path. All pure-Python — no Spark session needed.
+path; since then also the one-pass position decode vs the per-block
+one and the Arrow-buffer posting builder vs per-block bytes lists. All
+pure-Python — no Spark session needed.
 """
 
 import numpy as np
@@ -162,3 +164,228 @@ def test_composite_sort_matches_lexsort():
     # the sorted key tuples instead of raw indices to be exact)
     trip = lambda o: list(zip(codes[o], docs[o], pos[o]))  # noqa: E731
     assert trip(got) == trip(exp)
+
+
+# ---- one-pass positions decode and the one posting builder ----------
+
+def _ref_positions_flat(tp, cand_docs):
+    """Per-block positions_flat as it was before the one-pass decode:
+    decode_block + decode_positions per overlapping block."""
+    from cuely_spark.codec import decode_positions
+
+    buf, off = tp.positions
+    flat_parts, doc_parts, cnt_parts = [], [], []
+    for b in tp.blocks_overlapping(cand_docs):
+        docs, tfs, _ = tp.decode_block(int(b))
+        poss = decode_positions(buf[off[b]:off[b + 1]], tfs)
+        ends = np.cumsum(tfs)
+        starts = ends - tfs
+        ins = np.searchsorted(cand_docs, docs)
+        ok = ins < cand_docs.size
+        ok[ok] = cand_docs[ins[ok]] == docs[ok]
+        sel = np.flatnonzero(ok)
+        if sel.size == 0:
+            continue
+        stf = tfs[sel]
+        total = int(stf.sum())
+        base = np.repeat(starts[sel], stf)
+        local = (np.arange(total, dtype=np.int64)
+                 - np.repeat(np.cumsum(stf) - stf, stf))
+        flat_parts.append(poss[base + local])
+        doc_parts.append(docs[sel])
+        cnt_parts.append(stf)
+    counts = np.zeros(cand_docs.size, dtype=np.int64)
+    if not flat_parts:
+        return np.empty(0, dtype=np.int64), counts
+    counts[np.searchsorted(cand_docs, np.concatenate(doc_parts))] = \
+        np.concatenate(cnt_parts)
+    return np.concatenate(flat_parts), counts
+
+
+def _ref_class():
+    from cuely_spark.queryengine.kernel import TermPostings
+
+    class RefPostings(TermPostings):
+        positions_flat = _ref_positions_flat
+
+    return RefPostings
+
+
+def _random_positional(rng, nblocks=23, block=128):
+    """(bytes-list TermPostings, per-block reference class copy) with
+    random docs, tfs and ascending positions."""
+    from cuely_spark.codec import encode_docs, encode_positions, encode_tfs
+    from cuely_spark.queryengine.kernel import TermPostings
+
+    cols = [[] for _ in range(7)]
+    doc = -1
+    for b in range(nblocks):
+        n = int(rng.integers(1, block + 1)) if b == nblocks - 1 else block
+        ds = doc + np.cumsum(rng.integers(1, 40, size=n))
+        doc = int(ds[-1])
+        tfs = rng.integers(1, 9, size=n).astype(np.int64)
+        pos = np.concatenate([np.sort(rng.choice(300, size=t,
+                                                 replace=False))
+                              for t in tfs])
+        for c, v in zip(cols, (int(ds[0]), int(ds[-1]), n,
+                               encode_docs(ds), encode_tfs(tfs),
+                               bytes(n), encode_positions(pos, tfs))):
+            c.append(v)
+    args = cols[:6]
+    kw = {"positions": cols[6]}
+    return TermPostings(*args, **kw), _ref_class()(*args, **kw)
+
+
+def test_positions_flat_one_pass_equals_per_block():
+    """Every candidate shape: all docs, random subsets, one block's
+    docs, candidates absent from the list (count 0), candidates past
+    the last block or between blocks, and empty postings."""
+    from cuely_spark.queryengine.kernel import TermPostings
+
+    rng = np.random.default_rng(17)
+    tp, ref = _random_positional(rng)
+    all_docs = tp.decode_blocks(np.arange(tp.nblocks))[0]
+    block3 = tp.decode_block(3)[0]
+    absent = np.setdiff1d(np.arange(all_docs[-1] + 1), all_docs)
+    gap_lo = int(tp.last_doc[5]) + 1  # between blocks 5 and 6
+    cands = [all_docs,
+             np.sort(rng.choice(all_docs, size=50, replace=False)),
+             np.sort(rng.choice(all_docs, size=700, replace=False)),
+             block3, block3[:1], all_docs[-1:],
+             np.sort(rng.choice(absent, size=40, replace=False)),
+             np.union1d(rng.choice(all_docs, size=30),
+                        rng.choice(absent, size=30)),
+             np.arange(all_docs[-1] + 1, all_docs[-1] + 50),
+             np.arange(gap_lo, int(tp.first_doc[6])),
+             np.empty(0, dtype=np.int64)]
+    for cand in cands:
+        cand = np.asarray(cand, dtype=np.int64)
+        got = tp.positions_flat(cand)
+        exp = ref.positions_flat(cand)
+        np.testing.assert_array_equal(got[0], exp[0])
+        np.testing.assert_array_equal(got[1], exp[1])
+    empty = TermPostings([], [], [], [], [], [], positions=[])
+    flat, counts = empty.positions_flat(all_docs[:5])
+    assert flat.size == 0 and counts.tolist() == [0] * 5
+
+
+def _corpus_rows(seed=5, n=3000, segments=2):
+    """Posting rows of a small-vocabulary corpus built by the real
+    segment builder, split into doc-disjoint segments."""
+    import pandas as pd
+
+    from cuely_spark.indexer.segment import build_segment_rows
+
+    rng = np.random.default_rng(seed)
+    vocab = ["alpha", "beta", "gamma", "delta", "café", "eps"]
+    texts = [" ".join(rng.choice(vocab, size=int(rng.integers(2, 14))))
+             for _ in range(n)]
+    per = n // segments
+    parts = []
+    for s in range(segments):
+        ids = np.arange(s * per, (s + 1) * per, dtype=np.int64)
+        rows = build_segment_rows(ids, texts[s * per:(s + 1) * per],
+                                  segment_id=s)
+        parts.append(rows[rows["kind"] == "p"])
+    return pd.concat(parts, ignore_index=True)
+
+
+def _tp_from_rows(rows, cls=None):
+    from cuely_spark.queryengine.kernel import TermPostings
+
+    g = rows.sort_values(["segment_id", "block_id"])
+    return (cls or TermPostings)(
+        g["first_doc"].to_numpy(), g["last_doc"].to_numpy(),
+        g["ndocs"].to_numpy(), list(g["docs"]), list(g["tfs"]),
+        list(g["fnids"]), positions=list(g["positions"]),
+        block_max_tf=g["block_max_tf"].to_numpy(),
+        block_min_fnid=g["block_min_fnid"].to_numpy())
+
+
+def test_phrase_and_pattern_on_one_pass_decode_equal_per_block():
+    """phrase_tf at slop 0 and 2 and pattern_mask give the same counts
+    and masks over the one-pass decode as over the per-block one."""
+    from cuely_spark.queryengine.kernel import (intersect_units,
+                                                pattern_mask, phrase_tf)
+
+    rows = _corpus_rows()
+    terms = ["alpha", "beta", "cafe"]
+    new = [_tp_from_rows(rows[rows["term"] == t]) for t in terms]
+    ref = [_tp_from_rows(rows[rows["term"] == t], _ref_class())
+           for t in terms]
+    cand = intersect_units([("one", tp) for tp in new])
+    every = np.arange(int(rows["last_doc"].max()) + 1, dtype=np.int64)
+    assert cand.size > 100
+    for slop in (0, 2):
+        got = phrase_tf(new, cand, slop)
+        assert got.any()
+        np.testing.assert_array_equal(got, phrase_tf(ref, cand, slop))
+    # pattern matchers probe candidates missing from some terms
+    for c in (cand, every):
+        got = pattern_mask(new, c, [1, 3], True, False)
+        np.testing.assert_array_equal(
+            got, pattern_mask(ref, c, [1, 3], True, False))
+    assert pattern_mask(new, every, [2, 2], False, False).any()
+
+
+def _blocks_of(stream):
+    buf, off = stream
+    return [bytes(buf[off[i]:off[i + 1]]) for i in range(off.size - 1)]
+
+
+def _assert_same_postings(a, b):
+    for attr in ("first_doc", "last_doc", "ndocs", "block_max_tf",
+                 "block_min_fnid"):
+        np.testing.assert_array_equal(getattr(a, attr), getattr(b, attr))
+    for attr in ("docs", "tfs", "fnids", "positions"):
+        assert _blocks_of(getattr(a, attr)) == _blocks_of(getattr(b, attr))
+    everything = np.arange(a.nblocks)
+    for x, y in zip(a.decode_blocks(everything),
+                    b.decode_blocks(everything)):
+        np.testing.assert_array_equal(x, y)
+
+
+@pytest.mark.parametrize("binary", ["binary", "large_binary"])
+def test_posting_builder_layouts_agree(binary):
+    """The Arrow-buffer builder gives the same TermPostings as bytes
+    lists, for binary and large_binary columns, whole-index and
+    per-segment, whatever the input row order and chunking."""
+    import pyarrow as pa
+
+    from cuely_spark.queryengine.executor import (_POSTING_COLS,
+                                                  _arrow_postings,
+                                                  _concat_arrow_postings)
+
+    rows = _corpus_rows()
+    cols = _POSTING_COLS + ["positions"]
+    shuffled = rows.sample(frac=1.0, random_state=3)[cols]
+    tbl = pa.Table.from_pandas(shuffled, preserve_index=False)
+    if binary == "large_binary":
+        tbl = tbl.cast(pa.schema([
+            pa.field(f.name, pa.large_binary()) if f.type == pa.binary()
+            else f for f in tbl.schema]))
+    # several chunks, like the batches of one mapInArrow partition
+    tbl = pa.Table.from_batches(tbl.to_batches(max_chunksize=7))
+    per_seg = _arrow_postings(tbl)
+    assert sorted(per_seg) == [0, 1]
+    for seg, by_term in per_seg.items():
+        seg_rows = rows[rows["segment_id"] == seg]
+        assert sorted(by_term) == sorted(seg_rows["term"].unique())
+        for term, tp in by_term.items():
+            _assert_same_postings(
+                tp, _tp_from_rows(seg_rows[seg_rows["term"] == term]))
+    whole = _concat_arrow_postings(tbl)
+    assert sorted(whole) == sorted(rows["term"].unique())
+    for term, tp in whole.items():
+        _assert_same_postings(tp, _tp_from_rows(rows[rows["term"] == term]))
+        # the whole-index list equals its per-segment lists joined
+        np.testing.assert_array_equal(
+            tp.positions_flat(tp.decode_blocks(np.arange(tp.nblocks))[0])[0],
+            np.concatenate([
+                s[term].positions_flat(
+                    s[term].decode_blocks(np.arange(s[term].nblocks))[0])[0]
+                for s in per_seg.values()]))
+    # no positions column read -> no positions stream
+    no_pos = _arrow_postings(tbl.drop_columns(["positions"]))
+    assert all(tp.positions is None for by_term in no_pos.values()
+               for tp in by_term.values())
