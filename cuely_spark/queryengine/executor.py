@@ -27,7 +27,9 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    :func:`_arrow_postings` (zero-copy views of the Arrow buffers, no
    Python object per row); the kernel decodes selected blocks in a
    constant number of numpy calls. The shuffle moves only the query's
-   posting rows (KBs), never the corpus.
+   posting rows (KBs), never the corpus. The driver-local path
+   (`IndexReader.search_local`) makes the same kernel call once, over
+   the whole index as one logical segment.
 5. global merge: orderBy(score desc, doc_id asc).limit(k) over the tiny
    union of per-segment top-ks (reference: collector/top_docs.rs merge).
 """
@@ -137,6 +139,12 @@ class _PrunedTable:
         if self._files[0][1] is not None:
             self.schema = self.schema.append(
                 pa.field("segment_id", pa.int64()))
+
+    @property
+    def segments(self) -> list[int]:
+        """The segment_id partitions that hold this table's files."""
+        return sorted({seg for _, seg, _, _ in self._files
+                       if seg is not None})
 
     def close(self) -> None:
         """Close the open handles; later reads reopen files per read."""
@@ -266,14 +274,17 @@ class Expansion(list):
     matches; the query token itself is not an implicit extra member)."""
 
 
-def _make_specs(pq: ParsedQuery, weights: dict, by_term: dict, dtype,
-                compounds: dict | None = None):
-    """(clause_specs, mustnot_groups) for one segment's TermPostings.
+def _make_specs(pq: ParsedQuery, weights: dict, by_term: dict,
+                compounds: dict | None = None, neg_groups=()):
+    """(clause_specs, mustnot_groups) for one posting group's
+    TermPostings.
 
     `compounds`: pq.clauses-index -> compound alternative terms; a term
     clause with alternatives becomes an ("or", [(tp, w), ...], None)
     group — (term OR b:compound OR ...) per the reference's compound
-    augmentation plan shape."""
+    augmentation plan shape. `neg_groups`: the plan's MustNot groups
+    as dictionary keys (:attr:`QueryPlan.neg_groups`); a doc is
+    excluded when it holds every key of some group."""
     empty_tp = TermPostings([], [], [], [], [], [])
     pos_idx = [i for i, c in enumerate(pq.clauses) if c.kind != "not"]
 
@@ -332,8 +343,7 @@ def _make_specs(pq: ParsedQuery, weights: dict, by_term: dict, dtype,
             specs.append(("phrase", tps,
                           _bw(weights[("phrase", c.tokens, c.slop,
                                        False)], c)))
-    negs = [[by_term.get(t, empty_tp) for t in c.tokens]
-            for c in pq.negative]
+    negs = [[by_term.get(t, empty_tp) for t in g] for g in neg_groups]
     return specs, negs
 
 
@@ -369,12 +379,13 @@ def _arrow_postings(tbl, per_segment: bool = True):
     views; :meth:`TermPostings.from_streams`).
 
     Whole-index mode treats the index as ONE logical segment. It is
-    sound because stage A gives every segment a disjoint docID range
-    (doc_id = offset[segment] + ordinal), so a term's blocks from all
-    segments are doc-ordered and non-overlapping exactly like blocks
-    within one segment; that is checked per term, and None is returned
-    (the caller falls back to per-segment groups) if ranges
-    interleave."""
+    sound because every writer gives each segment a disjoint docID
+    range (stage A: doc_id = offset[segment] + ordinal; merges keep
+    contiguous source groups; live batches take fresh id ranges), so
+    a term's blocks from all segments are doc-ordered and
+    non-overlapping exactly like blocks within one segment. That is
+    checked per term: interleaved ranges mean invalid index data and
+    raise ValueError naming the term."""
     n = tbl.num_rows
     if n == 0:
         return {}
@@ -398,8 +409,11 @@ def _arrow_postings(tbl, per_segment: bool = True):
         # disjointness: within a term group, each block starts after
         # the previous block ends
         of, ol = first[order], last[order]
-        if np.any(~brk & ~(of > np.r_[np.int64(-1), ol[:-1]])):
-            return None
+        bad = np.flatnonzero(~brk & ~(of > np.r_[np.int64(-1), ol[:-1]]))
+        if bad.size:
+            raise ValueError(
+                f"posting blocks of term {names[oc[bad[0]]]!r} overlap "
+                "across segments: segment doc-id ranges must be disjoint")
     starts = np.flatnonzero(brk)
     ends = np.r_[starts[1:], n]
     blocks = tbl.select([c for c in _BLOCK_STREAMS
@@ -422,13 +436,12 @@ def _arrow_postings(tbl, per_segment: bool = True):
 
 
 def _concat_arrow_postings(tbl):
-    """{term: TermPostings} over the whole index as ONE logical segment
-    (None when block ranges interleave). One kernel invocation then
+    """{term: TermPostings} over the whole index as ONE logical segment,
+    the driver-local read's only grouping. One kernel invocation then
     prunes across the whole index: the block-max threshold converges
     once instead of once per segment, removing the per-segment loop AND
     most block decodes."""
-    groups = _arrow_postings(tbl, per_segment=False)
-    return None if groups is None else groups.get(None, {})
+    return _arrow_postings(tbl, per_segment=False).get(None, {})
 
 
 #: upper sentinel for prefix range filters — no token contains the max
@@ -728,20 +741,21 @@ def _matcher_spec(m, by_term, empty_tp, doclen_fn=None):
                     for x in v])
 
 
-def _doclen_lookup(index_path: str, seg: int):
-    """cand -> doclen int64 array (-1 = unknown) via an executor-local
-    pyarrow read of one segment's kind='d' doc stats — the reference's
-    num_tokens columnfield analog (pattern_query/scorer.rs:320-333
-    reads it for end-anchor checks). Partition-pruned columnar scan of
-    ~rows_per_segment rows, read once per (segment, query) task."""
+def _doclen_lookup(index_path: str, seg: int | None):
+    """cand -> doclen int64 array (-1 = unknown) via a pyarrow read of
+    the kind='d' doc stats of segment `seg` (every segment when None)
+    — the reference's num_tokens columnfield analog
+    (pattern_query/scorer.rs:320-333 reads it for end-anchor checks).
+    Partition-pruned columnar scan, read once per (group, query)."""
     cache: dict = {}
 
     def fn(cand):
         if "v" not in cache:
             import pyarrow.dataset as ds
 
-            p = os.path.join(index_path, "index", "kind=d",
-                             f"segment_id={seg}")
+            p = os.path.join(index_path, "index", "kind=d")
+            if seg is not None:
+                p = os.path.join(p, f"segment_id={seg}")
             tbl = ds.dataset(p, format="parquet").to_table(
                 columns=["doc_id", "doclen"])
             ids = np.asarray(tbl["doc_id"].to_numpy(), dtype=np.int64)
@@ -779,10 +793,10 @@ class QueryPlan:
     const_score: float | None = None
     range_specs: list = field(default_factory=list)
     exists_specs: list = field(default_factory=list)
-    #: (turns_path, seg_sources, offsets) when range/exists filters
-    #: need per-segment row-store lookups
+    #: (turns_path, seg_sources, offsets, row-store segment dirs) when
+    #: range/exists filters need row-store lookups (:func:`_range_fns`)
     rng_ctx: tuple | None = None
-    #: index root when optic end anchors need per-segment doclens
+    #: index root when optic end anchors need doclens
     index_path: str | None = None
     boost_rules: list = field(default_factory=list)
     discard_matchers: list = field(default_factory=list)
@@ -791,8 +805,12 @@ class QueryPlan:
     #: Expansion members); c_terms lists every alternative
     compounds: dict = field(default_factory=dict)
     c_terms: list = field(default_factory=list)
-    #: field -> tf coefficient for a batch BM25F query (search_many)
+    #: field -> tf coefficient for a BM25F query
     bm25f: dict | None = None
+    #: MustNot groups as dictionary keys: a doc is excluded when it
+    #: holds every key of some group (under BM25F a negated text token
+    #: expands to one group per field combination)
+    neg_groups: list = field(default_factory=list)
     terms: list = field(default_factory=list)  # posting term list
     positions: bool = False  # read the positions column
     dfs: dict = field(default_factory=dict)
@@ -804,6 +822,16 @@ class QueryPlan:
     @property
     def union(self) -> bool:
         return self.occur in ("should", "dismax")
+
+    @property
+    def stat_terms(self) -> list:
+        """Every dictionary key whose df the plan reads: the posting
+        terms plus, under BM25F, the union-of-fields keys ("u:" + term)
+        that give each term its IDF."""
+        if self.bm25f is None:
+            return self.terms
+        return self.terms + ["u:" + c.tokens[0] for c in self.pq.positive
+                             if c.kind == "term"]
 
 
 def _match_all_score(plan: QueryPlan) -> float:
@@ -821,11 +849,15 @@ def _est_blocks(dfs) -> int:
 
 
 def _range_fns(plan: QueryPlan, seg):
-    """The kernel's range_fns for one segment (None without filters)."""
+    """The kernel's range_fns for one segment, or for every segment
+    when `seg` is None (None without filters)."""
     if plan.rng_ctx is None:
         return None
-    troot, ssrc, offs = plan.rng_ctx
-    dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
+    troot, ssrc, offs, every = plan.rng_ctx
+    if seg is None:
+        dirs = every
+    else:
+        dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
     return [_range_lookup(troot, dirs, plan.range_specs, offs,
                           exists_specs=plan.exists_specs)]
 
@@ -847,18 +879,19 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
                 with_count: bool = False, max_docs: int | None = None,
                 seg_docs: dict | None = None):
     """Evaluate one planned query over one posting group ({term:
-    TermPostings} of a segment, or of the whole index as one logical
-    segment) -> (docs, scores, n, capped); n is the hit count when
-    `with_count` (else 0). The one kernel call shared by the local and
-    distributed executors and by search_many.
+    TermPostings} of segment `seg`, or of the whole index as one
+    logical segment when `seg` is None) -> (docs, scores, n, capped),
+    the top-k in (score desc, doc_id asc) order; n is the hit count
+    when `with_count` (else 0). The one kernel call shared by the
+    local and distributed executors and by search_many.
 
     A segment truncated by `max_docs` (ShortCircuit) reports
     max(matches seen, term-independence estimate) and flags itself
     capped — ApproxCount harvest semantics
     (collector/approx_count.rs:162-181)."""
     dtype = plan.dtype
-    specs, negs = _make_specs(plan.pq, plan.weights, by_term, dtype,
-                              compounds=plan.compounds)
+    specs, negs = _make_specs(plan.pq, plan.weights, by_term,
+                              plan.compounds, plan.neg_groups)
     if plan.union:
         term_specs = [(tp, w) for _kind, tp, w in specs]
         docs, scores = union_topk(
@@ -881,8 +914,7 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
            else [matcher(m) for m in plan.require_matchers])
     res = segment_topk(
         specs, negs, k, dtype=dtype, max_docs=max_docs,
-        should_specs=(_make_specs(plan.spq, plan.weights, by_term,
-                                  dtype)[0]
+        should_specs=(_make_specs(plan.spq, plan.weights, by_term)[0]
                       if plan.spq is not None else None),
         boost_specs=[(f, matcher(m)) for f, m in plan.boost_rules] or None,
         require_any=req, range_fns=_range_fns(plan, seg),
@@ -1645,7 +1677,7 @@ class IndexReader:
         plan = self._plan_terms(query, **opts)
         if plan.match_all:
             return plan
-        return self._plan_stats(plan, self.term_dfs(plan.terms))
+        return self._plan_stats(plan, self.term_dfs(plan.stat_terms))
 
     def _plan_terms(self, query, *, dtype=np.float32, occur: str = "must",
                     should=None, compound_terms: bool | None = None,
@@ -1658,8 +1690,8 @@ class IndexReader:
         options, compile optic rules, expand alternatives and collect
         the posting term list. search_many runs this per query, then
         ONE term_dfs over the union, then :meth:`_plan_stats`.
-        bm25f (search_many only): field -> tf coefficient overrides for
-        a batch BM25F query."""
+        bm25f: field -> tf coefficient overrides for a BM25F query
+        (search_bm25f, batch bm25f specs)."""
         pq = self._parse(query)
         plan = QueryPlan(pq, dtype=dtype, occur=occur,
                          tie_breaker=tie_breaker, const_score=const_score)
@@ -1709,45 +1741,55 @@ class IndexReader:
                 plan.range_specs
                 + [(col,) for col, _ in plan.exists_specs])
             plan.rng_ctx = (self._turns_path, self._seg_sources(),
-                            self._offsets)
+                            self._offsets, self._turns_table.segments)
+        plan.neg_groups = [list(c.tokens) for c in pq.negative]
+        if bm25f is not None:
+            (plan.compounds, plan.c_terms, plan.bm25f,
+             plan.neg_groups) = self._bm25f_alternatives(pq, plan.spq,
+                                                         bm25f)
         if not any(c.kind in ("term", "phrase", "filter", "termset")
                    for c in pq.positive):
             # no posting-backed membership clause: pure match-all
             # (`* n_chars:>100`, `* -tool:*`, ...) — row-store path
             plan.match_all = True
             return plan
-        if bm25f is not None:
-            plan.compounds, plan.c_terms, plan.bm25f = \
-                self._bm25f_alternatives(pq, plan.spq, bm25f)
-        else:
+        if bm25f is None:
             plan.compounds, plan.c_terms = self._plan_alternatives(
                 pq, compound_terms, stemmed, occur, lang=lang,
                 fuzzy_transpositions=fuzzy_transpositions)
         qs = [pq] + ([plan.spq] if plan.spq is not None else [])
         plan.terms = list(dict.fromkeys(
             [t for q in qs for t in q.all_terms()] + plan.c_terms
-            + rule_terms))
+            + rule_terms + [t for g in plan.neg_groups for t in g]))
         plan.positions = plan.positions or any(
             c.kind == "phrase" for q in qs for c in q.positive)
         return plan
 
     def _bm25f_alternatives(self, pq: ParsedQuery, spq, coeffs: dict):
-        """Batch BM25F plan shape: each simple term becomes an or-group
-        with one member per scored field (the primary field's member is
-        the term itself) -> (compounds, c_terms, field -> coefficient).
-        Simple positive terms + filters only — search_bm25f covers the
-        other edges."""
+        """BM25F plan shape (search_bm25f and batch bm25f specs): each
+        simple term becomes an or-group with one member per scored
+        field (the primary field's member is the term itself), and a
+        negated text token matches in any field, so each MustNot group
+        expands to its cross-field key combinations -> (compounds,
+        c_terms, field -> coefficient, neg_groups). Simple terms,
+        attribute filters and negations only."""
+        import itertools
+
         extra = list(self.stats.get("field_cols") or [])
         if not extra:
-            raise ValueError("index has no field_cols; bm25f specs need "
-                             "a multi-field index")
-        if spq is not None or pq.negative or any(
-                c.kind in ("phrase", "range", "exists", "termset", "all")
-                or c.field for c in pq.clauses):
+            raise ValueError("index was built without field_cols; BM25F "
+                             "needs a multi-field index")
+        if any(c.field for c in pq.clauses):
             raise ValueError(
-                "batch bm25f specs take simple positive terms + filters "
-                "only (no field-scoped terms: BM25F already scores every "
-                "term across all fields)")
+                "field-scoped terms (`title:term`) are a search() "
+                "feature; BM25F already scores every term across all "
+                "fields — use field_coeffs to weight a field")
+        if spq is not None or any(c.kind not in ("term", "filter")
+                                  for c in pq.positive):
+            raise ValueError(
+                "BM25F scores simple terms only: positive terms, "
+                "attribute filters and negations (no phrases, ranges, "
+                "match-all, term sets or should clauses)")
         compounds = {i: [f"f:{g}:{c.tokens[0]}" for g in extra]
                      for i, c in enumerate(pq.clauses) if c.kind == "term"}
         cmap = {f: 1.0 for f in [self.stats.get("text_col", "text")]
@@ -1757,8 +1799,13 @@ class IndexReader:
                 raise ValueError(
                     f"unknown field {fname!r}; index has {list(cmap)}")
             cmap[fname] = float(v)
+        neg_groups = [
+            list(combo) for c in pq.negative
+            for combo in itertools.product(*[
+                [t] if ":" in t else [t] + [f"f:{g}:{t}" for g in extra]
+                for t in c.tokens])]
         return (compounds, [t for a in compounds.values() for t in a],
-                cmap)
+                cmap, neg_groups)
 
     def _plan_stats(self, plan: QueryPlan, dfs: dict) -> QueryPlan:
         """Planning step 2, from global dfs covering plan.terms: prune
@@ -2001,13 +2048,12 @@ class IndexReader:
             cand = (cand.join(F.broadcast(m), "segment_id")
                     .drop("segment_id")
                     .withColumnRenamed("__kseg", "segment_id"))
-        negative = plan.pq.negative
-        neg_terms = [t for c in negative for t in c.tokens]
+        neg_terms = [t for g in plan.neg_groups for t in g]
         if neg_terms:
             docs = self._term_docs_df(neg_terms)
-            for c in negative:
+            for g in plan.neg_groups:
                 grp = None
-                for t in c.tokens:
+                for t in g:
                     dt = (docs.filter(F.col("term") == t)
                           .select("doc_id"))
                     grp = dt if grp is None else grp.join(dt, "doc_id")
@@ -2094,34 +2140,18 @@ class IndexReader:
                   else ["__ord", "segment_id"])
         ids = _row_doc_ids(dset.to_table(columns=idcols, filter=flt),
                            self._offsets)
-        negative = plan.pq.negative
-        neg_terms = [t for c in negative for t in c.tokens]
-        if neg_terms and ids.size:
-            ptbl = self._local_postings(neg_terms, False)
-            excl_parts = []
-            for by_term in _arrow_postings(ptbl).values():
-                sub = None
-                for c in negative:
-                    grp = None
-                    for t in c.tokens:
-                        tp = by_term.get(t)
-                        dd = (tp.decode_blocks(np.arange(tp.nblocks))[0]
-                              if tp is not None and tp.nblocks
-                              else np.empty(0, dtype=np.int64))
-                        grp = (dd if grp is None
-                               else np.intersect1d(grp, dd))
-                        if grp.size == 0:
-                            break
-                    if grp is not None and grp.size:
-                        sub = (grp if sub is None
-                               else np.union1d(sub, grp))
-                if sub is not None and sub.size:
-                    excl_parts.append(sub)
-            if excl_parts:
-                excl = np.unique(np.concatenate(excl_parts))
-                ids = ids[~np.isin(ids, excl)]
+        ids = np.sort(ids)  # rank order, and lookup() takes sorted docs
+        if plan.neg_groups and ids.size:
+            by_term = _concat_arrow_postings(self._local_postings(
+                [t for g in plan.neg_groups for t in g], False))
+            for g in plan.neg_groups:
+                hit = np.ones(ids.size, dtype=bool)
+                for t in g:
+                    tp = by_term.get(t)
+                    hit &= tp.lookup(ids)[2] if tp is not None else False
+                ids = ids[~hit]
         n_all = int(ids.size)
-        ids = np.sort(ids)[offset:offset + k]
+        ids = ids[offset:offset + k]
         scores = np.full(ids.size, _match_all_score(plan), dtype=plan.dtype)
         if _with_count:
             return ids, scores, Count(n_all, True)
@@ -2198,110 +2228,9 @@ class IndexReader:
         (computer/mod.rs:310-340 uses query.simple_terms) — phrases
         raise. field_coeffs maps field name -> tf coefficient (default
         1.0 for every field incl. the primary text field)."""
-        from pyspark.sql import functions as F
-
-        pq = self._parse(query)
-        extra = list(self.stats.get("field_cols") or [])
-        if not extra:
-            raise ValueError(
-                "index was built without field_cols; use search()")
-        if any(c.field for c in pq.clauses):
-            raise ValueError(
-                "field-scoped terms (`title:term`) are a search() "
-                "feature; BM25F already scores every term across all "
-                "fields — use field_coeffs to weight a field")
-        primary = self.stats.get("text_col", "text")
-        fields = [primary] + extra
-        coeffs = {f: 1.0 for f in fields}
-        for f, c in (field_coeffs or {}).items():
-            if f not in coeffs:
-                raise ValueError(f"unknown field {f!r}; index has {fields}")
-            coeffs[f] = float(c)
-        if any(c.kind == "phrase" for c in pq.clauses):
-            raise ValueError("BM25F scores simple terms only")
-        num_docs = self.num_docs
-        avgfn = {primary: self.avg_fieldnorm}
-        ftoks = self.stats.get("field_tokens") or {}
-        for g in extra:
-            # a corpus-wide-empty field has no postings to score; 1.0
-            # keeps the (never-evaluated) norm cache finite
-            avgfn[g] = ((ftoks.get(g, 0) or 0) / num_docs) or 1.0
-
-        def key(t: str, f: str) -> str:
-            return t if f == primary else f"f:{f}:{t}"
-
-        text_terms = [t for c in pq.clauses for t in c.tokens
-                      if ":" not in t]
-        attr_terms = [t for c in pq.clauses for t in c.tokens
-                      if ":" in t]
-        union_keys = ["u:" + t for t in text_terms]
-        field_keys = [key(t, f) for t in text_terms for f in fields]
-        dfs = self.term_dfs(list(dict.fromkeys(
-            union_keys + field_keys + attr_terms)))
-        # dead required clause: term absent from every field / filter
-        for c in pq.positive:
-            t = c.tokens[0]
-            df0 = dfs[t if ":" in t else "u:" + t]
-            if df0 == 0:
-                return self._empty_result()
-        fweights = {
-            (t, f): Bm25FWeight(dfs["u:" + t], num_docs, avgfn[f],
-                                coeff=coeffs[f], dtype=dtype)
-            for t in dict.fromkeys(text_terms) for f in fields}
-
-        # negation groups: a doc is excluded when every token of the
-        # group matches; a text token matches in any field, so groups
-        # expand to the cross-field combinations
-        import itertools
-
-        neg_key_groups: list[list[str]] = []
-        for c in pq.negative:
-            per_tok = [[c_tok] if ":" in c_tok
-                       else [key(c_tok, f) for f in fields]
-                       for c_tok in c.tokens]
-            neg_key_groups.extend(
-                list(combo) for combo in itertools.product(*per_tok))
-
-        scan_terms = list(dict.fromkeys(
-            field_keys + attr_terms
-            + [t for g in neg_key_groups for t in g]))
-        seg_k = k + offset
-        clauses = list(pq.clauses)
-
-        def eval_by_term(by_term: dict):
-            empty_tp = TermPostings([], [], [], [], [], [])
-            specs = []
-            for c in clauses:
-                if c.kind == "not":
-                    continue
-                t = c.tokens[0]
-                if c.kind == "filter" or ":" in t:
-                    specs.append(
-                        ("filter", by_term.get(t, empty_tp), None))
-                else:
-                    members = [(by_term.get(key(t, f), empty_tp),
-                                fweights[(t, f)]) for f in fields]
-                    specs.append(("or", members, None))
-            negs = [[by_term.get(t, empty_tp) for t in g]
-                    for g in neg_key_groups]
-            return segment_topk(specs, negs, seg_k, dtype=dtype)
-
-        def run_arrow(batches):
-            batch = _hit_batch(
-                [(seg,) + eval_by_term(by_term) + (0, False)
-                 for seg, by_term in _batch_groups(batches)],
-                "segment_id", False)
-            if batch is not None:
-                yield batch
-
-        local = self._shape(
-            self._postings_for(scan_terms),
-            _est_blocks(dfs.get(t, 0) for t in scan_terms)).mapInArrow(
-            run_arrow, schema="doc_id long, score double, segment_id long")
-        top = local.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            top = top.offset(offset)
-        return top.limit(k).drop("segment_id")
+        return self.search(
+            self._plan(query, dtype=dtype, bm25f=field_coeffs or {}),
+            k=k, offset=offset)
 
     def search_many(self, queries: dict, k: int = TOP_K_DEFAULT,
                     dtype=np.float32, compound_terms: bool | None = None,
@@ -2330,11 +2259,11 @@ class IndexReader:
         per-segment ShortCircuit cap, search()'s
         max_docs_per_segment).
 
-        A bm25f query scores with search_bm25f semantics (union-df IDF,
-        per-field fieldnorms, coefficient inside the saturation) and
-        rides the same or-group machinery — one member per field. bm25f
-        specs take simple positive terms + filters (no phrases/
-        negations/should — use search_bm25f for those edges).
+        A bm25f query is planned exactly as search_bm25f plans it
+        (union-df IDF, per-field fieldnorms, coefficient inside the
+        saturation, one or-group member per field, negations excluded
+        in any field): simple terms, filters and negations, no phrases
+        or should clauses.
 
         Returns DataFrame (query, rank, doc_id, score); rank is 1-based
         after the query's offset.
@@ -2376,12 +2305,8 @@ class IndexReader:
             md = spec.get("max_docs")
             jobs[name] = (int(spec.get("offset", 0)),
                           int(md) if md is not None else None)
-        # BM25F weights take their IDF from the union-of-fields df
-        union_keys = {"u:" + c.tokens[0] for p in plans.values()
-                      if p.bm25f is not None
-                      for c in p.pq.positive if c.kind == "term"}
         dfs = self.term_dfs(sorted(
-            {t for p in plans.values() for t in p.terms} | union_keys))
+            {t for p in plans.values() for t in p.stat_terms}))
         # queries with a dead required clause are dropped up front
         live = {name: p for name, p in plans.items()
                 if not self._plan_stats(p, dfs).dead}
@@ -2498,39 +2423,23 @@ class IndexReader:
             tie_breaker=tie_breaker, const_score=const_score)
         if plan.match_all:
             return self._search_all_local(plan, k, offset, _with_count)
-        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=plan.dtype))
         if plan.dead:
-            return empty + ((Count(0, True),) if _with_count else ())
-        tbl = self._local_postings(plan.terms, plan.positions)
-        # single-pass fast path: no per-segment state needed (range /
-        # exists filters and optic end anchors build per-segment lookup
-        # fns) -> run the kernel ONCE over the whole index as one
-        # logical segment
-        groups = None
-        if plan.rng_ctx is None and plan.index_path is None:
-            by_term_all = _concat_arrow_postings(tbl)
-            if by_term_all is not None:
-                groups = [(None, by_term_all)] if by_term_all else []
-        if groups is None:
-            groups = _arrow_postings(tbl).items()
-        n_total = 0  # no ShortCircuit cap on this path: always Exact
-        parts = []
-        for seg, by_term in groups:
-            docs, scores, n, _capped = _eval_group(
-                plan, by_term, seg, k + offset, _with_count)
-            n_total += n
-            if docs.size:
-                parts.append((docs, scores))
-        count = (Count(n_total, True),) if _with_count else ()
-        if not parts:
-            return empty + count
-        docs = np.concatenate([p[0] for p in parts])
-        scores = np.concatenate([p[1] for p in parts])
-        # global merge: score desc, doc_id asc — identical to the
-        # distributed TakeOrderedAndProject ordering
-        order = np.lexsort((docs, -scores.astype(np.float64)))
-        order = order[offset:offset + k]
-        return (docs[order], scores[order]) + count
+            return ((np.empty(0, dtype=np.int64),
+                     np.empty(0, dtype=plan.dtype))
+                    + ((Count(0, True),) if _with_count else ()))
+        # ONE kernel call over the whole index as one logical segment:
+        # segments own disjoint doc-id ranges, so the concatenated
+        # streams are doc-ordered, the block-max threshold converges
+        # once, and range/exists lookups and optic doclens read every
+        # segment at once (seg=None). No ShortCircuit cap on this path,
+        # so the count is always Exact; the kernel's top-k is already in
+        # (score desc, doc_id asc) order, the distributed merge order.
+        by_term = _concat_arrow_postings(
+            self._local_postings(plan.terms, plan.positions))
+        docs, scores, n, _capped = _eval_group(
+            plan, by_term, None, k + offset, _with_count)
+        hits = (docs[offset:offset + k], scores[offset:offset + k])
+        return hits + ((Count(n, True),) if _with_count else ())
 
     def search_collect(self, query, k: int = TOP_K_DEFAULT,
                        dtype=np.float32, local: bool | None = None):
@@ -2808,8 +2717,7 @@ class IndexReader:
             total = 0
             for seg, by_term in _batch_groups(batches):
                 specs, negs = _make_specs(pq, plan.weights, by_term,
-                                          plan.dtype,
-                                          compounds=plan.compounds)
+                                          plan.compounds, plan.neg_groups)
                 total += count_matches(specs, negs,
                                        range_fns=_range_fns(plan, seg))
             yield pa.record_batch([pa.array([total], type=pa.int64())],
@@ -2866,8 +2774,7 @@ class IndexReader:
         def run_arrow(batches):
             for seg, by_term in _batch_groups(batches):
                 specs, negs = _make_specs(plan.pq, plan.weights, by_term,
-                                          plan.dtype,
-                                          compounds=plan.compounds)
+                                          plan.compounds, plan.neg_groups)
                 ids = matching_docs(specs, negs,
                                     range_fns=_range_fns(plan, seg))
                 if ids.size:
@@ -3317,7 +3224,9 @@ class IndexReader:
 
             total, any_capped = 0, False
             for seg, by_term in _batch_groups(batches):
-                specs, negs = _make_specs(pq, weights, by_term, dtype)
+                specs, negs = _make_specs(
+                    pq, weights, by_term,
+                    neg_groups=[c.tokens for c in pq.negative])
                 n = count_matches(specs, negs, max_docs=cap)
                 if n < cap:
                     total += n

@@ -183,8 +183,8 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     value equals the score search()/search_local() would produce for
     this doc at the same dtype, exactly (pinned by tests).
     """
-    from .executor import (Expansion, _arrow_postings, _make_specs,
-                           _match_all_score, _range_fns)
+    from .executor import (Expansion, _concat_arrow_postings,
+                           _make_specs, _match_all_score, _range_fns)
     from .kernel import phrase_tf
 
     d = dtype
@@ -198,7 +198,8 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     if not 0 <= doc < reader.num_docs:
         raise DoesNotMatch(doc)
 
-    # ---- owning segment + its pruned postings ------------------------
+    # ---- owning segment: the doc exists, and the one-doc range check
+    # reads that segment's row store only ------------------------------
     def _seg_of(doc: int) -> int:
         if reader._offsets is not None:
             loc = reader._ord_of(doc)
@@ -217,8 +218,8 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     if reader._segment_map:
         # merged index: _seg_of resolves against the row store (doc_id
         # mode) or segment_offsets (offsets mode), both of which keep
-        # PRE-merge segment ids; the postings are keyed by the merged
-        # kernel segment, so translate through segment_map either way
+        # PRE-merge segment ids; _range_fns takes the merged kernel
+        # segment, so translate through segment_map either way
         sm = reader._segment_map
         seg = int(sm.get(str(seg), sm.get(seg, seg)))
     cand = np.array([doc], dtype=np.int64)
@@ -245,17 +246,12 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
         # match-all path (executor._search_all_local semantics)
         if not _range_ok():
             raise DoesNotMatch(doc)
-        neg_terms = list({t for c in pq.negative for t in c.tokens})
-        by_term = {}
-        if neg_terms:
-            tbl = reader._local_postings(neg_terms, False)
-            by_term = _arrow_postings(tbl).get(seg, {})
-        negs = [[by_term.get(t) for t in c.tokens]
-                for c in pq.negative]
-        for group in negs:
-            if all(g is not None and _lookup_one(g, doc)[2]
-                   for g in group) and group:
-                raise DoesNotMatch(doc)
+        neg_terms = [t for g in plan.neg_groups for t in g]
+        by_term = (_concat_arrow_postings(
+            reader._local_postings(neg_terms, False)) if neg_terms else {})
+        if _excluded(_make_specs(pq, {}, by_term,
+                                 neg_groups=plan.neg_groups)[1], doc):
+            raise DoesNotMatch(doc)
         value = _match_all_score(plan)
         details = []
         for c in pq.positive:
@@ -283,10 +279,10 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     if plan.dead:
         raise DoesNotMatch(doc)
     weights, compounds = plan.weights, plan.compounds
-    tbl = reader._local_postings(plan.terms, plan.positions)
-    by_term = _arrow_postings(tbl).get(seg, {})
-    specs, negs = _make_specs(pq, weights, by_term, dtype,
-                              compounds=compounds)
+    by_term = _concat_arrow_postings(
+        reader._local_postings(plan.terms, plan.positions))
+    specs, negs = _make_specs(pq, weights, by_term, compounds,
+                              plan.neg_groups)
 
     def _term_node(tok: str, tp, w_boosted, boost: float,
                    contrib: float) -> Explanation:
@@ -455,7 +451,7 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
 
     # (5) Should contributions (never gate membership)
     if spq is not None:
-        sspecs, _ = _make_specs(spq, weights, by_term, dtype)
+        sspecs, _ = _make_specs(spq, weights, by_term)
         for c, (kind, tp, w) in zip(
                 [c for c in spq.positive
                  if c.kind not in ("range", "exists")], sspecs):

@@ -170,16 +170,32 @@ def test_bm25f_batch_matches_single(bm25f_index):
 
 
 def test_bm25f_batch_validation(bm25f_index):
-    r, _ = bm25f_index
-    import pytest
+    """Batch bm25f specs go through the same plan as search_bm25f:
+    phrases and unknown fields are rejected, and a negation excludes a
+    doc holding the term in any field in both, matching the brute-force
+    model at float64."""
+    r, fields = bm25f_index
+    n = len(fields["text"])
 
     with pytest.raises(ValueError):
         r.search_many({"x": {"q": '"alpha beta"', "bm25f": True}})
     with pytest.raises(ValueError):
-        r.search_many({"x": {"q": "alpha -beta", "bm25f": True}})
-    with pytest.raises(ValueError):
         r.search_many({"x": {"q": "alpha", "bm25f": True,
                              "field_coeffs": {"nope": 1.0}}})
+    # tag1 occurs in titles only, beta in both fields
+    for q, terms, negs in [("alpha -tag1", ["alpha"], [["tag1"]]),
+                           ("gamma -beta", ["gamma"], [["beta"]])]:
+        rows = r.search_many({"x": {"q": q, "bm25f": True}},
+                             k=n, dtype=np.float64).collect()
+        got = [(row["doc_id"], row["score"])
+               for row in sorted(rows, key=lambda row: row["rank"])]
+        single = [(row["doc_id"], row["score"]) for row in
+                  r.search_bm25f(q, k=n, dtype=np.float64).collect()]
+        assert got == single, q
+        exp = _brute_bm25f(fields, {}, terms, negs)
+        assert [d for d, _ in got] == [d for d, _ in exp], q
+        np.testing.assert_allclose([s for _, s in got],
+                                   [s for _, s in exp], rtol=1e-9)
 
 
 @pytest.mark.parametrize("seed", [11, 22])

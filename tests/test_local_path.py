@@ -234,3 +234,27 @@ def test_routed_requests_look_up_terms_once(reader, monkeypatch):
     calls.clear()
     reader.count("example website -test")
     assert len(calls) == 1
+
+
+def check_optic_end_anchor_plan(r, texts):
+    """A plan whose optic needs doclens (`plan.index_path` set) runs
+    through search_local's single pass and matches search(optic=)."""
+    from collections import Counter
+
+    from cuely_spark.queryengine.optic import Rule
+    from cuely_spark.tokenizer import tokenize
+
+    last = Counter(t[-1] for t in map(tokenize, texts) if t).most_common(2)
+    rules = [Rule(pattern=f"{last[0][0]} |", action="boost", factor=2.0),
+             Rule(pattern=f"{last[1][0]} |", action="discard")]
+    plan = r._plan("the", optic=rules)
+    assert plan.index_path is not None
+    want = _hits(*r.search_local(plan, k=50))
+    rows = r.search("the", k=50, optic=rules).collect()
+    _assert_same(_hits([x["doc_id"] for x in rows],
+                       [x["score"] for x in rows]), want, r.path)
+    assert want[0] != _hits(*r.search_local("the", k=50))[0]
+
+
+def test_local_optic_end_anchor_plan(reader, transcripts_small):
+    check_optic_end_anchor_plan(reader, transcripts_small["text"])

@@ -115,3 +115,43 @@ def test_merge_preserves_shadow_fields(spark, tmp_path):
         d1, s1 = r1.search_collect(q, k=20, dtype=np.float64)
         assert d0.tolist() == d1.tolist(), q
         np.testing.assert_array_equal(s0, s1)
+
+
+def test_single_pass_parity_on_merged(spark, merged, transcripts_small):
+    """The local path's one kernel pass on a merged index, whose row
+    store stays at the SOURCE segment dirs: range/exists queries agree
+    on (doc_id, score) and Count across search_local, search_with_count
+    (both paths) and search; explain() gives search_local's score; an
+    optic end-anchor plan (doclens of every segment) matches
+    search(optic=)."""
+    from test_local_path import (K, _assert_same, _fuzz_queries, _hits,
+                                 check_optic_end_anchor_plan)
+
+    from cuely_spark.queryengine import IndexReader
+
+    r = IndexReader(spark, merged[1])
+    assert r._segment_map and len(set(r._segment_map.values())) == 2
+    fuzz = [q for q, kw in _fuzz_queries(
+        transcripts_small["text"].tolist(), 80, seed=20261019)
+        if not kw and ("ts:" in q or "tool:*" in q)][:10]
+    queries = ["the ts:2024-01-02..2024-01-05", "test -tool:*",
+               "website tool:* -example", "* ts:>=2024-01-09 -the"] + fuzz
+    explained = 0
+    for q in queries:
+        want = _hits(*r.search_local(q, k=K))
+        rows = r.search(q, k=K).collect()
+        _assert_same(_hits([x["doc_id"] for x in rows],
+                           [x["score"] for x in rows]), want, "search " + q)
+        counts = []
+        for local in (True, False):
+            d, s, c = r.search_with_count(q, k=K, local=local)
+            _assert_same(_hits(d, s), want,
+                         f"search_with_count(local={local}) {q}")
+            assert c.exact, q
+            counts.append(c.value)
+        assert counts[0] == counts[1], q
+        for doc, score in list(zip(*want))[:2]:
+            assert r.explain(q, doc).value == float(score), (q, doc)
+            explained += 1
+    assert explained >= 10
+    check_optic_end_anchor_plan(r, transcripts_small["text"])

@@ -5,9 +5,10 @@ results: (a) posting files are written with small parquet row groups
 (the pruning granule), (b) the driver-local path reads them through a
 cached-handle, statistics-pruned parallel reader instead of a generic
 dataset scan, (c) the local kernel runs ONCE over the whole index as
-one logical segment (disjoint per-segment docID ranges) instead of
-looping per segment. Each is pinned here against the reference
-behavior it replaced."""
+one logical segment instead of looping per segment, for every query
+shape: every writer gives each segment a disjoint docID range, and
+interleaved ranges are rejected as invalid index data. Each is pinned
+here against the reference behavior it replaced."""
 
 import os
 
@@ -157,10 +158,9 @@ def _mk_tbl(first, last, term=None, seg=None):
 def test_concat_postings_requires_disjoint_ranges():
     from cuely_spark.queryengine.executor import _concat_arrow_postings
 
-    # interleaved block ranges for one term -> None (caller must fall
-    # back to the per-segment loop)
-    assert _concat_arrow_postings(
-        _mk_tbl([0, 5], [10, 20], seg=[0, 1])) is None
+    # interleaved block ranges for one term are invalid index data
+    with pytest.raises(ValueError, match="'t'"):
+        _concat_arrow_postings(_mk_tbl([0, 5], [10, 20], seg=[0, 1]))
     # disjoint ranges -> one TermPostings, blocks in ascending doc
     # order regardless of input row order
     out = _concat_arrow_postings(
@@ -173,6 +173,37 @@ def test_concat_postings_requires_disjoint_ranges():
     out = _concat_arrow_postings(
         _mk_tbl([0, 0], [10, 10], term=["a", "b"], seg=[0, 0]))
     assert sorted(out) == ["a", "b"]
+
+
+def test_every_writer_gives_disjoint_segment_ranges(
+        spark, transcripts_small, tmp_path_factory):
+    """The whole-index grouping raises on interleaved segment ranges,
+    so each writer must give every segment a disjoint doc-id range: a
+    bulk build (>= 3 segments), a merge of it down to 2 segments (cold
+    re-block and salted hot paths) and a live root of 2 batches. All
+    posting rows of each index group without raising."""
+    from cuely_spark.indexer import build_index, merge_segments
+    from cuely_spark.queryengine.executor import (_POSTING_COLS,
+                                                  _PrunedTable,
+                                                  _concat_arrow_postings)
+    from cuely_spark.streaming import LiveIndexWriter
+
+    tmp = tmp_path_factory.mktemp("disjoint")
+    bulk, merged, live = (str(tmp / d) for d in ("bulk", "merged", "live"))
+    pdf = transcripts_small.drop(columns=["expected_doc_id"]).head(600)
+    build_index(spark, spark.createDataFrame(pdf), bulk,
+                rows_per_segment=200)
+    merge_segments(spark, bulk, merged, target_segments=2,
+                   hot_df_threshold=30)
+    w = LiveIndexWriter(spark, live)
+    for bid, part in enumerate((pdf.iloc[:300], pdf.iloc[300:])):
+        w.process_batch(spark.createDataFrame(part), bid)
+    for root, min_segs in ((bulk, 3), (merged, 2), (live, 2)):
+        tbl = _PrunedTable(os.path.join(root, "index", "kind=p"),
+                           "term").read(_POSTING_COLS)
+        assert len(set(tbl["segment_id"].to_pylist())) >= min_segs, root
+        by_term = _concat_arrow_postings(tbl)
+        assert len(by_term) == len(set(tbl["term"].to_pylist())), root
 
 
 @pytest.fixture(scope="module")
@@ -349,3 +380,63 @@ def test_index_reads_go_through_one_reader():
     for mod in (executor, explain):
         walk(ast.parse(inspect.getsource(mod)), [])
     assert not bad, bad
+
+
+def test_one_plan_one_local_kernel_call():
+    """Structural guard for the single query path: per-segment posting
+    groups are built only for the distributed batches (`_batch_groups`)
+    and by the whole-index entry point, never on a driver-local read;
+    search_local makes ONE kernel call; the whole-index grouping never
+    returns None (no fallback); and search_bm25f only plans and hands
+    the plan to search() — no scorer of its own."""
+    import ast
+    import inspect
+
+    from cuely_spark.queryengine import executor, explain, kernel
+
+    kernel_fns = {n for n, v in vars(kernel).items()
+                  if inspect.isfunction(v) and v.__module__ == kernel.__name__}
+    calls: dict[str, list[tuple[str, str]]] = {}
+    funcs: dict[str, ast.FunctionDef] = {}
+
+    def name_of(f):
+        return (f.id if isinstance(f, ast.Name)
+                else f.attr if isinstance(f, ast.Attribute) else None)
+
+    def walk(node, scope):
+        for ch in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(ch, ast.FunctionDef):
+                inner = scope + [ch.name]
+                funcs.setdefault(ch.name, ch)
+            if isinstance(ch, ast.Call) and name_of(ch.func):
+                calls.setdefault(name_of(ch.func), []).append(
+                    (mod.__name__, (scope or ["<module>"])[-1]))
+            walk(ch, inner)
+
+    for mod in (executor, explain):
+        walk(ast.parse(inspect.getsource(mod)), [])
+    assert {s for _, s in calls["_arrow_postings"]} == {
+        "_batch_groups", "_concat_arrow_postings"}
+    assert [s for _, s in calls["_eval_group"]].count("search_local") == 1
+    assert not any(isinstance(n, (ast.For, ast.While, ast.comprehension))
+                   for n in ast.walk(funcs["search_local"]))
+
+    def may_be_none(e):
+        if e is None or isinstance(e, ast.Constant):
+            return e is None or e.value is None
+        if isinstance(e, ast.IfExp):
+            return may_be_none(e.body) or may_be_none(e.orelse)
+        if isinstance(e, ast.BoolOp):
+            return any(may_be_none(v) for v in e.values)
+        return False
+
+    for fn in ("_arrow_postings", "_concat_arrow_postings"):
+        assert not any(isinstance(r, ast.Return) and may_be_none(r.value)
+                       for r in ast.walk(funcs[fn])), fn
+    bm25f_calls = {name_of(c.func) for c in ast.walk(funcs["search_bm25f"])
+                   if isinstance(c, ast.Call)}
+    assert "search" in bm25f_calls and "_plan" in bm25f_calls
+    banned = {"mapInArrow", "term_dfs", "_eval_group", "_make_specs",
+              "_batch_groups"} | kernel_fns
+    assert not bm25f_calls & banned, bm25f_calls & banned
