@@ -12,10 +12,10 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    `term_stats` table (the Parquet FST stand-in) through the
    cached-footer reader (:class:`_PrunedTable`: footers and row-group
    min/max resident, only the row groups holding a query term
-   decoded) -> global df per term; dead-clause detection, the
-   posting-block estimate and the BM25 weights built driver-side with
-   global N / avg_fieldnorm (global-df contract: bm25.rs:84, SURVEY
-   §4.1).
+   decoded, each once per snapshot) -> global df per term;
+   dead-clause detection, the posting-block estimate and the BM25
+   weights built driver-side with global N / avg_fieldnorm (global-df
+   contract: bm25.rs:84, SURVEY §4.1).
 3. posting scan: `index/kind=p` filtered by `term IN (...)` — Catalyst
    pushes the filter to Parquet (row-group pruning on the sorted term
    column), and only the needed columns are read (positions column is
@@ -36,7 +36,9 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
 
 from __future__ import annotations
 
+import itertools
 import os
+import weakref
 from dataclasses import dataclass, field
 from functools import cached_property
 
@@ -62,6 +64,13 @@ _local_read_pool = None
 #: their cached footer and are reopened per read
 _LOCAL_FILE_CAP = 4096
 
+#: byte budget of the decoded row-group cache that every _PrunedTable
+#: in the process shares (:class:`_DecodedCache`): twice the largest
+#: posting read the local router sends to the driver, a small fixed
+#: share of driver memory whatever the corpus size (docs/DESIGN.md
+#: "Driver-local small queries")
+_DECODED_CACHE_BYTES = 64 << 20
+
 
 def _get_local_read_pool():
     global _local_read_pool
@@ -74,12 +83,81 @@ def _get_local_read_pool():
     return _local_read_pool
 
 
+class _DecodedCache:
+    """LRU of decoded row-group columns, keyed (table token, file no,
+    row group, column) and bounded by `_DECODED_CACHE_BYTES` of Arrow
+    buffers. A column larger than a quarter of the budget (a row-store
+    text row group at Spark's default block size) is decoded but not
+    kept, so one point read cannot flush the posting working set.
+    Counts hits, misses and evictions per (row group, column) pair."""
+
+    def __init__(self):
+        import threading
+        from collections import OrderedDict
+
+        self._lru: OrderedDict = OrderedDict()  # key -> (array, nbytes)
+        self._lock = threading.Lock()
+        self.resident_bytes = 0
+        self.hits = self.misses = self.evictions = 0
+
+    def get_many(self, keys: list) -> list:
+        """The cached array of each key, None where it is missing."""
+        out = []
+        with self._lock:
+            for k in keys:
+                hit = self._lru.get(k)
+                if hit is None:
+                    self.misses += 1
+                    out.append(None)
+                else:
+                    self._lru.move_to_end(k)
+                    self.hits += 1
+                    out.append(hit[0])
+        return out
+
+    def put(self, key, arr) -> None:
+        n = arr.nbytes
+        budget = _DECODED_CACHE_BYTES
+        if n > budget // 4:
+            return
+        with self._lock:
+            # two threads may decode the same pair; keep the last one
+            old = self._lru.pop(key, None)
+            if old is not None:
+                self.resident_bytes -= old[1]
+            self._lru[key] = (arr, n)
+            self.resident_bytes += n
+            while self.resident_bytes > budget:
+                _, (_, m) = self._lru.popitem(last=False)
+                self.resident_bytes -= m
+                self.evictions += 1
+
+    def drop(self, token: int) -> None:
+        """Release every entry of one table instance."""
+        with self._lock:
+            for k in [k for k in self._lru if k[0] == token]:
+                self.resident_bytes -= self._lru.pop(k)[1]
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {"hits": self.hits, "misses": self.misses,
+                    "evictions": self.evictions,
+                    "entries": len(self._lru),
+                    "resident_bytes": self.resident_bytes}
+
+
+_decoded = _DecodedCache()
+_table_tokens = itertools.count()
+
+
 class _PrunedTable:
     """Driver-local reader of one index table (postings, term stats,
     fuzzy sidecar or row store) on any pyarrow filesystem. The file
     list, each footer and each row group's min/max of the sort column
     `key` are read once; a read decodes only the row groups that can
-    hold its keys, on the shared pool.
+    hold its keys, on the shared pool, and only the (row group,
+    column) pairs the process-wide :class:`_DecodedCache` does not
+    already hold for this instance.
 
     A row group is read when some key lies inside its (min, max) — a
     containment test, so the result is right whatever the row order
@@ -87,12 +165,16 @@ class _PrunedTable:
     key in few row groups, but pruning does not rely on it). The
     resident footers play the role of the reference's per-segment term
     dictionary + skip list (metadata resident, data read per query,
-    crates/tantivy/src/termdict/mod.rs). Compared to a dataset scan
-    this removes the per-query discovery and footer parse (~1 ms x
-    file count) and decodes only the matching row groups (measured 6x
-    on a 640-segment index; plans/r06/local_pruned_read.md). The first
-    `_LOCAL_FILE_CAP` files keep an open handle; the others are
-    reopened per read from their cached footer."""
+    crates/tantivy/src/termdict/mod.rs), and the decoded-column cache
+    the role of its page-cached segment readers held per searcher
+    snapshot: cache entries carry this instance's token, never the
+    path, so a new snapshot of the same path starts cold. Compared to
+    a dataset scan this removes the per-query discovery and footer
+    parse (~1 ms x file count) and decodes only the matching row
+    groups (measured 6x on a 640-segment index;
+    plans/r06/local_pruned_read.md). The first `_LOCAL_FILE_CAP` files
+    keep an open handle; the others are reopened per read from their
+    cached footer."""
 
     def __init__(self, path: str, key: str):
         import pyarrow as pa
@@ -102,6 +184,9 @@ class _PrunedTable:
         from .. import fsio
 
         self.key = key
+        self._token = next(_table_tokens)
+        # entries of a table dropped without close() leave with it
+        weakref.finalize(self, _decoded.drop, self._token)
         self._fs, root = fsio.resolve(path)
         infos = self._fs.get_file_info(
             pafs.FileSelector(root, recursive=True))
@@ -147,10 +232,12 @@ class _PrunedTable:
                        if seg is not None})
 
     def close(self) -> None:
-        """Close the open handles; later reads reopen files per read."""
+        """Close the open handles and release the decoded row groups;
+        later reads reopen files per read."""
         for pf in self._open.values():
             pf.close()
         self._open.clear()
+        _decoded.drop(self._token)
 
     def _select(self, keys, lo, hi, segments) -> list[tuple]:
         """-> [(file no, row groups)] that can hold a key in `keys` (or
@@ -181,15 +268,33 @@ class _PrunedTable:
                    for n, rgs in self._select(None, lo, hi, None)
                    for i in rgs)
 
+    def _decode(self, task) -> list:
+        """(file no, [(slot, row group, columns)]) -> a decoded table
+        per row group."""
+        import pyarrow.parquet as pq
+
+        n, todo = task
+
+        def rd(pf):
+            return [pf.read_row_group(i, columns=cs, use_threads=False)
+                    for _, i, cs in todo]
+
+        pf = self._open.get(n)
+        if pf is not None:
+            return rd(pf)
+        path, _, md, _ = self._files[n]
+        with pq.ParquetFile(path, filesystem=self._fs, metadata=md) as pf:
+            return rd(pf)
+
     def read(self, cols: list[str], keys=None, lo=None, hi=None,
              segments=None):
         """Rows whose key is in `keys` (or in [lo, hi); every row
         without either) from the `segments` partitions (all by
         default), with columns `cols` — `segment_id` included; typed
-        and empty when nothing matches."""
+        and empty when nothing matches. Only the (row group, column)
+        pairs missing from the decoded cache go to the read pool."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         if keys is not None:
             keys = sorted(set(keys))
@@ -199,34 +304,40 @@ class _PrunedTable:
         fcols = [c for c in cols if c != "segment_id"]
         if (keys is not None or lo is not None) and self.key not in fcols:
             fcols.append(self.key)
-
-        def _one(task):
-            n, rgs = task
-            pf = self._open.get(n)
-            if pf is not None:
-                return pf.read_row_groups(rgs, columns=fcols,
-                                          use_threads=False)
-            path, _, md, _ = self._files[n]
-            with pq.ParquetFile(path, filesystem=self._fs,
-                                metadata=md) as pf:
-                return pf.read_row_groups(rgs, columns=fcols,
-                                          use_threads=False)
-
-        # workers return raw tables; segment_id is attached ONCE,
-        # vectorized, after concat (a per-part append_column holds the
-        # GIL ~0.25 ms x files and was the measured bottleneck)
-        parts = list(_get_local_read_pool().map(_one, tasks))
-        tbl = pa.concat_tables(parts)
+        nc = len(fcols)
+        pairs = [(n, i) for n, rgs in tasks for i in rgs]
+        got = _decoded.get_many([(self._token, n, i, c)
+                                 for n, i in pairs for c in fcols])
+        todo: dict[int, list] = {}
+        for j, (n, i) in enumerate(pairs):
+            miss = [c for c, a in zip(fcols, got[j * nc:(j + 1) * nc])
+                    if a is None]
+            if miss:
+                todo.setdefault(n, []).append((j, i, miss))
+        if todo:
+            for (n, v), tbls in zip(
+                    todo.items(),
+                    _get_local_read_pool().map(self._decode, todo.items())):
+                for (j, i, miss), t in zip(v, tbls):
+                    for c in miss:
+                        got[j * nc + fcols.index(c)] = t[c]
+                        _decoded.put((self._token, n, i, c), t[c])
+        # segment_id is attached ONCE, vectorized, after concat (a
+        # per-part append_column holds the GIL ~0.25 ms x files)
+        tbl = pa.concat_tables(
+            pa.Table.from_arrays(got[j * nc:(j + 1) * nc], names=fcols)
+            for j in range(len(pairs)))
         if "segment_id" in cols:
-            lens = np.fromiter((p.num_rows for p in parts),
-                               dtype=np.int64, count=len(parts))
-            segs = np.asarray([self._files[n][1] for n, _ in tasks],
+            lens = np.fromiter(
+                (self._files[n][2].row_group(i).num_rows
+                 for n, i in pairs), dtype=np.int64, count=len(pairs))
+            segs = np.asarray([self._files[n][1] for n, _ in pairs],
                               dtype=np.int64)
             tbl = tbl.append_column("segment_id",
                                     pa.array(np.repeat(segs, lens)))
         # exact filter as a plain compute mask: an expression filter
         # builds an Acero plan per call (~1 ms against ~0.07 ms)
-        col = tbl[self.key]
+        col = tbl[self.key] if self.key in fcols else None
         if keys is not None:
             tbl = tbl.filter(pc.is_in(col, value_set=pa.array(keys,
                                                               col.type)))

@@ -76,7 +76,8 @@ class TermPostings:
     per-block ``bytes`` lists and packs them the same way."""
 
     __slots__ = ("first_doc", "last_doc", "ndocs", "docs", "tfs", "fnids",
-                 "positions", "block_max_tf", "block_min_fnid", "_cache")
+                 "positions", "block_max_tf", "block_min_fnid", "_cache",
+                 "_last")
 
     def __init__(self, first_doc, last_doc, ndocs, docs, tfs, fnids,
                  positions=None, block_max_tf=None, block_min_fnid=None):
@@ -108,6 +109,7 @@ class TermPostings:
         self.block_min_fnid = (np.asarray(block_min_fnid, dtype=np.int64)
                                if block_min_fnid is not None else None)
         self._cache: dict[int, tuple] = {}
+        self._last: tuple | None = None
 
     @property
     def nblocks(self) -> int:
@@ -161,6 +163,26 @@ class TermPostings:
         owner = np.repeat(bl, counts)
         return docs, tfs, fnids, owner
 
+    def decode_blocks_once(self, blocks: np.ndarray, covers=False):
+        """:meth:`decode_blocks`, reusing this list's last result when
+        it decoded the same blocks — or, with `covers`, any superset of
+        them: a caller that searches the decoded docs for candidates
+        finds the same ones among extra blocks. A phrase decodes each
+        term's blocks for the conjunction, its positions and the fnids
+        of the docs that match, mostly the same blocks each time."""
+        last = self._last
+        if last is not None:
+            lb, res = last
+            if lb.size == blocks.size and (lb == blocks).all():
+                return res
+            if covers and blocks.size < lb.size:
+                i = np.searchsorted(lb, blocks)
+                if (i < lb.size).all() and (lb[i] == blocks).all():
+                    return res
+        res = self.decode_blocks(blocks)
+        self._last = (blocks, res)
+        return res
+
     def blocks_overlapping(self, cand_docs: np.ndarray) -> np.ndarray:
         """Blocks whose [first_doc, last_doc] range contains any candidate
         (vectorized skip: searchsorted over block boundaries)."""
@@ -176,9 +198,10 @@ class TermPostings:
         return np.unique(idx[valid])
 
     def lookup(self, cand_docs: np.ndarray):
-        """(tfs, fnids, found_mask) for candidate docs (sorted)."""
+        """(tfs, fnids, found_mask) for candidate docs (sorted); tfs
+        and fnids hold only where found."""
         blocks = self.blocks_overlapping(cand_docs)
-        docs, tfs, fnids, _ = self.decode_blocks(blocks)
+        docs, tfs, fnids, _ = self.decode_blocks_once(blocks, covers=True)
         if docs.size == 0:
             # no block overlaps any candidate (possible when probing a
             # rare or-group member / mustnot term against a candidate
@@ -211,7 +234,7 @@ class TermPostings:
         blocks = self.blocks_overlapping(cand_docs)
         if blocks.size == 0:
             return np.empty(0, dtype=np.int64), counts
-        docs, tfs, _, _ = self.decode_blocks(blocks)
+        docs, tfs, _, _ = self.decode_blocks_once(blocks)
         poss = decode_positions(_gather(self.positions, blocks), tfs)
         # membership via searchsorted (cand_docs sorted)
         ins = np.searchsorted(cand_docs, docs)
@@ -452,7 +475,8 @@ def intersect_units(units: list) -> np.ndarray:
 
     order = sorted(range(len(units)), key=lambda i: est(units[i]))
     kind, v = units[order[0]]
-    cand = (v.decode_blocks(np.arange(v.nblocks))[0] if kind == "one"
+    cand = (v.decode_blocks_once(np.arange(v.nblocks))[0]
+            if kind == "one"
             else _group_docs(v))
     for j in order[1:]:
         if cand.size == 0:

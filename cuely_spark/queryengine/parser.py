@@ -281,8 +281,12 @@ def _raw_split(q: str) -> list[str]:
         if c.isspace():
             i += 1
             continue
-        if c in _QUOTES:
-            close = _QUOTES[c]
+        # a quoted phrase, or a negated one (`-"a b"`), kept whole so
+        # that parse_query can refuse it
+        neg = c == "-" and i + 1 < n and q[i + 1] in _QUOTES
+        if neg or c in _QUOTES:
+            i += neg
+            close = _QUOTES[q[i]]
             j = i + 1
             while j < n and q[j] not in (close, '"', "”", "“"):
                 j += 1
@@ -308,7 +312,7 @@ def _raw_split(q: str) -> list[str]:
                 if m > i + 1:
                     raw += q[i:m]
                     i = m
-            out.append(raw)
+            out.append("-" * neg + raw)
         else:
             j = i
             while j < n and not q[j].isspace():
@@ -421,6 +425,11 @@ def parse_query(q: str,
             for t in tokenize(raw[1:]):
                 clauses.append(Clause("term", (t,)))
         elif raw.startswith("-") and len(raw) > 1:
+            if raw[1] == '"':
+                raise ValueError(
+                    f"negated phrase {raw!r} is not supported: a MustNot "
+                    "clause excludes docs holding all its words, not a "
+                    "phrase")
             if (ex := _as_exists(raw[1:])) is not None:
                 # `-tool:*` — docs where the attribute is unset/empty
                 clauses.append(Clause("exists", ex.tokens, neg=True))

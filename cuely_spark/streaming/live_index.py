@@ -100,6 +100,14 @@ class LiveIndexWriter:
             if "seg_base" not in self.state:  # pre-fix state files
                 self.state["seg_base"] = LIVE_SEG_BASE
         else:
+            if (fsio.exists(self.paths.stats)
+                    and not fsio.read_json(self.paths.stats).get("live")):
+                # its row store keys docs by per-segment offsets in
+                # stats.json, which live batches do not extend: their
+                # turns would drop out of every row-store read
+                raise ValueError(
+                    f"{root!r} holds a bulk or merged index; a "
+                    "LiveIndexWriter needs an empty or live root")
             self.state = {"next_doc_id": 0, "batches": {},
                           "seg_base": self._derive_seg_base()}
 

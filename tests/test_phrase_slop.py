@@ -8,6 +8,7 @@ approximate there (phrase_scorer.rs:225-230 comment).
 """
 
 import numpy as np
+import pytest
 
 from cuely_spark.oracle import OracleIndex
 from cuely_spark.queryengine.parser import MAX_SLOP, parse_query
@@ -35,6 +36,16 @@ def test_parser_slop_suffix():
 def test_parser_slop_single_token_collapses_to_term():
     pq = parse_query('"merge"~3')
     assert pq.clauses[0].kind == "term"
+
+
+@pytest.mark.parametrize("q", ['alpha -"beta gamma"',
+                               'alpha -"beta gamma"~2'])
+def test_parser_negated_phrase_raises(q):
+    """A MustNot clause excludes docs holding all its words, so it
+    cannot express a phrase: `-"…"` raises and names the clause instead
+    of negating the wrong pair and requiring a `"` token."""
+    with pytest.raises(ValueError, match='negated phrase.*"beta gamma"'):
+        parse_query(q)
 
 
 def test_slop_widens_membership_monotonically():

@@ -8,7 +8,10 @@ dataset scan, (c) the local kernel runs ONCE over the whole index as
 one logical segment instead of looping per segment, for every query
 shape: every writer gives each segment a disjoint docID range, and
 interleaved ranges are rejected as invalid index data. Each is pinned
-here against the reference behavior it replaced."""
+here against the reference behavior it replaced. Since then the reader
+also keeps the row-group columns it decoded, per table instance, in a
+byte-bounded cache: reads answer as a fresh reader does at any budget,
+and close()/refresh() release the cached bytes."""
 
 import os
 
@@ -304,21 +307,132 @@ def _open_fds() -> int:
 def test_close_and_refresh_release_handles(spark, multirg_reader):
     from cuely_spark.queryengine import IndexReader
 
+    from cuely_spark.queryengine import executor
+
+    def cached_bytes(r):
+        # decoded row groups the reader's open tables hold
+        tokens = {t._token for t in vars(r).values()
+                  if isinstance(t, executor._PrunedTable)}
+        return sum(n for k, (_, n) in list(executor._decoded._lru.items())
+                   if k[0] in tokens)
+
     r = IndexReader(spark, multirg_reader.path)
     before = _open_fds()
     want = r.search_local("example website", k=20)
     held = _open_fds() - before
     assert held > 0  # posting + term-stats files stay open
+    tables = [t for t in vars(r).values()
+              if isinstance(t, executor._PrunedTable)]
+    assert cached_bytes(r) > 0
     r.close()
     assert _open_fds() == before
+    assert not any(k[0] in {t._token for t in tables}
+                   for k in list(executor._decoded._lru))
     for _ in range(20):
         r.refresh()
         d, s = r.search_local("example website", k=20)
         assert _open_fds() <= before + held
     assert d.tolist() == want[0].tolist()
     np.testing.assert_array_equal(s, want[1])
+    assert cached_bytes(r) > 0
     r.close()
     assert _open_fds() == before
+    assert cached_bytes(r) == 0
+
+
+def test_decoded_cache_over_budget_matches_fresh_reader(
+        spark, multirg_reader, monkeypatch):
+    """With the decoded-column budget below the index's working set,
+    one reader answers every query as a fresh reader does, while the
+    cache evicts and never holds more than its budget."""
+    from cuely_spark.queryengine import IndexReader, executor
+
+    budget = 24 * 1024
+    monkeypatch.setattr(executor, "_DECODED_CACHE_BYTES", budget)
+    cache = executor._decoded
+    ev0 = cache.stats()["evictions"]
+    r = IndexReader(spark, multirg_reader.path)
+    for q in list(QUERY_SET) * 2:
+        try:
+            got = r.search_local(q, k=20)
+        except ValueError:
+            continue  # empty query
+        assert cache.resident_bytes <= budget
+        fresh = IndexReader(spark, multirg_reader.path)
+        want = fresh.search_local(q, k=20)
+        fresh.close()
+        assert got[0].tolist() == want[0].tolist(), q
+        np.testing.assert_array_equal(got[1], want[1])
+    assert cache.stats()["evictions"] > ev0
+    r.close()
+
+
+class _CountingPool:
+    """Read pool stand-in that counts the tasks it is sent."""
+
+    def __init__(self, pool):
+        self.pool, self.tasks = pool, 0
+
+    def map(self, fn, items):
+        items = list(items)
+        self.tasks += len(items)
+        return self.pool.map(fn, items)
+
+
+def test_cached_read_sends_no_pool_task(multirg_reader, monkeypatch):
+    """A read whose (row group, column) pairs are all cached decodes
+    nothing; adding `positions` decodes only that column."""
+    from cuely_spark.queryengine import executor
+    from cuely_spark.queryengine.executor import (_POSTING_COLS,
+                                                  _PrunedTable)
+
+    pool = _CountingPool(executor._get_local_read_pool())
+    monkeypatch.setattr(executor, "_get_local_read_pool", lambda: pool)
+    cache = executor._decoded
+    pr = _PrunedTable(multirg_reader._postings_path, "term")
+    terms = ["example", "test", "website"]
+    first = pr.read(_POSTING_COLS, keys=terms)
+    assert pool.tasks > 0
+    pairs = sum(len(rgs) for _, rgs in pr._select(terms, None, None,
+                                                  None))
+    pool.tasks, m0, h0 = 0, cache.misses, cache.hits
+    again = pr.read(_POSTING_COLS, keys=terms)
+    assert pool.tasks == 0 and cache.misses == m0
+    assert cache.hits - h0 == pairs * (len(_POSTING_COLS) - 1)
+    assert _row_key(again) == _row_key(first)
+    with_pos = pr.read(_POSTING_COLS + ["positions"], keys=terms)
+    assert cache.misses - m0 == pairs  # the positions column only
+    assert _row_key(with_pos) == _row_key(first)
+    pr.close()
+
+
+def test_live_batch_invisible_until_refresh(spark, transcripts_small,
+                                            tmp_path):
+    """A reader's cached row groups belong to its snapshot: a live
+    batch committed after it stays invisible, and refresh() shows it
+    as a new reader does."""
+    from cuely_spark.queryengine import IndexReader
+    from cuely_spark.streaming import LiveIndexWriter
+
+    pdf = transcripts_small.drop(columns=["expected_doc_id"]).head(600)
+    root = str(tmp_path / "live")
+    w = LiveIndexWriter(spark, root)
+    w.process_batch(spark.createDataFrame(pdf.iloc[:300]), 0)
+    r = IndexReader(spark, root)
+    d0, s0, c0 = r.search_with_count("the", k=20, local=True)
+    w.process_batch(spark.createDataFrame(pdf.iloc[300:]), 1)
+    d1, s1, c1 = r.search_with_count("the", k=20, local=True)
+    assert d1.tolist() == d0.tolist() and int(c1) == int(c0)
+    np.testing.assert_array_equal(s1, s0)
+    r.refresh()
+    d2, s2, c2 = r.search_with_count("the", k=20, local=True)
+    fresh = IndexReader(spark, root)
+    want = fresh.search_with_count("the", k=20, local=True)
+    assert int(c2) > int(c0) and int(c2) == int(want[2])
+    assert d2.tolist() == want[0].tolist()
+    np.testing.assert_array_equal(s2, want[1])
+    r.close()
+    fresh.close()
 
 
 def test_gate_reader_cache_is_bounded(tmp_path, monkeypatch):
@@ -352,33 +466,46 @@ def test_gate_reader_cache_is_bounded(tmp_path, monkeypatch):
 def test_index_reads_go_through_one_reader():
     """Every driver-side index-table read in executor.py / explain.py
     goes through _PrunedTable; only the row-store filter scans (pushed-
-    down predicates on any column) keep pyarrow.dataset."""
+    down predicates on any column) keep pyarrow.dataset. Anywhere in
+    the package, row groups are decoded only inside _PrunedTable, so
+    its decoded-column cache sees every driver-local decode."""
     import ast
+    import glob
     import inspect
 
+    import cuely_spark
     from cuely_spark.queryengine import executor, explain
 
     allowed = {"_PrunedTable", "_search_all_local", "_range_lookup",
                "_cols_lookup", "_doclen_lookup"}
     banned = {("ds", "dataset"), ("pq", "ParquetFile"),
               ("pq", "read_table")}
+    decodes = {"read_row_group", "read_row_groups"}
     bad = []
 
-    def walk(node, scope):
+    def walk(node, scope, name, index_module):
         for ch in ast.iter_child_nodes(node):
             inner = scope
             if isinstance(ch, (ast.FunctionDef, ast.ClassDef)):
                 inner = scope + [ch.name]
-            if (isinstance(ch, ast.Call)
-                    and isinstance(ch.func, ast.Attribute)
-                    and isinstance(ch.func.value, ast.Name)
-                    and (ch.func.value.id, ch.func.attr) in banned
-                    and not allowed.intersection(scope)):
-                bad.append((mod.__name__, ch.lineno, ch.func.attr))
-            walk(ch, inner)
+            if isinstance(ch, ast.Call) and isinstance(ch.func,
+                                                       ast.Attribute):
+                f = ch.func
+                if (index_module and isinstance(f.value, ast.Name)
+                        and (f.value.id, f.attr) in banned
+                        and not allowed.intersection(scope)):
+                    bad.append((name, ch.lineno, f.attr))
+                if f.attr in decodes and "_PrunedTable" not in scope:
+                    bad.append((name, ch.lineno, f.attr))
+            walk(ch, inner, name, index_module)
 
-    for mod in (executor, explain):
-        walk(ast.parse(inspect.getsource(mod)), [])
+    pkg = os.path.dirname(cuely_spark.__file__)
+    files = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    index_modules = {inspect.getsourcefile(m) for m in (executor, explain)}
+    assert index_modules <= set(files)
+    for path in files:
+        with open(path) as f:
+            walk(ast.parse(f.read()), [], path, path in index_modules)
     assert not bad, bad
 
 

@@ -328,6 +328,58 @@ def test_phrase_and_pattern_on_one_pass_decode_equal_per_block():
     assert pattern_mask(new, every, [2, 2], False, False).any()
 
 
+def test_decode_reuse_equals_fresh_decode():
+    """lookup and positions_flat reuse a list's last decode when it
+    covers their blocks: any sequence of calls answers as a fresh list
+    does, and a phrase (conjunction, positions, fnids of the matches)
+    decodes each term's blocks once."""
+    from cuely_spark.queryengine.kernel import (TermPostings,
+                                                intersect_units, phrase_tf)
+
+    rng = np.random.default_rng(29)
+    tp, _ = _random_positional(rng)
+
+    def fresh():
+        return TermPostings.from_streams(
+            tp.first_doc, tp.last_doc, tp.ndocs, tp.docs, tp.tfs,
+            tp.fnids, positions=tp.positions)
+
+    all_docs = fresh().decode_blocks(np.arange(tp.nblocks))[0]
+    cands = [all_docs, all_docs[::3], all_docs[:40], all_docs[-1:],
+             np.sort(rng.choice(all_docs, size=60, replace=False)),
+             np.arange(all_docs[-1] + 1, all_docs[-1] + 9),
+             np.empty(0, dtype=np.int64)]
+    for i in rng.permutation(4 * len(cands)):
+        cand = cands[i % len(cands)]
+        if i % 2:
+            tf, fn, hit = tp.lookup(cand)
+            etf, efn, ehit = fresh().lookup(cand)
+            # tfs and fnids are defined where found
+            got = hit, tf[hit], fn[hit]
+            exp = ehit, etf[ehit], efn[ehit]
+        else:
+            got, exp = tp.positions_flat(cand), fresh().positions_flat(cand)
+        for g, e in zip(got, exp):
+            np.testing.assert_array_equal(g, e)
+
+    calls = []
+
+    class Counting(TermPostings):
+        __slots__ = ()
+
+        def decode_blocks(self, blocks):
+            calls.append(self)
+            return super().decode_blocks(blocks)
+
+    rows = _corpus_rows()
+    terms = ["alpha", "beta", "cafe"]
+    tps = [_tp_from_rows(rows[rows["term"] == t], Counting) for t in terms]
+    cand = intersect_units([("one", t) for t in tps])
+    tf = phrase_tf(tps, cand)
+    tps[0].lookup(cand[tf > 0])
+    assert tf.any() and len(calls) == len(set(calls)) == len(terms)
+
+
 def _blocks_of(stream):
     buf, off = stream
     return [bytes(buf[off[i]:off[i + 1]]) for i in range(off.size - 1)]

@@ -207,3 +207,19 @@ def test_live_seg_base_clears_existing_bulk_segments(spark, tmp_path):
     w2 = LiveIndexWriter(spark, str(root), text_col="text",
                          order_cols=("doc_id",))
     assert w2.state["seg_base"] == big + 1
+
+
+def test_live_writer_refuses_bulk_root(spark, transcripts_small, tmp_path):
+    """A bulk index keys its row store by per-segment offsets that live
+    batches do not extend (their turns would vanish from count("*"),
+    get_turn and every row-store read), and its doc ids would collide
+    with live ones: the writer refuses the root instead."""
+    from cuely_spark.indexer import build_index
+    from cuely_spark.streaming import LiveIndexWriter
+
+    root = str(tmp_path / "bulk")
+    pdf = transcripts_small.drop(columns=["expected_doc_id"]).head(400)
+    build_index(spark, spark.createDataFrame(pdf), root,
+                rows_per_segment=200)
+    with pytest.raises(ValueError, match="bulk or merged index"):
+        LiveIndexWriter(spark, root)
