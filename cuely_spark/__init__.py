@@ -25,6 +25,8 @@ MAX_TERMS_PER_QUERY = 32  # reference: crates/core/src/query/parser/mod.rs:17
 
 # every engine UDF imports this package, so the first task in each Spark
 # Python worker installs the worker set-up (a no-op on the driver)
-from ._worker import skip_unchanged_zip_rereads  # noqa: E402
+from ._worker import (freeze_import_heap,  # noqa: E402
+                      skip_unchanged_zip_rereads)
 
 skip_unchanged_zip_rereads()
+freeze_import_heap()

@@ -1137,6 +1137,7 @@ class IndexReader:
         # offset[segment] + __ord (offsets recorded at build time)
         self._offsets = self.stats.get("segment_offsets")
         self._postings_df = None
+        self._projections = {}  # positions flag -> posting projection
         self._turns_df = None
         self._segment_docs = None
 
@@ -1974,12 +1975,16 @@ class IndexReader:
 
     def _postings_for(self, terms: list[str], positions: bool = False):
         """Distributed posting scan pruned to `terms` (Catalyst pushes
-        the IN filter to Parquet row-group stats)."""
+        the IN filter to Parquet row-group stats). The column projection
+        is built once per snapshot and positions flag, so a query does
+        not resolve its columns again over py4j."""
         from pyspark.sql import functions as F
 
-        return (self.postings_df.filter(F.col("term").isin(list(terms)))
-                .select(*_POSTING_COLS,
-                        *(["positions"] if positions else [])))
+        proj = self._projections.get(positions)
+        if proj is None:
+            proj = self._projections[positions] = self.postings_df.select(
+                *_POSTING_COLS, *(["positions"] if positions else []))
+        return proj.filter(F.col("term").isin(list(terms)))
 
     def _shape(self, postings, est_blocks: int):
         """Small queries (few posting blocks): one task evaluating all

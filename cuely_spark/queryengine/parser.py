@@ -281,6 +281,12 @@ def _raw_split(q: str) -> list[str]:
         if c.isspace():
             i += 1
             continue
+        if q.startswith("--", i) and i + 2 < n and q[i + 2] in _QUOTES:
+            # an escaped-minus phrase (`--"a b"`): the `--` escape's
+            # literal `-` term, then the phrase as if it stood alone
+            out.append("--")
+            i += 2
+            continue
         # a quoted phrase, or a negated one (`-"a b"`), kept whole so
         # that parse_query can refuse it
         neg = c == "-" and i + 1 < n and q[i + 1] in _QUOTES

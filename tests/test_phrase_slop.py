@@ -48,6 +48,18 @@ def test_parser_negated_phrase_raises(q):
         parse_query(q)
 
 
+@pytest.mark.parametrize("q, phrase", [('a --"b c"', '"b c"'),
+                                       ('a --"b c"~2^3', '"b c"~2^3')])
+def test_parser_escaped_minus_phrase(q, phrase):
+    """`--"…"` keeps the phrase whole: the `--` escape's literal `-`
+    term (as `--b` gives `-` and `b`) plus the phrase with its glued
+    suffixes, as if the two stood apart."""
+    assert parse_query(q) == parse_query("a -- " + phrase)
+    pq = parse_query(q)
+    assert [(c.kind, c.tokens) for c in pq.clauses] == [
+        ("term", ("a",)), ("term", ("-",)), ("phrase", ("b", "c"))]
+
+
 def test_slop_widens_membership_monotonically():
     texts = [
         "scan the merge",        # distance 2 -> slop >= 1 matches

@@ -406,11 +406,13 @@ def test_cached_read_sends_no_pool_task(multirg_reader, monkeypatch):
     pr.close()
 
 
+@pytest.mark.parametrize("local", [True, False])
 def test_live_batch_invisible_until_refresh(spark, transcripts_small,
-                                            tmp_path):
-    """A reader's cached row groups belong to its snapshot: a live
-    batch committed after it stays invisible, and refresh() shows it
-    as a new reader does."""
+                                            tmp_path, local):
+    """A reader's cached row groups (local) and cached posting
+    projection (distributed) belong to its snapshot: a live batch
+    committed after it stays invisible, and refresh() shows it as a new
+    reader does."""
     from cuely_spark.queryengine import IndexReader
     from cuely_spark.streaming import LiveIndexWriter
 
@@ -419,15 +421,15 @@ def test_live_batch_invisible_until_refresh(spark, transcripts_small,
     w = LiveIndexWriter(spark, root)
     w.process_batch(spark.createDataFrame(pdf.iloc[:300]), 0)
     r = IndexReader(spark, root)
-    d0, s0, c0 = r.search_with_count("the", k=20, local=True)
+    d0, s0, c0 = r.search_with_count("the", k=20, local=local)
     w.process_batch(spark.createDataFrame(pdf.iloc[300:]), 1)
-    d1, s1, c1 = r.search_with_count("the", k=20, local=True)
+    d1, s1, c1 = r.search_with_count("the", k=20, local=local)
     assert d1.tolist() == d0.tolist() and int(c1) == int(c0)
     np.testing.assert_array_equal(s1, s0)
     r.refresh()
-    d2, s2, c2 = r.search_with_count("the", k=20, local=True)
+    d2, s2, c2 = r.search_with_count("the", k=20, local=local)
     fresh = IndexReader(spark, root)
-    want = fresh.search_with_count("the", k=20, local=True)
+    want = fresh.search_with_count("the", k=20, local=local)
     assert int(c2) > int(c0) and int(c2) == int(want[2])
     assert d2.tolist() == want[0].tolist()
     np.testing.assert_array_equal(s2, want[1])

@@ -1,8 +1,10 @@
 """Spark Python-worker set-up (cuely_spark._worker): a reused worker
 re-reads a zip archive's directory on importlib.invalidate_caches() only
-when the archive changed on disk; every other finder is still
-invalidated, and the driver is never patched."""
+when the archive changed on disk, every other finder is still
+invalidated, and the worker's import-time heap is frozen once, outside
+any import; the driver is never patched or frozen."""
 
+import gc
 import importlib
 import importlib.machinery
 import json
@@ -16,7 +18,8 @@ import zipimport
 import numpy as np
 import pytest
 
-from cuely_spark._worker import skip_unchanged_zip_rereads
+import cuely_spark._worker as worker_setup
+from cuely_spark._worker import freeze_import_heap, skip_unchanged_zip_rereads
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -113,6 +116,104 @@ def test_driver_is_not_patched(spark):
     spark.range(4, numPartitions=2).count()
     skip_unchanged_zip_rereads()
     assert not _patched()
+
+
+@pytest.fixture
+def freeze_hook(monkeypatch):
+    """Install the heap freeze as a Spark worker would, then drop the
+    hook and unfreeze the heap."""
+    from pyspark.core.files import SparkFiles
+
+    assert gc.get_freeze_count() == 0
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+    monkeypatch.setattr(worker_setup, "_freeze_installed", False)
+    hooks = list(gc.callbacks)
+    freeze_import_heap()
+    assert len(gc.callbacks) == len(hooks) + 1
+    yield hooks
+    gc.callbacks[:] = hooks
+    gc.unfreeze()
+
+
+def test_freeze_once_after_a_full_collection(freeze_hook):
+    gc.collect()
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    assert gc.callbacks == freeze_hook  # the hook removed itself
+    freeze_import_heap()  # a second install is a no-op
+    assert gc.callbacks == freeze_hook
+    gc.collect()
+    assert gc.get_freeze_count() <= frozen
+
+
+def test_no_freeze_during_an_import(freeze_hook, tmp_path, monkeypatch):
+    """A full collection that runs while a module body is executing
+    leaves the heap unfrozen; the next one outside the import freezes."""
+    (tmp_path / "collect_in_body.py").write_text(
+        "import gc\ngc.collect()\nFROZEN = gc.get_freeze_count()\n")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    monkeypatch.delitem(sys.modules, "collect_in_body", raising=False)
+    mod = importlib.import_module("collect_in_body")
+    assert mod.FROZEN == 0
+    assert len(gc.callbacks) == len(freeze_hook) + 1
+    gc.collect()
+    assert gc.get_freeze_count() > 0
+
+
+def test_driver_heap_is_not_frozen(spark):
+    import cuely_spark  # noqa: F401  (the install runs at import)
+
+    frozen, hooks = gc.get_freeze_count(), list(gc.callbacks)
+    freeze_import_heap()
+    spark.range(4, numPartitions=2).mapInArrow(
+        lambda batches: batches, "id long").count()
+    gc.collect()
+    assert gc.get_freeze_count() == frozen
+    assert gc.callbacks == hooks
+
+
+def test_reused_worker_collects_over_a_frozen_heap(spark, monkeypatch):
+    """In a reused worker, the tasks after the one that first imported
+    the engine run over a frozen heap: the daemon's post-task collect
+    walks under a tenth of the heap it walked after that first task."""
+    # a worker environment of its own gets a fresh worker pool, whose
+    # first task is the first to import the engine
+    monkeypatch.setitem(spark.sparkContext.environment,
+                        "CUELY_TEST_FRESH_WORKERS", "1")
+
+    def _probe(batches):
+        import gc
+        import os
+
+        import pyarrow as pa
+
+        import cuely_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()],
+            "frozen": [gc.get_freeze_count()],
+            "tracked": [len(gc.get_objects())],
+        })
+
+    tasks = {}
+    for _ in range(30):
+        row = (spark.range(1, numPartitions=1)
+               .mapInArrow(_probe, "pid long, frozen long, tracked long")
+               .collect()[0])
+        tasks.setdefault(row.pid, []).append(row)
+        if len(tasks[row.pid]) == 3:
+            break
+    assert len(tasks[row.pid]) == 3, "no Python worker ran three tasks"
+    first, second, third = tasks[row.pid]
+    assert second.frozen > 0 and third.frozen > 0, (second, third)
+    # the second task's own objects include the pyspark and jar zip
+    # directories that the worker re-reads once, on its first
+    # invalidation after the install: tuples the next collect untracks
+    assert third.tracked < (first.tracked + first.frozen) / 10, (
+        first, third)
+    assert gc.get_freeze_count() == 0  # the driver stays as it was
 
 
 def test_reused_worker_does_not_reread_pyspark_zip(spark):
