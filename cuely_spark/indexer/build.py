@@ -283,6 +283,21 @@ def _job_groups(segments: list[int], num_jobs: int) -> list[list[int]]:
     return [segments[i:i + size] for i in range(0, len(segments), size)]
 
 
+def _split_session(spark: SparkSession) -> SparkSession:
+    """A child of `spark` (same SparkContext, its own SQL conf) for the
+    stage-B read and write: the caller's runtime SQL conf, plus one
+    unsplittable task per input file."""
+    child = spark.newSession()
+    have = child.conf.getAll
+    for k, v in spark.conf.getAll.items():
+        if have.get(k) != v and spark.conf.isModifiable(k):
+            child.conf.set(k, v)
+    for k in ("spark.sql.files.maxPartitionBytes",
+              "spark.sql.files.openCostInBytes"):
+        child.conf.set(k, str(32 << 30))
+    return child
+
+
 def build_index(
     spark: SparkSession,
     df: DataFrame,
@@ -445,13 +460,12 @@ def build_index(
     # tasks and the per-task kernel would emit two partial copies of
     # that segment's postings. Pinning both knobs sky-high makes every
     # file its own unsplittable task: full width (num_segments >=
-    # slots in any real build) and no split hazard. Scoped to each
-    # job's build action and restored after — everything else (the
-    # tiny g-row reads, stage C, query scans) keeps the defaults.
-    _conf = spark.conf
-    _split_keys = ("spark.sql.files.maxPartitionBytes",
-                   "spark.sql.files.openCostInBytes")
-    _split_old = {k: _conf.get(k) for k in _split_keys}
+    # slots in any real build) and no split hazard. They are set on a
+    # child session that runs only the stage-B read and write (Spark
+    # ignores maxPartitionBytes as a reader option), so the caller's
+    # session — and every query running on it meanwhile — keeps its
+    # own values.
+    bspark = _split_session(spark)
 
     all_g: list = []
     for job_id, segs in enumerate(jobs):
@@ -461,7 +475,7 @@ def build_index(
             continue
         tj = time.time()
         src = (
-            spark.read.option("basePath", paths.turns)
+            bspark.read.option("basePath", paths.turns)
             .parquet(*[
                 os.path.join(paths.turns, f"segment_id={s}") for s in segs
             ])
@@ -473,16 +487,10 @@ def build_index(
         # small row groups: posting rows are term-sorted, so parquet
         # min/max stats on `term` prune a query's scan to the few row
         # groups holding its terms (the FST/skip-list role)
-        for k in _split_keys:
-            _conf.set(k, str(32 << 30))
-        try:
-            (rows.write.mode("overwrite")
-                 .option("parquet.block.size", posting_rg_bytes())
-                 .partitionBy("kind", "segment_id")
-                 .parquet(paths.index))
-        finally:
-            for k in _split_keys:
-                _conf.set(k, _split_old[k])
+        (rows.write.mode("overwrite")
+             .option("parquet.block.size", posting_rg_bytes())
+             .partitionBy("kind", "segment_id")
+             .parquet(paths.index))
         _mark(f"job{job_id}_segments")
         # job manifest: lineage + per-segment metrics. The g-rows are
         # read once per job (explicit per-segment dirs, no full-tree

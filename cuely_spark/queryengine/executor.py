@@ -16,22 +16,26 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    dead-clause detection, the posting-block estimate and the BM25
    weights built driver-side with global N / avg_fieldnorm (global-df
    contract: bm25.rs:84, SURVEY §4.1).
-3. posting scan: `index/kind=p` filtered by `term IN (...)` — Catalyst
-   pushes the filter to Parquet (row-group pruning on the sorted term
-   column), and only the needed columns are read (positions column is
-   skipped unless the query has a phrase).
-4. per-segment kernel: repartition(segment_id) + mapInArrow running
-   the numpy kernel (:mod:`.kernel`) — segment-local top-k, block-max
-   pruning, leapfrog AND, phrase verification. Every path turns
+3. posting read: the query's terms through :class:`_PrunedTable`
+   (row groups selected by their term min/max, each decoded once per
+   snapshot; the positions column only when the query has a phrase).
+   The driver-local path (`IndexReader.search_local`) reads the whole
+   index this way; a distributed query is a job over segment groups
+   (`IndexReader._posting_tasks`) whose tasks each read their own
+   group through a table resident in their Python worker
+   (:func:`_task_postings`), built from the snapshot's file list that
+   the driver ships with the plan. No Spark scan, no shuffle.
+4. kernel: the numpy kernel (:mod:`.kernel`) — top-k, block-max
+   pruning, leapfrog AND, phrase verification — runs once per posting
+   group: the whole index locally, a task's segments concatenated as
+   one logical segment, or one segment where a segment carries
+   meaning (a per-segment cap, the diversity greedy). Every path turns
    posting rows into TermPostings with ONE builder,
    :func:`_arrow_postings` (zero-copy views of the Arrow buffers, no
    Python object per row); the kernel decodes selected blocks in a
-   constant number of numpy calls. The shuffle moves only the query's
-   posting rows (KBs), never the corpus. The driver-local path
-   (`IndexReader.search_local`) makes the same kernel call once, over
-   the whole index as one logical segment.
+   constant number of numpy calls.
 5. global merge: orderBy(score desc, doc_id asc).limit(k) over the tiny
-   union of per-segment top-ks (reference: collector/top_docs.rs merge).
+   union of per-group top-ks (reference: collector/top_docs.rs merge).
 """
 
 from __future__ import annotations
@@ -39,17 +43,46 @@ from __future__ import annotations
 import itertools
 import os
 import weakref
+from collections import namedtuple
 from dataclasses import dataclass, field
 from functools import cached_property
 
 import numpy as np
+from pyspark.sql.types import (BooleanType, DoubleType, LongType,
+                               StringType, StructField, StructType)
 
 from .. import TOP_K_DEFAULT
+from .._worker import _on_worker
 from ..bm25 import Bm25FWeight, Bm25Weight
 from .kernel import (PhraseTps, TermPostings, count_matches, segment_topk,
                      union_topk)
 from .parser import (Clause, ParsedQuery, compound_alternatives,
                      parse_query)
+
+
+
+def _schema(ddl: str) -> StructType:
+    """StructType of a 'name type, ...' string, built without the py4j
+    DDL parse that a string schema costs on every request."""
+    types = {"long": LongType(), "double": DoubleType(),
+             "string": StringType(), "boolean": BooleanType()}
+    return StructType([StructField(n, types[t]) for n, t in
+                       (c.split() for c in ddl.split(","))])
+
+
+# mapInArrow output schemas
+_HITS = "doc_id long, score double, "
+_SEG_HITS_SCHEMA = _schema(_HITS + "segment_id long")
+_SEG_HITS_COUNT_SCHEMA = _schema(_HITS + "segment_id long, n long, "
+                                 "capped boolean")
+_QUERY_HITS_SCHEMA = _schema(_HITS + "query string")
+_QUERY_HITS_COUNT_SCHEMA = _schema(_HITS + "query string, n long, "
+                                   "capped boolean")
+_DOC_IDS_SCHEMA = _schema("doc_id long")
+_SIGNALS_SCHEMA = _schema("doc_id long, bm25 double, coverage double, "
+                          "idf_sum double")
+_CAPPED_COUNT_SCHEMA = _schema("n long, capped boolean")
+_TERM_DF_ED_SCHEMA = _schema("term string, df long, ed long")
 
 _POSTING_COLS = ["segment_id", "term", "block_id", "first_doc", "last_doc",
                  "ndocs", "docs", "tfs", "fnids",
@@ -151,13 +184,15 @@ _table_tokens = itertools.count()
 
 
 class _PrunedTable:
-    """Driver-local reader of one index table (postings, term stats,
-    fuzzy sidecar or row store) on any pyarrow filesystem. The file
-    list, each footer and each row group's min/max of the sort column
-    `key` are read once; a read decodes only the row groups that can
-    hold its keys, on the shared pool, and only the (row group,
-    column) pairs the process-wide :class:`_DecodedCache` does not
-    already hold for this instance.
+    """Reader of one index table (postings, term stats, fuzzy sidecar
+    or row store) on any pyarrow filesystem, on the driver and, through
+    :func:`_worker_table`, in Spark's Python workers. The file list
+    (`files`, else a listing of `path`), each footer and each row
+    group's min/max of the sort column `key` are read once; a read
+    decodes only the row groups that can hold its keys — on the shared
+    pool on the driver, on the task's thread in a worker — and only the
+    (row group, column) pairs the process-wide :class:`_DecodedCache`
+    does not already hold for this instance.
 
     A row group is read when some key lies inside its (min, max) — a
     containment test, so the result is right whatever the row order
@@ -176,7 +211,7 @@ class _PrunedTable:
     keep an open handle; the others are reopened per read from their
     cached footer."""
 
-    def __init__(self, path: str, key: str):
+    def __init__(self, path: str, key: str, files=None):
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyarrow import fs as pafs
@@ -188,20 +223,27 @@ class _PrunedTable:
         # entries of a table dropped without close() leave with it
         weakref.finalize(self, _decoded.drop, self._token)
         self._fs, root = fsio.resolve(path)
-        infos = self._fs.get_file_info(
-            pafs.FileSelector(root, recursive=True))
+
+        def rel(p):  # path components below the table root
+            return p[len(root.rstrip("/")) + 1:].split("/")
+
+        if files is None:
+            infos = self._fs.get_file_info(
+                pafs.FileSelector(root, recursive=True))
+            # Spark's _SUCCESS / .crc side files are not data
+            files = sorted(i.path for i in infos
+                           if i.type == pafs.FileType.File
+                           and i.base_name.endswith(".parquet")
+                           and not any(c.startswith(("_", "."))
+                                       for c in rel(i.path)))
+        if not files:
+            raise FileNotFoundError(f"no parquet files under {path}")
         # (path, segment_id partition value or None, footer, key
         # min/max per row group — None when a group has no statistics)
         self._files: list[tuple] = []
         self._open: dict[int, pq.ParquetFile] = {}
-        for info in sorted(infos, key=lambda i: i.path):
-            rel = info.path[len(root.rstrip("/")) + 1:].split("/")
-            # Spark's _SUCCESS / .crc side files are not data
-            if (info.type != pafs.FileType.File
-                    or not info.base_name.endswith(".parquet")
-                    or any(c.startswith(("_", ".")) for c in rel)):
-                continue
-            pf = pq.ParquetFile(info.path, filesystem=self._fs)
+        for fpath in files:
+            pf = pq.ParquetFile(fpath, filesystem=self._fs)
             md = pf.metadata
             if len(self._open) < _LOCAL_FILE_CAP:
                 self._open[len(self._files)] = pf
@@ -214,12 +256,9 @@ class _PrunedTable:
             bounds = ([(st.min, st.max) for st in stats]
                       if all(st is not None and st.has_min_max
                              for st in stats) else None)
-            seg = [int(c.split("=", 1)[1]) for c in rel
+            seg = [int(c.split("=", 1)[1]) for c in rel(fpath)
                    if c.startswith("segment_id=")]
-            self._files.append(
-                (info.path, seg[0] if seg else None, md, bounds))
-        if not self._files:
-            raise FileNotFoundError(f"no parquet files under {path}")
+            self._files.append((fpath, seg[0] if seg else None, md, bounds))
         self.schema = self._files[0][2].schema.to_arrow_schema()
         if self._files[0][1] is not None:
             self.schema = self.schema.append(
@@ -245,6 +284,8 @@ class _PrunedTable:
         import bisect
 
         tasks = []
+        if segments is not None:
+            segments = set(segments)
         for n, (_, seg, md, bounds) in enumerate(self._files):
             if segments is not None and seg not in segments:
                 continue
@@ -315,9 +356,11 @@ class _PrunedTable:
             if miss:
                 todo.setdefault(n, []).append((j, i, miss))
         if todo:
-            for (n, v), tbls in zip(
-                    todo.items(),
-                    _get_local_read_pool().map(self._decode, todo.items())):
+            # a Spark worker decodes on its task's thread: Spark already
+            # runs one task per core
+            fmap = map if _on_worker() else _get_local_read_pool().map
+            for (n, v), tbls in zip(todo.items(),
+                                    fmap(self._decode, todo.items())):
                 for (j, i, miss), t in zip(v, tbls):
                     for c in miss:
                         got[j * nc + fcols.index(c)] = t[c]
@@ -345,6 +388,28 @@ class _PrunedTable:
             tbl = tbl.filter(pc.and_(pc.greater_equal(col, lo),
                                      pc.less(col, hi)))
         return tbl.select(cols)
+
+
+#: posting tables one Spark Python worker keeps open (:func:`_worker_table`)
+_WORKER_TABLES = 4
+_worker_tables: dict = {}
+
+
+def _worker_table(root: str, files: tuple) -> _PrunedTable:
+    """This process's posting table of one reader snapshot, keyed by
+    (root, file list) and built from that list, never from a listing:
+    a task cannot see files committed after its reader's snapshot. A
+    reused Spark worker serves later tasks of the snapshot from the
+    table's decoded row groups; the least recently used table past
+    `_WORKER_TABLES` is closed, dropping its cache entries."""
+    key = (root, files)
+    table = _worker_tables.pop(key, None)
+    if table is None:
+        table = _PrunedTable(root, "term", files=files)
+    _worker_tables[key] = table
+    while len(_worker_tables) > _WORKER_TABLES:
+        _worker_tables.pop(next(iter(_worker_tables))).close()
+    return table
 
 
 class Count:
@@ -547,11 +612,11 @@ def _arrow_postings(tbl, per_segment: bool = True):
 
 
 def _concat_arrow_postings(tbl):
-    """{term: TermPostings} over the whole index as ONE logical segment,
-    the driver-local read's only grouping. One kernel invocation then
-    prunes across the whole index: the block-max threshold converges
-    once instead of once per segment, removing the per-segment loop AND
-    most block decodes."""
+    """{term: TermPostings} over the posting rows of the whole index
+    (driver-local read) or of one task's segment group as ONE logical
+    segment. One kernel invocation then prunes across all of them: the
+    block-max threshold converges once instead of once per segment,
+    removing the per-segment loop AND most block decodes."""
     return _arrow_postings(tbl, per_segment=False).get(None, {})
 
 
@@ -852,12 +917,27 @@ def _matcher_spec(m, by_term, empty_tp, doclen_fn=None):
                     for x in v])
 
 
-def _doclen_lookup(index_path: str, seg: int | None):
+def _seg_ids(seg) -> tuple:
+    """The segment ids of a posting group key: one id, or a task
+    group's tuple of ids (:func:`_task_postings`)."""
+    return (seg,) if isinstance(seg, int) else tuple(seg)
+
+
+def _row_dirs(ssrc: dict | None, seg) -> list[int]:
+    """Row-store dirs of the segments `seg` names (a merged index's
+    row store keeps its source segments, `ssrc`)."""
+    return [d for s in _seg_ids(seg)
+            for d in (ssrc.get(s, [s]) if ssrc else [s])]
+
+
+def _doclen_lookup(index_path: str, seg):
     """cand -> doclen int64 array (-1 = unknown) via a pyarrow read of
-    the kind='d' doc stats of segment `seg` (every segment when None)
-    — the reference's num_tokens columnfield analog
+    the kind='d' doc stats of the segments `seg` names (every segment
+    when None) — the reference's num_tokens columnfield analog
     (pattern_query/scorer.rs:320-333 reads it for end-anchor checks).
     Partition-pruned columnar scan, read once per (group, query)."""
+    import pyarrow as pa
+
     cache: dict = {}
 
     def fn(cand):
@@ -865,10 +945,12 @@ def _doclen_lookup(index_path: str, seg: int | None):
             import pyarrow.dataset as ds
 
             p = os.path.join(index_path, "index", "kind=d")
-            if seg is not None:
-                p = os.path.join(p, f"segment_id={seg}")
-            tbl = ds.dataset(p, format="parquet").to_table(
-                columns=["doc_id", "doclen"])
+            dirs = ([p] if seg is None else
+                    [os.path.join(p, f"segment_id={s}")
+                     for s in _seg_ids(seg)])
+            tbl = pa.concat_tables(
+                ds.dataset(d, format="parquet").to_table(
+                    columns=["doc_id", "doclen"]) for d in dirs)
             ids = np.asarray(tbl["doc_id"].to_numpy(), dtype=np.int64)
             dls = np.asarray(tbl["doclen"].to_numpy(), dtype=np.int64)
             o = np.argsort(ids)
@@ -960,15 +1042,12 @@ def _est_blocks(dfs) -> int:
 
 
 def _range_fns(plan: QueryPlan, seg):
-    """The kernel's range_fns for one segment, or for every segment
-    when `seg` is None (None without filters)."""
+    """The kernel's range_fns for the segments `seg` names, or for
+    every segment when `seg` is None (None without filters)."""
     if plan.rng_ctx is None:
         return None
     troot, ssrc, offs, every = plan.rng_ctx
-    if seg is None:
-        dirs = every
-    else:
-        dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
+    dirs = every if seg is None else _row_dirs(ssrc, seg)
     return [_range_lookup(troot, dirs, plan.range_specs, offs,
                           exists_specs=plan.exists_specs)]
 
@@ -990,8 +1069,9 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
                 with_count: bool = False, max_docs: int | None = None,
                 seg_docs: dict | None = None):
     """Evaluate one planned query over one posting group ({term:
-    TermPostings} of segment `seg`, or of the whole index as one
-    logical segment when `seg` is None) -> (docs, scores, n, capped),
+    TermPostings} of segment `seg`, of a task's segment group as one
+    logical segment when `seg` is a tuple of ids, or of the whole index
+    when `seg` is None) -> (docs, scores, n, capped),
     the top-k in (score desc, doc_id asc) order; n is the hit count
     when `with_count` (else 0). The one kernel call shared by the
     local and distributed executors and by search_many.
@@ -1040,16 +1120,34 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
     return docs, scores, n, capped
 
 
-def _batch_groups(batches):
-    """(segment_id, {term: TermPostings}) groups of one mapInArrow
-    partition: ONE arrow table per partition, no per-group pandas
-    machinery (at 640 segments the applyInPandas per-group overhead
-    alone cost ~1.5 s per query)."""
-    import pyarrow as pa
+#: what a posting job ships in its closure: the snapshot (posting root,
+#: file list), the sorted posting terms, the positions flag and each
+#: task's segment group (:meth:`IndexReader._posting_tasks`)
+_PostingTasks = namedtuple("_PostingTasks",
+                           "root files terms positions groups")
 
-    bl = [b for b in batches if b.num_rows]
-    if bl:
-        yield from _arrow_postings(pa.Table.from_batches(bl)).items()
+
+def _task_postings(ctx: _PostingTasks, batches, per_segment: bool):
+    """(seg, {term: TermPostings}) of the segment group each row of a
+    task's `batches` numbers, read through this process's table of the
+    snapshot (:func:`_worker_table`): the posting input of every
+    distributed closure. per_segment: one item per segment, keyed by
+    its id, where a segment carries meaning (a per-segment cap, the
+    diversity greedy, the meta join's segment tag). Otherwise one item
+    keyed by the group's tuple of ids, its segments concatenated as
+    one logical segment, as on the local path."""
+    table = _worker_table(ctx.root, ctx.files)
+    cols = _POSTING_COLS + (["positions"] if ctx.positions else [])
+    for b in batches:
+        for g in b.column(0).to_pylist():
+            segs = ctx.groups[g]
+            tbl = table.read(cols, keys=ctx.terms, segments=segs)
+            if tbl.num_rows == 0:
+                continue
+            if per_segment:
+                yield from _arrow_postings(tbl).items()
+            else:
+                yield segs, _concat_arrow_postings(tbl)
 
 
 def _hit_batch(parts, tag_col: str, with_count: bool):
@@ -1088,15 +1186,17 @@ def _hit_batch(parts, tag_col: str, with_count: bool):
 class IndexReader:
     """Point-in-time snapshot of an index (tantivy Searcher semantics:
     a reader sees the segments committed when it was opened). Stats are
-    read at __init__ and the file listings of the postings and
-    row-store DataFrames freeze on first use — segments added later by
-    a LiveIndexWriter are NOT visible. After live batches, call
+    read at __init__; the posting file list (:meth:`_snapshot`, which
+    the driver-local table and every distributed task read) and the
+    row-store DataFrame's listing freeze on first use — segments added
+    later by a LiveIndexWriter are NOT visible. After live batches, call
     :meth:`refresh` or construct a new reader (the reference reloads
     its reader on commit,
     crates/core/src/inverted_index/indexing.rs:65-75)."""
 
     #: queries whose estimated posting-block count is at or below this
-    #: run in ONE task (coordinator path); above it, per-segment fanout.
+    #: run in ONE task (coordinator path); above it, one task per
+    #: segment group (:meth:`_posting_tasks`).
     small_query_blocks: int = 4096
 
     #: search_collect() runs queries at or below this many estimated
@@ -1136,15 +1236,18 @@ class IndexReader:
         # stage-A-written turns carry (__ord, segment_id); doc_id is
         # offset[segment] + __ord (offsets recorded at build time)
         self._offsets = self.stats.get("segment_offsets")
-        self._postings_df = None
-        self._projections = {}  # positions flag -> posting projection
+        self._posting_files = None  # frozen at the first table open
+        self._task_shapes = {}  # fan-out flag -> (task DataFrame, groups)
         self._turns_df = None
         self._segment_docs = None
 
     # driver-local readers of the index tables, opened on first use
     @cached_property
     def _local_pruned(self) -> _PrunedTable:
-        return _PrunedTable(self._postings_path, "term")
+        t = _PrunedTable(self._postings_path, "term",
+                         files=self._posting_files)
+        self._posting_files = tuple(f for f, *_ in t._files)
+        return t
 
     @cached_property
     def _term_table(self) -> _PrunedTable:
@@ -1172,16 +1275,12 @@ class IndexReader:
                      "_turns_table"):
             self._drop_table(name)
 
-    @property
-    def postings_df(self):
-        """Lazy, cached postings DataFrame: parquet schema inference
-        costs ~100 ms per spark.read call — pay it once per reader, not
-        once per query. Freezes the file listing: see the class
-        docstring's snapshot contract."""
-        if self._postings_df is None:
-            self._postings_df = self.spark.read.parquet(
-                self._postings_path)
-        return self._postings_df
+    def _snapshot(self) -> tuple:
+        """(posting files, segment ids) of this reader's snapshot,
+        listed at the first table open and kept across close(): the
+        local table and every distributed task read these files."""
+        segs = tuple(self._local_pruned.segments)
+        return self._posting_files, segs
 
     def refresh(self) -> "IndexReader":
         """Re-open the snapshot: pick up segments/stats committed after
@@ -1195,7 +1294,7 @@ class IndexReader:
         """Lazy, cached row store with a doc_id column, whatever the id
         mode: the listing, schema inference and (offsets mode) the
         offsets join cost ~0.3 s per spark.read, so pay them once per
-        snapshot, as :attr:`postings_df` does. Reset by :meth:`refresh`."""
+        snapshot. Reset by :meth:`refresh`."""
         if self._turns_df is None:
             from pyspark.sql import functions as F
 
@@ -1419,8 +1518,10 @@ class IndexReader:
                                  & (F.col("term") < prefix + _MAX_CHAR))
 
         if self._term_table.num_rows(**rng) > self.vocab_scan_threshold:
-            return self._distributed_expansion(match_fn, prefilter, cap,
-                                               allow_ns=allow_ns)
+            rows = self._distributed_dictionary(
+                lambda ts: np.where(match_fn(ts), 0, -1), prefilter, cap,
+                allow_ns=allow_ns)
+            return [r["term"] for r in rows]
         best: list[tuple[int, str]] = []
         for batch in self._term_table.read(["term", "df"],
                                            **rng).to_batches():
@@ -1441,10 +1542,13 @@ class IndexReader:
                 best = sorted(best + pairs)[:cap]
         return [t for _, t in best]
 
-    def _distributed_expansion(self, match_fn, prefilter,
-                               cap: int,
-                               allow_ns: str | None = None) -> list[str]:
-        """Executor-side expansion for extreme vocabularies."""
+    def _distributed_dictionary(self, rank_fn, prefilter, limit: int,
+                                allow_ns: str | None = None) -> list:
+        """Executor-side dictionary scan for extreme vocabularies:
+        `rank_fn` gives each term an int rank (-1 = no match) and only
+        the first `limit` (term, df, ed=rank) rows by (rank asc, df
+        desc, term asc) reach the driver. Shadow/attribute namespaces
+        are skipped, except `allow_ns`."""
         from pyspark.sql import functions as F
 
         df = (self.spark.read.parquet(self._term_stats_path)
@@ -1463,19 +1567,19 @@ class IndexReader:
                 if b.num_rows == 0:
                     continue
                 terms = b["term"].to_pylist()
-                m = np.asarray(match_fn(terms), dtype=bool)
+                rank = np.asarray(rank_fn(terms), dtype=np.int64)
+                m = rank >= 0
                 if m.any():
                     dfv = b["df"].to_numpy(
                         zero_copy_only=False).astype(np.int64)
                     yield pa.record_batch(
                         [pa.array([t for t, k in zip(terms, m) if k]),
-                         pa.array(dfv[m])],
-                        names=["term", "df"])
+                         pa.array(dfv[m]), pa.array(rank[m])],
+                        names=["term", "df", "ed"])
 
-        rows = (df.mapInArrow(match, schema="term string, df long")
-                .orderBy(F.desc("df"), F.asc("term")).limit(cap)
-                .collect())
-        return [r["term"] for r in rows]
+        return (df.mapInArrow(match, schema=_TERM_DF_ED_SCHEMA)
+                .orderBy(F.asc("ed"), F.desc("df"), F.asc("term"))
+                .limit(limit).collect())
 
     def prefix_terms(self, prefix: str,
                      cap: int | None = None) -> list[str]:
@@ -1625,37 +1729,13 @@ class IndexReader:
                              > self.vocab_scan_threshold):
             from pyspark.sql import functions as F
 
-            df = (self.spark.read.parquet(self._term_stats_path)
-                  .select("term", "df")
-                  .filter(~F.col("term").contains(":"))
-                  .filter(F.length("term").between(
-                      len(token) - d, len(token) + d)))
+            def rank(terms):
+                eds = _lev_eds(terms, token, d, transpose=transpositions)
+                return np.where(eds <= d, eds, -1)
 
-            def match(batches):
-                import pyarrow as pa
-
-                for b in batches:
-                    if b.num_rows == 0:
-                        continue
-                    terms = b["term"].to_pylist()
-                    eds = _lev_eds(terms, token, d,
-                                   transpose=transpositions)
-                    m = eds <= d
-                    if m.any():
-                        dfv = b["df"].to_numpy(
-                            zero_copy_only=False).astype(np.int64)
-                        yield pa.record_batch(
-                            [pa.array([t for t, kp in
-                                       zip(terms, m) if kp]),
-                             pa.array(dfv[m]), pa.array(eds[m])],
-                            names=["term", "df", "ed"])
-
-            rows = (df.mapInArrow(
-                        match,
-                        schema="term string, df long, ed long")
-                    .orderBy(F.asc("ed"), F.desc("df"),
-                             F.asc("term"))
-                    .limit(k + 1).collect())
+            rows = self._distributed_dictionary(
+                rank, lambda df: df.filter(F.length("term").between(
+                    len(token) - d, len(token) + d)), k + 1)
             ranked = [(int(r["ed"]), -int(r["df"]), r["term"])
                       for r in rows if r["term"] != token]
         else:
@@ -1973,32 +2053,32 @@ class IndexReader:
             thr //= self.local_phrase_divisor
         return plan.est_blocks <= thr
 
-    def _postings_for(self, terms: list[str], positions: bool = False):
-        """Distributed posting scan pruned to `terms` (Catalyst pushes
-        the IN filter to Parquet row-group stats). The column projection
-        is built once per snapshot and positions flag, so a query does
-        not resolve its columns again over py4j."""
-        from pyspark.sql import functions as F
-
-        proj = self._projections.get(positions)
-        if proj is None:
-            proj = self._projections[positions] = self.postings_df.select(
-                *_POSTING_COLS, *(["positions"] if positions else []))
-        return proj.filter(F.col("term").isin(list(terms)))
-
-    def _shape(self, postings, est_blocks: int):
-        """Small queries (few posting blocks): one task evaluating all
-        segments beats a per-segment shuffle fanout — the coordinator-
-        handles-small-queries path; coalesce(1) folds the (pruned,
-        KB-scale) scan and the kernel into ONE stage with no exchange.
-        Large queries fan out hash-partitioned on segment_id (scales
-        with the cluster) via repartition, which keeps the parallel
-        scan."""
-        from pyspark.sql import functions as F
-
-        if est_blocks <= self.small_query_blocks:
-            return postings.coalesce(1)
-        return postings.repartition(F.col("segment_id"))
+    def _posting_tasks(self, terms, positions: bool, est_blocks: int):
+        """(task DataFrame, :data:`_PostingTasks`) of one distributed
+        posting job: like the reference's distributed searcher, each
+        task gets the query and reads its own segments in its Python
+        worker (:func:`_task_postings`). At or below
+        `small_query_blocks` estimated blocks one task holds every
+        segment; above, each segment is a group, or each run of
+        segments when there are more than task slots. The tasks are a
+        range with one row per group, built once per snapshot and
+        shape: no scan to plan, no shuffle."""
+        files, segs = self._snapshot()
+        fanout = est_blocks > self.small_query_blocks
+        shape = self._task_shapes.get(fanout)
+        if shape is None:
+            groups = (segs,)
+            if fanout and len(segs) > 1:
+                n = min(len(segs),
+                        self.spark.sparkContext.defaultParallelism)
+                groups = tuple(tuple(int(x) for x in g) for g in
+                               np.array_split(np.asarray(segs), n))
+            shape = self._task_shapes[fanout] = (
+                self.spark.range(0, len(groups), 1, len(groups)), groups)
+        tasks, groups = shape
+        return tasks, _PostingTasks(self._postings_path, files,
+                                    tuple(sorted(set(terms))),
+                                    bool(positions), groups)
 
     # ------------------------------------------------------------------
     def search(self, query: str | ParsedQuery, k: int = TOP_K_DEFAULT,
@@ -2062,30 +2142,36 @@ class IndexReader:
                                     _count_rows=_count_rows)
         if plan.dead:
             return None if _count_rows else self._empty_result()
-        seg_k = k + offset  # each segment must surface the skipped page
+        seg_k = k + offset  # each group must surface the skipped page
         cap = max_docs_per_segment
+        # the cap is per segment, and the meta join prunes the row store
+        # by each hit's segment; otherwise a task's segments are one
+        # logical segment (segment tag -1)
+        per_seg = cap is not None or with_meta
         # tiny dict in the closure (the kernel closure must not capture
         # self: unpicklable SparkSession)
         seg_docs = (self.segment_docs
                     if _count_rows and cap is not None else None)
+        tasks, ctx = self._posting_tasks(plan.terms, plan.positions,
+                                         plan.est_blocks)
 
         def run_arrow(batches):
-            # _count_rows: each segment emits its top-k hit rows plus
+            # _count_rows: each group emits its top-k hit rows plus
             # ONE sentinel count row — the reference's (Count|
             # ApproxCount, TopDocs) tuple collector,
             # crates/core/src/inverted_index/search.rs:47-95
-            parts = [(seg,) + _eval_group(plan, by_term, seg, seg_k,
-                                          _count_rows, cap, seg_docs)
-                     for seg, by_term in _batch_groups(batches)]
+            parts = [(seg if per_seg else -1,)
+                     + _eval_group(plan, by_term, seg, seg_k,
+                                   _count_rows, cap, seg_docs)
+                     for seg, by_term in _task_postings(ctx, batches,
+                                                        per_seg)]
             batch = _hit_batch(parts, "segment_id", _count_rows)
             if batch is not None:
                 yield batch
 
-        hits = self._shape(self._postings_for(plan.terms, plan.positions),
-                           plan.est_blocks).mapInArrow(
-            run_arrow,
-            schema="doc_id long, score double, segment_id long"
-                   + (", n long, capped boolean" if _count_rows else ""))
+        hits = tasks.mapInArrow(
+            run_arrow, schema=(_SEG_HITS_COUNT_SCHEMA if _count_rows
+                               else _SEG_HITS_SCHEMA))
         if _count_rows:
             return hits
         return self._topk_tail(hits, k, offset, with_meta)
@@ -2164,39 +2250,36 @@ class IndexReader:
             cand = (cand.join(F.broadcast(m), "segment_id")
                     .drop("segment_id")
                     .withColumnRenamed("__kseg", "segment_id"))
-        neg_terms = [t for g in plan.neg_groups for t in g]
-        if neg_terms:
-            docs = self._term_docs_df(neg_terms)
-            for g in plan.neg_groups:
-                grp = None
-                for t in g:
-                    dt = (docs.filter(F.col("term") == t)
-                          .select("doc_id"))
-                    grp = dt if grp is None else grp.join(dt, "doc_id")
-                if grp is not None:
-                    cand = cand.join(grp, "doc_id", "left_anti")
+        if plan.neg_groups:
+            cand = cand.join(self._negated_docs_df(plan.neg_groups),
+                             "doc_id", "left_anti")
         return cand
 
-    def _term_docs_df(self, terms: list[str]):
-        """(term, doc_id) DataFrame: decoded posting doc ids for the
-        given terms — a distributed decode of only those terms' blocks
-        (the postings scan is pruned by the term IN filter, so the
-        work is O(matching postings), never corpus-sized)."""
-        from pyspark.sql import functions as F
+    def _negated_docs_df(self, groups: list):
+        """(doc_id) DataFrame of the docs holding every key of some
+        MustNot group: a distributed decode of only those terms' blocks
+        (each task reads only their row groups, so the work is
+        O(matching postings), never corpus-sized)."""
+        from functools import reduce
+
+        terms = [t for g in groups for t in g]
+        tasks, ctx = self._posting_tasks(
+            terms, False, _est_blocks(self.term_dfs(terms).values()))
 
         def run(batches):
             import pyarrow as pa
 
-            for _seg, by_term in _batch_groups(batches):
-                for t, tp in by_term.items():
-                    dd = tp.decode_blocks(np.arange(tp.nblocks))[0]
-                    yield pa.record_batch(
-                        [pa.array([t] * dd.size),
-                         pa.array(dd.astype(np.int64))],
-                        names=["term", "doc_id"])
+            for _segs, by_term in _task_postings(ctx, batches, False):
+                docs = {t: tp.decode_blocks(np.arange(tp.nblocks))[0]
+                        for t, tp in by_term.items()}
+                for g in groups:
+                    if all(t in docs for t in g):
+                        hit = reduce(np.intersect1d, [docs[t] for t in g])
+                        yield pa.record_batch(
+                            [pa.array(hit.astype(np.int64))],
+                            names=["doc_id"])
 
-        return (self._postings_for(terms).repartition(F.col("segment_id"))
-                .mapInArrow(run, schema="term string, doc_id long"))
+        return tasks.mapInArrow(run, schema=_DOC_IDS_SCHEMA)
 
     def _search_all(self, plan: QueryPlan, k: int, offset: int,
                     with_meta: bool, _count_rows: bool = False):
@@ -2234,9 +2317,7 @@ class IndexReader:
                                    False)], "segment_id", True)
 
             return cand.select("doc_id").mapInArrow(
-                run_count,
-                schema="doc_id long, score double, segment_id long, "
-                       "n long, capped boolean")
+                run_count, schema=_SEG_HITS_COUNT_SCHEMA)
         local = cand.withColumn("score", F.lit(float(score)))
         return self._topk_tail(local, k, offset, with_meta)
 
@@ -2280,8 +2361,6 @@ class IndexReader:
         matching contributions, coverage = matched-terms fraction,
         idf_sum = sum of matched idfs. Feed into blend_signals for
         beyond-BM25 ranking (coefficient table signals/core/text.rs)."""
-        from pyspark.sql import functions as F
-
         pq = self._parse(query)
         if any(c.kind != "term" for c in pq.clauses):
             raise ValueError("signals() takes simple term queries "
@@ -2289,6 +2368,8 @@ class IndexReader:
         terms = [c.tokens[0] for c in pq.positive]
         dfs = self.term_dfs(terms)
         weights = self._weights(pq, dfs, dtype)
+        tasks, ctx = self._posting_tasks(terms, False,
+                                         _est_blocks(dfs.values()))
 
         def run_arrow(batches):
             import pyarrow as pa
@@ -2296,28 +2377,16 @@ class IndexReader:
             from .kernel import compute_signals
 
             empty_tp = TermPostings([], [], [], [], [], [])
-            out = {"doc_id": [], "bm25": [], "coverage": [],
-                   "idf_sum": []}
-            for _seg, by_term in _batch_groups(batches):
-                specs = [(by_term.get(t, empty_tp), weights[t])
-                         for t in terms]
-                docs, bm25, cov, idf = compute_signals(specs,
-                                                       dtype=dtype)
-                out["doc_id"].append(docs.astype(np.int64))
-                out["bm25"].append(bm25.astype(np.float64))
-                out["coverage"].append(cov.astype(np.float64))
-                out["idf_sum"].append(idf.astype(np.float64))
-            if not out["doc_id"]:
-                return
-            yield pa.record_batch(
-                [pa.array(np.concatenate(out[c]))
-                 for c in ("doc_id", "bm25", "coverage", "idf_sum")],
-                names=["doc_id", "bm25", "coverage", "idf_sum"])
+            for _segs, by_term in _task_postings(ctx, batches, False):
+                docs, *sig = compute_signals(
+                    [(by_term.get(t, empty_tp), weights[t])
+                     for t in terms], dtype=dtype)
+                yield pa.record_batch(
+                    [pa.array(docs.astype(np.int64))]
+                    + [pa.array(x.astype(np.float64)) for x in sig],
+                    names=_SIGNALS_SCHEMA.names)
 
-        return (self._postings_for(terms).repartition(F.col("segment_id"))
-                .mapInArrow(run_arrow,
-                            schema="doc_id long, bm25 double, "
-                                   "coverage double, idf_sum double"))
+        return tasks.mapInArrow(run_arrow, schema=_SIGNALS_SCHEMA)
 
     def search_bm25f(self, query: str | ParsedQuery,
                      k: int = TOP_K_DEFAULT, dtype=np.float32,
@@ -2354,9 +2423,9 @@ class IndexReader:
                     with_count: bool = False):
         """Evaluate MANY queries in ONE Spark job — queries as data.
 
-        One postings scan filtered by the union of all query terms; each
-        segment kernel builds its TermPostings once and evaluates every
-        query against them; a windowed global merge ranks per query.
+        One posting job over the union of all query terms; each task
+        builds its TermPostings once and evaluates every query against
+        them; a windowed global merge ranks per query.
         Amortizes the per-job overhead that dominates single-query
         latency in local mode (the analog of the reference's
         shard-parallel query fan-out, but across the query set).
@@ -2439,10 +2508,17 @@ class IndexReader:
                                           for _, md in jobs.values())
                     else None)
 
+        # a per-query ShortCircuit cap is per segment
+        per_seg = any(md is not None for _, md in jobs.values())
+        terms = {t for p in live.values() for t in p.terms}
+        tasks, ctx = self._posting_tasks(
+            terms, any(p.positions for p in live.values()),
+            _est_blocks(dfs[t] for t in terms))
+
         def run_arrow(batches):
-            # the whole query set per segment group
+            # the whole query set per posting group
             parts = []
-            for seg, by_term in _batch_groups(batches):
+            for seg, by_term in _task_postings(ctx, batches, per_seg):
                 for name, plan in live.items():
                     off, md = jobs[name]
                     parts.append((name,) + _eval_group(
@@ -2452,13 +2528,9 @@ class IndexReader:
             if batch is not None:
                 yield batch
 
-        postings = self._postings_for(
-            sorted({t for p in live.values() for t in p.terms}),
-            any(p.positions for p in live.values()))
-        local = postings.repartition(F.col("segment_id")).mapInArrow(
-            run_arrow,
-            schema="doc_id long, score double, query string"
-                   + (", n long, capped boolean" if with_count else ""))
+        local = tasks.mapInArrow(
+            run_arrow, schema=(_QUERY_HITS_COUNT_SCHEMA if with_count
+                               else _QUERY_HITS_SCHEMA))
         if with_count:
             # fold the sentinel rows into per-query totals inside the
             # SAME per-query shuffle the ranking window already pays
@@ -2728,71 +2800,55 @@ class IndexReader:
         look_cols = pen_cols + ([sim_col] if sim_col else [])
         kk = int(k)
         hk = int(hamming_k)
+        tasks, ctx = self._posting_tasks(plan.terms, plan.positions,
+                                         plan.est_blocks)
+
+        names = ["doc_id", "score", "sim"] + [f"b{ci}" for ci in
+                                              range(len(pen_cols))]
 
         def run_arrow(batches):
             import pyarrow as pa
             import pyarrow.compute as pc
 
-            d_o, s_o, g_o = [], [], []
-            sim_o = []
-            b_o: list[list] = [[] for _ in pen_cols]
-            for seg, by_term in _batch_groups(batches):
+            parts = []
+            for seg, by_term in _task_postings(ctx, batches, True):
                 # full per-segment candidate set (bounded by the
                 # considered-docs cap), scored and sorted
                 docs, scores, _n, _c = _eval_group(plan, by_term, seg,
                                                    1 << 62, max_docs=cap)
                 if docs.size == 0:
                     continue
-                vals = {}
-                if look_cols:
-                    dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
-                    vals = _cols_lookup(troot, dirs, look_cols,
-                                        offs)(docs)
+                vals = (_cols_lookup(troot, _row_dirs(ssrc, seg),
+                                     look_cols, offs)(docs)
+                        if look_cols else {})
                 bks = [_bucket_ids(vals[c]) for c in pen_cols]
-                sims = None
-                if sim_col:
-                    sims = np.asarray(pc.fill_null(vals[sim_col], 0)
-                                      .to_numpy(), dtype=np.int64)
+                sims = (np.asarray(pc.fill_null(vals[sim_col], 0)
+                                   .to_numpy(), dtype=np.int64)
+                        if sim_col else None)
                 order, _nd = diversity_rerank(
                     docs, scores, bks, pen_vals, kk,
                     simhashes=sims, hamming_k=hk)
-                d_o.append(docs[order].astype(np.int64))
-                s_o.append(scores[order].astype(np.float64))
-                g_o.append(np.full(order.size, seg, dtype=np.int64))
-                sim_o.append(sims[order] if sims is not None
-                             else np.zeros(order.size, dtype=np.int64))
-                for ci in range(len(pen_cols)):
-                    b_o[ci].append(bks[ci][order])
-            if not d_o:
-                return
-            arrs = [pa.array(np.concatenate(d_o)),
-                    pa.array(np.concatenate(s_o)),
-                    pa.array(np.concatenate(g_o)),
-                    pa.array(np.concatenate(sim_o))]
-            names = ["doc_id", "score", "segment_id", "sim"]
-            for ci in range(len(pen_cols)):
-                arrs.append(pa.array(np.concatenate(b_o[ci])))
-                names.append(f"b{ci}")
-            yield pa.record_batch(arrs, names=names)
+                if sims is None:
+                    sims = np.zeros(docs.size, dtype=np.int64)
+                parts.append([c[order] for c in
+                              (docs, scores.astype(np.float64), sims,
+                               *bks)])
+            if parts:
+                yield pa.record_batch(
+                    [pa.array(np.concatenate(c)) for c in zip(*parts)],
+                    names=names)
 
-        schema = ("doc_id long, score double, segment_id long, "
-                  "sim long"
-                  + "".join(f", b{ci} long"
-                            for ci in range(len(pen_cols))))
-        rows = self._shape(
-            self._postings_for(plan.terms, plan.positions),
-            plan.est_blocks).mapInArrow(run_arrow, schema=schema).collect()
+        rows = tasks.mapInArrow(run_arrow, schema=_schema(", ".join(
+            f"{n} {'double' if n == 'score' else 'long'}" for n in names))
+        ).collect()
         if not rows:
             return empty
         # root harvest: the SAME greedy over segments × k picks
-        docs = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-        scores = np.array([r["score"] for r in rows], dtype=np.float64)
-        sims = (np.array([r["sim"] for r in rows], dtype=np.int64)
-                if sim_col else None)
-        bks = [np.array([r[f"b{ci}"] for r in rows], dtype=np.int64)
-               for ci in range(len(pen_cols))]
+        docs, scores, sims, *bks = [np.array([r[n] for r in rows])
+                                    for n in names]
         order, _nd = diversity_rerank(docs, scores, bks, pen_vals, kk,
-                                      simhashes=sims, hamming_k=hk)
+                                      simhashes=sims if sim_col else None,
+                                      hamming_k=hk)
         return docs[order], scores[order].astype(dtype)
 
     # ------------------------------------------------------------------
@@ -2803,8 +2859,6 @@ class IndexReader:
         """Exact match count (reference Count collector). Applies the
         same compound/stemmed augmentation defaults as search(), so
         count(q) == number of rows search(q, k=num_docs) returns."""
-        from pyspark.sql import functions as F
-
         plan = self._plan(query, compound_terms=compound_terms,
                           stemmed=stemmed, lang=lang)
         pq = plan.pq
@@ -2819,31 +2873,10 @@ class IndexReader:
         if (len(pq.positive) == 1 and pq.positive[0].kind == "term"
                 and not pq.negative and not plan.compounds):
             return plan.dfs[pq.positive[0].tokens[0]]
-        # small-query routing, same cost model as search_collect: run
-        # the count kernel driver-locally below the posting-block
-        # threshold (rank/count parity between the paths is pinned by
-        # tests); big queries fan out below
-        if self._route_local(plan):
-            return int(self.search_local(plan, k=1,
-                                         _with_count=True)[2].value)
-
-        def run_arrow(batches):
-            import pyarrow as pa
-
-            total = 0
-            for seg, by_term in _batch_groups(batches):
-                specs, negs = _make_specs(pq, plan.weights, by_term,
-                                          plan.compounds, plan.neg_groups)
-                total += count_matches(specs, negs,
-                                       range_fns=_range_fns(plan, seg))
-            yield pa.record_batch([pa.array([total], type=pa.int64())],
-                                  names=["n"])
-
-        rows = (self._postings_for(plan.terms, plan.positions)
-                .repartition(F.col("segment_id"))
-                .mapInArrow(run_arrow, schema="n long")
-                .agg(F.sum("n").alias("n")).collect())
-        return int(rows[0]["n"] or 0)
+        # the one-pass (Count, TopDocs) collector at k=1, routed like
+        # search_collect: driver-local below the posting-block threshold,
+        # a posting job above it (count parity is pinned by tests)
+        return int(self.search_with_count(plan, k=1)[2].value)
 
     def _agg_rows(self, query, cols: list[str], compound_terms, stemmed,
                   lang):
@@ -2861,13 +2894,13 @@ class IndexReader:
         aggregation's membership is decided.
 
         Match-all plans read the row store (`_all_candidates`).
-        Posting-backed plans run the SAME term-pruned postings scan as
-        search()/count(): each segment task computes its matched ids
+        Posting-backed plans run the SAME posting job as
+        search()/count(): each task computes its group's matched ids
         with the count kernel (kernel.matching_docs) and yields the
         row-store values of exactly those ids (`_cols_lookup`, the
         fast-field reader analog) as Arrow batches. The aggregations
         on top are plain Spark aggregates, so Spark plans their partial
-        aggregation in the scan's stage (the tantivy per-segment
+        aggregation in the tasks' stage (the tantivy per-segment
         SegmentCollector + final merge, crates/tantivy/src/
         aggregation/): only bucket partials cross the shuffle, the
         corpus never moves. A dead plan yields an empty frame."""
@@ -2876,7 +2909,6 @@ class IndexReader:
             return self._all_candidates(plan, keep_cols=tuple(cols)) \
                 .select(*cols)
         from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
 
         from .kernel import matching_docs
 
@@ -2886,22 +2918,21 @@ class IndexReader:
         arrow_schema = to_arrow_schema(schema)
         troot, ssrc, offs = (self._turns_path, self._seg_sources(),
                              self._offsets)
+        tasks, ctx = self._posting_tasks(plan.terms, plan.positions,
+                                         plan.est_blocks)
 
         def run_arrow(batches):
-            for seg, by_term in _batch_groups(batches):
+            for segs, by_term in _task_postings(ctx, batches, False):
                 specs, negs = _make_specs(plan.pq, plan.weights, by_term,
                                           plan.compounds, plan.neg_groups)
                 ids = matching_docs(specs, negs,
-                                    range_fns=_range_fns(plan, seg))
+                                    range_fns=_range_fns(plan, segs))
                 if ids.size:
-                    dirs = ssrc.get(seg, [seg]) if ssrc else [seg]
-                    yield from _cols_lookup(troot, dirs, cols, offs)(
+                    yield from _cols_lookup(
+                        troot, _row_dirs(ssrc, segs), cols, offs)(
                         ids).cast(arrow_schema).to_batches()
 
-        # same small/large routing as search()
-        return self._shape(self._postings_for(plan.terms, plan.positions),
-                           plan.est_blocks).mapInArrow(run_arrow,
-                                                       schema=schema)
+        return tasks.mapInArrow(run_arrow, schema=schema)
 
     def facet_counts(self, query: str | ParsedQuery,
                      by: str | list[str], k: int = 50,
@@ -3330,8 +3361,9 @@ class IndexReader:
         dtype = np.float32
         weights = self._weights(pq, dfs, dtype)
         pos_terms = [t for c in pq.positive for t in c.tokens]
-        postings = self._postings_for(
-            pq.all_terms(), any(c.kind == "phrase" for c in pq.positive))
+        tasks, ctx = self._posting_tasks(
+            pq.all_terms(), any(c.kind == "phrase" for c in pq.positive),
+            _est_blocks(dfs.values()))
         seg_docs = self.segment_docs  # tiny dict, shipped in the closure
         cap = max_docs_per_segment
 
@@ -3339,7 +3371,7 @@ class IndexReader:
             import pyarrow as pa
 
             total, any_capped = 0, False
-            for seg, by_term in _batch_groups(batches):
+            for seg, by_term in _task_postings(ctx, batches, True):
                 specs, negs = _make_specs(
                     pq, weights, by_term,
                     neg_groups=[c.tokens for c in pq.negative])
@@ -3355,8 +3387,7 @@ class IndexReader:
                  pa.array([any_capped], type=pa.bool_())],
                 names=["n", "capped"])
 
-        row = (postings.repartition(F.col("segment_id"))
-               .mapInArrow(run_arrow, schema="n long, capped boolean")
+        row = (tasks.mapInArrow(run_arrow, schema=_CAPPED_COUNT_SCHEMA)
                .agg(F.sum("n").alias("n"),
                     F.max("capped").alias("any_capped"))
                .collect())[0]

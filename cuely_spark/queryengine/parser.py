@@ -429,7 +429,7 @@ def parse_query(q: str,
             # escaped literal "-term": same one-clause-per-token shape as
             # the bareword branch ('term' clauses are single-token)
             for t in tokenize(raw[1:]):
-                clauses.append(Clause("term", (t,)))
+                clauses.append(Clause("term", (t,), boost=boost))
         elif raw.startswith("-") and len(raw) > 1:
             if raw[1] == '"':
                 raise ValueError(

@@ -39,6 +39,24 @@ def oracle_small(transcripts_small):
     )
 
 
+@pytest.fixture(scope="session")
+def merged(spark, transcripts_small, tmp_path_factory):
+    """(source, merged) index roots: a 7-segment build merged into 2
+    segments. Session-wide, as the merge is the slowest fixture."""
+    from cuely_spark.indexer import build_index, merge_segments
+
+    df = spark.createDataFrame(
+        transcripts_small.drop(columns=["expected_doc_id"]))
+    src = str(tmp_path_factory.mktemp("merge_src"))
+    build_index(spark, df, src, rows_per_segment=800, num_jobs=2)
+    dst = str(tmp_path_factory.mktemp("merge_dst"))
+    # hot_df_threshold=200 forces real terms ('the' df≈3600) down the
+    # salted hot path while most terms re-block on the cold path
+    merge_segments(spark, src, dst, target_segments=2,
+                   hot_df_threshold=200)
+    return src, dst
+
+
 QUERY_SET = [
     "test",
     "example website",

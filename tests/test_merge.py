@@ -10,22 +10,6 @@ import pytest
 from conftest import QUERY_SET
 
 
-@pytest.fixture(scope="module")
-def merged(spark, transcripts_small, tmp_path_factory):
-    from cuely_spark.indexer import build_index, merge_segments
-
-    df = spark.createDataFrame(
-        transcripts_small.drop(columns=["expected_doc_id"]))
-    src = str(tmp_path_factory.mktemp("merge_src"))
-    build_index(spark, df, src, rows_per_segment=800, num_jobs=2)
-    dst = str(tmp_path_factory.mktemp("merge_dst"))
-    # hot_df_threshold=200 forces real terms ('the' df≈3600) down the
-    # salted hot path while most terms re-block on the cold path
-    merge_segments(spark, src, dst, target_segments=2,
-                   hot_df_threshold=200)
-    return src, dst
-
-
 def test_merged_stats(merged, oracle_small):
     src, dst = merged
     with open(os.path.join(dst, "stats.json")) as f:

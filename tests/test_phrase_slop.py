@@ -60,6 +60,17 @@ def test_parser_escaped_minus_phrase(q, phrase):
         ("term", ("a",)), ("term", ("-",)), ("phrase", ("b", "c"))]
 
 
+def test_parser_escaped_minus_term_keeps_boost():
+    """`--b^2` boosts its terms as the bareword `b^2` does: the `^2`
+    that the boost split strips is not dropped by the `--` escape."""
+    assert [(c.tokens, c.boost) for c in parse_query("a b^2").clauses] \
+        == [(("a",), 1.0), (("b",), 2.0)]
+    assert [(c.kind, c.tokens, c.boost)
+            for c in parse_query("a --b^2").clauses] == [
+        ("term", ("a",), 1.0), ("term", ("-",), 2.0),
+        ("term", ("b",), 2.0)]
+
+
 def test_slop_widens_membership_monotonically():
     texts = [
         "scan the merge",        # distance 2 -> slop >= 1 matches

@@ -406,6 +406,46 @@ def test_cached_read_sends_no_pool_task(multirg_reader, monkeypatch):
     pr.close()
 
 
+def test_worker_table_registry(multirg_reader, monkeypatch):
+    """A Spark worker keeps one posting table per (root, snapshot file
+    list), built from that list: the same pair gives the same table,
+    another list another table, and the registry stays bounded by
+    closing the least recently used table, whose decoded row groups
+    leave the cache with it."""
+    from cuely_spark.queryengine import executor
+    from cuely_spark.queryengine.executor import (_POSTING_COLS,
+                                                  _worker_table)
+
+    monkeypatch.setattr(executor, "_worker_tables", {})
+    root = multirg_reader._postings_path
+    files = multirg_reader._snapshot()[0]
+    cap = executor._WORKER_TABLES
+    assert len(files) > cap
+    first = _worker_table(root, files)
+    assert _worker_table(root, files) is first
+    assert [f for f, *_ in first._files] == list(files)
+    sub = _worker_table(root, files[:-1])
+    assert sub is not first
+    assert [f for f, *_ in sub._files] == list(files[:-1])
+    want = multirg_reader._local_postings(["test", "website"], False)
+    got = first.read(_POSTING_COLS, keys=["test", "website"])
+    assert _row_key(got) == _row_key(want)
+
+    def cached(table):
+        return [k for k in list(executor._decoded._lru)
+                if k[0] == table._token]
+
+    assert cached(first) and first._open
+    _worker_table(root, files[:-1])  # now `first` is least recent
+    for i in range(2, cap + 1):
+        _worker_table(root, files[:-i])
+        assert len(executor._worker_tables) <= cap
+    assert len(executor._worker_tables) == cap
+    assert (root, files) not in executor._worker_tables
+    assert not first._open and not cached(first)
+    assert _worker_table(root, files) is not first
+
+
 @pytest.mark.parametrize("local", [True, False])
 def test_live_batch_invisible_until_refresh(spark, transcripts_small,
                                             tmp_path, local):
@@ -509,11 +549,19 @@ def test_index_reads_go_through_one_reader():
         with open(path) as f:
             walk(ast.parse(f.read()), [], path, path in index_modules)
     assert not bad, bad
+    # no Spark scan of the posting files: distributed tasks read them
+    # through _PrunedTable as well
+    scans = [ast.unparse(n) for n in ast.walk(ast.parse(
+        inspect.getsource(executor)))
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "parquet"]
+    assert scans and not [c for c in scans if "_postings_path" in c
+                          or "kind=p" in c], scans
 
 
 def test_one_plan_one_local_kernel_call():
     """Structural guard for the single query path: per-segment posting
-    groups are built only for the distributed batches (`_batch_groups`)
+    groups are built only for the distributed tasks (`_task_postings`)
     and by the whole-index entry point, never on a driver-local read;
     search_local makes ONE kernel call; the whole-index grouping never
     returns None (no fallback); and search_bm25f only plans and hands
@@ -546,7 +594,7 @@ def test_one_plan_one_local_kernel_call():
     for mod in (executor, explain):
         walk(ast.parse(inspect.getsource(mod)), [])
     assert {s for _, s in calls["_arrow_postings"]} == {
-        "_batch_groups", "_concat_arrow_postings"}
+        "_task_postings", "_concat_arrow_postings"}
     assert [s for _, s in calls["_eval_group"]].count("search_local") == 1
     assert not any(isinstance(n, (ast.For, ast.While, ast.comprehension))
                    for n in ast.walk(funcs["search_local"]))
@@ -567,5 +615,5 @@ def test_one_plan_one_local_kernel_call():
                    if isinstance(c, ast.Call)}
     assert "search" in bm25f_calls and "_plan" in bm25f_calls
     banned = {"mapInArrow", "term_dfs", "_eval_group", "_make_specs",
-              "_batch_groups"} | kernel_fns
+              "_task_postings"} | kernel_fns
     assert not bm25f_calls & banned, bm25f_calls & banned

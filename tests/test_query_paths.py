@@ -19,20 +19,110 @@ def reader(spark, transcripts_small, tmp_path_factory):
     return IndexReader(spark, out)
 
 
-@pytest.mark.parametrize("q", ["test", "example website", '"test website"',
-                               "the", "website -test"])
-def test_fanout_path_matches_single_task(reader, oracle_small, q):
-    reader.small_query_blocks = 10**9  # force single-task
-    d1, s1 = reader.search_collect(q, k=20, local=False)
-    reader.small_query_blocks = 0      # force per-segment fanout
+@pytest.fixture(scope="module")
+def live_reader(spark, transcripts_small, tmp_path_factory):
+    """A live index: three committed batches, one segment each."""
+    from cuely_spark.queryengine import IndexReader
+    from cuely_spark.streaming import LiveIndexWriter
+
+    pdf = transcripts_small.drop(columns=["expected_doc_id"]).head(1500)
+    root = str(tmp_path_factory.mktemp("idx_live"))
+    w = LiveIndexWriter(spark, root)
+    for i in range(3):
+        w.process_batch(spark.createDataFrame(pdf.iloc[i * 500:
+                                                       (i + 1) * 500]), i)
+    return IndexReader(spark, root)
+
+
+def _both_shapes(reader, fn):
+    """fn() on one task holding every segment, then on one task per
+    segment group."""
     try:
-        d2, s2 = reader.search_collect(q, k=20, local=False)
+        reader.small_query_blocks = 10**9
+        single = fn()
+        reader.small_query_blocks = 0
+        return single, fn()
     finally:
-        reader.small_query_blocks = 4096
+        reader.small_query_blocks = type(reader).small_query_blocks
+
+
+_FANOUT_QUERIES = ["test", "example website", '"test website"', "the",
+                   "website -test"]
+
+
+@pytest.mark.parametrize("q", _FANOUT_QUERIES)
+def test_fanout_path_matches_single_task(reader, oracle_small, q):
+    (d1, s1), (d2, s2) = _both_shapes(
+        reader, lambda: reader.search_collect(q, k=20, local=False))
     assert d1.tolist() == d2.tolist()
     np.testing.assert_array_equal(s1, s2)
     od, _ = oracle_small.search(q, k=20)
     assert d1.tolist() == od.tolist()
+
+
+@pytest.mark.parametrize("kind", ["live", "merged"])
+@pytest.mark.parametrize("q", _FANOUT_QUERIES)
+def test_fanout_path_matches_single_task_live_and_merged(
+        spark, live_reader, merged, oracle_small, kind, q):
+    """The two task shapes agree on a live (one segment per batch) and
+    a merged index too, and both agree with the driver-local path; the
+    merged index keeps the bulk ids, so it also matches the oracle."""
+    from cuely_spark.queryengine import IndexReader
+
+    r = live_reader if kind == "live" else IndexReader(spark, merged[1])
+    (d1, s1), (d2, s2) = _both_shapes(
+        r, lambda: r.search_collect(q, k=20, local=False))
+    assert d1.tolist() == d2.tolist()
+    np.testing.assert_array_equal(s1, s2)
+    dl, sl = r.search_collect(q, k=20, local=True)
+    assert d1.tolist() == dl.tolist()
+    np.testing.assert_array_equal(s1, sl)
+    if kind == "merged":
+        assert d1.tolist() == oracle_small.search(q, k=20)[0].tolist()
+
+
+@pytest.mark.parametrize("kind", ["bulk", "live", "merged"])
+def test_capped_count_matches_across_shapes(spark, reader, live_reader,
+                                            merged, kind):
+    """search_with_count under a per-segment cap gives the same hits
+    and the same (approximate) count from both task shapes."""
+    from cuely_spark.queryengine import IndexReader
+
+    r = {"bulk": reader, "live": live_reader}.get(kind) or IndexReader(
+        spark, merged[1])
+    for q in ("the", "the test", "example website -test"):
+        (d1, s1, c1), (d2, s2, c2) = _both_shapes(
+            r, lambda: r.search_with_count(q, k=20,
+                                           max_docs_per_segment=50))
+        assert d1.tolist() == d2.tolist(), q
+        np.testing.assert_array_equal(s1, s2)
+        assert c1 == c2, q
+        if q == "the":  # every segment holds more than 50 matches
+            assert not c1.exact
+
+
+def test_fanout_plan_reads_no_posting_scan(reader):
+    """A fan-out query is one task per segment group over a range: its
+    executed plan has no exchange and no scan of the posting files."""
+    files, segs = reader._snapshot()
+    (_, one), (_, ctx) = _both_shapes(
+        reader, lambda: reader._posting_tasks(["test"], False, 1))
+    assert one.groups == (segs,)
+    n = min(len(segs), reader.spark.sparkContext.defaultParallelism)
+    assert len(segs) > 1 and len(ctx.groups) == n
+    assert sorted(s for g in ctx.groups for s in g) == list(segs)
+    assert ctx.files == files
+    try:
+        reader.small_query_blocks = 0
+        df = reader.search("example website", k=20, _count_rows=True)
+        top = reader.search("example website", k=20)
+    finally:
+        reader.small_query_blocks = type(reader).small_query_blocks
+    for d in (df, top):
+        plan = d._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert "FileScan" not in plan and "kind=p" not in plan, plan
+    assert df.rdd.getNumPartitions() == n
 
 
 def test_mixed_must_should_kernel():

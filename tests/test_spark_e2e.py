@@ -110,6 +110,35 @@ def test_merge_property_single_vs_multi(spark, spark_df, index_multi,
     assert t1.equals(tM)
 
 
+def test_build_leaves_caller_session_conf(spark, transcripts_small,
+                                          tmp_path, monkeypatch):
+    """The stage-B split settings live on a child session: while a
+    build writes its postings, the caller's session still reads its own
+    maxPartitionBytes and openCostInBytes, and so it does afterwards."""
+    from cuely_spark.indexer import build
+    from cuely_spark.queryengine import IndexReader
+
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    want = {k: spark.conf.get(k) for k in keys}
+    seen = []
+    rg_bytes = build.posting_rg_bytes
+
+    def probe():  # called as each job's posting write is set up
+        seen.append({k: spark.conf.get(k) for k in keys})
+        return rg_bytes()
+
+    monkeypatch.setattr(build, "posting_rg_bytes", probe)
+    pdf = transcripts_small.drop(columns=["expected_doc_id"]).head(600)
+    out = str(tmp_path / "idx")
+    build.build_index(spark, spark.createDataFrame(pdf), out,
+                      rows_per_segment=200, num_jobs=2)
+    assert seen == [want, want]
+    assert {k: spark.conf.get(k) for k in keys} == want
+    r = IndexReader(spark, out)
+    assert r.stats["num_docs"] == 600 and len(r._snapshot()[1]) == 3
+
+
 def test_resume_skips_done_jobs_and_rebuilds_deleted(
         spark, spark_df, oracle_small, tmp_path_factory):
     from cuely_spark.indexer import build_index
