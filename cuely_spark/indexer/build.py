@@ -431,7 +431,6 @@ def build_index(
         if d.startswith("segment_id=")
     )
     jobs = _job_groups(segments, num_jobs)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     id_col = "doc_id" if offsets is None else "__ord"
     attr_cols = tuple(attr_cols)
@@ -488,6 +487,7 @@ def build_index(
         # min/max stats on `term` prune a query's scan to the few row
         # groups holding its terms (the FST/skip-list role)
         (rows.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
              .option("parquet.block.size", posting_rg_bytes())
              .partitionBy("kind", "segment_id")
              .parquet(paths.index))

@@ -177,10 +177,10 @@ def merge_segments(
         F.col(c) if c in hot_out.columns else F.lit(None).alias(c)
         for c in cols])
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (cold_out.unionByName(hot_out)
      .sortWithinPartitions("kind", "segment_id", "term", "block_id")
      .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
      .option("parquet.block.size", posting_rg_bytes())
      .partitionBy("kind", "segment_id")
      .parquet(dst.index))
@@ -192,6 +192,7 @@ def merge_segments(
     (d_rows.select(*[F.col(c) if c in d_rows.columns
                      else F.lit(None).alias(c) for c in cols])
      .write.mode("overwrite").partitionBy("kind", "segment_id")
+     .option("partitionOverwriteMode", "dynamic")
      .parquet(dst.index))
 
     t_rows = (_remap(spark.read.option("basePath", src.index)
@@ -202,6 +203,7 @@ def merge_segments(
     (t_rows.select(*[F.col(c) if c in t_rows.columns
                      else F.lit(None).alias(c) for c in cols])
      .write.mode("overwrite").partitionBy("kind", "segment_id")
+     .option("partitionOverwriteMode", "dynamic")
      .parquet(dst.index))
 
     g_rows = (_remap(spark.read.option("basePath", src.index)
@@ -215,6 +217,7 @@ def merge_segments(
     (g_rows.select(*[F.col(c) if c in g_rows.columns
                      else F.lit(None).alias(c) for c in cols])
      .write.mode("overwrite").partitionBy("kind", "segment_id")
+     .option("partitionOverwriteMode", "dynamic")
      .parquet(dst.index))
 
     # term_stats unchanged globally — rewrite from merged t rows

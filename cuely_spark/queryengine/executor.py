@@ -33,7 +33,12 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    posting rows into TermPostings with ONE builder,
    :func:`_arrow_postings` (zero-copy views of the Arrow buffers, no
    Python object per row); the kernel decodes selected blocks in a
-   constant number of numpy calls.
+   constant number of numpy calls. Per-document row-store and doc-stats
+   values (range/exists filters, optic end-anchor doclens, diversity
+   buckets, aggregated columns) are read for the kernel's candidates
+   only, through the reader's row-store and `kind=d` tables
+   (:func:`_row_lookup`); a task reads them through its worker's
+   tables of the same snapshots, whose file lists ship with the plan.
 5. global merge: orderBy(score desc, doc_id asc).limit(k) over the tiny
    union of per-group top-ks (reference: collector/top_docs.rs merge).
 """
@@ -184,11 +189,11 @@ _table_tokens = itertools.count()
 
 
 class _PrunedTable:
-    """Reader of one index table (postings, term stats, fuzzy sidecar
-    or row store) on any pyarrow filesystem, on the driver and, through
-    :func:`_worker_table`, in Spark's Python workers. The file list
-    (`files`, else a listing of `path`), each footer and each row
-    group's min/max of the sort column `key` are read once; a read
+    """Reader of one index table (postings, term stats, fuzzy sidecar,
+    row store or doc stats) on any pyarrow filesystem, on the driver
+    and, through :func:`_worker_table`, in Spark's Python workers. The
+    file list (`files`, else a listing of `path`), each footer and each
+    row group's min/max of the sort column `key` are read once; a read
     decodes only the row groups that can hold its keys — on the shared
     pool on the driver, on the task's thread in a worker — and only the
     (row group, column) pairs the process-wide :class:`_DecodedCache`
@@ -218,7 +223,7 @@ class _PrunedTable:
 
         from .. import fsio
 
-        self.key = key
+        self.path, self.key = path, key
         self._token = next(_table_tokens)
         # entries of a table dropped without close() leave with it
         weakref.finalize(self, _decoded.drop, self._token)
@@ -259,10 +264,19 @@ class _PrunedTable:
             seg = [int(c.split("=", 1)[1]) for c in rel(fpath)
                    if c.startswith("segment_id=")]
             self._files.append((fpath, seg[0] if seg else None, md, bounds))
+        #: the snapshot this table reads, and ships as (:meth:`__reduce__`)
+        self.files = tuple(files)
         self.schema = self._files[0][2].schema.to_arrow_schema()
         if self._files[0][1] is not None:
             self.schema = self.schema.append(
                 pa.field("segment_id", pa.int64()))
+
+    def __reduce__(self):
+        """A table pickles as its snapshot (path, file list, key): a
+        Spark task's closure that holds a reader's table unpickles to
+        its worker's resident table of the same snapshot
+        (:func:`_worker_table`), never to a second copy."""
+        return _worker_table, (self.path, self.files, self.key)
 
     @property
     def segments(self) -> list[int]:
@@ -337,7 +351,9 @@ class _PrunedTable:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if keys is not None:
+        if isinstance(keys, np.ndarray):
+            keys = np.unique(keys)
+        elif keys is not None:
             keys = sorted(set(keys))
         tasks = self._select(keys, lo, hi, segments)
         if not tasks:
@@ -390,23 +406,24 @@ class _PrunedTable:
         return tbl.select(cols)
 
 
-#: posting tables one Spark Python worker keeps open (:func:`_worker_table`)
+#: index tables one Spark Python worker keeps open (:func:`_worker_table`):
+#: room for one snapshot's postings, row store and doc stats at once
 _WORKER_TABLES = 4
 _worker_tables: dict = {}
 
 
-def _worker_table(root: str, files: tuple) -> _PrunedTable:
-    """This process's posting table of one reader snapshot, keyed by
-    (root, file list) and built from that list, never from a listing:
-    a task cannot see files committed after its reader's snapshot. A
-    reused Spark worker serves later tasks of the snapshot from the
-    table's decoded row groups; the least recently used table past
-    `_WORKER_TABLES` is closed, dropping its cache entries."""
-    key = (root, files)
-    table = _worker_tables.pop(key, None)
+def _worker_table(root: str, files: tuple, key: str) -> _PrunedTable:
+    """This process's table of one reader snapshot, keyed by (root,
+    file list, sort key) and built from that list, never from a
+    listing: a task cannot see files committed after its reader's
+    snapshot. A reused Spark worker serves later tasks of the snapshot
+    from the table's decoded row groups; the least recently used table
+    past `_WORKER_TABLES` is closed, dropping its cache entries."""
+    rkey = (root, files, key)
+    table = _worker_tables.pop(rkey, None)
     if table is None:
-        table = _PrunedTable(root, "term", files=files)
-    _worker_tables[key] = table
+        table = _PrunedTable(root, key, files=files)
+    _worker_tables[rkey] = table
     while len(_worker_tables) > _WORKER_TABLES:
         _worker_tables.pop(next(iter(_worker_tables))).close()
     return table
@@ -643,38 +660,6 @@ def _typed_range_spec(c) -> tuple:
     return (col, conv(c.lo), conv(c.hi), c.lo_inc, c.hi_inc)
 
 
-def _arrow_row_filter(schema_names, range_specs: list,
-                      exists_specs: list | None):
-    """Shared pyarrow dataset filter for range + exists specs (pushed
-    into the parquet scan: row-group min/max pruning for ranges,
-    null-count stats for exists)."""
-    import pyarrow.dataset as ds
-
-    flt = None
-    for col, lo, hi, lo_inc, hi_inc in range_specs:
-        if col not in schema_names:
-            raise ValueError(
-                f"range column {col!r} not in the row store "
-                f"(has: {schema_names})")
-        if lo is not None:
-            e = ds.field(col) >= lo if lo_inc else ds.field(col) > lo
-            flt = e if flt is None else flt & e
-        if hi is not None:
-            e = ds.field(col) <= hi if hi_inc else ds.field(col) < hi
-            flt = e if flt is None else flt & e
-    for col, neg in (exists_specs or []):
-        if col not in schema_names:
-            raise ValueError(
-                f"exists column {col!r} not in the row store "
-                f"(has: {schema_names})")
-        if neg:
-            e = ds.field(col).is_null() | (ds.field(col) == "")
-        else:
-            e = ds.field(col).is_valid() & (ds.field(col) != "")
-        flt = e if flt is None else flt & e
-    return flt
-
-
 def _row_doc_ids(tbl, offsets: dict | None, seg=None) -> np.ndarray:
     """Global doc ids of row-store rows: the `doc_id` column, else
     (stage-A turns) offsets[segment] + `__ord`, the segment being `seg`
@@ -690,88 +675,67 @@ def _row_doc_ids(tbl, offsets: dict | None, seg=None) -> np.ndarray:
     return ords + offs[inv]
 
 
-def _range_lookup(turns_path: str, seg_dirs: list[int], specs: list,
-                  offsets: dict | None,
-                  exists_specs: list | None = None):
-    """cand -> bool mask of docs whose row-store attributes satisfy ALL
-    range filters — an executor-local columnar read of THIS segment's
-    row-store partition(s) with the range predicate pushed into the
-    parquet scan (the fast-field RangeQuery analog,
-    crates/tantivy/src/query/range_query/: there a u64/date fast-field
-    column; here the hive-partitioned turns table, so the read is
-    pruned to segment_id=N and to the row-groups whose column min/max
-    stats intersect the range). Read once per (segment, query) task;
-    membership for candidates via searchsorted.
-
-    exists_specs: [(col, neg), ...] — ExistsQuery filters (tantivy
-    crates/tantivy/src/query/exist_query/): keep docs whose attribute
-    column is non-null AND non-empty (neg=True inverts, the `-field:*`
-    form). Same pushed-down scan."""
-    cache: dict = {}
-
-    def fn(cand):
-        if "ids" not in cache:
-            import pyarrow.dataset as ds
-
-            parts = []
-            for sd in seg_dirs:
-                p = os.path.join(turns_path, f"segment_id={sd}")
-                dset = ds.dataset(p, format="parquet")
-                flt = _arrow_row_filter(dset.schema.names, specs,
-                                        exists_specs)
-                idcol = ("doc_id" if "doc_id" in dset.schema.names
-                         else "__ord")
-                tbl = dset.to_table(columns=[idcol], filter=flt)
-                parts.append(_row_doc_ids(tbl, offsets, sd))
-            cache["ids"] = (np.sort(np.concatenate(parts)) if parts
-                            else np.empty(0, dtype=np.int64))
-        ids = cache["ids"]
-        out = np.zeros(cand.size, dtype=bool)
-        if ids.size and cand.size:
-            pos = np.clip(np.searchsorted(ids, cand), 0, ids.size - 1)
-            out = ids[pos] == cand
-        return out
-
-    return fn
-
-
-def _cols_lookup(turns_path: str, seg_dirs: list[int],
-                 cols: list[str], offsets: dict | None):
-    """cand -> pyarrow.Table of the row-store columns `cols` for the
-    candidate docs, in `cand` order, via the same executor-local
-    partition-pruned pyarrow read as `_range_lookup` (the
-    columnfield/fast-field reader analog, collector/top_docs.rs:168-196
-    reading SiteHash/TitleHash/SimHash per collected doc). Columns keep
-    their row-store Arrow types; a doc missing from the row store gets
-    NULLs."""
+def _row_lookup(table: _PrunedTable, dirs, offsets: dict | None,
+                cols: list[str], cand: np.ndarray):
+    """pyarrow.Table of the columns `cols` of the docs `cand`, in
+    `cand` order, with NULLs for a doc the table lacks: one keyed read
+    of the row store or the doc stats through their `_PrunedTable`
+    (the fast-field reader analog, collector/top_docs.rs:168-196; the
+    num_tokens column in pattern_query/scorer.rs:320-333), limited to
+    the segment partitions `dirs` (all when None). Keys are doc ids,
+    or on a stage-A row store each segment's `__ord`s, read per
+    segment since their ranges overlap across segments."""
     import pyarrow as pa
 
-    cache: dict = {}
+    cand = np.asarray(cand, dtype=np.int64)
+    cols = list(dict.fromkeys(cols))
+    read = list(dict.fromkeys([table.key, *cols]))
+    if table.key == "doc_id":
+        parts = [(table.read(read, keys=cand, segments=dirs), None)]
+    else:
+        # a doc's segment: the last one whose offset is at or below it
+        # (an empty segment shares its successor's offset)
+        starts, segs = zip(*sorted((int(o), int(s))
+                                   for s, o in offsets.items()))
+        own = np.asarray(segs)[np.searchsorted(starts, cand, "right") - 1]
+        parts = [(table.read(read, keys=cand[own == d] - int(offsets[str(d)]),
+                             segments=[d]), d)
+                 for d in np.unique(own).tolist()
+                 if dirs is None or d in dirs]
+    tbl = pa.concat_tables([t for t, _ in parts]
+                           or [table.schema.empty_table()]).select(cols)
+    ids = np.concatenate([_row_doc_ids(t, offsets, d) for t, d in parts]
+                         or [np.empty(0, np.int64)])
+    o = np.argsort(ids)
+    pos = np.searchsorted(ids, cand, sorter=o).clip(0, max(ids.size - 1, 0))
+    take = o[pos] if ids.size else pos
+    ok = ids[take] == cand if ids.size else np.zeros(cand.size, bool)
+    return tbl.take(pa.array(take, mask=~ok))
 
-    def fn(cand: np.ndarray):
-        if "t" not in cache:
-            import pyarrow.dataset as ds
 
-            ids_parts, tbls = [], []
-            for sd in seg_dirs:
-                p = os.path.join(turns_path, f"segment_id={sd}")
-                dset = ds.dataset(p, format="parquet")
-                idcol = ("doc_id" if "doc_id" in dset.schema.names
-                         else "__ord")
-                # dedupe: a requested col may BE the id column
-                tbl = dset.to_table(columns=list(dict.fromkeys(
-                    [idcol, *cols])))
-                ids_parts.append(_row_doc_ids(tbl, offsets, sd))
-                tbls.append(tbl.select(cols))
-            ids = np.concatenate(ids_parts)
-            o = np.argsort(ids)
-            cache["t"] = (ids[o], pa.concat_tables(tbls).take(o))
-        ids, tbl = cache["t"]
-        pos = np.searchsorted(ids, cand).clip(0, max(ids.size - 1, 0))
-        ok = ids[pos] == cand if ids.size else np.zeros(cand.size, bool)
-        return tbl.take(pa.array(pos, mask=~ok))
+def _row_mask(tbl, range_specs: list, exists_specs: list) -> np.ndarray:
+    """Bool mask of the rows of `tbl` that satisfy every range and
+    exists filter (a NULL value matches neither): the RangeQuery and
+    ExistsQuery analogs (crates/tantivy/src/query/range_query/,
+    exist_query/). An exists filter keeps a non-null, non-empty value;
+    its negation (`-field:*`) the others."""
+    import pyarrow.compute as pc
 
-    return fn
+    def true(mask):
+        return pc.fill_null(mask, False).to_numpy()
+
+    m = np.ones(tbl.num_rows, dtype=bool)
+    for col, lo, hi, lo_inc, hi_inc in range_specs:
+        c = tbl[col]
+        if lo is not None:
+            m &= true(pc.greater_equal(c, lo) if lo_inc
+                      else pc.greater(c, lo))
+        if hi is not None:
+            m &= true(pc.less_equal(c, hi) if hi_inc else pc.less(c, hi))
+    for col, neg in exists_specs:
+        e = true(pc.not_equal(tbl[col], ""))
+        m &= ~e if neg else e
+    return m
 
 
 def _bucket_ids(values) -> np.ndarray:
@@ -930,42 +894,6 @@ def _row_dirs(ssrc: dict | None, seg) -> list[int]:
             for d in (ssrc.get(s, [s]) if ssrc else [s])]
 
 
-def _doclen_lookup(index_path: str, seg):
-    """cand -> doclen int64 array (-1 = unknown) via a pyarrow read of
-    the kind='d' doc stats of the segments `seg` names (every segment
-    when None) — the reference's num_tokens columnfield analog
-    (pattern_query/scorer.rs:320-333 reads it for end-anchor checks).
-    Partition-pruned columnar scan, read once per (group, query)."""
-    import pyarrow as pa
-
-    cache: dict = {}
-
-    def fn(cand):
-        if "v" not in cache:
-            import pyarrow.dataset as ds
-
-            p = os.path.join(index_path, "index", "kind=d")
-            dirs = ([p] if seg is None else
-                    [os.path.join(p, f"segment_id={s}")
-                     for s in _seg_ids(seg)])
-            tbl = pa.concat_tables(
-                ds.dataset(d, format="parquet").to_table(
-                    columns=["doc_id", "doclen"]) for d in dirs)
-            ids = np.asarray(tbl["doc_id"].to_numpy(), dtype=np.int64)
-            dls = np.asarray(tbl["doclen"].to_numpy(), dtype=np.int64)
-            o = np.argsort(ids)
-            cache["v"] = (ids[o], dls[o])
-        ids, dls = cache["v"]
-        out = np.full(cand.size, -1, dtype=np.int64)
-        if ids.size and cand.size:
-            pos = np.clip(np.searchsorted(ids, cand), 0, ids.size - 1)
-            ok = ids[pos] == cand
-            out[ok] = dls[pos[ok]]
-        return out
-
-    return fn
-
-
 @dataclass
 class QueryPlan:
     """One query, planned once by :meth:`IndexReader._plan`: the parsed
@@ -986,11 +914,13 @@ class QueryPlan:
     const_score: float | None = None
     range_specs: list = field(default_factory=list)
     exists_specs: list = field(default_factory=list)
-    #: (turns_path, seg_sources, offsets, row-store segment dirs) when
-    #: range/exists filters need row-store lookups (:func:`_range_fns`)
-    rng_ctx: tuple | None = None
-    #: index root when optic end anchors need doclens
-    index_path: str | None = None
+    #: (row-store table, seg_sources, offsets) when range/exists
+    #: filters need row-store lookups (:func:`_range_fns`), and the
+    #: doc-stats table when optic end anchors need doclens: the
+    #: reader's own tables, shipped to tasks as their snapshots
+    #: (:meth:`_PrunedTable.__reduce__`)
+    rows: tuple | None = None
+    doc_stats: _PrunedTable | None = None
     boost_rules: list = field(default_factory=list)
     discard_matchers: list = field(default_factory=list)
     require_matchers: list | None = None
@@ -1044,12 +974,19 @@ def _est_blocks(dfs) -> int:
 def _range_fns(plan: QueryPlan, seg):
     """The kernel's range_fns for the segments `seg` names, or for
     every segment when `seg` is None (None without filters)."""
-    if plan.rng_ctx is None:
+    if plan.rows is None:
         return None
-    troot, ssrc, offs, every = plan.rng_ctx
-    dirs = every if seg is None else _row_dirs(ssrc, seg)
-    return [_range_lookup(troot, dirs, plan.range_specs, offs,
-                          exists_specs=plan.exists_specs)]
+    table, ssrc, offs = plan.rows
+    dirs = None if seg is None else _row_dirs(ssrc, seg)
+    cols = [table.key] + [c for c, *_ in plan.range_specs
+                          + plan.exists_specs]
+
+    def fn(cand):
+        tbl = _row_lookup(table, dirs, offs, cols, cand)
+        return (_row_mask(tbl, plan.range_specs, plan.exists_specs)
+                & tbl[table.key].is_valid().to_numpy())
+
+    return [fn]
 
 
 def _indep_estimate(by_term: dict, terms: list[str], nd: int) -> int:
@@ -1094,8 +1031,15 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
                              None)], negs) if with_count else 0)
         return docs, scores, n, False
     empty_tp = TermPostings([], [], [], [], [], [])
-    dl_fn = (_doclen_lookup(plan.index_path, seg)
-             if plan.index_path is not None else None)
+    dl_fn = None
+    if plan.doc_stats is not None:
+        dirs = None if seg is None else _seg_ids(seg)
+
+        def dl_fn(cand):
+            import pyarrow.compute as pc
+
+            tbl = _row_lookup(plan.doc_stats, dirs, None, ["doclen"], cand)
+            return pc.fill_null(tbl["doclen"], -1).to_numpy()
 
     def matcher(m):
         return _matcher_spec(m, by_term, empty_tp, dl_fn)
@@ -1136,7 +1080,7 @@ def _task_postings(ctx: _PostingTasks, batches, per_segment: bool):
     diversity greedy, the meta join's segment tag). Otherwise one item
     keyed by the group's tuple of ids, its segments concatenated as
     one logical segment, as on the local path."""
-    table = _worker_table(ctx.root, ctx.files)
+    table = _worker_table(ctx.root, ctx.files, "term")
     cols = _POSTING_COLS + (["positions"] if ctx.positions else [])
     for b in batches:
         for g in b.column(0).to_pylist():
@@ -1246,7 +1190,7 @@ class IndexReader:
     def _local_pruned(self) -> _PrunedTable:
         t = _PrunedTable(self._postings_path, "term",
                          files=self._posting_files)
-        self._posting_files = tuple(f for f, *_ in t._files)
+        self._posting_files = t.files
         return t
 
     @cached_property
@@ -1263,6 +1207,11 @@ class IndexReader:
         return _PrunedTable(self._turns_path, "doc_id"
                             if self._offsets is None else "__ord")
 
+    @cached_property
+    def _doc_table(self) -> _PrunedTable:
+        return _PrunedTable(os.path.join(self.path, "index", "kind=d"),
+                            "doc_id")
+
     def _drop_table(self, name: str) -> None:
         t = self.__dict__.pop(name, None)
         if t is not None:
@@ -1272,7 +1221,7 @@ class IndexReader:
         """Close the file handles of every index table this reader
         holds open (they are reopened on the next query)."""
         for name in ("_local_pruned", "_term_table", "_sidecar_table",
-                     "_turns_table"):
+                     "_turns_table", "_doc_table"):
             self._drop_table(name)
 
     def _snapshot(self) -> tuple:
@@ -1908,7 +1857,7 @@ class IndexReader:
             plan.positions = rules_need_positions(plan.boost_rules,
                                                   plan.discard_matchers)
             if rules_need_doclen(plan.boost_rules, plan.discard_matchers):
-                plan.index_path = self.path
+                plan.doc_stats = self._doc_table
         if should is not None:
             if occur == "should":
                 raise ValueError(
@@ -1932,8 +1881,8 @@ class IndexReader:
             self._validate_range_cols(
                 plan.range_specs
                 + [(col,) for col, _ in plan.exists_specs])
-            plan.rng_ctx = (self._turns_path, self._seg_sources(),
-                            self._offsets, self._turns_table.segments)
+            plan.rows = (self._turns_table, self._seg_sources(),
+                         self._offsets)
         plan.neg_groups = [list(c.tokens) for c in pq.negative]
         if bm25f is not None:
             (plan.compounds, plan.c_terms, plan.bm25f,
@@ -2221,9 +2170,6 @@ class IndexReader:
         turns = self.turns_df
         cond = F.lit(True)
         for col, lo, hi, lo_inc, hi_inc in plan.range_specs:
-            if col not in turns.columns:
-                raise ValueError(
-                    f"range column {col!r} not in the row store")
             if lo is not None:
                 cond = cond & ((F.col(col) >= F.lit(lo)) if lo_inc
                                else (F.col(col) > F.lit(lo)))
@@ -2231,9 +2177,6 @@ class IndexReader:
                 cond = cond & ((F.col(col) <= F.lit(hi)) if hi_inc
                                else (F.col(col) < F.lit(hi)))
         for col, neg in plan.exists_specs:
-            if col not in turns.columns:
-                raise ValueError(
-                    f"exists column {col!r} not in the row store")
             e = F.col(col).isNotNull() & (F.col(col) != F.lit(""))
             cond = cond & (~e if neg else e)
         cand = turns.filter(cond).select(
@@ -2323,20 +2266,18 @@ class IndexReader:
 
     def _search_all_local(self, plan: QueryPlan, k: int, offset: int,
                           _with_count: bool = False):
-        """Driver-local `_search_all`: one pyarrow read of the
-        hive-partitioned row store with the filters pushed down, same
-        (score desc = const, doc_id asc) ordering. Small-index path
-        only — the distributed :meth:`_search_all` is the scale path."""
-        import pyarrow.dataset as ds
-
-        dset = ds.dataset(self._turns_path, format="parquet",
-                          partitioning="hive")
-        flt = _arrow_row_filter(dset.schema.names, plan.range_specs,
-                                plan.exists_specs)
-        idcols = (["doc_id"] if "doc_id" in dset.schema.names
+        """Driver-local `_search_all`: one read of the row store's id
+        and filter columns through the reader's table, the filters as
+        a compute mask, same (score desc = const, doc_id asc) ordering.
+        Small-index path only — the distributed :meth:`_search_all` is
+        the scale path."""
+        table = self._turns_table
+        idcols = (["doc_id"] if table.key == "doc_id"
                   else ["__ord", "segment_id"])
-        ids = _row_doc_ids(dset.to_table(columns=idcols, filter=flt),
-                           self._offsets)
+        tbl = table.read(list(dict.fromkeys(
+            idcols + [c for c, *_ in plan.range_specs + plan.exists_specs])))
+        ids = _row_doc_ids(tbl, self._offsets)[
+            _row_mask(tbl, plan.range_specs, plan.exists_specs)]
         ids = np.sort(ids)  # rank order, and lookup() takes sorted docs
         if plan.neg_groups and ids.size:
             by_term = _concat_arrow_postings(self._local_postings(
@@ -2793,9 +2734,8 @@ class IndexReader:
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=dtype))
         if plan.dead:
             return empty
-        troot = self._turns_path
-        ssrc = self._seg_sources()
-        offs = self._offsets
+        turns, ssrc, offs = (self._turns_table, self._seg_sources(),
+                             self._offsets)
         cap = max_docs_per_segment
         look_cols = pen_cols + ([sim_col] if sim_col else [])
         kk = int(k)
@@ -2818,8 +2758,8 @@ class IndexReader:
                                                    1 << 62, max_docs=cap)
                 if docs.size == 0:
                     continue
-                vals = (_cols_lookup(troot, _row_dirs(ssrc, seg),
-                                     look_cols, offs)(docs)
+                vals = (_row_lookup(turns, _row_dirs(ssrc, seg), offs,
+                                    look_cols, docs)
                         if look_cols else {})
                 bks = [_bucket_ids(vals[c]) for c in pen_cols]
                 sims = (np.asarray(pc.fill_null(vals[sim_col], 0)
@@ -2897,7 +2837,7 @@ class IndexReader:
         Posting-backed plans run the SAME posting job as
         search()/count(): each task computes its group's matched ids
         with the count kernel (kernel.matching_docs) and yields the
-        row-store values of exactly those ids (`_cols_lookup`, the
+        row-store values of exactly those ids (`_row_lookup`, the
         fast-field reader analog) as Arrow batches. The aggregations
         on top are plain Spark aggregates, so Spark plans their partial
         aggregation in the tasks' stage (the tantivy per-segment
@@ -2916,7 +2856,7 @@ class IndexReader:
         if plan.dead:
             return self.spark.createDataFrame([], schema)
         arrow_schema = to_arrow_schema(schema)
-        troot, ssrc, offs = (self._turns_path, self._seg_sources(),
+        turns, ssrc, offs = (self._turns_table, self._seg_sources(),
                              self._offsets)
         tasks, ctx = self._posting_tasks(plan.terms, plan.positions,
                                          plan.est_blocks)
@@ -2928,8 +2868,8 @@ class IndexReader:
                 ids = matching_docs(specs, negs,
                                     range_fns=_range_fns(plan, segs))
                 if ids.size:
-                    yield from _cols_lookup(
-                        troot, _row_dirs(ssrc, segs), cols, offs)(
+                    yield from _row_lookup(
+                        turns, _row_dirs(ssrc, segs), offs, cols,
                         ids).cast(arrow_schema).to_batches()
 
         return tasks.mapInArrow(run_arrow, schema=schema)

@@ -184,7 +184,8 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     this doc at the same dtype, exactly (pinned by tests).
     """
     from .executor import (Expansion, _concat_arrow_postings,
-                           _make_specs, _match_all_score, _range_fns)
+                           _make_specs, _match_all_score, _range_fns,
+                           _row_lookup)
     from .kernel import phrase_tf
 
     d = dtype
@@ -198,34 +199,16 @@ def explain_doc(reader, query, doc_id: int, dtype=np.float32,
     if not 0 <= doc < reader.num_docs:
         raise DoesNotMatch(doc)
 
-    # ---- owning segment: the doc exists, and the one-doc range check
-    # reads that segment's row store only ------------------------------
-    def _seg_of(doc: int) -> int:
-        if reader._offsets is not None:
-            loc = reader._ord_of(doc)
-            if loc is None:
-                raise DoesNotMatch(doc)
-            return loc[0]
-        # doc_id-column mode: the row store is hive-partitioned by
-        # segment_id and doc-sorted within, so this point read prunes
-        # to one row-group via parquet doc_id min/max stats
-        t = reader._turns_table.read(["segment_id"], keys=[doc])
-        if t.num_rows == 0:
-            raise DoesNotMatch(doc)
-        return int(t["segment_id"][0].as_py())
-
-    seg = _seg_of(doc)
-    if reader._segment_map:
-        # merged index: _seg_of resolves against the row store (doc_id
-        # mode) or segment_offsets (offsets mode), both of which keep
-        # PRE-merge segment ids; _range_fns takes the merged kernel
-        # segment, so translate through segment_map either way
-        sm = reader._segment_map
-        seg = int(sm.get(str(seg), sm.get(seg, seg)))
+    # ---- the doc exists in the row store (doc ids need not be dense),
+    # and its range/exists check: one keyed read each ------------------
     cand = np.array([doc], dtype=np.int64)
+    rows, key = reader._turns_table, reader._turns_table.key
+    if not _row_lookup(rows, None, reader._offsets, [key],
+                       cand)[key][0].is_valid:
+        raise DoesNotMatch(doc)
 
     def _range_ok() -> bool:
-        fns = _range_fns(plan, seg)
+        fns = _range_fns(plan, None)
         return fns is None or bool(fns[0](cand)[0])
 
     unscored_nodes: list[Explanation] = []

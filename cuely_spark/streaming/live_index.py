@@ -168,8 +168,6 @@ class LiveIndexWriter:
         offs, n_written = segment_offsets(staging)
 
         # 2) dense ids from written footers; finalize the row store
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
         off_map = F.create_map(*[
             F.lit(x) for s, o in sorted(offs.items())
             for x in (s, base + o)])  # <= MAX_SEGMENTS_PER_BATCH entries
@@ -180,6 +178,7 @@ class LiveIndexWriter:
                                         + F.col("__ord")).cast("long"))
                  .drop("__ord"))
         turns.write.mode("overwrite").partitionBy("segment_id") \
+            .option("partitionOverwriteMode", "dynamic") \
             .parquet(self.paths.turns)
         fsio.rmtree(staging)
 
@@ -198,6 +197,7 @@ class LiveIndexWriter:
                            stem_lang_col=self.stem_lang_col),
             schema=INDEX_ROW_SCHEMA)
         (rows.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
              .option("parquet.block.size", posting_rg_bytes())
              .partitionBy("kind", "segment_id")
              .parquet(self.paths.index))

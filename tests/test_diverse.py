@@ -156,6 +156,15 @@ def test_multi_segment_deterministic_and_noop_parity(multi_seg):
     np.testing.assert_allclose(s3, ps, rtol=1e-6)
 
 
+def test_row_store_parity_with_simhash(multi_seg):
+    """Penalty buckets and simhashes come from the segments' own
+    row-store rows on every task (offsets mode: per-segment __ord)."""
+    from test_local_path import check_row_store_parity
+
+    check_row_store_parity(multi_seg, "test", "ts:>=2024-01-02 tool:*",
+                           "conv_id", sim=True)
+
+
 def test_huge_penalty_diversifies_conversations(multi_seg, spark):
     t = (spark.read.parquet(multi_seg._turns_path)
          .select("__ord", "segment_id", "conv_id").toPandas())

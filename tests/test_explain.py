@@ -331,23 +331,14 @@ def test_explain_fuzz_matches_search(ereader, docs_pdf):
 
 
 # ----------------------------------- offsets-mode + merged index paths
-def test_explain_offsets_mode_and_merged(spark, transcripts_small,
-                                         tmp_path_factory):
+def test_explain_offsets_mode_and_merged(spark, merged):
     """Explain on (a) an offsets-mode index (no doc_id column:
     doc_id = segment offset + __ord) and (b) a merged index (row store
     keeps pre-merge segment dirs) — both must agree with search_local
     on membership and score."""
-    from cuely_spark.indexer import build_index, merge_segments
     from cuely_spark.queryengine import IndexReader
 
-    df = spark.createDataFrame(
-        transcripts_small.drop(columns=["expected_doc_id"]))
-    src = str(tmp_path_factory.mktemp("explain_src"))
-    build_index(spark, df, src, rows_per_segment=800, num_jobs=2)
-    dst = str(tmp_path_factory.mktemp("explain_dst"))
-    merge_segments(spark, src, dst, target_segments=2,
-                   hot_df_threshold=200)
-    for path in (src, dst):
+    for path in merged:
         r = IndexReader(spark, path)
         for q in ["test website", '"example website"', "the -test"]:
             docs, scores = r.search_local(q, k=r.num_docs)

@@ -125,6 +125,19 @@ def test_facets_on_merged_index(spark, facet_pdf, facet_reader,
     assert a.values.tolist() == b.values.tolist()
 
 
+def test_row_store_parity_doc_id_mode(facet_reader, facet_pdf):
+    """A doc_id-keyed row store reads alike on every route (the
+    offsets-mode and merged row stores: test_local_path, test_merge)."""
+    from test_local_path import (check_optic_end_anchor_plan,
+                                 check_row_store_parity)
+
+    for filters in ("n_chars:50..300 source:*",
+                    "ts:>=2025-01-20 -source:*"):
+        check_row_store_parity(facet_reader, "merge table", filters,
+                               "lang")
+    check_optic_end_anchor_plan(facet_reader, facet_pdf["text"], q="merge")
+
+
 # ------------------------------------------- metric stats + histogram
 def test_agg_stats_matches_duckdb_oracle(facet_reader, facet_con):
     from cuely_spark.oracle_sql import stats_agg_sql

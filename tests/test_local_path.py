@@ -236,8 +236,8 @@ def test_routed_requests_look_up_terms_once(reader, monkeypatch):
     assert len(calls) == 1
 
 
-def check_optic_end_anchor_plan(r, texts):
-    """A plan whose optic needs doclens (`plan.index_path` set) runs
+def check_optic_end_anchor_plan(r, texts, q="the"):
+    """A plan whose optic needs doclens (`plan.doc_stats` set) runs
     through search_local's single pass and matches search(optic=)."""
     from collections import Counter
 
@@ -247,13 +247,91 @@ def check_optic_end_anchor_plan(r, texts):
     last = Counter(t[-1] for t in map(tokenize, texts) if t).most_common(2)
     rules = [Rule(pattern=f"{last[0][0]} |", action="boost", factor=2.0),
              Rule(pattern=f"{last[1][0]} |", action="discard")]
-    plan = r._plan("the", optic=rules)
-    assert plan.index_path is not None
+    plan = r._plan(q, optic=rules)
+    assert plan.doc_stats is r._doc_table
     want = _hits(*r.search_local(plan, k=50))
-    rows = r.search("the", k=50, optic=rules).collect()
+    rows = r.search(q, k=50, optic=rules).collect()
     _assert_same(_hits([x["doc_id"] for x in rows],
                        [x["score"] for x in rows]), want, r.path)
-    assert want[0] != _hits(*r.search_local("the", k=50))[0]
+    assert want[0] != _hits(*r.search_local(q, k=50))[0]
+
+
+def check_row_store_parity(r, q, filters, col, sim=False):
+    """Every route reads an index's row store as Spark's own read of it
+    does. `q` is a conjunctive text query, `filters` range and exists
+    clauses, `col` a row-store column:
+
+    - `q filters` gives the same (doc_id, score) and count on
+      search_local, search and search_with_count(local=False), explain
+      gives each hit's score, and its hits are the hits of `q` that the
+      Spark match-all route keeps under `filters`;
+    - facet_counts of `q filters` by `col` counts its hits' values in
+      the Spark row store (`turns_df`);
+    - search_diverse of `q` with a prohibitive penalty on `col` keeps
+      raw scores and picks a new value while one is left; with `sim`,
+      the de_rank_similar order is the picks (no two within hamming 3)
+      then the deferred near-duplicates of a pick."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    fq = f"{q} {filters}"
+    assert r._plan(fq).rows[0] is r._turns_table
+    n = r.num_docs
+    want = _hits(*r.search_local(fq, k=n))
+    assert want[0], fq
+    rows = r.search(fq, k=n).collect()
+    _assert_same(_hits([x["doc_id"] for x in rows],
+                       [x["score"] for x in rows]), want, "search " + fq)
+    d, s, c = r.search_with_count(fq, k=n, local=False)
+    _assert_same(_hits(d, s), want, "search_with_count " + fq)
+    assert c.value == len(want[0]), fq
+    for doc, score in list(zip(*want))[:3]:
+        assert r.explain(fq, doc).value == float(score), (fq, doc)
+    plain = dict(zip(*_hits(*r.search_local(q, k=n))))
+    keep = set(r.search_collect("* " + filters, k=n, local=False)[0]
+               .tolist())
+    assert set(want[0]) == set(plain) & keep, fq
+    assert [plain[x] for x in want[0]] == want[1].tolist(), fq
+
+    cols = [col] + (["simhash"] if sim else [])
+    vals = {x["doc_id"]: x for x in r.turns_df
+            .filter(F.col("doc_id").isin(list(plain)))
+            .select("doc_id", *cols).collect()}
+    facets = {x["value"]: x["count"] for x in
+              r.facet_counts(fq, col, k=n).collect()}
+    assert facets == Counter(str(vals[x][col]) for x in want[0]
+                             if vals[x][col] is not None), fq
+
+    def bucket(x):
+        v = vals[x][col]
+        return "" if v is None else str(v)
+
+    d, s = r.search_diverse(q, k=K, penalties={col: 1000.0},
+                            de_rank_similar=False)
+    assert d.size == min(K, len(plain))
+    assert s.tolist() == [plain[x] for x in d.tolist()], q
+    m = min(K, len({bucket(x) for x in plain}))
+    assert len({bucket(x) for x in d[:m].tolist()}) == m, q
+    if sim:
+        d, s = r.search_diverse(q, k=K, penalties={col: 0.5})
+        assert s.tolist() == [plain[x] for x in d.tolist()], q
+        sims = [vals[x]["simhash"] for x in d.tolist()]
+
+        def near(i, among):
+            return sims[i] != 0 and any(
+                sims[j] != 0 and bin(sims[i] ^ sims[j]).count("1") <= 3
+                for j in among)
+
+        m = next((i for i in range(len(sims)) if near(i, range(i))),
+                 len(sims))
+        assert all(near(i, range(m)) for i in range(m, len(sims))), q
+
+
+def test_row_store_parity_offsets_mode(reader):
+    for filters in ("ts:2024-01-02..2024-01-08 tool:*",
+                    "ts:>=2024-01-03 -tool:*"):
+        check_row_store_parity(reader, "the test", filters, "conv_id")
 
 
 def test_local_optic_end_anchor_plan(reader, transcripts_small):

@@ -107,9 +107,11 @@ def test_single_pass_parity_on_merged(spark, merged, transcripts_small):
     on (doc_id, score) and Count across search_local, search_with_count
     (both paths) and search; explain() gives search_local's score; an
     optic end-anchor plan (doclens of every segment) matches
-    search(optic=)."""
+    search(optic=); facets and diversity read the source row store as
+    Spark does."""
     from test_local_path import (K, _assert_same, _fuzz_queries, _hits,
-                                 check_optic_end_anchor_plan)
+                                 check_optic_end_anchor_plan,
+                                 check_row_store_parity)
 
     from cuely_spark.queryengine import IndexReader
 
@@ -139,3 +141,42 @@ def test_single_pass_parity_on_merged(spark, merged, transcripts_small):
             explained += 1
     assert explained >= 10
     check_optic_end_anchor_plan(r, transcripts_small["text"])
+    check_row_store_parity(r, "the test",
+                           "ts:2024-01-02..2024-01-08 tool:*", "conv_id")
+
+
+def test_writers_keep_session_overwrite_mode(spark, transcripts_small,
+                                             tmp_path):
+    """build_index, merge_segments and live batches overwrite their
+    partitions dynamically per write, so every job's, kind's and
+    batch's segments survive a caller session whose
+    partitionOverwriteMode is static, and that conf is unchanged after
+    them."""
+    from cuely_spark.indexer import build_index
+    from cuely_spark.indexer.merge import merge_segments
+    from cuely_spark.queryengine import IndexReader
+    from cuely_spark.streaming import LiveIndexWriter
+    from cuely_spark.tokenizer import tokenize
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        pdf = transcripts_small.drop(columns=["expected_doc_id"]).head(40)
+        df = spark.createDataFrame(pdf)
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+        build_index(spark, df, src, rows_per_segment=10, num_jobs=2)
+        merge_segments(spark, src, dst, target_segments=2,
+                       hot_df_threshold=5)
+        w = LiveIndexWriter(spark, str(tmp_path / "live"))
+        w.process_batch(spark.createDataFrame(pdf.iloc[:20]), 0)
+        w.process_batch(spark.createDataFrame(pdf.iloc[20:]), 1)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, old)
+    for root in (src, dst, w.paths.root):
+        r = IndexReader(spark, root)
+        assert r.num_docs == 40, root
+        assert r.count("*") == 40, root
+        assert r.count("the") == sum("the" in tokenize(t)
+                                     for t in pdf["text"]), root

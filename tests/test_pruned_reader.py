@@ -407,11 +407,15 @@ def test_cached_read_sends_no_pool_task(multirg_reader, monkeypatch):
 
 
 def test_worker_table_registry(multirg_reader, monkeypatch):
-    """A Spark worker keeps one posting table per (root, snapshot file
-    list), built from that list: the same pair gives the same table,
-    another list another table, and the registry stays bounded by
-    closing the least recently used table, whose decoded row groups
-    leave the cache with it."""
+    """A Spark worker keeps one table per (root, snapshot file list,
+    sort key), built from that list: the same triple gives the same
+    table, another list another table, and a pickled reader table
+    resolves to the registry's. One snapshot's posting, row-store and
+    doc-stats tables stay resident together, and the registry stays
+    bounded by closing the least recently used table, whose decoded
+    row groups leave the cache with it."""
+    import pickle
+
     from cuely_spark.queryengine import executor
     from cuely_spark.queryengine.executor import (_POSTING_COLS,
                                                   _worker_table)
@@ -421,12 +425,12 @@ def test_worker_table_registry(multirg_reader, monkeypatch):
     files = multirg_reader._snapshot()[0]
     cap = executor._WORKER_TABLES
     assert len(files) > cap
-    first = _worker_table(root, files)
-    assert _worker_table(root, files) is first
-    assert [f for f, *_ in first._files] == list(files)
-    sub = _worker_table(root, files[:-1])
+    first = _worker_table(root, files, "term")
+    assert _worker_table(root, files, "term") is first
+    assert first.files == files
+    sub = _worker_table(root, files[:-1], "term")
     assert sub is not first
-    assert [f for f, *_ in sub._files] == list(files[:-1])
+    assert sub.files == files[:-1]
     want = multirg_reader._local_postings(["test", "website"], False)
     got = first.read(_POSTING_COLS, keys=["test", "website"])
     assert _row_key(got) == _row_key(want)
@@ -436,14 +440,29 @@ def test_worker_table_registry(multirg_reader, monkeypatch):
                 if k[0] == table._token]
 
     assert cached(first) and first._open
-    _worker_table(root, files[:-1])  # now `first` is least recent
+    _worker_table(root, files[:-1], "term")  # now `first` is least recent
     for i in range(2, cap + 1):
-        _worker_table(root, files[:-i])
+        _worker_table(root, files[:-i], "term")
         assert len(executor._worker_tables) <= cap
     assert len(executor._worker_tables) == cap
-    assert (root, files) not in executor._worker_tables
+    assert (root, files, "term") not in executor._worker_tables
     assert not first._open and not cached(first)
-    assert _worker_table(root, files) is not first
+    assert _worker_table(root, files, "term") is not first
+
+    # one snapshot's three tables: a task's closure pickles the
+    # reader's tables as their snapshots, each a registry entry
+    executor._worker_tables.clear()
+    postings = _worker_table(root, files, "term")
+    turns = pickle.loads(pickle.dumps(multirg_reader._turns_table))
+    docs = pickle.loads(pickle.dumps(multirg_reader._doc_table))
+    assert turns is not multirg_reader._turns_table
+    assert turns.files == multirg_reader._turns_table.files
+    assert (turns.key, docs.key) == ("__ord", "doc_id")
+    assert pickle.loads(pickle.dumps(multirg_reader._turns_table)) is turns
+    assert _worker_table(root, files, "term") is postings
+    assert list(executor._worker_tables.values()) == [docs, turns,
+                                                      postings]
+    assert postings._open and turns._open and docs._open
 
 
 @pytest.mark.parametrize("local", [True, False])
@@ -506,11 +525,11 @@ def test_gate_reader_cache_is_bounded(tmp_path, monkeypatch):
 
 
 def test_index_reads_go_through_one_reader():
-    """Every driver-side index-table read in executor.py / explain.py
-    goes through _PrunedTable; only the row-store filter scans (pushed-
-    down predicates on any column) keep pyarrow.dataset. Anywhere in
-    the package, row groups are decoded only inside _PrunedTable, so
-    its decoded-column cache sees every driver-local decode."""
+    """Every index-table read in executor.py / explain.py (postings,
+    term stats, sidecar, row store and doc stats) goes through
+    _PrunedTable, with no pyarrow.dataset scan left. Anywhere in the
+    package, row groups are decoded only inside _PrunedTable, so its
+    decoded-column cache sees every driver-local decode."""
     import ast
     import glob
     import inspect
@@ -518,8 +537,7 @@ def test_index_reads_go_through_one_reader():
     import cuely_spark
     from cuely_spark.queryengine import executor, explain
 
-    allowed = {"_PrunedTable", "_search_all_local", "_range_lookup",
-               "_cols_lookup", "_doclen_lookup"}
+    allowed = {"_PrunedTable"}
     banned = {("ds", "dataset"), ("pq", "ParquetFile"),
               ("pq", "read_table")}
     decodes = {"read_row_group", "read_row_groups"}
@@ -549,6 +567,11 @@ def test_index_reads_go_through_one_reader():
         with open(path) as f:
             walk(ast.parse(f.read()), [], path, path in index_modules)
     assert not bad, bad
+    # no pyarrow.dataset reader left in the query engine
+    qdir = os.path.dirname(inspect.getsourcefile(executor))
+    for path in glob.glob(os.path.join(qdir, "*.py")):
+        with open(path) as f:
+            assert "pyarrow.dataset" not in f.read(), path
     # no Spark scan of the posting files: distributed tasks read them
     # through _PrunedTable as well
     scans = [ast.unparse(n) for n in ast.walk(ast.parse(

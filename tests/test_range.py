@@ -143,6 +143,23 @@ def test_range_on_timestamp_column(spark, tmp_path_factory):
         np.testing.assert_array_equal(sl, sd)
 
 
+def test_repeated_range_query_reads_decoded_cache(rreader):
+    """Range lookups read the row store through the reader's table:
+    the first query leaves its row-store columns in the decoded-column
+    cache under that table, and a repeat decodes nothing."""
+    from cuely_spark.queryengine import executor
+
+    q = "merge table n_chars:25..50"
+    first = rreader.search_local(q, k=25)
+    token = rreader._turns_table._token
+    assert any(k[0] == token for k in list(executor._decoded._lru))
+    misses = executor._decoded.stats()["misses"]
+    again = rreader.search_local(q, k=25)
+    assert executor._decoded.stats()["misses"] == misses
+    assert again[0].tolist() == first[0].tolist()
+    np.testing.assert_array_equal(again[1], first[1])
+
+
 def test_range_errors(rreader):
     with pytest.raises(ValueError):
         rreader.search("merge ts:>=2025-01-01", k=5).collect()  # no col
