@@ -24,7 +24,11 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    (`IndexReader._posting_tasks`) whose tasks each read their own
    group through a table resident in their Python worker
    (:func:`_task_postings`), built from the snapshot's file list that
-   the driver ships with the plan. No Spark scan, no shuffle.
+   the driver ships with the plan. No Spark scan, no shuffle. The
+   collecting entry points (`search_with_count`, `search_collect`,
+   `count`) run one prepared job per snapshot and task shape
+   (`IndexReader._topk_job`) and send each query as a job-local
+   property, so a request plans no DataFrame.
 4. kernel: the numpy kernel (:mod:`.kernel`) — top-k, block-max
    pruning, leapfrog AND, phrase verification — runs once per posting
    group: the whole index locally, a task's segments concatenated as
@@ -39,14 +43,19 @@ Query lifecycle (Spark mapping of the reference's LocalSearcher::search,
    only, through the reader's row-store and `kind=d` tables
    (:func:`_row_lookup`); a task reads them through its worker's
    tables of the same snapshots, whose file lists ship with the plan.
-5. global merge: orderBy(score desc, doc_id asc).limit(k) over the tiny
-   union of per-group top-ks (reference: collector/top_docs.rs merge).
+5. global merge: (score desc, doc_id asc) over the tiny union of
+   per-group top-ks, a driver `lexsort` for the collecting entry points
+   (:func:`_merge_hits`) and orderBy(...).limit(k) for the DataFrame of
+   `search` (reference: collector/top_docs.rs merge).
 """
 
 from __future__ import annotations
 
+import base64
 import itertools
+import logging
 import os
+import pickle
 import weakref
 from collections import namedtuple
 from dataclasses import dataclass, field
@@ -64,6 +73,7 @@ from .kernel import (PhraseTps, TermPostings, count_matches, segment_topk,
 from .parser import (Clause, ParsedQuery, compound_alternatives,
                      parse_query)
 
+_log = logging.getLogger("cuely_spark")
 
 
 def _schema(ddl: str) -> StructType:
@@ -1066,7 +1076,8 @@ def _eval_group(plan: QueryPlan, by_term: dict, seg, k: int,
 
 #: what a posting job ships in its closure: the snapshot (posting root,
 #: file list), the sorted posting terms, the positions flag and each
-#: task's segment group (:meth:`IndexReader._posting_tasks`)
+#: task's segment group (:meth:`IndexReader._posting_tasks`); a prepared
+#: top-k job ships no terms and takes them from each job's plan
 _PostingTasks = namedtuple("_PostingTasks",
                            "root files terms positions groups")
 
@@ -1127,6 +1138,65 @@ def _hit_batch(parts, tag_col: str, with_count: bool):
     return pa.record_batch(arrs, names=names)
 
 
+#: what one top-k posting job evaluates: the plan, the depth each group
+#: surfaces (k + offset), whether the kernel counts, the per-segment
+#: cap with the segment sizes its estimate reads, and whether groups
+#: split per segment (the cap, the meta join's segment tag)
+_TopkJob = namedtuple("_TopkJob", "plan seg_k with_count cap seg_docs "
+                                  "per_seg")
+
+#: the job-local property (``SparkContext.setLocalProperty``) that
+#: carries a pickled :data:`_TopkJob` to the tasks of a reader's
+#: prepared top-k DataFrame (:meth:`IndexReader._topk_job`)
+_JOB_PROPERTY = "cuely_spark.topk_job"
+
+
+def _topk_batches(ctx: _PostingTasks, job: _TopkJob, batches,
+                  sentinels: bool):
+    """The task body of every top-k posting job: each group's top
+    `seg_k` hits (doc_id, score, segment_id), tagged with the segment
+    when `per_seg` and -1 otherwise. sentinels: each group also leads
+    with ONE count row (:func:`_hit_batch`) — the reference's (Count|
+    ApproxCount, TopDocs) tuple collector,
+    crates/core/src/inverted_index/search.rs:47-95; its n is 0 when
+    the job does not count."""
+    parts = [(seg if job.per_seg else -1,)
+             + _eval_group(job.plan, by_term, seg, job.seg_k,
+                           job.with_count, job.cap, job.seg_docs)
+             for seg, by_term in _task_postings(ctx, batches, job.per_seg)]
+    batch = _hit_batch(parts, "segment_id", sentinels)
+    if batch is not None:
+        yield batch
+
+
+def _prepared_topk(snap: _PostingTasks, batches):
+    """Task body of a reader's prepared top-k DataFrame: the snapshot
+    (posting root, file list, groups) comes with the closure, the query
+    with the job-local property of the job that runs the task."""
+    from pyspark import TaskContext
+
+    job = pickle.loads(base64.b64decode(
+        TaskContext.get().getLocalProperty(_JOB_PROPERTY)))
+    ctx = snap._replace(terms=tuple(sorted(set(job.plan.terms))),
+                        positions=bool(job.plan.positions))
+    return _topk_batches(ctx, job, batches, True)
+
+
+def _merge_hits(tbl, k: int, offset: int, dtype):
+    """(doc_ids, scores, Count) of a job's per-group hits with their
+    sentinel count rows (:func:`_hit_batch`): the global (score desc,
+    doc_id asc) page `offset:offset + k` — the order of `_topk_tail` —
+    and the summed count, inexact when any group was capped."""
+    n = tbl.column("n").to_numpy()
+    sentinel = n >= 0
+    docs = tbl.column("doc_id").to_numpy()[~sentinel]
+    scores = tbl.column("score").to_numpy()[~sentinel]
+    sel = np.lexsort((docs, -scores))[offset:offset + k]
+    exact = not tbl.column("capped").to_numpy()[sentinel].any()
+    return (docs[sel], scores[sel].astype(dtype),
+            Count(int(n[sentinel].sum()), exact))
+
+
 class IndexReader:
     """Point-in-time snapshot of an index (tantivy Searcher semantics:
     a reader sees the segments committed when it was opened). Stats are
@@ -1182,6 +1252,7 @@ class IndexReader:
         self._offsets = self.stats.get("segment_offsets")
         self._posting_files = None  # frozen at the first table open
         self._task_shapes = {}  # fan-out flag -> (task DataFrame, groups)
+        self._topk_jobs = {}  # fan-out flag -> prepared top-k DataFrame
         self._turns_df = None
         self._segment_docs = None
 
@@ -1996,11 +2067,14 @@ class IndexReader:
         driver-locally at or below `local_threshold` estimated posting
         blocks (`// local_phrase_divisor` when positions are read)."""
         thr = self.local_threshold
-        if thr <= 0:  # auto-routing disabled
-            return False
-        if plan.positions:
-            thr //= self.local_phrase_divisor
-        return plan.est_blocks <= thr
+        div = self.local_phrase_divisor if plan.positions else 1
+        # thr <= 0 disables auto-routing
+        local = thr > 0 and plan.est_blocks <= thr // div
+        if _log.isEnabledFor(logging.DEBUG):
+            _log.debug("route %s: est_blocks=%d local_threshold=%d "
+                       "phrase_divisor=%d", "local" if local else
+                       "distributed", plan.est_blocks, thr, div)
+        return local
 
     def _posting_tasks(self, terms, positions: bool, est_blocks: int):
         """(task DataFrame, :data:`_PostingTasks`) of one distributed
@@ -2029,6 +2103,56 @@ class IndexReader:
                                     tuple(sorted(set(terms))),
                                     bool(positions), groups)
 
+    def _topk_job(self, est_blocks: int):
+        """This snapshot's prepared top-k DataFrame for the task shape
+        of `est_blocks` (:meth:`_posting_tasks`): planned once and run
+        by every distributed top-k request on it. Its closure holds
+        only the snapshot; each job reads its query from the job-local
+        property :data:`_JOB_PROPERTY` (:meth:`_collect_topk`), the way
+        the reference's distributed searcher keeps its shards open and
+        sends each only the query (searcher/distributed.rs:178-230)."""
+        fanout = est_blocks > self.small_query_blocks
+        df = self._topk_jobs.get(fanout)
+        if df is None:  # two threads may both build one; either serves
+            tasks, snap = self._posting_tasks((), False, est_blocks)
+
+            def run_arrow(batches):
+                return _prepared_topk(snap, batches)
+
+            df = self._topk_jobs[fanout] = tasks.mapInArrow(
+                run_arrow, schema=_SEG_HITS_COUNT_SCHEMA)
+            if _log.isEnabledFor(logging.DEBUG):
+                _log.debug("prepared top-k job: snapshot %s (%d files), "
+                           "%s, %d groups", snap.root, len(snap.files),
+                           "fan-out" if fanout else "single task",
+                           len(snap.groups))
+        return df
+
+    def _collect_topk(self, plan: QueryPlan, k: int, offset: int,
+                      dtype, with_count: bool, cap: int | None = None):
+        """(doc_ids, scores, Count) of a live posting-backed plan,
+        through the snapshot's prepared job (:meth:`_topk_job`): the
+        job rides a job-local property, set on this thread's JVM
+        thread only (pinned-thread mode, PySpark's default), so
+        concurrent requests on one reader stay apart, and cleared when
+        the collect ends, failed or not. The count is 0 unless
+        `with_count`."""
+        from pyspark import cloudpickle
+
+        job = _TopkJob(plan, seg_k=k + offset, with_count=with_count,
+                       cap=cap, seg_docs=(self.segment_docs if with_count
+                                          and cap is not None else None),
+                       per_seg=cap is not None)
+        df = self._topk_job(plan.est_blocks)
+        sc = self.spark.sparkContext
+        sc.setLocalProperty(_JOB_PROPERTY, base64.b64encode(
+            cloudpickle.dumps(job)).decode("ascii"))
+        try:
+            tbl = df.toArrow()
+        finally:
+            sc.setLocalProperty(_JOB_PROPERTY, None)
+        return _merge_hits(tbl, k, offset, dtype)
+
     # ------------------------------------------------------------------
     def search(self, query: str | ParsedQuery, k: int = TOP_K_DEFAULT,
                dtype=np.float32, with_meta: bool = False,
@@ -2040,8 +2164,7 @@ class IndexReader:
                optic: list | None = None,
                fuzzy_transpositions: bool = False,
                tie_breaker: float = 0.0,
-               const_score: float | None = None,
-               _count_rows: bool = False):
+               const_score: float | None = None):
         """Top-k DataFrame (doc_id, score[, conv cols]), rank order.
 
         occur="must" (default): conjunctive AND of all positive clauses
@@ -2087,42 +2210,25 @@ class IndexReader:
             fuzzy_transpositions=fuzzy_transpositions,
             tie_breaker=tie_breaker, const_score=const_score, optic=optic)
         if plan.match_all:
-            return self._search_all(plan, k, offset, with_meta,
-                                    _count_rows=_count_rows)
+            return self._search_all(plan, k, offset, with_meta)
         if plan.dead:
-            return None if _count_rows else self._empty_result()
-        seg_k = k + offset  # each group must surface the skipped page
+            return self._empty_result()
         cap = max_docs_per_segment
         # the cap is per segment, and the meta join prunes the row store
         # by each hit's segment; otherwise a task's segments are one
-        # logical segment (segment tag -1)
-        per_seg = cap is not None or with_meta
-        # tiny dict in the closure (the kernel closure must not capture
-        # self: unpicklable SparkSession)
-        seg_docs = (self.segment_docs
-                    if _count_rows and cap is not None else None)
+        # logical segment (segment tag -1). Each group must surface the
+        # skipped page: depth k + offset.
+        job = _TopkJob(plan, seg_k=k + offset, with_count=False, cap=cap,
+                       seg_docs=None, per_seg=cap is not None or with_meta)
         tasks, ctx = self._posting_tasks(plan.terms, plan.positions,
                                          plan.est_blocks)
 
+        # the closure owns its job: the DataFrame's result does not
+        # depend on any later request
         def run_arrow(batches):
-            # _count_rows: each group emits its top-k hit rows plus
-            # ONE sentinel count row — the reference's (Count|
-            # ApproxCount, TopDocs) tuple collector,
-            # crates/core/src/inverted_index/search.rs:47-95
-            parts = [(seg if per_seg else -1,)
-                     + _eval_group(plan, by_term, seg, seg_k,
-                                   _count_rows, cap, seg_docs)
-                     for seg, by_term in _task_postings(ctx, batches,
-                                                        per_seg)]
-            batch = _hit_batch(parts, "segment_id", _count_rows)
-            if batch is not None:
-                yield batch
+            return _topk_batches(ctx, job, batches, False)
 
-        hits = tasks.mapInArrow(
-            run_arrow, schema=(_SEG_HITS_COUNT_SCHEMA if _count_rows
-                               else _SEG_HITS_SCHEMA))
-        if _count_rows:
-            return hits
+        hits = tasks.mapInArrow(run_arrow, schema=_SEG_HITS_SCHEMA)
         return self._topk_tail(hits, k, offset, with_meta)
 
     def _topk_tail(self, local, k: int, offset: int, with_meta: bool):
@@ -2583,6 +2689,8 @@ class IndexReader:
             local = self._route_local(plan)
         if local:
             return self.search_local(plan, k=k)
+        if not (plan.match_all or plan.dead):
+            return self._collect_topk(plan, k, 0, dtype, False)[:2]
         rows = self.search(plan, k=k).collect()
         return (np.array([r["doc_id"] for r in rows], dtype=np.int64),
                 np.array([r["score"] for r in rows], dtype=dtype))
@@ -2636,29 +2744,15 @@ class IndexReader:
         if local:
             return self.search_local(plan, k=k, offset=offset,
                                      _with_count=True)
-        res = self.search(plan, k=k, offset=offset,
-                          max_docs_per_segment=max_docs_per_segment,
-                          _count_rows=True)
-        if res is None:  # dead query: no candidate can match
+        if plan.dead:  # no candidate can match
             return (np.empty(0, dtype=np.int64),
                     np.empty(0, dtype=dtype), Count(0, True))
-        rows = res.collect()
-        n = 0
-        exact = True
-        docs_l, scores_l = [], []
-        for r in rows:
-            if r["n"] >= 0:  # sentinel count row
-                n += int(r["n"])
-                exact = exact and not r["capped"]
-            else:
-                docs_l.append(r["doc_id"])
-                scores_l.append(r["score"])
-        docs = np.array(docs_l, dtype=np.int64)
-        scores = np.array(scores_l, dtype=np.float64)
-        # same global ordering as _topk_tail: score desc, doc_id asc
-        order = np.lexsort((docs, -scores))
-        sel = order[offset:offset + k]
-        return docs[sel], scores[sel].astype(dtype), Count(n, exact)
+        if not plan.match_all:
+            return self._collect_topk(plan, k, offset, dtype, True,
+                                      max_docs_per_segment)
+        return _merge_hits(self._search_all(plan, k, offset, False,
+                                            _count_rows=True).toArrow(),
+                           k, offset, dtype)
 
     def search_diverse(self, query, k: int = TOP_K_DEFAULT,
                        penalties: dict[str, float] | None = None,

@@ -114,15 +114,210 @@ def test_fanout_plan_reads_no_posting_scan(reader):
     assert ctx.files == files
     try:
         reader.small_query_blocks = 0
-        df = reader.search("example website", k=20, _count_rows=True)
         top = reader.search("example website", k=20)
     finally:
         reader.small_query_blocks = type(reader).small_query_blocks
-    for d in (df, top):
+    # the reader's prepared top-k job of each shape, which runs the
+    # distributed search_with_count, search_collect and count
+    fanout = reader._topk_job(reader.small_query_blocks + 1)
+    single = reader._topk_job(1)
+    for d in (top, fanout, single):
         plan = d._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "FileScan" not in plan and "kind=p" not in plan, plan
-    assert df.rdd.getNumPartitions() == n
+    assert fanout.rdd.getNumPartitions() == n
+    assert single.rdd.getNumPartitions() == 1
+
+
+def _distributed(r, qs, **kw):
+    return {q: r.search_with_count(q, k=10, local=False, **kw) for q in qs}
+
+
+def _assert_hits_equal(got, want):
+    assert got[0].tolist() == want[0].tolist()
+    np.testing.assert_array_equal(got[1], want[1])
+    assert got[2] == want[2]
+
+
+def test_prepared_job_built_once_per_snapshot_and_shape(
+        spark, reader, monkeypatch):
+    """Distributed top-k requests run one prepared DataFrame per
+    (snapshot, task shape), whatever their query, k, offset or count
+    flag; refresh() prepares new ones."""
+    from cuely_spark.queryengine import IndexReader
+
+    built = []
+    cls = type(spark.range(1))
+    orig = cls.mapInArrow
+
+    def counting(self, *a, **kw):
+        built.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "mapInArrow", counting)
+    r = IndexReader(spark, reader.path)
+    r.local_threshold = 0  # count() and search_collect() go distributed
+    lazy = r.search("example", k=5)  # owns its plan: later jobs differ
+    built.clear()
+    for q, k, off in (("test", 10, 0), ("example website", 5, 3),
+                      ('"test website"', 20, 7)):
+        d, s, c = r.search_with_count(q, k=k, offset=off)
+        want = reader.search_local(q, k=k, offset=off, _with_count=True)
+        assert d.tolist() == want[0].tolist() and c == want[2], q
+        assert r.search_collect(q, k=k)[0].tolist() \
+            == reader.search_local(q, k=k)[0].tolist(), q
+        assert r.count(q) == int(want[2]), q
+    single = r._topk_jobs[False]
+    assert list(r._topk_jobs) == [False] and len(built) == 1
+    _both_shapes(r, lambda: r.search_collect("the", k=3))
+    assert r._topk_jobs[False] is single and len(built) == 2
+    fanout = r._topk_jobs[True]
+    _both_shapes(r, lambda: r.search_with_count("the test", k=4))
+    assert r._topk_jobs[False] is single and r._topk_jobs[True] is fanout
+    assert len(built) == 2
+    assert [row["doc_id"] for row in lazy.collect()] \
+        == reader.search_local("example", k=5)[0].tolist()
+    r.refresh()
+    r.search_with_count("test", k=10, local=False)
+    assert r._topk_jobs[False] is not single and len(built) == 3
+    r.close()
+
+
+def test_concurrent_requests_keep_their_queries(spark, reader):
+    """Threads sending different distributed requests to one reader at
+    once each get their own query's answer: the job rides a property
+    of the sending thread. Afterwards no thread keeps it set, also
+    after a request whose task raised."""
+    import dataclasses
+    import sys
+    import threading
+
+    from cuely_spark.queryengine import IndexReader
+    from cuely_spark.queryengine.executor import _JOB_PROPERTY
+
+    sc = spark.sparkContext
+    r = IndexReader(spark, reader.path)
+    qs = ["test", "example website -test"]
+    serial = _distributed(r, qs)
+    senders = [qs[i % len(qs)] for i in range(6)]
+    got = [[] for _ in senders]
+    props, errors = {}, []
+    gate = threading.Barrier(len(senders))
+
+    def send(i, q):
+        try:
+            gate.wait(timeout=60)
+            for _ in range(3):
+                got[i].append(r.search_with_count(q, k=10, local=False))
+            props[i] = sc.getLocalProperty(_JOB_PROPERTY)
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    def run(threads):
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+            assert not t.is_alive()
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        run([threading.Thread(target=send, args=(i, q))
+             for i, q in enumerate(senders)])
+    finally:
+        sys.setswitchinterval(switch)
+    assert not errors, errors
+    for i, q in enumerate(senders):
+        assert len(got[i]) == 3
+        for res in got[i]:
+            _assert_hits_equal(res, serial[q])
+    assert props == dict.fromkeys(range(len(senders)))
+    # a job whose task raises (no weights for its terms) still clears
+    # the property on its thread
+    broken = dataclasses.replace(r._plan("test"), weights={})
+
+    def fail():
+        try:
+            r.search_with_count(broken, k=10, local=False)
+        except Exception as e:
+            errors.append(e)
+        props["failed"] = sc.getLocalProperty(_JOB_PROPERTY)
+
+    run([threading.Thread(target=fail)])
+    assert len(errors) == 1 and "KeyError" in str(errors[0])
+    assert props["failed"] is None
+    assert sc.getLocalProperty(_JOB_PROPERTY) is None
+    _assert_hits_equal(_distributed(r, qs[:1])[qs[0]], serial[qs[0]])
+    r.close()
+
+
+def test_distributed_request_py4j_round_trips(spark, reader, monkeypatch):
+    """A warm distributed search_with_count makes few py4j round trips:
+    no DataFrame is built or planned per request (it took about 45
+    when each request planned its own job)."""
+    from py4j.clientserver import ClientServerConnection
+
+    from cuely_spark.queryengine import IndexReader
+
+    r = IndexReader(spark, reader.path)
+    qs = ["test", "example website", "website -test", '"test website"']
+    _distributed(r, qs)  # prepare the job, open the tables
+    calls = []
+    orig = ClientServerConnection.send_command
+
+    def counting(self, command, *a, **kw):
+        calls.append(command[:1])
+        return orig(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    rounds = 4
+    for _ in range(rounds):
+        _distributed(r, qs)
+    monkeypatch.undo()
+    per_request = len(calls) / (rounds * len(qs))
+    assert 0 < per_request <= 25, per_request
+    r.close()
+
+
+def test_route_and_prepared_job_log_at_debug(spark, reader, caplog,
+                                             monkeypatch):
+    """Each auto-routing decision and each prepared job logs one DEBUG
+    line on the "cuely_spark" logger; at the default level neither is
+    even formatted."""
+    import logging
+
+    from cuely_spark.queryengine import IndexReader, executor
+
+    r = IndexReader(spark, reader.path)
+    with caplog.at_level(logging.DEBUG, logger="cuely_spark"):
+        r.search_collect("test", k=5)
+        r.local_threshold = 0
+        r.search_collect("test", k=5)
+        r.search_collect("example", k=5)
+    msgs = [rec.getMessage() for rec in caplog.records
+            if rec.name == "cuely_spark"]
+    est = r._plan("test").est_blocks
+    thr = type(r).local_threshold
+    assert msgs[0] == (f"route local: est_blocks={est} "
+                       f"local_threshold={thr} phrase_divisor=1")
+    assert msgs[1] == (f"route distributed: est_blocks={est} "
+                       f"local_threshold=0 phrase_divisor=1")
+    files, _ = r._snapshot()
+    assert msgs[2] == (f"prepared top-k job: snapshot {r._postings_path} "
+                       f"({len(files)} files), single task, 1 groups")
+    assert msgs[3].startswith("route distributed") and len(msgs) == 4
+    r.close()
+
+    def unguarded(*a, **kw):
+        raise AssertionError("debug line formatted below DEBUG")
+
+    monkeypatch.setattr(executor._log, "debug", unguarded)
+    r = IndexReader(spark, reader.path)
+    r.search_collect('"test website"', k=5)
+    r.local_threshold = 0
+    r.search_collect("test", k=5)
+    r.close()
 
 
 def test_mixed_must_should_kernel():
